@@ -7,7 +7,7 @@ import graft.sources.Corpus
 /** End-to-end inverted-index build — the reference's entire program
   * (`src/main.cpp:30-59`) as one declarative Spark plan:
   *
-  *   manifest scan → text scan → explode(split) → clean/lower → filter
+  *   manifest (driver) → per-task document reads → explode(split) → clean/lower → filter
   *   → per-doc distinct (partial agg) → groupBy(word) collect_set (final agg)
   *   → letter column → format → 26-way letter-partitioned ordered text sink.
   *

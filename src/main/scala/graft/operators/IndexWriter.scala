@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -34,13 +34,9 @@ object IndexWriter {
   /** Write `index` (needs columns word/postings/df/letter) as the
     * reference's 26 letter files under `outDir`.
     */
-  def write(index: DataFrame, outDir: String): Unit =
-    writeFormatted(InvertedIndex.formatted(index), outDir)
-
-  /** Write the already-formatted frame (columns letter/df/word/row). */
-  def writeFormatted(formatted: DataFrame, outDir: String): Unit = {
+  def write(index: DataFrame, outDir: String): Unit = {
     val tmp = outDir + "/.spark-index"
-    formatted
+    InvertedIndex.formatted(index)
       .select(col("letter"), col("df"), col("word"), col("row"))
       .repartition(26, col("letter"))
       .sortWithinPartitions(col("letter"), col("df").desc, col("word").asc)
@@ -93,8 +89,4 @@ object IndexWriter {
       Files.list(p).iterator().asScala.toSeq.foreach(deleteRecursively)
     Files.deleteIfExists(p)
   }
-
-  /** Copy semantics helper used by tests: read back `a.txt`…`z.txt`. */
-  def readLetterFile(outDir: String, letter: String): String =
-    new String(Files.readAllBytes(Paths.get(outDir, s"$letter.txt")), "UTF-8")
 }

@@ -18,37 +18,25 @@ import org.apache.spark.sql.functions._
   *     (ascending, unique) deterministically;
   *   - at 100 TB, per-word postings for stop-words grow unboundedly; the
   *     aggregation spills (Spark `ObjectHashAggregate` → sort-based
-  *     fallback), and df-only consumers should use [[docFrequency]] which
-  *     never materializes postings (partial-aggregatable `count(distinct)`).
+  *     fallback), and df-only consumers should aggregate a
+  *     partial-aggregatable `count(distinct doc_id)` instead, which never
+  *     materializes postings.
   */
 object InvertedIndex {
 
-  /** `(doc_id, word)` distinct pairs → `(word, letter, postings, df)`.
+  /** Raw `(doc_id, word)` tokens → `(word, postings, df, letter)`.
     * Postings are ascending distinct doc IDs; `letter` = first letter.
+    * One shuffle: `collect_set` is itself distinct, so no `dropDuplicates`
+    * exchange is needed ahead of the word aggregation — the map-side
+    * partial `collect_set` performs the per-doc dedup the reference does
+    * in its `partial_map` (`src/functions.cpp:75-87`), and only set
+    * partials cross the wire.
     */
-  def build(docWords: DataFrame): DataFrame =
-    docWords
+  def buildFromTokens(tokens: DataFrame): DataFrame =
+    tokens
       .groupBy("word")
       .agg(sort_array(collect_set(col("doc_id"))).as("postings"))
       .withColumn("df", size(col("postings")).cast("long"))
-      .withColumn("letter", substring(col("word"), 1, 1))
-
-  /** Same result from the RAW token stream, one shuffle instead of two:
-    * `collect_set` is itself distinct, so a separate `dropDuplicates`
-    * exchange ahead of the word aggregation is redundant — the map-side
-    * partial `collect_set` performs the per-doc dedup the reference does
-    * in its `partial_map` (`src/functions.cpp:75-87`), and only set
-    * partials cross the wire. Preferred at scale.
-    */
-  def buildFromTokens(tokens: DataFrame): DataFrame =
-    build(tokens) // identical plan need: groupBy(word) + collect_set dedups
-
-  /** df-only variant: `(word, df)` without materializing postings —
-    * the scalable path when only document frequency is needed.
-    */
-  def docFrequency(docWords: DataFrame): DataFrame =
-    docWords.groupBy("word")
-      .agg(count(col("doc_id")).as("df")) // pairs are already distinct
       .withColumn("letter", substring(col("word"), 1, 1))
 
   /** Render the reference's row format `word:[id1 id2 … idn]`

@@ -1,78 +1,70 @@
 package graft.sources
 
+import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.util.LineReader
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.util.SerializableConfiguration
 
-/** Plain-text corpus source.
+/** Plain-text corpus source (reference `src/functions.cpp:14-37,51-77`).
   *
-  * The reference drives everything from a count-prefixed manifest: the first
-  * whitespace-separated token is the number of documents N, followed by N
-  * relative paths; a document's ID is its 1-based position in that list
-  * (reference `src/functions.cpp:14-37`, `:64`). This source reproduces that
-  * contract declaratively:
-  *
-  *   - the manifest itself is tiny (one line per document), so it is parsed
-  *     into a `(doc_id, path)` DataFrame on the driver side of the plan and
-  *     broadcast into the scan-side join — at 100 TB the *documents* are huge
-  *     but the manifest stays broadcast-sized (355 paths in the reference;
-  *     even 10M paths is a few hundred MB, still a driver-feasible list and a
-  *     broadcastable dimension);
-  *   - document bytes are read with Spark's distributed text source
-  *     (`spark.read.text`), one task per file split, which subsumes the
-  *     reference's mutex-guarded dynamic work queue
-  *     (`src/functions.cpp:51-68`) with no user code.
+  * The manifest is a count-prefixed, whitespace-separated path list; a
+  * document's ID is its 1-based position in it. The driver reads the
+  * manifest through Hadoop's `FileSystem` and qualifies each path against
+  * `baseDir` (a relative base resolves against the driver's working
+  * directory). The `(doc_id, path)` list becomes a local Dataset, and each
+  * task opens its documents in turn and emits one row per line as it reads
+  * it, like the reference's mappers pulling files off a shared queue.
+  * Building the frame runs no Spark job. A file is read whole by one task,
+  * never split, so a corpus of a few huge files should be sharded.
   */
 object Corpus {
 
-  /** Parse a count-prefixed manifest into `(doc_id: Long, path: String)`.
-    *
-    * Doc IDs are 1-based manifest positions, matching the reference's
-    * `curr_file = *file_index + 1` (`src/functions.cpp:64`). Paths are
-    * resolved against `baseDir` (the reference hardcodes `"../checker/"`,
-    * `src/functions.cpp:71`; we take it as a parameter).
+  /** `(doc_id: Long, line: String)` for every document the manifest names.
+    * Lines end at `\n`, `\r\n` or a bare `\r`, as in Spark's text source,
+    * and keep their bytes unvalidated; they count toward the task's input
+    * metrics. A missing document fails the job with its path.
     */
-  def readManifest(spark: SparkSession, manifestPath: String, baseDir: String): DataFrame = {
+  def read(spark: SparkSession, manifestPath: String, baseDir: String): DataFrame = {
     import spark.implicits._
-    // Manifest = one small file; tokens are whitespace-separated. First token
-    // is the count, the rest are paths in ID order.
-    val tokens = spark.read.textFile(manifestPath)
-      .collect() // tiny by contract: the manifest is the list of file names
-      .flatMap(_.split("\\s+"))
-      .filter(_.nonEmpty)
+    val conf = new SerializableConfiguration(Bridge.hadoopConf(spark))
+    manifest(conf.value, manifestPath, baseDir).toDS()
+      .mapPartitions { docs =>
+        var open: LineReader = null // at most one file open per task
+        TaskContext.get().addTaskCompletionListener[Unit](_ => if (open != null) open.close())
+        docs.flatMap { case (id, uri) =>
+          val path = new Path(new URI(uri))
+          val in = new LineReader(path.getFileSystem(conf.value).open(path))
+          open = in
+          val line = new Text()
+          Iterator.continually(in.readLine(line)).takeWhile { n =>
+            if (n > 0) Bridge.addInputRead(n) else { in.close(); open = null }
+            n > 0
+          }.map(_ => id -> line.copyBytes())
+        }
+      }
+      // binary → string keeps the bytes as read, unvalidated, like Spark's text source
+      .select(col("_1").as("doc_id"), col("_2").cast("string").as("line"))
+  }
+
+  /** Manifest → `(doc_id, qualified path URI)` in manifest order. */
+  private def manifest(conf: Configuration, manifestPath: String, baseDir: String): Seq[(Long, String)] = {
+    val mp = new Path(manifestPath)
+    val in = mp.getFileSystem(conf).open(mp)
+    val tokens = try new String(in.readAllBytes(), UTF_8).split("\\s+").filter(_.nonEmpty)
+      finally in.close()
     require(tokens.nonEmpty, s"empty manifest: $manifestPath")
     val n = tokens.head.toInt
     val paths = tokens.tail.take(n)
     require(paths.length == n, s"manifest declares $n files, found ${paths.length}")
-    val base = if (baseDir.endsWith("/")) baseDir else baseDir + "/"
-    paths.zipWithIndex
-      .map { case (p, i) => (i + 1L, base + p) }
-      .toSeq
-      .toDF("doc_id", "path")
+    val base = new Path(baseDir)
+    val qualified = base.getFileSystem(conf).makeQualified(base)
+    paths.toSeq.zipWithIndex.map { case (p, i) => (i + 1L, new Path(qualified, p).toUri.toString) }
   }
-
-  /** Read every document named by the manifest into `(doc_id: Long, line: String)`.
-    *
-    * The text scan is fully distributed (one Spark task per split); doc IDs
-    * are recovered by joining `input_file_name()` against the broadcast
-    * manifest. The join is broadcast by construction — the manifest side is
-    * small — so no shuffle is introduced on the (large) document side.
-    */
-  def readDocuments(spark: SparkSession, manifest: DataFrame): DataFrame = {
-    val paths = manifest.select("path").collect().map(_.getString(0))
-    val lines = spark.read.text(paths.toIndexedSeq: _*)
-      .select(input_file_name().as("file"), col("value").as("line"))
-    // input_file_name() yields an absolute file: URI; normalize both sides to
-    // an absolute path before joining.
-    val withUri = manifest.withColumn(
-      "file_norm",
-      regexp_replace(col("path"), "^(file:)?/*", ""))
-    lines
-      .withColumn("file_norm", regexp_replace(col("file"), "^(file:)?/*", ""))
-      .join(broadcast(withUri), Seq("file_norm"))
-      .select(col("doc_id"), col("line"))
-  }
-
-  /** One-call corpus load: manifest + documents → `(doc_id, line)`. */
-  def read(spark: SparkSession, manifestPath: String, baseDir: String): DataFrame =
-    readDocuments(spark, readManifest(spark, manifestPath, baseDir))
 }

@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -72,4 +74,20 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.catalog.getTableMetadata(
         org.apache.spark.sql.catalyst.TableIdentifier(table)).location
+
+  /** The session's Hadoop configuration, SQL-conf overrides included, as
+    * Spark's own file sources see it (`SessionState` is `private[sql]`).
+    */
+  def hadoopConf(spark: SparkSession): Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
+
+  /** Count one record of `bytes` input bytes toward the running task's
+    * input metrics, so a source that reads files itself shows up in
+    * listeners as Spark's file scans do (`incBytesRead` is `private[spark]`).
+    */
+  def addInputRead(bytes: Long): Unit = {
+    val m = TaskContext.get().taskMetrics().inputMetrics
+    m.incBytesRead(bytes)
+    m.incRecordsRead(1)
+  }
 }

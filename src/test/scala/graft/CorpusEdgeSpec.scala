@@ -1,40 +1,127 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.{IndexWriter, InvertedIndex, Tokenizer}
+import graft.sources.Corpus
 
 /** Edge-case corpora through the full index CLI: empty documents,
   * punctuation-only documents, repeated words, and numeric junk must
   * produce exactly the reference's semantics (all 26 letter files, empty
-  * where no words, df-ordered rows).
+  * where no words, df-ordered rows). Also pins how documents are found
+  * and read: relative base directories, names that URL-encode, missing
+  * files, line ends, invalid UTF-8 and the scan's input metrics.
   */
 class CorpusEdgeSpec extends AnyFunSuite with SparkTestBase {
 
+  /** A temp dir holding `docs` and a manifest `manifest.txt` listing them in order. */
+  private def corpus(docs: Seq[(String, Array[Byte])]): Path = {
+    val base = Files.createTempDirectory("graft-edge")
+    docs.foreach { case (name, bytes) => Files.write(base.resolve(name), bytes) }
+    Files.writeString(base.resolve("manifest.txt"), s"${docs.size}\n" + docs.map(_._1).mkString("\n"))
+    base
+  }
+
+  private def text(docs: (String, String)*): Path =
+    corpus(docs.map { case (n, t) => n -> t.getBytes(UTF_8) })
+
+  /** Index the corpus at `base` and return its 26 letter files, trimmed. */
+  private def index(manifest: String, base: String): Map[Char, String] = {
+    val out = Files.createTempDirectory("graft-edge-out")
+    IndexJob.run(spark, manifest, base, out.toString)
+    ('a' to 'z').map(l => l -> Files.readString(out.resolve(s"$l.txt")).trim).toMap
+  }
+
+  private def index(base: Path): Map[Char, String] =
+    index(base.resolve("manifest.txt").toString, base.toString)
+
   test("degenerate documents index correctly") {
-    val base = Files.createTempDirectory("graft-edge").toString
-    val docs = Seq(
+    val got = index(text(
       "d1.txt" -> "apple apple APPLE banana",
       "d2.txt" -> "!!! ??? ... 123 456",   // no letters at all
       "d3.txt" -> "",                       // empty file
-      "d4.txt" -> "a1pple z9z")             // digits stripped inside tokens
-    docs.foreach { case (name, text) =>
-      Files.writeString(Paths.get(base, name), text)
-    }
-    Files.writeString(
-      Paths.get(base, "manifest.txt"),
-      s"${docs.size}\n" + docs.map(_._1).mkString("\n"))
-    val out = Files.createTempDirectory("graft-edge-out").toString
-    IndexJob.run(spark, s"$base/manifest.txt", base, out)
-
-    def read(l: Char): String =
-      new String(Files.readAllBytes(Paths.get(out, s"$l.txt")), "UTF-8").trim
+      "d4.txt" -> "a1pple z9z"))            // digits stripped inside tokens
     // apple appears in docs 1 and 4 (a1pple -> apple); zz only in doc 4
-    assert(read('a') == "apple:[1 4]")
-    assert(read('b') == "banana:[1]")
-    assert(read('z') == "zz:[4]")
+    assert(got('a') == "apple:[1 4]")
+    assert(got('b') == "banana:[1]")
+    assert(got('z') == "zz:[4]")
     // every other letter file exists and is empty
     ('a' to 'z').filterNot("abz".contains(_)).foreach { l =>
-      assert(read(l).isEmpty, s"$l.txt should be empty")
+      assert(got(l).isEmpty, s"$l.txt should be empty")
     }
+  }
+
+  test("a relative base directory and manifest path index every document") {
+    val base = text("d1.txt" -> "kiwi lime", "d2.txt" -> "kiwi")
+    val rel = Paths.get("").toAbsolutePath.relativize(base)
+    assert(!rel.isAbsolute)
+    val got = index(rel.resolve("manifest.txt").toString, rel.toString)
+    assert(got('k') == "kiwi:[1 2]")
+    assert(got('l') == "lime:[1]")
+  }
+
+  test("file names with % and # index under their manifest IDs") {
+    val got = index(text(
+      "50%off.txt" -> "mango",
+      "c#notes.txt" -> "mango nectar",
+      "a%20b.txt" -> "olive"))
+    assert(got('m') == "mango:[1 2]")
+    assert(got('n') == "nectar:[2]")
+    assert(got('o') == "olive:[3]")
+  }
+
+  test("a manifest entry naming a missing file fails the build with its path") {
+    val base = text("d1.txt" -> "pear", "gone.txt" -> "plum")
+    Files.delete(base.resolve("gone.txt"))
+    val e = intercept[Exception](index(base))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains(base.resolve("gone.txt").toString)), e)
+  }
+
+  test("CRLF and bare-CR line ends index like LF") {
+    val lf = index(text("d1.txt" -> "quince\nraisin sage\ntart\n", "d2.txt" -> "sage\n\nugli"))
+    val crlf = index(text("d1.txt" -> "quince\r\nraisin sage\rtart\r\n", "d2.txt" -> "sage\r\r\nugli"))
+    assert(crlf == lf)
+    assert(lf('s') == "sage:[1 2]")
+  }
+
+  test("invalid UTF-8 bytes inside tokens are stripped like any non-letter") {
+    def bytes(parts: Any*): Array[Byte] = parts.flatMap {
+      case s: String => s.getBytes(UTF_8).toSeq
+      case b: Int => Seq(b.toByte)
+    }.toArray
+    val got = index(corpus(Seq(
+      "d1.txt" -> bytes("ho", 0xC3, "ney bee", 0xFF, 0xFE, "s"),
+      "d2.txt" -> bytes(0xE2, 0x80, "vine ", 0xC3, "\n", 0x80, "wax"))))
+    assert(got('h') == "honey:[1]")
+    assert(got('b') == "bees:[1]")
+    assert(got('v') == "vine:[2]")
+    assert(got('w') == "wax:[2]")
+  }
+
+  test("the document scan reports every corpus byte and line to listeners") {
+    val base = text("d1.txt" -> "alpha beta\ngamma\n", "d2.txt" -> "delta", "d3.txt" -> "", "d4.txt" -> "x\r\ny\rz")
+    val files = (1 to 4).map(i => base.resolve(s"d$i.txt"))
+    val docs = Corpus.read(spark, base.resolve("manifest.txt").toString, base.toString)
+    val bytes, records = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
+        bytes.addAndGet(m.inputMetrics.bytesRead)
+        records.addAndGet(m.inputMetrics.recordsRead)
+      }
+    }
+    Bridge.waitListenerBusEmpty(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = Files.createTempDirectory("graft-edge-out").toString
+      IndexWriter.write(InvertedIndex.buildFromTokens(Tokenizer.tokens(docs, "line", Seq("doc_id"))), out)
+      Bridge.waitListenerBusEmpty(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(bytes.get == files.map(Files.size).sum)
+    assert(records.get == 6) // 2 + 1 + 0 + 3 lines
   }
 }

@@ -1,5 +1,12 @@
 package graft
 
+import java.nio.file.Paths
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression tests: the performance properties the engine
@@ -29,6 +36,33 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
   test("q1: inverted index plans exactly one shuffle (collect_set dedups)") {
     val p = plan("q1_inverted_index")
     assert(shuffles(p) == 1, s"expected 1 exchange, plan:\n$p")
+  }
+
+  test("index build: corpus read runs no job; one exchange, no join") {
+    val small = Paths.get(getClass.getResource("/index_small").toURI).toString
+    val manifest = s"$small/test_small.txt"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bridge.waitListenerBusEmpty(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      graft.sources.Corpus.read(spark, manifest, small)
+      Bridge.waitListenerBusEmpty(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, "building Corpus.read must not run a Spark job")
+
+    val idx = IndexJob.index(spark, manifest, small)
+    idx.collect()
+    val executed = idx.queryExecution.executedPlan
+    object Aqe extends AdaptiveSparkPlanHelper
+    val exchanges = Aqe.collect(executed) { case e: Exchange => e }
+    assert(exchanges.size == 1 && exchanges.head.isInstanceOf[ShuffleExchangeLike] &&
+      exchanges.head.toString.contains("hashpartitioning(word"),
+      s"expected the word aggregation as the only exchange:\n$executed")
+    assert(Aqe.collect(executed) { case b: BroadcastExchangeLike => b }.isEmpty, executed)
+    assert(Aqe.collect(executed) { case j: BaseJoinExec => j }.isEmpty, s"no join expected:\n$executed")
   }
 
   test("q12/q13: semi and anti joins stay semi/anti (no row duplication)") {
