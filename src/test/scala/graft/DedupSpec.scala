@@ -201,9 +201,10 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("full MinHash pipeline finds seeded near-duplicates in real text") {
-    // take real paragraphs from the reference corpus, seed mutated copies
+    // take real paragraphs from the committed GPL v3 text (FIXTURES.md §C),
+    // seed mutated copies
     val src = java.nio.file.Files.readString(java.nio.file.Paths.get(
-      "/root/reference/checker/test_in/moby_dick/Moby_Dick_Chapter_100_cleaned.txt"))
+      getClass.getResource("/dedup_prose/gpl-3.0.txt").toURI))
     val paras = src.split("\\n\\n").map(_.trim).filter(_.length > 200).take(20)
     val rnd = new scala.util.Random(5)
     val originals = paras.zipWithIndex.map { case (t, i) => (i.toLong, t) }
