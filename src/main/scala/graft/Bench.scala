@@ -52,9 +52,9 @@ object Bench {
     "q202_max_concurrency",
     "q214_binned_median",
     // index-serving hot path: BM25 top-k through the bounded TopKAgg and
-    // the full encode→decode→intersect boolean serve from the compressed
-    // postings index — the user-facing read side of the index the engine
-    // builds, promoted per round-7 verdict
+    // the boolean serve from the term-filtered postings — the
+    // user-facing read side of the index the engine builds, promoted per
+    // round-7 verdict
     "q234_bm25_topk",
     "q237_serve_from_index",
     // round-8 flagships: the iterative BPE vocabulary learner (the

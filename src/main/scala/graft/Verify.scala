@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -26,7 +27,7 @@ object Verify {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         dumped += 1
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         failed += 1
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

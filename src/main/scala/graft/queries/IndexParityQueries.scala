@@ -3,13 +3,12 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.functions.{CompressedPostingsAgg, PostingsCodec}
 import graft.streaming.StreamingOps
 
 /** Alternate-path builds of the q1 inverted index, each oracle-checked
-  * against q1's OWN DuckDB SQL — so the driver's hard correctness gate
-  * covers the streaming surface and the compressed-postings scale path,
-  * not just their unit specs:
+  * against q1's DuckDB SQL (q249's over the surviving documents) — so
+  * the driver's hard correctness gate covers the streaming surface and
+  * the segment-maintenance paths, not just their unit specs:
   *
   *   - q75: the index computed INCREMENTALLY — documents arrive over
   *     several micro-batches through [[StreamingOps.incrementalDocWords]]
@@ -17,20 +16,20 @@ import graft.streaming.StreamingOps
   *     folded into the index. Batch/streaming parity is the core
   *     guarantee of the streaming surface; this query makes the driver
   *     verify it.
-  *   - q76: the index aggregated through [[CompressedPostingsAgg]]
-  *     (delta-varint postings bytes, the bounded-state alternative to
-  *     `collect_set` at 100 TB) and decoded back — proving the codec
-  *     round-trips the real corpus end-to-end.
+  *   - q117/q249: base+delta compaction and tombstone deletes over the
+  *     plain `(doc_id, word)` postings.
   */
 object IndexParityQueries {
 
-  /** Render distinct (doc_id, word) pairs into q1's exact output schema:
-    * word, space-joined ascending postings string, df.
+  /** Render DISTINCT (doc_id, word) pairs into q1's exact output schema:
+    * word, space-joined ascending postings string, df. `collect_list`,
+    * not `collect_set`: every caller's pairs are already distinct, so a
+    * duplicated pair would show up as a wrong df in the oracle compare.
     */
   private def indexFromPairs(pairs: DataFrame): DataFrame =
     pairs
       .groupBy("word")
-      .agg(sort_array(collect_set(col("doc_id"))).as("p"))
+      .agg(sort_array(collect_list(col("doc_id"))).as("p"))
       .select(
         col("word"),
         array_join(col("p"), " ").as("postings"),
@@ -79,101 +78,45 @@ object IndexParityQueries {
     indexFromPairs(spark.table(sink))
   }
 
-  /** q76: per-word postings encoded to delta-varint bytes inside the
-    * typed Aggregator (bounded, compact aggregation state), then decoded
-    * back to the q1 rendering. The decode is a typed map — it exists to
-    * PROVE the round-trip; a real index sink would store the bytes.
-    */
-  def q76CompressedIndex(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    ReferenceQueries.docWords(spark, dir)
-      .as[(Long, String)]
-      .groupByKey(_._2)
-      .mapValues(_._1)
-      .agg(CompressedPostingsAgg.toColumn.name("enc"))
-      .map { case (word, enc) =>
-        val ids = PostingsCodec.decode(enc)
-        (word, ids.mkString(" "), ids.length.toLong)
-      }
-      .toDF("word", "postings", "df")
-  }
-
   /** q117: LSM-style index compaction — the index maintained as a BASE
-    * segment plus a DELTA segment (two independent
-    * [[CompressedPostingsAgg]] builds over disjoint document sets, the
-    * shape an incremental indexer leaves on disk), then compacted by
-    * MERGING the two compressed posting lists per word — a linear
-    * varint-stream merge ([[PostingsCodec.mergeRuns]]), never a corpus
-    * re-scan. Must hash-equal the from-scratch q1 rebuild.
+    * segment plus a DELTA segment (the plain `(doc_id, word)` postings of
+    * two disjoint document sets, the shape an incremental indexer leaves
+    * on disk), then compacted by unioning the two segments' postings and
+    * re-grouping per word. Must hash-equal the from-scratch q1 rebuild.
     *
-    * Scale shape: the merge input is two INDEX-sized tables (word →
-    * bytes), so compaction cost is independent of corpus row count —
-    * the whole point of the LSM layout at 100 TB: re-indexing touches
-    * only the delta docs, and compaction streams compressed bytes. The
-    * full-outer join is one word-keyed exchange of compressed postings
-    * (1-2 bytes/ID), and the per-word merge is a single forward pass.
-    * The doc_id%3 split is a fixture stand-in for the real base/delta
-    * boundary (ingest time); any disjoint split must compact to the
-    * same index, which is exactly what the oracle checks.
+    * Scale shape: the merge is one word-keyed exchange of the union and
+    * one built-in `collect_list` aggregate over plain columns. The
+    * doc_id%3 split is a fixture stand-in for the real base/delta
+    * boundary (ingest time); any disjoint split must compact to the same
+    * index, which is exactly what the oracle checks.
     */
   def q117IndexCompaction(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    def segment(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-      ReferenceQueries.docWords(spark, dir)
-        .filter(pred(col("doc_id")))
-        .as[(Long, String)]
-        .groupByKey(_._2)
-        .mapValues(_._1)
-        .agg(CompressedPostingsAgg.toColumn.name("enc"))
-        .toDF("word", "enc")
-    val base = segment(_ % 3 =!= 0)
-    val delta = segment(_ % 3 === 0).withColumnRenamed("enc", "enc_d")
-    base.join(delta, Seq("word"), "full_outer")
-      .as[(String, Array[Byte], Array[Byte])]
-      .map { case (word, ea, eb) =>
-        val merged =
-          if (ea == null) eb
-          else if (eb == null) ea
-          else PostingsCodec.mergeRuns(ea, eb)
-        val ids = PostingsCodec.decode(merged)
-        (word, ids.mkString(" "), ids.length.toLong)
-      }
-      .toDF("word", "postings", "df")
+    val docWords = ReferenceQueries.docWords(spark, dir)
+    val base = docWords.filter(col("doc_id") % 3 =!= 0)
+    val delta = docWords.filter(col("doc_id") % 3 === 0)
+    indexFromPairs(base.unionByName(delta))
   }
 
   /** q249: tombstone deletes compacted OUT of the index — the LSM delete
-    * path q117's merge doesn't cover: the standing compressed index
-    * (built over ALL docs) plus a tombstone predicate (docs with
-    * `doc_id % 7 == 0` deleted — the fixture stand-in for a GDPR purge /
-    * retraction list) compact into an index that must hash-equal q1
-    * REBUILT over only the surviving documents. Deletion is a linear
-    * decode → filter → render pass over term-grain rows (compaction
-    * cost independent of corpus row count — the LSM point); words whose
-    * postings empty out drop from the index entirely.
-    * DETERMINISM: codec round-trip exact; integer filters.
+    * path q117's merge doesn't cover: the standing postings (over ALL
+    * docs) plus a tombstone predicate (docs with `doc_id % 7 == 0`
+    * deleted — the fixture stand-in for a GDPR purge / retraction list)
+    * compact into an index that must hash-equal q1 REBUILT over only the
+    * surviving documents. Deletion is a filter on the (doc_id, word)
+    * rows before rendering; words whose postings empty out produce no
+    * group and drop from the index entirely. DETERMINISM: integer
+    * filters.
     */
-  def q249TombstoneCompaction(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    ReferenceQueries.docWords(spark, dir)
-      .as[(Long, String)]
-      .groupByKey(_._2)
-      .mapValues(_._1)
-      .agg(CompressedPostingsAgg.toColumn.name("enc"))
-      .map { case (word, enc) =>
-        val ids = PostingsCodec.decode(enc).filter(_ % 7 != 0)
-        (word, ids.mkString(" "), ids.length.toLong)
-      }
-      .toDF("word", "postings", "df")
-      .filter(col("df") > 0)
-  }
+  def q249TombstoneCompaction(spark: SparkSession, dir: String): DataFrame =
+    indexFromPairs(
+      ReferenceQueries.docWords(spark, dir).filter(col("doc_id") % 7 =!= 0))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q75_incremental_index" -> ((s, dir) => q75IncrementalIndex(s, dir)),
-    "q76_compressed_index" -> (q76CompressedIndex _),
     "q117_index_compaction" -> (q117IndexCompaction _),
     "q249_tombstone_compaction" -> (q249TombstoneCompaction _))
 
-  /** q75/q76/q117 must equal q1 exactly — they share its oracle SQL;
+  /** q75/q117 must equal q1 exactly — they share its oracle SQL;
     * q249's oracle is q1 REBUILT over only the surviving documents
     * (the tombstone predicate applied before aggregation), so the
     * driver proves compact-with-deletes ≡ rebuild-without-deleted.
@@ -186,7 +129,6 @@ object IndexParityQueries {
     require(q1Surviving != q1, "q1 oracle shape changed; fix q249's rewrite")
     Map(
       "q75_incremental_index" -> q1,
-      "q76_compressed_index" -> q1,
       "q117_index_compaction" -> q1,
       "q249_tombstone_compaction" -> q1Surviving)
   }

@@ -218,8 +218,8 @@ object ReferenceQueries {
 
   /** Q235: postings-length histogram — the vocabulary bucketed by
     * ⌊log2(df)⌋ with word and total-postings counts per bucket: the
-    * index-statistics readout that sizes compression (q76's delta-varint
-    * wins on the long tail) and flags the stop-word head that dominates
+    * index-statistics readout that sizes postings compression (parquet's
+    * delta/dictionary encodings win on the long tail) and flags the stop-word head that dominates
     * shard bytes. DETERMINISM: the bucket is `length(bin(df)) − 1` —
     * pure integer/string arithmetic, no floating log to drift at
     * power-of-two boundaries. Scale: q3's vocab-sized df table folded to

@@ -42,7 +42,7 @@ object SearchQueries {
     * each leg is a bounded top-k (`TopKAgg`, q234's shape — ≤ k rows per
     * partition cross the shuffle, never a global sort or a global-order
     * window), fusion is a 40-row full-outer join; at 100 TB the legs
-    * are served by the prebuilt inverted index (q27/q76) and ANN index
+    * are served by the prebuilt inverted index (q27/q1) and ANN index
     * (q80/q112), same fusion.
     */
   def q208RrfHybrid(spark: SparkSession, dir: String): DataFrame = {
@@ -246,7 +246,7 @@ object SearchQueries {
   /** q330: wildcard search served from a PERMUTERM index — the
     * classic rotation trick (Garfield 1976; the Lucene/IR-textbook
     * wildcard plan) completing the index-serving family beside q237
-    * (boolean AND from compressed postings) and q247 (phrase from the
+    * (boolean AND from term-filtered postings) and q247 (phrase from the
     * positional index): every vocabulary term w is indexed under all
     * |w|+1 rotations of w$, and a single-star query pre*suf rotates to
     * the PREFIX probe suf$pre — so "c*n" becomes one range scan
@@ -362,39 +362,36 @@ object SearchQueries {
   def q234Bm25TopK(spark: SparkSession, dir: String): DataFrame =
     Ranking.bm25TopK(docsLight(spark, dir), "text", "doc_id", Bm25Terms, 5)
 
-  /** q237: boolean search SERVED FROM the compressed index — the
-    * end-to-end integration q140's Scaladoc promises: a term-keyed
-    * delta-varint postings index (`CompressedPostingsAgg`, q76's
-    * bounded-state aggregation) is built for the query terms, each
-    * term's postings are DECODED (`PostingsCodec.decode`, a typed map
-    * over term-grain rows — each row one posting list, never the
-    * corpus), and the AND is the same doc-keyed count-equality as q140.
-    * The oracle is q140's PLAIN formulation, so the driver proves
-    * index-build → encode → decode → intersect ≡ direct scan.
-    * DETERMINISM: the codec round-trip is exact; everything after is
-    * integer counts. Scale shape: the term filter prunes the scan to
-    * the query terms' postings; index rows are |terms|-grain.
+  /** Boolean AND search — documents containing EVERY query term, with
+    * their source. The term predicate filters postings at the tokenizer
+    * (only matching words survive the scan), per-doc distinct is
+    * map-side, and the postings intersection is one doc-keyed
+    * count-equality aggregate — no join in the hot path (the trailing
+    * source lookup is a key join against the doc table). Shared by q140
+    * (spread scan) and q237 (light scan).
     */
-  def q237ServeFromIndex(spark: SparkSession, dir: String): DataFrame = {
+  private def booleanAnd(d: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val tok = docsLight(spark, dir)
-      .select(col("doc_id"), graft.functions.AlnumTokens(col("text")))
+    d.select(col("doc_id"), graft.functions.AlnumTokens(col("text")))
       .filter(col("word").isin(Bm25Terms: _*))
-      .select(col("word"), col("doc_id")).distinct()
-    val agg = udaf(graft.functions.CompressedPostingsAgg)
-    val index = tok.groupBy("word").agg(agg(col("doc_id")).as("postings"))
-    val decoded = index.select(col("word"), col("postings"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (w, enc) =>
-        graft.functions.PostingsCodec.decode(enc).map(id => (w, id))
-      }
-      .toDF("word", "doc_id")
-    decoded.groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
+      .select(col("doc_id"), col("word")).distinct()
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_hit"))
       .filter(col("n_hit") === Bm25Terms.length)
-      .join(docsLight(spark, dir).select(col("doc_id"), col("source")), Seq("doc_id"))
+      .join(d.select(col("doc_id"), col("source")), Seq("doc_id"))
       .select(col("doc_id"), col("source"))
   }
+
+  /** q237: boolean search served from the term-filtered postings: the
+    * distinct (word, doc_id) postings of the query terms go straight into
+    * the doc-keyed count-equality of [[booleanAnd]]. The oracle is q140's
+    * plain formulation; the query differs from q140 only in the unspread
+    * [[docsLight]] read (tokenize + one agg). DETERMINISM: integer
+    * counts. Scale shape: the term filter prunes the scan to the query
+    * terms' postings.
+    */
+  def q237ServeFromIndex(spark: SparkSession, dir: String): DataFrame =
+    booleanAnd(docsLight(spark, dir))
 
   /** RBO@10 fixed-point weight factors: w_d·(2520/d) where
     * w_d = 0.9^(d-1)·1e9 = 9^(d-1)·10^(10-d) is an EXACT integer for
@@ -452,52 +449,29 @@ object SearchQueries {
           .cast("double") / RboDenom, 6).as("rbo"))
   }
 
-  /** q247: phrase search served FROM a compressed POSITIONAL index —
-    * q237's proof extended to positions: per (term, doc) the ascending
-    * occurrence positions are delta-varint-encoded
-    * (`PostingsCodec.encode`, q76's codec — positions are ascending
-    * distinct longs exactly like doc ids), then the phrase "hash join"
-    * is answered by DECODING both terms' position lists per doc and
-    * counting the sorted-merge intersection of `positions(hash)` with
-    * `positions(join) − 1`. The oracle is q26's PLAIN positional-join
-    * formulation, so the driver proves encode → decode → positional
-    * intersect ≡ direct scan. DETERMINISM: codec round-trip is exact;
-    * counts are integers. Scale shape: the index rows are (term, doc)
-    * grain with 1-2 bytes per position; the serve join touches only
-    * the two phrase terms' postings (never the corpus), and the merge
-    * is linear in the two lists.
+  /** q247: phrase search served from the POSITIONAL postings — per doc,
+    * the phrase "hash join" occurs once for every `hash` position p with
+    * a `join` at p + 1, i.e. the size of the intersection of
+    * `positions(hash)` with `positions(join) − 1`. Both position lists
+    * are collected in ONE doc-keyed aggregate (`collect_list` skips the
+    * other term's nulls), so there is no self-join and no cache.
+    * Positions are distinct per (doc, term) — one word per position — so
+    * `array_intersect`'s set semantics count every match exactly once.
+    * The oracle is q26's plain positional formulation. DETERMINISM:
+    * integer positions and counts. Scale shape: the term filter prunes
+    * the token stream to the two phrase terms before the one doc-keyed
+    * exchange.
     */
   def q247PhraseFromIndex(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val phrase = Seq("hash", "join")
-    val tp = Ranking.tokensWithPos(docs(spark, dir), "text", "doc_id")
-      .filter(col("word").isin(phrase: _*))
-    val index = tp.groupBy("word", "doc_id")
-      .agg(sort_array(collect_list(col("pos"))).as("ps"))
-      .as[(String, Long, Seq[Int])]
-      .map { case (w, d, ps) =>
-        (w, d, graft.functions.PostingsCodec.encode(ps.map(_.toLong).toArray))
-      }
-      .toDF("word", "doc_id", "enc")
-      .persist()
-    val a = index.filter(col("word") === phrase.head)
-      .select(col("doc_id"), col("enc").as("ea"))
-    val b = index.filter(col("word") === phrase(1))
-      .select(col("doc_id"), col("enc").as("eb"))
-    a.join(b, Seq("doc_id")).as[(Long, Array[Byte], Array[Byte])]
-      .map { case (d, ea, eb) =>
-        val pa = graft.functions.PostingsCodec.decode(ea)
-        val pb = graft.functions.PostingsCodec.decode(eb).map(_ - 1)
-        var i = 0; var j = 0; var n = 0L
-        while (i < pa.length && j < pb.length) {
-          if (pa(i) == pb(j)) { n += 1; i += 1; j += 1 }
-          else if (pa(i) < pb(j)) i += 1
-          else j += 1
-        }
-        (d, n)
-      }
-      .toDF("doc_id", "n")
+    Ranking.tokensWithPos(docs(spark, dir), "text", "doc_id")
+      .filter(col("word").isin("hash", "join"))
+      .groupBy("doc_id")
+      .agg(
+        collect_list(when(col("word") === "hash", col("pos"))).as("a"),
+        collect_list(when(col("word") === "join", col("pos") - 1)).as("b"))
+      .select(col("doc_id"),
+        size(array_intersect(col("a"), col("b"))).cast("long").as("n"))
       .filter(col("n") > 0)
   }
 
@@ -550,32 +524,16 @@ object SearchQueries {
       Ranking.keywords(docs(s, dir), "text", "doc_id", k = 3)),
     "q27_positional_index" -> ((s, dir) =>
       Ranking.positionalIndex(docs(s, dir), "text", "doc_id")),
-    // q140: boolean AND search — the index SERVING path: documents
-    // containing EVERY query term. The term predicate filters postings
-    // at the tokenizer (only matching words survive the scan), per-doc
-    // distinct is map-side, and the 3-way postings intersection is one
-    // doc-keyed count-equality aggregate — no join in the hot path (the
-    // trailing source lookup is a key join against the doc table). At
-    // 100 TB the same answer comes from a k-way merge of the PREBUILT
-    // index's postings (q27/q76) — term-keyed, so each query term reads
-    // one posting list, not the corpus.
+    // q140: boolean AND search — the index SERVING path (see
+    // booleanAnd). At 100 TB the same answer reads the PREBUILT index's
+    // postings (q27/q1) — term-keyed, so each query term reads one
+    // posting list, not the corpus.
     // q153: sparse TF-IDF cosine pairs — the lexical document-vector
     // similarity join over the inverted index (see
     // Ranking.sparseCosinePairs for the determinism + scale contract)
     "q153_sparse_cosine" -> ((s, dir) =>
       Ranking.sparseCosinePairs(docs(s, dir), "text", "doc_id", threshold = 0.3)),
-    "q140_boolean_search" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val tok = docs(s, dir)
-        .select(col("doc_id"), graft.functions.AlnumTokens(col("text")))
-      tok.filter(col("word").isin(Bm25Terms: _*))
-        .select(col("doc_id"), col("word")).distinct()
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_hit"))
-        .filter(col("n_hit") === Bm25Terms.length)
-        .join(docs(s, dir).select(col("doc_id"), col("source")), Seq("doc_id"))
-        .select(col("doc_id"), col("source"))
-    }))
+    "q140_boolean_search" -> ((s, dir) => booleanAnd(docs(s, dir))))
 
   /** DuckDB word-array CTE — the SQL twin of TextFunctions.wordsArr (the
     * text-pipeline `[a-z0-9]` alphabet, same as TextQueries.WordsCte).
@@ -591,7 +549,7 @@ object SearchQueries {
 
   val oracleSql: Map[String, String] = Map(
     // q26's PLAIN positional formulation — the driver compare proves the
-    // positional encode -> decode -> intersect path equals the scan
+    // one-aggregate position intersect equals the positional scan
     "q247_phrase_from_index" ->
       s"""$WordsCte
          |SELECT doc_id, n FROM (
@@ -663,7 +621,7 @@ object SearchQueries {
          |        AS DOUBLE) / $RboDenom, 6) AS rbo
          |FROM pd GROUP BY word""".stripMargin,
     // q140's PLAIN scan formulation — the driver compare proves the
-    // encode -> decode -> intersect index path equals the direct scan
+    // postings count-equality intersect equals the direct scan
     "q237_serve_from_index" ->
       s"""$WordsCte,
          |toks AS (SELECT doc_id, unnest(w) AS word FROM wd),

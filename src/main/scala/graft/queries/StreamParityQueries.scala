@@ -7,7 +7,7 @@ import graft.streaming.StreamingOps
 
 /** Streaming operators run against the REAL corpus and checked by the
   * driver's DuckDB oracle — extending the hard correctness gate from
-  * the index parity pair (q75/q76) to the ingest-hygiene surface.
+  * the index parity query (q75) to the ingest-hygiene surface.
   * MemoryStream + the chunked driver feed are the test-harness SOURCE
   * only (production reads Kafka/files via readStream); the operator
   * under test is the unbounded plan itself.

@@ -152,7 +152,8 @@ class DeterminismSpec extends AnyFunSuite with SparkTestBase {
 
   test("query results are identical across shuffle-partition counts") {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    def run(parts: String): Map[String, Set[String]] = {
+    // sorted multisets, not sets: a set cannot see a lost or duplicated row
+    def run(parts: String): Map[String, Seq[String]] = {
       // queries persist() intermediates; without clearing, the second run
       // would silently substitute the FIRST run's cached tables (same
       // canonical plan) instead of re-executing at the new partition
@@ -161,7 +162,7 @@ class DeterminismSpec extends AnyFunSuite with SparkTestBase {
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       Queries.map { q =>
         q -> SparkEntry.queries(q)(spark, sfDir).collect()
-          .map(_.toString).toSet
+          .map(_.toString).sorted.toSeq
       }.toMap
     }
     try {

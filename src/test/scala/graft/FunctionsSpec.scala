@@ -3,7 +3,7 @@ package graft
 import scala.util.Random
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{AsciiCleanLower, CompressedPostingsAgg, PostingsCodec}
+import graft.functions.AsciiCleanLower
 
 class FunctionsSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -34,31 +34,6 @@ class FunctionsSpec extends AnyFunSuite with SparkTestBase {
     val got = spark.sql("SELECT ascii_clean_lower('Hello, Wörld!') AS w")
       .as[String].collect().head
     assert(got == "hellowrld")
-  }
-
-  test("postings codec round-trips and compresses") {
-    val rnd = new Random(7)
-    (1 to 100).foreach { _ =>
-      val ids = (1 to rnd.nextInt(200))
-        .map(_ => math.abs(rnd.nextLong()) % (1L << 40))
-        .distinct.sorted.toArray
-      val enc = PostingsCodec.encode(ids)
-      assert(PostingsCodec.decode(enc).toSeq == ids.toSeq)
-    }
-    // dense postings compress far below 8 bytes/id
-    val dense = (1000000L to 1010000L).toArray
-    assert(PostingsCodec.encode(dense).length < dense.length * 2 + 10)
-  }
-
-  test("compressed postings aggregator equals collect_set") {
-    val pairs = Seq((1L, "a"), (2L, "a"), (2L, "a"), (5L, "a"), (3L, "b"))
-      .toDF("doc_id", "word")
-    val agg = udaf(CompressedPostingsAgg)
-    val got = pairs.groupBy("word")
-      .agg(agg(col("doc_id")).as("post"))
-      .as[(String, Array[Byte])].collect()
-      .map { case (w, b) => w -> PostingsCodec.decode(b).toSeq }.toMap
-    assert(got == Map("a" -> Seq(1L, 2L, 5L), "b" -> Seq(3L)))
   }
 
   test("alnum_word_count matches the generator and the HOF tokenizer on ASCII") {
@@ -146,61 +121,6 @@ class FunctionsSpec extends AnyFunSuite with SparkTestBase {
     }
     val zero = native.find(_._1 == 200L).get
     assert(zero == ((200L, 0.0, 0L, 0, 0.0)), "all-zero vector quantizes to zeros")
-  }
-
-  test("postings aggregation state stays O(compressed) on a million-posting word") {
-    // a stop-word-scale group: 1M distinct IDs arriving UNSORTED (worst
-    // case for the staging tail), split across two partial buffers that
-    // are then merged — the full partial-agg + shuffle-merge lifecycle
-    val n = 1000000
-    val rnd = new Random(99)
-    val ids = rnd.shuffle((0 until n).toVector).map(_.toLong)
-    val (left, right) = ids.splitAt(n / 2)
-    var b1 = CompressedPostingsAgg.zero
-    var peak = 0L
-    left.foreach { id =>
-      b1 = CompressedPostingsAgg.reduce(b1, id)
-      if ((id & 0xfff) == 0) peak = math.max(peak, b1.stateBytes)
-    }
-    var b2 = CompressedPostingsAgg.zero
-    right.foreach { id => b2 = CompressedPostingsAgg.reduce(b2, id) }
-    peak = math.max(peak, b1.stateBytes + b2.stateBytes)
-    val merged = CompressedPostingsAgg.merge(b1, b2)
-    peak = math.max(peak, merged.stateBytes)
-    val out = CompressedPostingsAgg.finish(merged)
-    // correctness: exactly the sorted distinct set, dense deltas
-    assert(PostingsCodec.decode(out).toSeq == (0L until n.toLong))
-    // boundedness: collect_set state is >= 8 bytes/ID (16 MB boxed-set
-    // reality is far higher); the compressed ladder must stay well under
-    // half that — in practice ~2-3 bytes/ID for shuffled dense IDs
-    assert(peak < 4L * n, s"peak state $peak bytes >= ${4L * n}")
-    assert(out.length < 2 * n, s"final encoding ${out.length} bytes")
-  }
-
-  test("postings run ladder is strictly growing after every merge") {
-    // Property check for the documented log-structured invariant: after
-    // absorb, run sizes must STRICTLY grow from head at every depth —
-    // round 5's one-shot compact() left equal-size runs deeper in the
-    // ladder (e.g. sizes [3,5,5,9]) unmerged. Random partial-buffer sizes
-    // and merge orders exercise exactly those equal-size collisions.
-    val rnd = new Random(7)
-    val partials = (0 until 24).map { p =>
-      var b = CompressedPostingsAgg.zero
-      val count = 1 + rnd.nextInt(6000)
-      (0 until count).foreach { _ =>
-        b = CompressedPostingsAgg.reduce(b, rnd.nextInt(100000).toLong)
-      }
-      b
-    }
-    val merged = rnd.shuffle(partials).reduceLeft { (a, b) =>
-      val m = CompressedPostingsAgg.merge(a, b)
-      val sizes = m.runs.map(_.length)
-      assert(sizes == sizes.sorted && sizes.distinct == sizes,
-        s"ladder not strictly growing: $sizes")
-      m
-    }
-    val out = PostingsCodec.decode(CompressedPostingsAgg.finish(merged)).toSeq
-    assert(out == out.sorted && out.distinct == out)
   }
 
   test("WordNgrams occurrence mode emits every n-gram in order, no short-doc fallback") {

@@ -96,6 +96,38 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(p.contains("alnum_tokens"), "native tokenizer must be in the plan")
   }
 
+  test("q117/q237/q247/q249: postings are served and compacted as plain columns") {
+    // the postings stay (word, doc_id) / (doc_id, pos) rows end to end: a
+    // typed Aggregator (Kryo buffer) or a typed map/flatMap decode would
+    // bring back the byte-codec path this pins out
+    import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapElementsExec, MapPartitionsExec}
+    import org.apache.spark.sql.execution.aggregate.{ScalaAggregator, TypedAggregateExpression}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    object Aqe extends AdaptiveSparkPlanHelper
+    for (q <- Seq("q117_index_compaction", "q237_serve_from_index",
+        "q247_phrase_from_index", "q249_tombstone_compaction")) {
+      val df = SparkEntry.queries(q)(spark, sfDir)
+      df.collect() // the adaptive plan is final only after execution
+      val executed = df.queryExecution.executedPlan
+      spark.catalog.clearCache()
+      Bridge.freeAllPersistedRdds(spark)
+      val typedAggs = Aqe.flatMap(executed)(_.expressions.flatMap(_.collect {
+        case f @ (_: TypedAggregateExpression | _: ScalaAggregator[_, _, _]) => f
+      }))
+      assert(typedAggs.isEmpty, s"$q aggregates through a typed Aggregator:\n$executed")
+      val objectOps = Aqe.collect(executed) {
+        case o @ (_: MapElementsExec | _: MapPartitionsExec | _: DeserializeToObjectExec) => o
+      }
+      assert(objectOps.isEmpty, s"$q decodes through typed object operators:\n$executed")
+      if (q == "q247_phrase_from_index") {
+        assert(Aqe.collect(executed) { case c: InMemoryTableScanExec => c }.isEmpty,
+          s"q247 must not cache its postings:\n$executed")
+        assert(Aqe.collect(executed) { case j: BaseJoinExec => j }.isEmpty,
+          s"q247 must intersect positions in one aggregate, no join:\n$executed")
+      }
+    }
+  }
+
   test("q43: centroid aggregation is partial+final (map-side combine)") {
     val p = plan("q43_label_centroids")
     assert("HashAggregate".r.findAllIn(p).size >= 2,

@@ -102,6 +102,25 @@ class Round8Spec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("q247: phrase counts equal q26's positional join on repeated and reversed terms") {
+    // pins the pos - 1 shift and the distinct-position assumption behind
+    // array_intersect: overlapping, doubled and reversed occurrences
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-q247").toString
+    Seq((1L, "hash join hash join"), (2L, "hash hash join join"),
+        (3L, "join hash join"), (4L, "join hash"))
+      .toDF("doc_id", "text")
+      .withColumn("source", org.apache.spark.sql.functions.lit("s"))
+      .write.parquet(s"$dir/documents.parquet")
+    val got = graft.queries.SearchQueries.q247PhraseFromIndex(spark, dir)
+      .as[(Long, Long)].collect().sorted.toSeq
+    val viaJoin = graft.operators.Ranking.phraseCount(
+        spark.read.parquet(s"$dir/documents.parquet"), "text", "doc_id", Seq("hash", "join"))
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(got == Seq((1L, 2L), (2L, 1L), (3L, 1L)))
+    assert(got == viaJoin)
+  }
+
   test("q248: every minimal window spans at least the three distinct terms") {
     val r = rows("q248_min_window")
     assert(r.nonEmpty)
