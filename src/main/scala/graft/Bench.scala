@@ -232,15 +232,19 @@ object Bench {
         Seq("index_reference_corpus" ->
           (if (secs.exists(_ < 0)) -1.0 else secs.min))
       } else Nil
+    // an entry whose input is missing on this host is named, not dropped
+    val absent = if (refResults.isEmpty) Seq("index_reference_corpus") else Nil
+    absent.foreach(a => System.err.println(s"[bench] $a absent: $refManifest not found"))
 
     val all = results ++ refResults
     val qs = all.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
     val mx = spreads.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
+    val ab = absent.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = all.map(_._2).filter(_ >= 0).sum
     val fullLine =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"reps":$reps,"max":$mx,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"reps":$reps,"max":$mx,"absent":$ab,"sf":"$sfDir"}"""
 
     // Artifact self-containment (round-14 verdict): the driver captures
     // only the LAST 2000 chars of stdout, and the full per-query

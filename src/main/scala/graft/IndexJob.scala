@@ -9,11 +9,15 @@ import graft.sources.Corpus
   *
   *   manifest (driver) → per-task document reads → explode(split) → clean/lower → filter
   *   → per-doc distinct (partial agg) → groupBy(word) collect_set (final agg)
-  *   → letter column → format → 26-way letter-partitioned ordered text sink.
+  *   → letter column → format → letter repartition → sorted letter runs,
+  *   each written by its task straight to a staged `<letter>.txt`.
   *
   * The reference's M mapper / R reducer threads, mutex work queue and
   * barriers all map onto Spark's task scheduler and the two shuffle
   * boundaries Catalyst inserts (word aggregation, letter repartition).
+  * A pass runs the two shuffle-map stages and one sink job; the driver
+  * only reads the manifest and renames the 26 finished files (see
+  * [[graft.operators.IndexWriter]], which also says where `outDir` may live).
   */
 object IndexJob {
 
@@ -27,7 +31,9 @@ object IndexJob {
     InvertedIndex.buildFromTokens(Tokenizer.tokens(docs, "line", Seq("doc_id")))
   }
 
-  /** Build and write `a.txt`…`z.txt` under `outDir` (golden-compatible). */
+  /** Build and write `a.txt`…`z.txt` under `outDir` (golden-compatible);
+    * `outDir` must be local and visible to every task.
+    */
   def run(spark: SparkSession, manifestPath: String, baseDir: String, outDir: String): Unit =
     IndexWriter.write(index(spark, manifestPath, baseDir), outDir)
 

@@ -488,7 +488,11 @@ object Edges {
     * whole edge build ~4^r times into round r's plan and the codegen
     * alone exhausts the driver heap — the checkpoint truncates the
     * plan at the materialized blocks (the q311 lesson). The runner's
-    * sweep frees the blocks. Scale shape per round: one degree-oriented wedge join
+    * sweep frees the blocks. After the fixpoint, the remaining entries
+    * of the result are the SAME checkpointed DataFrame, so a caller
+    * that frees rounds one by one must dedup them by reference first
+    * (`Bridge.freeLocalCheckpoint` on an alias still in use would drop
+    * blocks a later round reads). Scale shape per round: one degree-oriented wedge join
     * (out-degree O(√|E|) under the orientation bound) + one edge-keyed
     * count agg + one edge-keyed semi-join — never an all-pairs step.
     */

@@ -803,7 +803,9 @@ object TextQueries {
     // two separate aggregations over docBkt joined back on bkt — one
     // full cache read, one exchange and one join more than needed.
     // ct = 0 where no target grams hit the bucket ≡ the old left
-    // join's coalesce(ct, 0); values identical.
+    // join's coalesce(ct, 0). One divergence: with zero target-language
+    // rows the old separate sum gave nt = null (null scores); this sum
+    // of zeros gives nt = 0 and finite scores.
     val bktTab = docBkt.groupBy("bkt").agg(sum(col("n")).as("cr"),
       sum(when(col("lang") === "en", col("n")).otherwise(lit(0L))).as("ct"))
     val tots = bktTab.agg(sum(col("cr")).as("nr"), sum(col("ct")).as("nt"))

@@ -56,6 +56,12 @@ object ProfileOne {
           tm.executorCpuTime / 1000000L))
       }
     })
+    // a backed-up bus times out the drain: print what arrived, say so
+    def drain(): Unit =
+      try org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark)
+      catch { case e: java.util.concurrent.TimeoutException =>
+        System.err.println(s"[profile] WARN listener bus did not drain ($e); the stage table may be incomplete")
+      }
     val fn = graft.SparkEntry.queries(name)
     (1 to reps).foreach { i =>
       if (i == reps) {
@@ -63,7 +69,7 @@ object ProfileOne {
         // clearing, so the final-rep table is neither missing its own
         // stages nor polluted by foreign ones (listener events are
         // delivered asynchronously; ADVICE r16)
-        org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark)
+        drain()
         stages.clear() // keep only the final rep's stages
       }
       val t0 = System.nanoTime()
@@ -73,7 +79,7 @@ object ProfileOne {
       org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
     }
     // final drain before printing (same asynchrony)
-    org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark)
+    drain()
     import scala.jdk.CollectionConverters._
     val all = stages.asScala.toSeq.sortBy(-_.ms)
     println(f"[profile] ${all.size} stages in final rep, " +

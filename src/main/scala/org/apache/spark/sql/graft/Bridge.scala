@@ -90,4 +90,14 @@ object Bridge {
     m.incBytesRead(bytes)
     m.incRecordsRead(1)
   }
+
+  /** Count `bytes` output bytes in `records` rows toward the running task's
+    * output metrics, so a sink that writes files itself shows up in
+    * listeners as Spark's file writers do (the setters are `private[spark]`).
+    */
+  def addOutputWritten(bytes: Long, records: Long): Unit = {
+    val m = TaskContext.get().taskMetrics().outputMetrics
+    m.setBytesWritten(m.bytesWritten + bytes)
+    m.setRecordsWritten(m.recordsWritten + records)
+  }
 }

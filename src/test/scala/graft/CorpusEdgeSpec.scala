@@ -3,6 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +15,9 @@ import graft.sources.Corpus
   * produce exactly the reference's semantics (all 26 letter files, empty
   * where no words, df-ordered rows). Also pins how documents are found
   * and read: relative base directories, names that URL-encode, missing
-  * files, line ends, invalid UTF-8 and the scan's input metrics.
+  * files, line ends, invalid UTF-8 and the scan's input metrics; and how
+  * the letter sink replaces stale output, cleans its staging dir and
+  * reports its output metrics.
   */
 class CorpusEdgeSpec extends AnyFunSuite with SparkTestBase {
 
@@ -29,15 +32,34 @@ class CorpusEdgeSpec extends AnyFunSuite with SparkTestBase {
   private def text(docs: (String, String)*): Path =
     corpus(docs.map { case (n, t) => n -> t.getBytes(UTF_8) })
 
-  /** Index the corpus at `base` and return its 26 letter files, trimmed. */
-  private def index(manifest: String, base: String): Map[Char, String] = {
-    val out = Files.createTempDirectory("graft-edge-out")
+  /** Index the corpus at `base` into `out` and return its 26 letter files, trimmed. */
+  private def index(manifest: String, base: String,
+                    out: Path = Files.createTempDirectory("graft-edge-out")): Map[Char, String] = {
     IndexJob.run(spark, manifest, base, out.toString)
     ('a' to 'z').map(l => l -> Files.readString(out.resolve(s"$l.txt")).trim).toMap
   }
 
   private def index(base: Path): Map[Char, String] =
     index(base.resolve("manifest.txt").toString, base.toString)
+
+  private def stagingOf(out: Path): Path = out.resolve(IndexWriter.StagingDir)
+
+  /** Each of `metrics`, summed over every task that ends while `body` runs. */
+  private def taskTotals(metrics: (TaskMetrics => Long)*)(body: => Unit): Seq[Long] = {
+    val totals = metrics.map(_ => new AtomicLong)
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
+        metrics.zip(totals).foreach { case (f, t) => t.addAndGet(f(m)) }
+      }
+    }
+    Bridge.waitListenerBusEmpty(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      Bridge.waitListenerBusEmpty(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    totals.map(_.get)
+  }
 
   test("degenerate documents index correctly") {
     val got = index(text(
@@ -77,9 +99,25 @@ class CorpusEdgeSpec extends AnyFunSuite with SparkTestBase {
   test("a manifest entry naming a missing file fails the build with its path") {
     val base = text("d1.txt" -> "pear", "gone.txt" -> "plum")
     Files.delete(base.resolve("gone.txt"))
-    val e = intercept[Exception](index(base))
+    val out = Files.createTempDirectory("graft-edge-out")
+    val e = intercept[Exception](index(base.resolve("manifest.txt").toString, base.toString, out))
     val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
     assert(messages.exists(m => m != null && m.contains(base.resolve("gone.txt").toString)), e)
+    assert(!Files.exists(stagingOf(out)), "a failed build must not leave its staging dir")
+  }
+
+  test("stale letter files and a leftover staging dir do not leak into the output") {
+    val small = Paths.get(getClass.getResource("/index_small").toURI)
+    val out = Files.createTempDirectory("graft-edge-out")
+    Files.writeString(out.resolve("z.txt"), "zebra:[9]\n") // the corpus has no z-words
+    Files.createDirectories(stagingOf(out))
+    Files.writeString(stagingOf(out).resolve("s.txt.7"), "partial") // a crashed attempt's file
+    IndexJob.run(spark, small.resolve("test_small.txt").toString, small.toString, out.toString)
+    ('a' to 'z').foreach { l =>
+      val golden = Files.readAllBytes(small.resolve(s"test_out_small/$l.txt"))
+      assert(Files.readAllBytes(out.resolve(s"$l.txt")).sameElements(golden), s"$l.txt differs")
+    }
+    assert(!Files.exists(stagingOf(out)))
   }
 
   test("CRLF and bare-CR line ends index like LF") {
@@ -107,21 +145,23 @@ class CorpusEdgeSpec extends AnyFunSuite with SparkTestBase {
     val base = text("d1.txt" -> "alpha beta\ngamma\n", "d2.txt" -> "delta", "d3.txt" -> "", "d4.txt" -> "x\r\ny\rz")
     val files = (1 to 4).map(i => base.resolve(s"d$i.txt"))
     val docs = Corpus.read(spark, base.resolve("manifest.txt").toString, base.toString)
-    val bytes, records = new AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
-        bytes.addAndGet(m.inputMetrics.bytesRead)
-        records.addAndGet(m.inputMetrics.recordsRead)
-      }
-    }
-    Bridge.waitListenerBusEmpty(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val Seq(bytes, records) = taskTotals(_.inputMetrics.bytesRead, _.inputMetrics.recordsRead) {
       val out = Files.createTempDirectory("graft-edge-out").toString
       IndexWriter.write(InvertedIndex.buildFromTokens(Tokenizer.tokens(docs, "line", Seq("doc_id"))), out)
-      Bridge.waitListenerBusEmpty(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(bytes.get == files.map(Files.size).sum)
-    assert(records.get == 6) // 2 + 1 + 0 + 3 lines
+    }
+    assert(bytes == files.map(Files.size).sum)
+    assert(records == 6) // 2 + 1 + 0 + 3 lines
+  }
+
+  test("the letter sink reports every output byte and row to listeners") {
+    val base = text("d1.txt" -> "alpha beta\ngamma alpha", "d2.txt" -> "beta delta", "d3.txt" -> "zeta")
+    val out = Files.createTempDirectory("graft-edge-out")
+    val Seq(bytes, records) = taskTotals(_.outputMetrics.bytesWritten, _.outputMetrics.recordsWritten) {
+      index(base.resolve("manifest.txt").toString, base.toString, out)
+    }
+    val files = ('a' to 'z').map(l => out.resolve(s"$l.txt"))
+    assert(bytes == files.map(Files.size).sum)
+    assert(records == 5) // alpha, beta, delta, gamma, zeta
+    assert(records == files.map(f => Files.readAllLines(f).size).sum)
   }
 }

@@ -1,12 +1,19 @@
 package graft
 
-import java.nio.file.Paths
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.WriteFilesExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, REPARTITION_BY_COL,
+  ShuffleExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression tests: the performance properties the engine
@@ -63,6 +70,35 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       s"expected the word aggregation as the only exchange:\n$executed")
     assert(Aqe.collect(executed) { case b: BroadcastExchangeLike => b }.isEmpty, executed)
     assert(Aqe.collect(executed) { case j: BaseJoinExec => j }.isEmpty, s"no join expected:\n$executed")
+  }
+
+  test("index sink: tasks write the letter files; the letter exchange is sized by AQE") {
+    val small = Paths.get(getClass.getResource("/index_small").toURI).toString
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    Bridge.waitListenerBusEmpty(spark)
+    spark.listenerManager.register(listener)
+    try {
+      IndexJob.run(spark, s"$small/test_small.txt", small, Files.createTempDirectory("graft-plan-out").toString)
+      Bridge.waitListenerBusEmpty(spark)
+    } finally spark.listenerManager.unregister(listener)
+    object Aqe extends AdaptiveSparkPlanHelper
+    val executed = plans.asScala.toSeq
+    assert(executed.nonEmpty, "the sink action must report its plan")
+    val writes = executed.flatMap(p => Aqe.collect(p) {
+      case w: DataWritingCommandExec => w
+      case w: WriteFilesExec => w
+    })
+    assert(writes.isEmpty, s"the letter files must not go through a Spark file writer:\n${executed.mkString("\n")}")
+    val letter = executed.flatMap(p => Aqe.collect(p) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.toString.startsWith("hashpartitioning(letter") => e
+    })
+    assert(letter.size == 1 && letter.head.shuffleOrigin == REPARTITION_BY_COL,
+      s"expected one letter exchange from repartition(letter), no fixed count:\n${executed.mkString("\n")}")
   }
 
   test("q12/q13: semi and anti joins stay semi/anti (no row duplication)") {
