@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+import com.fasterxml.jackson.databind.ObjectMapper
 
 /** Benchmark main — runs the headline query set on
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line
@@ -15,7 +17,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** One per engine area; names must exist in SparkEntry.queries
-    * (spec-guarded — a missing name would be silently skipped here).
+    * (spec-guarded — a missing name would record a failed -1 here).
     */
   private[graft] val Headline = Seq(
     "q1_inverted_index",
@@ -128,19 +130,30 @@ object Bench {
     "q378_unigram_apply",
     "q381_doremi_mixture")
 
+  /** The top-5 movers of `cur` against `prevLine`, the full line of an
+    * earlier sweep, by relative change: name -> (previous, current)
+    * seconds. Empty unless `prevLine` parses and was recorded at `sfDir`,
+    * since minima of two datasets do not compare. An entry that failed
+    * (-1) or is absent on either side is skipped.
+    */
+  private[graft] def movers(prevLine: Option[String], sfDir: String,
+      cur: Seq[(String, Double)]): Seq[(String, (Double, Double))] = {
+    val prev = prevLine
+      .flatMap(l => Try(new ObjectMapper().readTree(l)).toOption)
+      .filter(_.path("sf").asText == sfDir)
+      .map(_.path("queries").properties.asScala
+        .map(e => e.getKey -> e.getValue.asDouble(-1.0)).toMap)
+      .getOrElse(Map.empty[String, Double])
+    cur.flatMap { case (k, v) =>
+      prev.get(k).collect { case p if p > 0 && v >= 0 => (k, p, v) }
+    }.sortBy { case (_, p, v) => -math.abs(v - p) / p }
+      .take(5).map { case (k, p, v) => k -> (p, v) }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.sources.SessionDefaults.harness(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      ).getOrCreate()
-    // ERROR, not WARN: the per-query `freeAllPersistedRdds` sweep emits a
-    // localCheckpoint-lineage WARN per freed block, and hundreds of those
-    // lines around the single JSON result line have (every round so far)
-    // broken the driver's parse of this benchmark's output.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Runner.session(s"local[$cpus]", 32)
 
     // JVM warmup: run every headline plan once at a small SF so the
     // measured runs see JIT-compiled expression paths (the interpreted
@@ -149,22 +162,11 @@ object Bench {
     // not sf0.001: the tiny corpus executes the HOF lambdas too few times
     // to reach C2's invocation thresholds, which showed up as occasional
     // 8-10x first-measurement outliers on the lambda-heavy queries.
+    // Same action as the measured loop, so warmup JITs the same
+    // expression paths (a count-pruned warmup would skip them).
     val warmDir = "/root/testdata/sf0.01"
     if (new java.io.File(warmDir).isDirectory)
-      Headline.foreach { name =>
-        SparkEntry.queries.get(name).foreach { fn =>
-          // same action as the measured loop, so warmup JITs the same
-          // expression paths (a count-pruned warmup would skip them)
-          try fn(spark, warmDir).queryExecution.toRdd.count()
-          catch { case scala.util.control.NonFatal(_) => () }
-          // queries persist() intermediates they reference more than once;
-          // the runner owns the cache lifecycle — drop them per query so
-          // storage memory never accumulates across the session (incl.
-          // localCheckpoint blocks, which clearCache cannot reach)
-          spark.catalog.clearCache()
-          org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
-        }
-      }
+      Headline.foreach(Runner.run(spark, _, warmDir))
     spark.read.parquet(s"$sfDir/nation.parquet").count()
 
     // Timing: 4 INTERLEAVED full-list passes, per-query MIN across passes.
@@ -173,35 +175,18 @@ object Bench {
     // such a window (round 4's artifact mis-reported steady-state by up to
     // 8x that way). Interleaving spaces a query's reps minutes apart, so a
     // single bad window can inflate at most one of its four samples.
+    // A failed run records -1 for the query.
     val reps = 4
     val samples = collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
-    for (_ <- 1 to reps; name <- Headline; fn <- SparkEntry.queries.get(name)) {
-      val t0 = System.nanoTime()
-      // NonFatal only (same policy as BenchOne): an OOM must abort the
-      // sweep — every later sample from a corrupted JVM would silently
-      // feed the per-query minima this artifact exists to make honest.
-      // toRdd.count(), NOT Dataset.count(): the latter lets Catalyst
-      // prune every column and even ELIMINATE row-preserving outer
-      // joins whose build side is an aggregate on the join key — a
-      // per-document operator like the substring-dedup apply (q344) or
-      // passage dedup (q101) "benchmarks" as a bare parquet scan under
-      // it (measured: q344 0.36 s pruned vs ~3 s materialized at
-      // sf0.1). Executing the query's OWN compiled physical plan and
-      // counting its rows times what a user materializing the result
-      // actually pays, for every query uniformly.
-      val n = try fn(spark, sfDir).queryExecution.toRdd.count()
-        catch { case scala.util.control.NonFatal(_) => -1L }
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache() // per-query cache ownership (see warmup)
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
-      samples(name) = (if (n < 0) -1.0 else sec) :: samples(name)
-    }
-    val results = Headline.flatMap { name =>
-      samples.get(name).map { secs =>
-        name -> (if (secs.exists(_ < 0)) -1.0 else secs.min)
+    for (_ <- 1 to reps; name <- Headline)
+      samples(name) = Runner.run(spark, name, sfDir).fold(_ => -1.0, _.sec) :: samples(name)
+    def across(pick: List[Double] => Double): Seq[(String, Double)] =
+      Headline.map { name =>
+        val secs = samples(name)
+        name -> (if (secs.exists(_ < 0)) -1.0 else pick(secs))
       }
-    }
+    val results = across(_.min)
     // Drift decidability (round-13 verdict): the min alone cannot
     // separate one-JVM sweep drift from a plan regression — a +71%
     // mover with an unchanged plan stayed a "watch item" because the
@@ -211,11 +196,7 @@ object Bench {
     // or GC-pressure windows (drift); a tight band that still moved
     // versus the previous round is a real regression. Extra top-level
     // key — the driver's "queries" parse is untouched.
-    val spreads = Headline.flatMap { name =>
-      samples.get(name).map { secs =>
-        name -> (if (secs.exists(_ < 0)) -1.0 else secs.max)
-      }
-    }
+    val spreads = across(_.max)
     // apples-to-apples vs BASELINE.md: end-to-end index build of the
     // reference's own 355-doc corpus (its checker budget is 200 s).
     // min-of-2 for the same contention-window reason as the query sweep.
@@ -225,8 +206,7 @@ object Bench {
         val secs = (1 to 2).map { _ =>
           val out = java.nio.file.Files.createTempDirectory("graft-bench-index").toString
           val t0 = System.nanoTime()
-          val ok = try { IndexJob.run(spark, refManifest, "/root/reference/checker", out); true }
-            catch { case scala.util.control.NonFatal(_) => false }
+          val ok = Try(IndexJob.run(spark, refManifest, "/root/reference/checker", out)).isSuccess
           if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         }
         Seq("index_reference_corpus" ->
@@ -252,57 +232,32 @@ object Bench {
     // tail cut mid-map). So: the complete line goes to a FILE (and to
     // stdout first, for humans reading the raw log), and the LAST line
     // printed is a compact summary — total, entry count, reps, the
-    // top-5 most expensive entries, and the top-5 movers vs the
-    // previous round's recorded minima (bench/prev_mins.txt, rewritten
-    // from bench/full_latest.json after each round's canonical sweep)
-    // — sized to survive the capture window whole.
+    // top-5 most expensive entries, and the top-5 movers against the
+    // full line this run replaces (see [[movers]]) — sized to survive
+    // the capture window whole.
     // The committed path is reserved for the CANONICAL sweep (the default
     // sf0.1 dataset): an ad-hoc run on /tmp/sf1 etc. would otherwise
-    // silently clobber the round's record and skew the prev_mins movers
-    // comparison. Non-canonical runs default to a /tmp path instead;
-    // SPARK_GRAFT_BENCH_FULL still overrides both.
+    // silently clobber the round's record. Non-canonical runs default to
+    // a /tmp path instead; SPARK_GRAFT_BENCH_FULL still overrides both.
     val canonicalSf = sfDir == "/root/testdata/sf0.1"
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
       if (canonicalSf) "bench/full_latest.json"
       else "/tmp/graft_bench_full_noncanonical.json")
-    try {
-      val p = java.nio.file.Paths.get(fullPath)
-      if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p,
-        (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-    val prevMins: Map[String, Double] =
-      // explicit UTF-8: the forked JVM's default charset is ASCII in
-      // this container, and a strict-decode failure on any non-ASCII
-      // comment byte would silently zero the movers map
-      try {
-        val src = scala.io.Source.fromFile("bench/prev_mins.txt")(scala.io.Codec.UTF8)
-        try src.getLines()
-          .filterNot(l => l.startsWith("#") || l.startsWith("round=") || l.isEmpty)
-          .flatMap { l =>
-            l.split("=", 2) match {
-              case Array(k, v) => v.toDoubleOption.map(k -> _)
-              case _ => None
-            }
-          }.toMap
-        finally src.close()
-      } catch { case scala.util.control.NonFatal(_) => Map.empty }
-    val movers = all
-      .flatMap { case (k, v) =>
-        prevMins.get(k).collect {
-          case p if p > 0 && v >= 0 => (k, p, v, math.abs(v - p) / p)
-        }
-      }
-      .sortBy(-_._4).take(5)
-      .map { case (k, p, v, _) => "\"" + k + f"""\":[$p%.3f,$v%.3f]""" }
+    val fullFile = java.nio.file.Paths.get(fullPath)
+    val prevLine = Try(java.nio.file.Files.readString(fullFile)).toOption
+    Try {
+      if (fullFile.getParent != null) java.nio.file.Files.createDirectories(fullFile.getParent)
+      java.nio.file.Files.writeString(fullFile, fullLine + "\n")
+    }
+    val mv = movers(prevLine, sfDir, all)
+      .map { case (k, (p, v)) => "\"" + k + f"""\":[$p%.3f,$v%.3f]""" }
       .mkString("{", ",", "}")
     val top5 = all.filter(_._2 >= 0).sortBy(-_._2).take(5)
       .map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
 
     println(fullLine)
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","entries":${all.size},"reps":$reps,"top5":$top5,"movers_prev_cur":$movers,"full":"$fullPath","sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","entries":${all.size},"reps":$reps,"top5":$top5,"movers_prev_cur":$mv,"full":"$fullPath","sf":"$sfDir"}""")
     System.out.flush() // forked-JVM stdout is pipe-buffered; the JSON line must land
     spark.stop()
   }

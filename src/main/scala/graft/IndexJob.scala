@@ -47,12 +47,8 @@ object IndexJob {
     val outDir = args(3)
     val baseDir = if (args.length > 4) args(4)
       else Option(new java.io.File(manifest).getParent).getOrElse(".")
-    val spark = graft.sources.SessionDefaults.harness(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-index")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      ).getOrCreate()
+    val spark = Runner.session(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     try run(spark, manifest, baseDir, outDir)
     finally spark.stop()
   }

@@ -13,12 +13,13 @@ object SparkEntry {
     * once (q93/q96/q365's shingle tables, the Quantiles range bases,
     * q362's packed stage) and must NOT unpersist them — the DataFrame
     * is returned lazily, so an unpersist before the caller's action
-    * would defeat the cache. The RUNNER owns release: after each
-    * query's terminal action, call `spark.catalog.clearCache()` plus
-    * `Bridge.freeAllPersistedRdds(spark)` (the latter reaches
-    * localCheckpoint blocks clearCache cannot). Verify, Bench, BenchOne
-    * and the plan/round specs all do; any new runner must too, or
-    * executor storage pins grow with every query run.
+    * would defeat the cache. The RUNNER owns release, at one point:
+    * [[Runner.release]] (`clearCache` plus
+    * `Bridge.freeAllPersistedRdds`, which reaches the localCheckpoint
+    * blocks clearCache cannot), run after each query's terminal action
+    * by [[Runner.run]] and [[Runner.released]]. Every harness main and
+    * spec releases through it; a new runner must too, or executor
+    * storage pins grow with every query run.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     ReferenceQueries.queries ++ RelationalQueries.queries ++

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -7,12 +6,8 @@ import scala.util.control.NonFatal
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.sources.SessionDefaults.harness(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Runner.session(s"local[$cpus]", cpus)
     new java.io.File(outDir).mkdirs()
     // Local-dev subset filter (comma-separated exact names). The driver
     // never sets it → the full surface always runs in the gate.
@@ -23,20 +18,17 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        dumped += 1
-      } catch { case NonFatal(e) =>
-        failed += 1
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      // release once the query's terminal write is done (or failed)
+      Runner.released(spark) {
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          dumped += 1
+        } catch { case NonFatal(e) =>
+          failed += 1
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
       }
-      // queries persist() shared intermediates; the runner owns the cache
-      // lifecycle — release them once the query's terminal write is done.
-      // freeAllPersistedRdds additionally drops localCheckpoint blocks
-      // (connected components), which clearCache cannot reach.
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

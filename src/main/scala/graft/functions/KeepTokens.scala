@@ -64,24 +64,6 @@ case class KeepTokens(left: Expression, right: Expression) extends BinaryExpress
 }
 
 object KeepTokens {
-  /** The round-12 HOF formulation, verbatim — the executable REFERENCE
-    * the native merge-walk is differenced against (Round13Spec bit
-    * parity) and benchmarked against (tools.CutRebuildBench). One
-    * definition: two drifting copies would make the parity pin and the
-    * speedup measurement baselines diverge silently.
-    */
-  private[graft] def hofRebuild(w: Column, cs: Column): Column = {
-    import org.apache.spark.sql.functions._
-    array_join(
-      transform(
-        filter(
-          transform(w, (x, i) => struct(x.as("tk"), (i + 1).as("p"))),
-          s => !array_contains(cs, s.getField("p"))),
-        s => s.getField("tk")),
-      " ")
-  }
-
-
   /** One-pass rebuild; called from interpreted eval and generated code.
     * Sorts a primitive copy of the cut positions, then walks tokens and
     * cuts together: the cut pointer only ever advances, so the whole

@@ -401,9 +401,9 @@ object Dedup {
     *
     * Ownership of the RETURNED labels' checkpoint blocks passes to the
     * caller: free them once results are materialized, either directly
-    * (`Bridge.freeLocalCheckpoint(labels)`) or via the runner-level
-    * `Bridge.freeAllPersistedRdds` that Verify/Bench/BenchOne call after
-    * every query — `clearCache()` alone cannot reach checkpoint blocks.
+    * (`Bridge.freeLocalCheckpoint(labels)`) or via [[graft.Runner.release]],
+    * the single release point every harness runs after each query —
+    * `clearCache()` alone cannot reach checkpoint blocks.
     *
     * INPUT CONTRACT: pass a DEDUPED pair table. Labels are identical
     * either way (every aggregation in the loop is a duplicate-

@@ -588,7 +588,7 @@ object Edges {
     // an observe() metric (a data-invisible CollectMetrics node; the
     // count folds into the scan that feeds the filter) instead of an
     // eager construction-time count() job, so plan-only consumers
-    // (Explain, PlanSpec) stay lazy and Bench's single-JSON-line stdout
+    // (ExplainMany, PlanSpec) stay lazy and Bench's single-JSON-line stdout
     // never sees a stray println — a once-per-session listener reports
     // any nonzero drop through log4j (ERROR-gated in harness sessions).
     ensureHubCensusListener(spark)

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * 3-gram shingle width, the 8-hash/r=2 LSH shape and the persist
   * placement can never drift between consumers.
   *
-  * Persist/cache lifecycle stays with the query runner (clearCache +
-  * freeAllPersistedRdds per query); within one query plan Spark's
+  * Persist/cache lifecycle stays with the query runner
+  * ([[graft.Runner.release]] per query); within one query plan Spark's
   * CacheManager already dedups identical persisted subplans, so two
   * consumers of [[shingleTable]] inside one query share one cached
   * build.

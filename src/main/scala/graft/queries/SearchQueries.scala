@@ -137,7 +137,7 @@ object SearchQueries {
     // once, and every stage — seed retrieval, per-doc length, corpus
     // df, expansion counts, dynamic re-scoring — is a (doc, word)-grain
     // aggregation of it. The r16 shape persisted the raw TOKEN stream
-    // and re-aggregated it per stage (ProfileOne: 4-5 concurrent ~5 s
+    // and re-aggregated it per stage (stage table: 4-5 concurrent ~5 s
     // rebuilds of the tokenization under the raced lazy cache, 42
     // stages); the tf table additionally removes the separate
     // distinct-(doc, word) pass that fed corpus df (a (doc, word, tf)

@@ -2,11 +2,11 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-/** The session knobs EVERY harness entry point shares (Bench, BenchOne,
-  * Verify, Explain, ScaleUp, the test base) — one definition, so a
-  * future harness-wide knob (or a fix to one) cannot silently miss an
-  * entry point. Per-entry-point knobs (master, shuffle partitions,
-  * AQE) stay with their builders.
+/** The session knobs EVERY harness entry point shares — one definition,
+  * so a future harness-wide knob (or a fix to one) cannot silently miss
+  * an entry point. The engine's mains and the test base build their
+  * session through [[graft.Runner.session]], which adds master, shuffle
+  * partitions and AQE; external harnesses call [[harness]] directly.
   *
   *   - UTC session time zone: every oracle comparison assumes it;
   *   - no UI: headless batch JVMs;

@@ -1,15 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility (optimization-round plan audit): write
   * `explain("formatted")` for a comma-separated list of registered
   * queries (or ALL) to one file per query under an output directory —
   * `runMain graft.tools.ExplainMany <names|ALL> <outDir> [sfDir]
-  * [suffix]`. One JVM for the whole batch (Explain.scala pays a JVM +
-  * session per query), same session shape as Explain (local[4],
-  * 8 shuffle partitions). The files are the `plans/r16/<query>_before
-  * /after.txt` evidence the optimization rounds commit.
+  * [suffix]`; a one-name list explains one query. One JVM for the whole
+  * batch, on a `local[4]` session with 8 shuffle partitions. The files
+  * are the `plans/r16/<query>_before/after.txt` evidence the
+  * optimization rounds commit.
   */
 object ExplainMany {
   def main(args: Array[String]): Unit = {
@@ -17,30 +15,26 @@ object ExplainMany {
     val outDir = args(1)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
     val suffix = if (args.length > 3) args(3) else "before"
-    val spark = graft.sources.SessionDefaults.harness(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Runner.session("local[4]", 8)
     new java.io.File(outDir).mkdirs()
     val list =
       if (names == "ALL") graft.SparkEntry.queries.keys.toSeq.sorted
       else names.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     list.foreach { name =>
-      try {
-        val df = graft.SparkEntry.queries(name)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
-          plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        println(s"[explainmany] wrote $outDir/${name}_$suffix.txt")
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          println(s"[explainmany] $name FAILED: ${e.getMessage}")
+      graft.Runner.released(spark) {
+        try {
+          val df = graft.SparkEntry.queries(name)(spark, sfDir)
+          val plan = df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          java.nio.file.Files.write(
+            java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
+            plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          println(s"[explainmany] wrote $outDir/${name}_$suffix.txt")
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            println(s"[explainmany] $name FAILED: ${e.getMessage}")
+        }
       }
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
     }
     spark.stop()
   }

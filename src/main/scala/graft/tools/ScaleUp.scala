@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic N× scale-up of a driver fixture directory, used for
@@ -52,12 +52,8 @@ object ScaleUp {
         s"unknown table name(s) ${bad.toSeq.sorted.mkString(", ")}; " +
           s"valid: ${known.toSeq.sorted.mkString(", ")}")
     }
-    val spark = graft.sources.SessionDefaults.harness(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Runner.session(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", 32)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def table(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
 

@@ -17,7 +17,7 @@ object Bridge {
 
   /** Drain the SparkListener event bus (delivery is asynchronous) so a
     * listener-aggregating tool reads a complete view — dev tooling
-    * support (ProfileOne's stage table); `listenerBus` is
+    * support (BenchOne's stage table); `listenerBus` is
     * `private[spark]`, hence exposed from this bridge package.
     */
   def waitListenerBusEmpty(spark: SparkSession): Unit =
@@ -48,10 +48,11 @@ object Bridge {
 
   /** Free EVERY persisted RDD in the session — `persist()`ed plans and
     * `localCheckpoint` blocks alike (the latter live outside the
-    * CacheManager, so `clearCache()` alone leaks them). For runners
-    * (Verify/Bench/BenchOne) that own the cache lifecycle: call AFTER a
-    * query's results are fully materialized, never mid-plan — local-
-    * checkpoint blocks cannot be recomputed once dropped.
+    * CacheManager, so `clearCache()` alone leaks them). In the engine
+    * its one caller is [[graft.Runner.release]], the single release
+    * point of the harness cache lifecycle. Call it AFTER a query's
+    * results are fully materialized, never mid-plan — local-checkpoint
+    * blocks cannot be recomputed once dropped.
     *
     * SCOPE: this unpersists every persisted RDD in the SparkContext,
     * including ones persisted by code outside the caller's ownership. It

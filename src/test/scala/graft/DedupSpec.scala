@@ -184,12 +184,14 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // the sketch can only ADD false positives: every exactly-flagged doc
     // must appear with an >= count, and at fpp=1e-6 the excess must be
     // tiny (each non-benchmark doc tests a few hundred shingles)
-    val exact = graft.queries.DedupQueries.q78Decontaminate(spark, sfDir)
-      .as[(Long, Long)].collect().toMap
-    spark.catalog.clearCache()
-    val bloom = graft.queries.DedupQueries.q93BloomDecontaminate(spark, sfDir)
-      .as[(Long, Long)].collect().toMap
-    spark.catalog.clearCache()
+    val exact = Runner.released(spark) {
+      graft.queries.DedupQueries.q78Decontaminate(spark, sfDir)
+        .as[(Long, Long)].collect().toMap
+    }
+    val bloom = Runner.released(spark) {
+      graft.queries.DedupQueries.q93BloomDecontaminate(spark, sfDir)
+        .as[(Long, Long)].collect().toMap
+    }
     exact.foreach { case (id, n) =>
       assert(bloom.contains(id), s"exactly-flagged doc $id missing from bloom answer")
       assert(bloom(id) >= n, s"doc $id: bloom count ${bloom(id)} < exact $n")
@@ -307,12 +309,9 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val star = (1L to 2000L).map(s => (0L, s))
     val chain = (0 until 50).map(i => (2001L + i, 2002L + i))
     val pairs = (star ++ chain :+ (1L, 2001L)).toDF("id_a", "id_b")
-    def labelMap(salt: Int) = {
-      val m = Dedup.connectedComponents(pairs, saltBuckets = salt)
+    def labelMap(salt: Int) = Runner.released(spark) {
+      Dedup.connectedComponents(pairs, saltBuckets = salt)
         .as[(Long, Long)].collect().toMap
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
-      m
     }
     val plain = labelMap(1)
     val salted = labelMap(8)

@@ -767,7 +767,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
       "the dense fixture corpus must produce at least one leaked doc")
   }
 
-  test("degree-oriented triangles: correct counts, zero wedges at a pure hub") {
+  releasedTest("degree-oriented triangles: correct counts, zero wedges at a pure hub") {
     import graft.operators.Edges
     // star K_{1,200} with the hub at the MIDDLE id (100) plus three
     // closing spoke-spoke edges -> exactly the 3 triangles
@@ -798,11 +798,9 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
       .count()
     assert(idWedges > 1000L,
       s"the fixture must demonstrate the id-orientation blowup, got $idWedges")
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
   }
 
-  test("shared bipartite customer-part build: distinct grain, support-consistent") {
+  releasedTest("shared bipartite customer-part build: distinct grain, support-consistent") {
     import graft.operators.Edges
     val e = Edges.customerPart(spark, sfDir).persist()
     val n = e.count()
@@ -820,8 +818,6 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     assert(grouped.count() == n)
     assert(grouped.filter(col("support") < 1).count() == 0)
     assert(e.join(grouped, Seq("c", "p"), "left_anti").count() == 0)
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
   }
 
   test("triangleCount matches the naive enumeration on a random graph") {
@@ -836,14 +832,10 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val naive = pairs.flatMap { case (a, b) =>
       pairs.collect { case (b2, c) if b2 == b => (a, b, c) }
     }.count { case (a, _, c) => pairs.contains((a, c)) }
-    val got = Edges.triangleCount(e).as[Long].collect().head
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val got = Runner.released(spark)(Edges.triangleCount(e).as[Long].collect().head)
     assert(got == naive, s"degree-oriented count $got != naive $naive")
     // per-node participation credits each triangle's three corners
-    val perNode = Edges.trianglesPerNode(e).as[(Long, Long)].collect()
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val perNode = Runner.released(spark)(Edges.trianglesPerNode(e).as[(Long, Long)].collect())
     assert(perNode.map(_._2).sum == 3 * naive,
       "sum of per-node triangle counts must be 3x the census")
     // independent per-node check against naive triple enumeration

@@ -113,9 +113,10 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
 
   test("q8: tfidf df joins back via broadcast; df reads the cached tf table") {
     val df = SparkEntry.queries("q8_tfidf")(spark, sfDir)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    spark.catalog.clearCache()
+    val p = Runner.released(spark) {
+      df.collect()
+      df.queryExecution.executedPlan.toString
+    }
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 1, s"df join must broadcast:\n$p")
     assert(!p.contains("CartesianProduct"))
     // df must be derived from the materialized tf table, not from a
@@ -144,9 +145,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
         "q247_phrase_from_index", "q249_tombstone_compaction")) {
       val df = SparkEntry.queries(q)(spark, sfDir)
       df.collect() // the adaptive plan is final only after execution
-      val executed = df.queryExecution.executedPlan
-      spark.catalog.clearCache()
-      Bridge.freeAllPersistedRdds(spark)
+      val executed = Runner.released(spark)(df.queryExecution.executedPlan)
       val typedAggs = Aqe.flatMap(executed)(_.expressions.flatMap(_.collect {
         case f @ (_: TypedAggregateExpression | _: ScalaAggregator[_, _, _]) => f
       }))
@@ -176,7 +175,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(p.contains("TakeOrderedAndProject"), s"expected TakeOrdered:\n$p")
   }
 
-  test("near-dup candidate generation never plans a cross product") {
+  releasedTest("near-dup candidate generation never plans a cross product") {
     // every candidate generator is a key-equality join (LSH band, shared
     // shingle, SimHash chunk, hyperplane bucket, winnow fingerprint) —
     // the property that makes these run at 100 TB. A refactor that
@@ -210,12 +209,11 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
         s"$q plans a cartesian product:\n$p")
       assert(!p.contains("BroadcastNestedLoopJoin"),
         s"$q plans a broadcast nested-loop join:\n$p")
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      Runner.release(spark)
     }
   }
 
-  test("checkpointed iterative ops keep keyed-join rounds (uncut plan inspection)") {
+  releasedTest("checkpointed iterative ops keep keyed-join rounds (uncut plan inspection)") {
     // q321/q324/q327/q331 localCheckpoint every round EAGERLY, so their
     // query-level plans are LogicalRDD scans and the main guard above
     // would be vacuous on them (round-10 review finding). Inspect the
@@ -238,8 +236,6 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       assert(!p.contains("BroadcastNestedLoopJoin"),
         s"$name plans a broadcast nested-loop join:\n$p")
     }
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
   }
 
   test("q323: the bucket model rides a broadcast join, never a shuffle of the doc grain") {
@@ -249,9 +245,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     // table a second time for a 1024-row right side
     val df = SparkEntry.queries("q323_importance_resampling")(spark, sfDir)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val p = Runner.released(spark)(df.queryExecution.executedPlan.toString)
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 1,
       s"q323's model join must broadcast:\n$p")
     assert(!p.contains("CartesianProduct"))
@@ -292,26 +286,25 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
         candJoins.mkString("\n"))
   }
 
-  test("q213/q216: bottom-k sketch/sample plan TakeOrdered, never a full sort") {
+  releasedTest("q213/q216: bottom-k sketch/sample plan TakeOrdered, never a full sort") {
     // the mergeability story depends on it: TakeOrdered is k rows per
     // partition + a driver merge; a global Sort would be a full shuffle
     for (q <- Seq("q213_kmv_union", "q216_sample_quantile")) {
       val p = plan(q)
       assert(p.contains("TakeOrderedAndProject"),
         s"$q must plan its bottom-k as TakeOrdered:\n$p")
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      Runner.release(spark)
     }
   }
 
-  test("q202/q210: boundary sweep and temporal co-occurrence plan no join at all") {
+  releasedTest("q202/q210: boundary sweep and temporal co-occurrence plan no join at all") {
     // both are window-then-agg shapes: the sweep would be quadratic as an
     // interval self-join, the co-occurrence as a time-range self-join —
     // the whole point of their designs is that no Join node ever appears
     for (q <- Seq("q202_max_concurrency", "q210_temporal_cooccur")) {
       val p = plan(q)
       assert(!p.contains("Join"), s"$q must stay window+agg only:\n$p")
-      spark.catalog.clearCache()
+      Runner.release(spark)
     }
   }
 
@@ -492,9 +485,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     // into interpreted row-at-a-time segments
     val df = SparkEntry.queries("q93_bloom_decontaminate")(spark, sfDir)
     df.collect() // AQE finalizes codegen wrappers only after execution
-    val p = df.queryExecution.executedPlan.toString
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val p = Runner.released(spark)(df.queryExecution.executedPlan.toString)
     assert("\\*\\(\\d+\\) Filter .*might_contain_string".r.findFirstIn(p).isDefined,
       s"sketch filter not in a codegen span:\n$p")
   }
@@ -505,14 +496,12 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     // on the BIG side's scan — exactly where it hurts most at scale
     val df = SparkEntry.queries("q119_bloom_join_prune")(spark, sfDir)
     df.collect() // AQE finalizes codegen wrappers only after execution
-    val p = df.queryExecution.executedPlan.toString
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val p = Runner.released(spark)(df.queryExecution.executedPlan.toString)
     assert("\\*\\(\\d+\\) Filter .*might_contain_long".r.findFirstIn(p).isDefined,
       s"Bloom key filter not in a codegen span:\n$p")
   }
 
-  test("q173/q179/q182/q163: corpus-grain rank/prefix ops plan no single-partition window") {
+  releasedTest("q173/q179/q182/q163: corpus-grain rank/prefix ops plan no single-partition window") {
     // quintiles/deciles run as Quantiles.ntileExact, the Heaps curve as
     // Quantiles.prefixSums, the lag percentiles as withGlobalRank (all:
     // range exchange + pid-partitioned window + broadcast offsets); a
@@ -583,8 +572,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       val bad = unpartitionedWindows(phys)
       assert(bad.isEmpty,
         s"$q plans a single-partition window:\n${bad.mkString("\n")}")
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      Runner.release(spark)
     }
   }
 
@@ -601,9 +589,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
         "q334_exact_substrings")) {
       val df = SparkEntry.queries(q)(spark, sfDir)
       df.collect()
-      val p = df.queryExecution.executedPlan.toString
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      val p = Runner.released(spark)(df.queryExecution.executedPlan.toString)
       assert(!p.contains("CartesianProduct"), s"$q plans a cross product")
       assert(!p.contains("BroadcastNestedLoopJoin"),
         s"$q plans a nested-loop join")
@@ -616,9 +602,9 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       case a: AdaptiveSparkPlanExec => a.inputPlan
       case pp => pp
     }
-    val bad = phys.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val bad = Runner.released(spark) {
+      phys.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
+    }
     assert(bad.isEmpty, "q290 must not plan a single-partition window")
   }
 
@@ -656,10 +642,10 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       _.references.forall(_.name.endsWith("_pid"))))
     assert(badPart.isEmpty,
       s"q366 windows must partition on pid columns only:\n${badPart.mkString("\n")}")
-    val hasRange = plans.map(_.toString).mkString
-      .toLowerCase.contains("rangepartitioning")
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val hasRange = Runner.released(spark) {
+      plans.map(_.toString).mkString
+        .toLowerCase.contains("rangepartitioning")
+    }
     assert(hasRange, "q366 must rank through a range exchange")
   }
 
@@ -690,9 +676,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
   test("q254: HITS half-steps plan equi-joins only; renorm scalars broadcast") {
     val df = SparkEntry.queries("q254_hits")(spark, sfDir)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val p = Runner.released(spark)(df.queryExecution.executedPlan.toString)
     assert(!p.contains("CartesianProduct"), s"no partitioned cross product:\n$p")
     assert("BroadcastNestedLoopJoin|BroadcastExchange".r.findAllIn(p).size >= 1,
       "the 1-row max tables must broadcast")

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class QuantilesSpec extends AnyFunSuite with SparkTestBase {
 
-  private def compare(n: Int, k: Int): Unit = {
+  private def compare(n: Int, k: Int): Unit = Runner.released(spark) {
     import spark.implicits._
     // non-monotonic values with a unique tiebreak id, like the callers
     val df = (1 to n).map(i => ((i * 37) % 19, i.toLong)).toDF("v", "id")
@@ -24,8 +24,6 @@ class QuantilesSpec extends AnyFunSuite with SparkTestBase {
       .filter(col("e.b") =!= col("g.b"))
       .count()
     assert(mismatches == 0, s"n=$n k=$k: $mismatches bucket mismatches")
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
   }
 
   test("ntileExact == ntile when k divides n")(compare(100, 5))
@@ -33,7 +31,7 @@ class QuantilesSpec extends AnyFunSuite with SparkTestBase {
   test("ntileExact == ntile with n < k (one row per bucket)")(compare(7, 10))
   test("ntileExact == ntile with k = 1")(compare(42, 1))
 
-  test("withGlobalRank == row_number over a global ORDER BY") {
+  releasedTest("withGlobalRank == row_number over a global ORDER BY") {
     import spark.implicits._
     val df = (1 to 97).map(i => ((i * 53) % 17, i.toLong)).toDF("v", "id")
     val expected = df.withColumn("r",
@@ -42,11 +40,9 @@ class QuantilesSpec extends AnyFunSuite with SparkTestBase {
       .withGlobalRank(df, Seq(col("v").desc, col("id").asc), "r")
     assert(expected.as("e").join(got.as("g"), Seq("v", "id"))
       .filter(col("e.r") =!= col("g.r")).count() == 0)
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
   }
 
-  test("prefixSums == windowed running totals over a global ORDER BY") {
+  releasedTest("prefixSums == windowed running totals over a global ORDER BY") {
     import spark.implicits._
     val df = (1 to 113).map(i => (i.toLong, (i * 7 % 23).toLong, (i % 5).toLong))
       .toDF("id", "a", "b")
@@ -60,8 +56,6 @@ class QuantilesSpec extends AnyFunSuite with SparkTestBase {
     assert(expected.as("e").join(got.as("g"), Seq("id"))
       .filter(col("e.ca") =!= col("g.ca") || col("e.cb") =!= col("g.cb"))
       .count() == 0)
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
   }
 
   // withNextRows must reproduce lead(struct(*), j) over a global ORDER
@@ -85,8 +79,6 @@ class QuantilesSpec extends AnyFunSuite with SparkTestBase {
     val mismatches = expected.as("e").join(got.as("g"), Seq("v", "id"))
       .filter(col("e.nj") =!= col("g.nj")).count()
     assert(mismatches == 0, s"n=$n w=$w: $mismatches neighborhood mismatches")
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
   }
 
   test("withNextRows == global lead(struct, j) with w=2")(compareNext(211, 2))

@@ -27,20 +27,13 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Round10Spec extends AnyFunSuite with SparkTestBase {
 
-  private def sweep(): Unit = {
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
-  }
-
   test("q290: window and topk strategies are bit-identical") {
-    def rows(strategy: String) = {
-      val r = graft.queries.RelationalQueries
+    def rows(strategy: String) = Runner.released(spark) {
+      graft.queries.RelationalQueries
         .q290CoVisitation(spark, sfDir, strategy)
         .collect()
         .map(row => (row.getLong(0), row.getLong(1), row.getLong(2), row.getInt(3)))
         .toSet
-      sweep()
-      r
     }
     val w = rows("window")
     val t = rows("topk")
@@ -128,8 +121,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
       val bare = (0 to 100).map(p => (p.toLong, 1000000000L)).toDF("p", "a")
       val h1 = edges.join(bare, Seq("p")).groupBy("c").agg(sum(col("a")).as("h"))
       val n1 = h1.collect().length
-      val plan1 = h1.queryExecution.executedPlan.toString
-      sweep()
+      val plan1 = Runner.released(spark)(h1.queryExecution.executedPlan.toString)
       assert(n1 == HubDegree)
       assert(plan1.contains("skew=true"),
         s"bare-shuffle hub join must be AQE-split:\n$plan1")
@@ -139,8 +131,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
         .select(col("p"), lit(1000000000L).as("a"))
       val h2 = edges.join(aggScores, Seq("p")).groupBy("c").agg(sum(col("a")).as("h"))
       val n2 = h2.collect().length
-      val plan2 = h2.queryExecution.executedPlan.toString
-      sweep()
+      val plan2 = Runner.released(spark)(h2.queryExecution.executedPlan.toString)
       assert(n2 == HubDegree)
       assert(!plan2.contains("skew=true"),
         "the aggregated-side join unexpectedly got AQE-split — revisit " +
@@ -149,12 +140,14 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
   }
 
   test("salted HITS: bit-identical top-15 and the hub partition load actually splits") {
-    val plain = graft.queries.RelationalQueries.q254Hits(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    sweep()
-    val salted = graft.queries.RelationalQueries.q254Hits(spark, sfDir, saltBuckets = 8)
-      .collect().map(_.toSeq).toSeq
-    sweep()
+    val plain = Runner.released(spark) {
+      graft.queries.RelationalQueries.q254Hits(spark, sfDir)
+        .collect().map(_.toSeq).toSeq
+    }
+    val salted = Runner.released(spark) {
+      graft.queries.RelationalQueries.q254Hits(spark, sfDir, saltBuckets = 8)
+        .collect().map(_.toSeq).toSeq
+    }
     assert(plain.nonEmpty && plain == salted,
       "salting changed the HITS authority ranking")
     // partition-load differential on the salted join LAYOUT (DedupSpec's
@@ -164,10 +157,11 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
       d.groupBy(spark_partition_id()).count()
         .agg(max("count")).collect().head.getLong(0)
     val unsaltedMax = maxPartitionRows(edges.repartition(8, col("p")))
-    val saltedMax = maxPartitionRows(
-      edges.withColumn("_salt", pmod(hash(col("c")), lit(8)))
-        .repartition(8, col("p"), col("_salt")))
-    sweep()
+    val saltedMax = Runner.released(spark) {
+      maxPartitionRows(
+        edges.withColumn("_salt", pmod(hash(col("c")), lit(8)))
+          .repartition(8, col("p"), col("_salt")))
+    }
     assert(unsaltedMax >= HubDegree,
       s"fixture must concentrate the hub degree unsalted, got $unsaltedMax")
     assert(saltedMax * 2 <= unsaltedMax,
@@ -176,13 +170,15 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
   }
 
   test("salted LPA: bit-identical communities at saltBuckets = 8") {
-    val plain = graft.queries.RelationalQueries.q199LabelPropagation(spark, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    sweep()
-    val salted = graft.queries.RelationalQueries
-      .q199LabelPropagation(spark, sfDir, saltBuckets = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    sweep()
+    val plain = Runner.released(spark) {
+      graft.queries.RelationalQueries.q199LabelPropagation(spark, sfDir)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    }
+    val salted = Runner.released(spark) {
+      graft.queries.RelationalQueries
+        .q199LabelPropagation(spark, sfDir, saltBuckets = 8)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    }
     assert(plain.nonEmpty && plain == salted,
       "salting changed the LPA community histogram")
   }
@@ -192,16 +188,15 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     * pins below — collected rows, since the suite sweeps Spark caches
     * between tests.
     */
-  private lazy val hwReference: Set[Seq[Any]] = {
-    val r = SparkEntry.queries("q304_stream_holt_winters")(spark, sfDir)
+  private lazy val hwReference: Set[Seq[Any]] = Runner.released(spark) {
+    SparkEntry.queries("q304_stream_holt_winters")(spark, sfDir)
       .collect().map(_.toSeq).toSet
-    sweep()
-    r
   }
 
   private def assertHwTwin(q: String, what: String): Unit = {
-    val got = SparkEntry.queries(q)(spark, sfDir).collect().map(_.toSeq).toSet
-    sweep()
+    val got = Runner.released(spark) {
+      SparkEntry.queries(q)(spark, sfDir).collect().map(_.toSeq).toSet
+    }
     assert(got == hwReference,
       s"$what diverged: ${(got -- hwReference).take(2)} extra, " +
         s"${(hwReference -- got).take(2)} missing")
@@ -223,16 +218,15 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     * once and shared by the join-family twin pins (the hwReference
     * convention).
     */
-  private lazy val joinReference: Set[Seq[Any]] = {
-    val r = SparkEntry.queries("q310_stream_interval_join")(spark, sfDir)
+  private lazy val joinReference: Set[Seq[Any]] = Runner.released(spark) {
+    SparkEntry.queries("q310_stream_interval_join")(spark, sfDir)
       .collect().map(_.toSeq).toSet
-    sweep()
-    r
   }
 
   private def assertJoinTwin(q: String, what: String): Unit = {
-    val got = SparkEntry.queries(q)(spark, sfDir).collect().map(_.toSeq).toSet
-    sweep()
+    val got = Runner.released(spark) {
+      SparkEntry.queries(q)(spark, sfDir).collect().map(_.toSeq).toSet
+    }
     assert(joinReference.nonEmpty, "fixture must produce attributed pairs")
     assert(got == joinReference,
       s"$what diverged: ${(got -- joinReference).take(2)} extra, " +
@@ -255,9 +249,10 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q315 decomposes exactly: matched rows are q310, null rows are the clickless views") {
-    val outer = SparkEntry.queries("q315_stream_interval_join_outer")(spark, sfDir)
-      .collect().map(_.toSeq)
-    sweep()
+    val outer = Runner.released(spark) {
+      SparkEntry.queries("q315_stream_interval_join_outer")(spark, sfDir)
+        .collect().map(_.toSeq)
+    }
     val matched = outer.filter(_(2) != null).toSet
     assert(matched == joinReference,
       "q315's matched rows must BE the inner join's answer")
@@ -270,11 +265,12 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     // ts is untouched, so the raw parquet read suffices (the nanos
     // conf only matters for schema conversion of the ts column)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val allViews = spark.read.parquet(s"$sfDir/events.parquet")
-      .filter(col("event_type") === "view")
-      .select(col("user_id"), col("event_id"))
-      .collect().map(r => (r.get(0), r.get(1))).toSet
-    sweep()
+    val allViews = Runner.released(spark) {
+      spark.read.parquet(s"$sfDir/events.parquet")
+        .filter(col("event_type") === "view")
+        .select(col("user_id"), col("event_id"))
+        .collect().map(r => (r.get(0), r.get(1))).toSet
+    }
     assert(nullViews ++ matchedViews == allViews,
       "outer join must cover every view exactly once")
   }
@@ -284,23 +280,24 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     // path 1-2-3: the only common-neighbor pair is (1,3) through center
     // 2 with deg 2 — aa_fp = round(1e9 / ln 2)
     val path = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
-    val r = graft.operators.Edges.adamicAdar(path)
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3)))
-    sweep()
+    val r = Runner.released(spark) {
+      graft.operators.Edges.adamicAdar(path)
+        .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3)))
+    }
     assert(r.toSeq == Seq((1L, 3L, 1L, math.round(1.0e9 / math.log(2.0)))),
       s"path prediction wrong: ${r.toSeq}")
     // triangle 1-2-3: every common-neighbor pair is already an edge —
     // the anti-join must leave nothing
     val tri = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("a", "b")
-    val t = graft.operators.Edges.adamicAdar(tri).collect()
-    sweep()
+    val t = Runner.released(spark)(graft.operators.Edges.adamicAdar(tri).collect())
     assert(t.isEmpty, s"triangle predicted ${t.length} pairs")
     // star 1-{2,3,4}: three predicted pairs, each 1/ln(3), and the
     // degree-1 leaves contribute no 1/ln(1) divergence
     val star = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("a", "b")
-    val s = graft.operators.Edges.adamicAdar(star)
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(3)))
-    sweep()
+    val s = Runner.released(spark) {
+      graft.operators.Edges.adamicAdar(star)
+        .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(3)))
+    }
     val w3 = math.round(1.0e9 / math.log(3.0))
     assert(s.toSet == Set((2L, 3L, w3), (2L, 4L, w3), (3L, 4L, w3)),
       s"star prediction wrong: ${s.toSet}")
@@ -314,26 +311,29 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     // the round-2 match EXISTS only because round 1 removed its
     // blockers, the cascade a single-round formulation can't produce.
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
-    val pr = graft.operators.Edges.greedyMatching(path, rounds = 2)
-      .map(_.collect().map(x => (x.getLong(0), x.getLong(1))).toSet)
-    sweep()
+    val pr = Runner.released(spark) {
+      graft.operators.Edges.greedyMatching(path, rounds = 2)
+        .map(_.collect().map(x => (x.getLong(0), x.getLong(1))).toSet)
+    }
     assert(pr == Seq(Set((1L, 2L)), Set((3L, 4L))),
       s"path handshake wrong: $pr")
     // star 1-{2,3,4}: only (1,2) is mutual, and the residual is
     // edgeless — leaves 3 and 4 stay unmatched forever (a matching
     // can't pair them), so round 2 must be empty
     val star = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("a", "b")
-    val sr = graft.operators.Edges.greedyMatching(star, rounds = 2)
-      .map(_.collect().map(x => (x.getLong(0), x.getLong(1))).toSet)
-    sweep()
+    val sr = Runner.released(spark) {
+      graft.operators.Edges.greedyMatching(star, rounds = 2)
+        .map(_.collect().map(x => (x.getLong(0), x.getLong(1))).toSet)
+    }
     assert(sr == Seq(Set((1L, 2L)), Set.empty),
       s"star handshake wrong: $sr")
     // corpus fixture: the union over rounds is a VALID matching —
     // no node appears twice across all matched pairs
     val e0 = graft.operators.Edges.coPurchase(spark, sfDir)
-    val all = graft.operators.Edges.greedyMatching(e0, rounds = 3)
-      .flatMap(_.collect().map(x => (x.getLong(0), x.getLong(1))))
-    sweep()
+    val all = Runner.released(spark) {
+      graft.operators.Edges.greedyMatching(e0, rounds = 3)
+        .flatMap(_.collect().map(x => (x.getLong(0), x.getLong(1))))
+    }
     val nodes = all.flatMap(p => Seq(p._1, p._2))
     assert(nodes.distinct.length == nodes.length,
       "matched pairs share a node — not a matching")
@@ -344,19 +344,21 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     // q330's no-dedup claim: a word matches a probed pattern through
     // EXACTLY one rotation (the $ sits at a fixed offset), so the
     // result must be duplicate-free at (pattern, word) grain
-    val wc = graft.queries.SearchQueries
-      .q330WildcardSearch(spark, sfDir).collect()
-      .map(r => (r.getString(0), r.getString(1)))
-    sweep()
+    val wc = Runner.released(spark) {
+      graft.queries.SearchQueries
+        .q330WildcardSearch(spark, sfDir).collect()
+        .map(r => (r.getString(0), r.getString(1)))
+    }
     assert(wc.nonEmpty && wc.distinct.length == wc.length,
       s"permuterm probe emitted a duplicate (pattern, word): ${wc.length} rows")
     // q332's partition claim: [0, W) is covered by the vocab intervals
     // exactly once, so every (pair, draw) resolves to EXACTLY one
     // negative — a drifted bucket step (grid built with one step,
     // probes with another) would silently DROP draws and break this
-    val ns = graft.queries.TextQueries
-      .queries("q332_negative_sampling")(spark, sfDir).collect()
-    sweep()
+    val ns = Runner.released(spark) {
+      graft.queries.TextQueries
+        .queries("q332_negative_sampling")(spark, sfDir).collect()
+    }
     val keys = ns.map(r => (r.getString(0), r.getString(1), r.getInt(2)))
     assert(keys.distinct.length == keys.length,
       "a draw resolved to more than one negative (overlapping intervals)")
@@ -373,9 +375,10 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     // pass a careless oracle edit; pin the graph-validity invariant
     val ew = graft.operators.Edges.coPurchaseUndirected(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val walks = graft.queries.RelationalQueries
-      .q331RandomWalks(spark, sfDir).collect()
-    sweep()
+    val walks = Runner.released(spark) {
+      graft.queries.RelationalQueries
+        .q331RandomWalks(spark, sfDir).collect()
+    }
     assert(walks.length == 50, s"expected 50 walks, got ${walks.length}")
     walks.foreach { r =>
       val hops = r.getString(1).split(">").map(_.toLong)
@@ -415,12 +418,13 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     val fb = pos.join(fa, Seq("user_id")).filter(col("p") > col("pa"))
       .groupBy(col("user_id"), col("e1"), col("event_type").as("e2"))
       .agg(min(col("p")).as("pb"))
-    val greedy = pos.join(fb, Seq("user_id")).filter(col("p") > col("pb"))
-      .select(col("user_id"), col("e1"), col("e2"), col("event_type").as("e3"))
-      .distinct().collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
-      .toSet
-    sweep()
+    val greedy = Runner.released(spark) {
+      pos.join(fb, Seq("user_id")).filter(col("p") > col("pb"))
+        .select(col("user_id"), col("e1"), col("e2"), col("event_type").as("e3"))
+        .distinct().collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
+        .toSet
+    }
     assert(naive.nonEmpty, "slice produced no triples — vacuous")
     assert(naive == greedy,
       s"greedy/naive diverge: ${(naive -- greedy).take(3)} vs ${(greedy -- naive).take(3)}")
@@ -433,14 +437,16 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val terms = Seq("hash", "join", "scan")
-    val stat = graft.operators.Ranking
-      .bm25(docs, "text", "doc_id", terms).collect()
-      .map(_.toString).toSet
-    spark.catalog.clearCache()
-    val dyn = graft.operators.Ranking
-      .bm25Dynamic(docs, "text", "doc_id", terms.toDF("word")).collect()
-      .map(_.toString).toSet
-    sweep()
+    val stat = Runner.released(spark) {
+      graft.operators.Ranking
+        .bm25(docs, "text", "doc_id", terms).collect()
+        .map(_.toString).toSet
+    }
+    val dyn = Runner.released(spark) {
+      graft.operators.Ranking
+        .bm25Dynamic(docs, "text", "doc_id", terms.toDF("word")).collect()
+        .map(_.toString).toSet
+    }
     assert(stat == dyn,
       s"dynamic/static bm25 diverge: ${(stat -- dyn).take(3)} vs ${(dyn -- stat).take(3)}")
   }
@@ -450,11 +456,12 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     // be non-increasing and the coverage curve non-decreasing — a
     // violated curve means the coverage merge or the exclusion
     // anti-join regressed (e.g. a re-admitted winner double-counts)
-    val r = graft.queries.SimilarityQueries
-      .q328CoresetSelect(spark, sfDir).collect()
-      .sortBy(_.getInt(0))
-      .map(x => (x.getInt(0), x.getLong(1), x.getDouble(2), x.getDouble(3)))
-    sweep()
+    val r = Runner.released(spark) {
+      graft.queries.SimilarityQueries
+        .q328CoresetSelect(spark, sfDir).collect()
+        .sortBy(_.getInt(0))
+        .map(x => (x.getInt(0), x.getLong(1), x.getDouble(2), x.getDouble(3)))
+    }
     assert(r.length == 4, s"expected 4 steps: ${r.toSeq}")
     assert(r.map(_._2).distinct.length == 4, "a winner was re-admitted")
     val gains = r.map(_._3)
@@ -476,18 +483,20 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     // smaller neighbor); removing {1,2} leaves edge (3,4), so round 2
     // admits 3 — the residual cascade
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
-    val pr = graft.operators.Edges.maximalIndependentSet(path, rounds = 3)
-      .map(_.collect().map(_.getLong(0)).toSet)
-    sweep()
+    val pr = Runner.released(spark) {
+      graft.operators.Edges.maximalIndependentSet(path, rounds = 3)
+        .map(_.collect().map(_.getLong(0)).toSet)
+    }
     assert(pr == Seq(Set(1L), Set(3L), Set.empty),
       s"path MIS rounds wrong: $pr")
     // inverted star {2,3,4}-9: ALL leaves beat the center and enter in
     // ONE round — the parallel-admission case (an edge handshake can
     // only take one of them per round)
     val star = Seq((2L, 9L), (3L, 9L), (4L, 9L)).toDF("a", "b")
-    val sr = graft.operators.Edges.maximalIndependentSet(star, rounds = 2)
-      .map(_.collect().map(_.getLong(0)).toSet)
-    sweep()
+    val sr = Runner.released(spark) {
+      graft.operators.Edges.maximalIndependentSet(star, rounds = 2)
+        .map(_.collect().map(_.getLong(0)).toSet)
+    }
     assert(sr == Seq(Set(2L, 3L, 4L), Set.empty),
       s"star MIS rounds wrong: $sr")
     // corpus fixture: the union over rounds is INDEPENDENT (no edge
@@ -497,9 +506,10 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
       .map(_.collect().map(_.getLong(0)).toSet)
     val mis = rounds.reduce(_ ++ _)
     assert(rounds.map(_.size).sum == mis.size, "rounds re-admit a node")
-    val violating = e0.collect()
-      .count(r => mis(r.getLong(0)) && mis(r.getLong(1)))
-    sweep()
+    val violating = Runner.released(spark) {
+      e0.collect()
+        .count(r => mis(r.getLong(0)) && mis(r.getLong(1)))
+    }
     assert(violating == 0, s"$violating edges inside the MIS")
     assert(mis.nonEmpty, "fixture graph admitted nothing")
   }
@@ -516,9 +526,10 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     val seeds = Seq((1L, 0L)).toDF("node", "dist")
     val want = Set((1L, 0L), (2L, 10L), (3L, 20L), (4L, 30L), (5L, 31L))
     for (delta <- Seq(true, false)) {
-      val got = graft.operators.Edges.shortestPaths(e, seeds, 4, delta)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      sweep()
+      val got = Runner.released(spark) {
+        graft.operators.Edges.shortestPaths(e, seeds, 4, delta)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      }
       assert(got == want, s"deltaFrontier=$delta: $got")
     }
     // and on the corpus graph: the full reached (node, dist) set of the
@@ -526,12 +537,12 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     val ew = graft.operators.Edges.coPurchaseWeighted(spark, sfDir).persist()
     val s3 = ew.select(col("a").as("node")).distinct()
       .orderBy(col("node")).limit(3).withColumn("dist", lit(0L))
-    val byScheme = Seq(true, false).map { delta =>
-      val d = graft.operators.Edges.shortestPaths(ew, s3, 4, delta)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      d
+    val byScheme = Runner.released(spark) {
+      Seq(true, false).map { delta =>
+        graft.operators.Edges.shortestPaths(ew, s3, 4, delta)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      }
     }
-    sweep()
     assert(byScheme(0) == byScheme(1),
       s"corpus schemes differ: ${byScheme(0).size} vs ${byScheme(1).size} rows")
     assert(byScheme(0).nonEmpty)
@@ -547,25 +558,29 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L)).toDF("a", "b")
     val rounds = graft.operators.Edges.ktruss(e, k = 4, rounds = 2)
     val sizes = rounds.map(_.count())
-    val survivors = rounds(1).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    sweep()
+    val survivors = Runner.released(spark) {
+      rounds(1).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     assert(sizes == Seq(5L, 1L, 0L), s"peel sizes: $sizes")
     assert(survivors == Set((2L, 3L)), s"round-1 survivor: $survivors")
     // k=3 on the same graph is already a 3-truss: nothing peels
-    val stable = graft.operators.Edges.ktruss(e, k = 3, rounds = 2).map(_.count())
-    sweep()
+    val stable = Runner.released(spark) {
+      graft.operators.Edges.ktruss(e, k = 3, rounds = 2).map(_.count())
+    }
     assert(stable == Seq(5L, 5L, 5L), s"k=3 must be stable: $stable")
   }
 
   test("q311 step 1 is q40-exact relevance: the greedy loop starts from rank 1") {
-    val mmrFirst = SparkEntry.queries("q311_mmr_rerank")(spark, sfDir)
-      .filter(col("step") === 1)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    sweep()
-    val knnTop = SparkEntry.queries("q40_knn_brute")(spark, sfDir)
-      .filter(col("rank") === 1)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    sweep()
+    val mmrFirst = Runner.released(spark) {
+      SparkEntry.queries("q311_mmr_rerank")(spark, sfDir)
+        .filter(col("step") === 1)
+        .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    }
+    val knnTop = Runner.released(spark) {
+      SparkEntry.queries("q40_knn_brute")(spark, sfDir)
+        .filter(col("rank") === 1)
+        .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    }
     assert(mmrFirst.nonEmpty && mmrFirst == knnTop,
       s"MMR step 1 diverged from exact rank 1: $mmrFirst vs $knnTop")
   }
@@ -579,11 +594,11 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     val words = (0 until 24)
       .map(i => (alphabet(2 * i) + alphabet(2 * i + 1), 1000L - i))
       .toDF("word", "freq")
-    val (seqMerges, _) = graft.queries.TextQueries.bpeRoundsFromWords(words, 20)
-    sweep()
-    val (batMerges, batches) =
-      graft.queries.TextQueries.bpeRoundsBatchedFromWords(words, 20, 8)
-    sweep()
+    val (seqMerges, _) = Runner.released(spark) {
+      graft.queries.TextQueries.bpeRoundsFromWords(words, 20)
+    }
+    val (batMerges, batches) = Runner.released(spark)(
+      graft.queries.TextQueries.bpeRoundsBatchedFromWords(words, 20, 8))
     assert(batMerges == seqMerges,
       "wide-batch learner diverged from the sequential merge log")
     assert(batches.sum == 20)

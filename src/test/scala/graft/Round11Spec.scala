@@ -22,11 +22,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Round11Spec extends AnyFunSuite with SparkTestBase {
 
-  private def sweep(): Unit = {
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
-  }
-
   test("adamicAdar hub cap: over-cap centers emit nothing, others are untouched") {
     import spark.implicits._
     // two components: star with center 10 (degree 5 > cap 4) and path
@@ -35,9 +30,10 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     // the cap is per-center, not global.
     val g = Seq((10L, 11L), (10L, 12L), (10L, 13L), (10L, 14L), (10L, 15L),
       (1L, 2L), (2L, 3L)).toDF("a", "b")
-    val capped = graft.operators.Edges.adamicAdar(g, hubCap = 4)
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3)))
-    sweep()
+    val capped = Runner.released(spark) {
+      graft.operators.Edges.adamicAdar(g, hubCap = 4)
+        .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3)))
+    }
     assert(capped.toSeq == Seq((1L, 3L, 1L, math.round(1.0e9 / math.log(2.0)))),
       s"cap 4 must drop the degree-5 star center and keep the path: ${capped.toSeq}")
     // at cap 5 the star center is back: C(5,2) = 10 leaf pairs at
@@ -45,9 +41,10 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     // decision, never a data loss
     val uncapped = graft.operators.Edges.adamicAdar(g, hubCap = 5)
     val n = uncapped.count()
-    val starW = uncapped.filter(col("a") === 11L && col("b") === 12L)
-      .collect().map(_.getLong(3))
-    sweep()
+    val starW = Runner.released(spark) {
+      uncapped.filter(col("a") === 11L && col("b") === 12L)
+        .collect().map(_.getLong(3))
+    }
     assert(n == 11L, s"cap 5 must emit all 10 star pairs + 1 path pair, got $n")
     assert(starW.toSeq == Seq(math.round(1.0e9 / math.log(5.0))),
       "the star's wedge weight must use the EXACT degree 5 (drop-don't-truncate)")
@@ -63,10 +60,11 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     val docs = Seq(
       (1L, "p q r s t u v w x y"),
       (2L, "z1 z2 p q r s t u v w x z9")).toDF("doc_id", "text")
-    val subs = graft.operators.Dedup
-      .exactSubstrings(docs, "text", "doc_id", k = 3, window = 16, anchorCap = 256)
-      .collect()
-    sweep()
+    val subs = Runner.released(spark) {
+      graft.operators.Dedup
+        .exactSubstrings(docs, "text", "doc_id", k = 3, window = 16, anchorCap = 256)
+        .collect()
+    }
     // LEFT-MAXIMALITY: the region is reported exactly ONCE (at its
     // leftmost anchor), not at all 7 interior anchor offsets
     assert(subs.length == 1, s"want one maximal pair, got ${subs.toSeq}")
@@ -79,17 +77,19 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     // (dupSpans n=3: maximal runs of cross-doc-duplicated 3-grams)
     // (dupSpans positions are 0-based generator offsets; exactSubstrings
     // positions are 1-based array indices — the LENGTHS must agree)
-    val spans = graft.operators.Dedup.dupSpans(docs, "text", "doc_id", n = 3)
-      .collect().map(x => (x.getLong(0), x.getInt(1), x.getLong(3))).toSet
-    sweep()
+    val spans = Runner.released(spark) {
+      graft.operators.Dedup.dupSpans(docs, "text", "doc_id", n = 3)
+        .collect().map(x => (x.getLong(0), x.getInt(1), x.getLong(3))).toSet
+    }
     assert(spans == Set((1L, 0, 9L), (2L, 2, 9L)),
       s"q103 span disagreement: $spans")
     // INTRA-doc repeats pair the two occurrences of the same doc
     val self = Seq((7L, "a b c d e f a b c d e g")).toDF("doc_id", "text")
-    val sr = graft.operators.Dedup
-      .exactSubstrings(self, "text", "doc_id", k = 3, window = 16, anchorCap = 256)
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2), x.getLong(3), x.getInt(4)))
-    sweep()
+    val sr = Runner.released(spark) {
+      graft.operators.Dedup
+        .exactSubstrings(self, "text", "doc_id", k = 3, window = 16, anchorCap = 256)
+        .collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2), x.getLong(3), x.getInt(4)))
+    }
     assert(sr.toSeq == Seq((5L, 7L, 1, 7L, 7)),
       s"intra-doc pair wrong: ${sr.toSeq}")
     // BOTH-AT-POSITION-1: two byte-identical documents — the canonical
@@ -99,10 +99,11 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     // dropped it)
     val twins = Seq((1L, "a b c d e f g"), (2L, "a b c d e f g"))
       .toDF("doc_id", "text")
-    val tw = graft.operators.Dedup
-      .exactSubstrings(twins, "text", "doc_id", k = 3, window = 16, anchorCap = 256)
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2), x.getLong(3), x.getInt(4)))
-    sweep()
+    val tw = Runner.released(spark) {
+      graft.operators.Dedup
+        .exactSubstrings(twins, "text", "doc_id", k = 3, window = 16, anchorCap = 256)
+        .collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2), x.getLong(3), x.getInt(4)))
+    }
     assert(tw.toSeq == Seq((7L, 1L, 1, 2L, 1)),
       s"identical docs must report one full-length pair at pos 1: ${tw.toSeq}")
     // OVER-CAP LEFT ANCHOR: a duplicated region entered through corpus
@@ -115,11 +116,12 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
       (2L, "b0 c r1 r2 r3 r4 b9"),
       (3L, "x1 c r1 r2 y1"),
       (4L, "x2 c r1 r2 y2")).toDF("doc_id", "text")
-    val bd = graft.operators.Dedup
-      .exactSubstrings(boundary, "text", "doc_id", k = 3, window = 16, anchorCap = 3)
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2), x.getLong(3),
-        x.getInt(4), x.getString(5)))
-    sweep()
+    val bd = Runner.released(spark) {
+      graft.operators.Dedup
+        .exactSubstrings(boundary, "text", "doc_id", k = 3, window = 16, anchorCap = 3)
+        .collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2), x.getLong(3),
+          x.getInt(4), x.getString(5)))
+    }
     assert(bd.toSeq == Seq((4L, 1L, 3, 2L, 3, "r1 r2 r3 r4")),
       s"over-cap boundary must not lose the region: ${bd.toSeq}")
     // ANCHOR CAP: the same 3-gram in 5 docs exceeds cap 4 — boilerplate
@@ -131,21 +133,22 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     val uncapped = graft.operators.Dedup
       .exactSubstrings(boiler, "text", "doc_id", k = 3, window = 16, anchorCap = 5)
     val nCapped = capped.count()
-    val nUncapped = uncapped.count()
-    sweep()
+    val nUncapped = Runner.released(spark)(uncapped.count())
     assert(nCapped == 0L, s"cap 4 must exclude the 5-occurrence anchor, got $nCapped")
     assert(nUncapped == 4L, s"cap 5 must pair the 5 sorted occurrences, got $nUncapped")
   }
 
   test("salted PPR: bit-identical top-10 at saltBuckets = 8") {
-    val plain = graft.queries.RelationalQueries
-      .q289PersonalizedPagerank(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    sweep()
-    val salted = graft.queries.RelationalQueries
-      .q289PersonalizedPagerank(spark, sfDir, saltBuckets = 8)
-      .collect().map(_.toSeq).toSeq
-    sweep()
+    val plain = Runner.released(spark) {
+      graft.queries.RelationalQueries
+        .q289PersonalizedPagerank(spark, sfDir)
+        .collect().map(_.toSeq).toSeq
+    }
+    val salted = Runner.released(spark) {
+      graft.queries.RelationalQueries
+        .q289PersonalizedPagerank(spark, sfDir, saltBuckets = 8)
+        .collect().map(_.toSeq).toSeq
+    }
     assert(plain.nonEmpty && plain == salted,
       "salting changed the PPR ranking")
   }
@@ -154,13 +157,15 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     // the production knob for q310's two-sided buffered join state: the
     // store provider is an implementation detail of STATE, never of the
     // answer — every (view, click) pair must survive the swap exactly
-    val dflt = SparkEntry.queries("q310_stream_interval_join")(spark, sfDir)
-      .collect().map(_.toSeq).toSet
-    sweep()
-    val rocks = graft.queries.StreamParityQueries
-      .q310StreamIntervalJoin(spark, sfDir, stateStore = "rocksdb")
-      .collect().map(_.toSeq).toSet
-    sweep()
+    val dflt = Runner.released(spark) {
+      SparkEntry.queries("q310_stream_interval_join")(spark, sfDir)
+        .collect().map(_.toSeq).toSet
+    }
+    val rocks = Runner.released(spark) {
+      graft.queries.StreamParityQueries
+        .q310StreamIntervalJoin(spark, sfDir, stateStore = "rocksdb")
+        .collect().map(_.toSeq).toSet
+    }
     assert(dflt.nonEmpty, "fixture must produce attributed pairs")
     assert(dflt == rocks,
       s"providers diverged: ${(dflt -- rocks).take(3)} only in default, " +
@@ -171,7 +176,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("co-purchase materialization: one bucketed table, consistent views, unshuffled edge scan") {
+  releasedTest("co-purchase materialization: one bucketed table, consistent views, unshuffled edge scan") {
     val und = graft.operators.Edges.coPurchaseUndirected(spark, sfDir)
     val dir = graft.operators.Edges.coPurchase(spark, sfDir)
     val w = graft.operators.Edges.coPurchaseWeighted(spark, sfDir)
@@ -184,7 +189,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
       col("x.a") === col("y.b") && col("x.b") === col("y.a") &&
         col("x.w") =!= col("y.w"))
     assert(asym.isEmpty, "weights must agree across the two orientations")
-    sweep()
+    Runner.release(spark)
     // catalog: exactly one materialization per (dataset, support) with
     // the declared bucketing metadata
     val tbls = spark.catalog.listTables().collect().map(_.name)
@@ -205,7 +210,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     assert(cpDesc.get("Num Buckets").contains("32") &&
       cpDesc.get("Bucket Columns").exists(_.contains("c")),
       s"customerPart bucketing wrong: $cpDesc")
-    sweep()
+    Runner.release(spark)
     // the scale claim: a frontier⋈edges equi-join on `a` must NOT
     // exchange the edge side — the bucketed scan already reports the
     // hash partitioning, so the only Exchange in the joined plan is the
@@ -235,7 +240,6 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
     }
-    sweep()
   }
 
   // the production helper, not a copy — one definition of the provider
@@ -246,7 +250,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
   private def hm(hhmm: String): java.sql.Timestamp =
     java.sql.Timestamp.valueOf(s"2024-01-01 $hhmm:00")
 
-  test("typeCountsPerKey: map-state counts are delivery-order-invariant and never reset") {
+  releasedTest("typeCountsPerKey: map-state counts are delivery-order-invariant and never reset") {
     import graft.streaming.StreamingOps
     import graft.streaming.StreamingOps.{TypedEvent, TypeCount}
     import spark.implicits._
@@ -285,10 +289,9 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
       assert(xs.map(_.cnt) == xs.map(_.cnt).sorted && xs.map(_.cnt).distinct == xs.map(_.cnt),
         s"totals for $k must strictly increase within a run: ${xs.map(_.cnt)}")
     })
-    sweep()
   }
 
-  test("recentItemsPerKey: list-state ring evicts from the front and survives batch splits") {
+  releasedTest("recentItemsPerKey: list-state ring evicts from the front and survives batch splits") {
     import graft.streaming.StreamingOps
     import graft.streaming.StreamingOps.{ValEvent, RecentUpdate}
     import spark.implicits._
@@ -321,10 +324,9 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     val mid = got.filter(x => x.user_id == 1L && x.n_seen == 2L)
     assert(mid.map(_.recent) == Seq("11>12"),
       s"batch-1 ring must be 11>12 before the cross-batch eviction: $got")
-    sweep()
   }
 
-  test("dedupBoundedOnIngest: in-window duplicates drop, post-eviction keys re-admit") {
+  releasedTest("dedupBoundedOnIngest: in-window duplicates drop, post-eviction keys re-admit") {
     import graft.streaming.StreamingOps
     import spark.implicits._
     // key 1: duplicate 10 s after the original (inside the 60 s delay,
@@ -359,6 +361,5 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
       .select("event_id").as[Long].collect().toSet
     assert(got == Set(101L, 103L, 105L, 106L, 107L),
       s"want in-window drops (102, 104) and post-eviction re-admission (107): $got")
-    sweep()
   }
 }

@@ -30,11 +30,6 @@ import graft.streaming.StreamingOps
   */
 class Round12Spec extends AnyFunSuite with SparkTestBase {
 
-  private def sweep(): Unit = {
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
-  }
-
   private def ts(sec: Long): Timestamp =
     Timestamp.from(java.time.Instant.ofEpochSecond(sec))
 
@@ -192,14 +187,16 @@ class Round12Spec extends AnyFunSuite with SparkTestBase {
   }
 
   test("quota gate: RocksDB changelog checkpointing is bit-identical to snapshot") {
-    val on = graft.queries.StreamParityQueries
-      .q335StreamQuota(spark, sfDir, changelog = true)
-      .collect().map(_.toSeq).toSet
-    sweep()
-    val off = graft.queries.StreamParityQueries
-      .q335StreamQuota(spark, sfDir, changelog = false)
-      .collect().map(_.toSeq).toSet
-    sweep()
+    val on = Runner.released(spark) {
+      graft.queries.StreamParityQueries
+        .q335StreamQuota(spark, sfDir, changelog = true)
+        .collect().map(_.toSeq).toSet
+    }
+    val off = Runner.released(spark) {
+      graft.queries.StreamParityQueries
+        .q335StreamQuota(spark, sfDir, changelog = false)
+        .collect().map(_.toSeq).toSet
+    }
     assert(on.nonEmpty, "fixture must produce quota rows")
     assert(on == off,
       s"checkpoint formats diverged: ${(on -- off).take(3)} only with changelog, " +
@@ -214,16 +211,14 @@ class Round12Spec extends AnyFunSuite with SparkTestBase {
       Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L))
         .toDF("l_orderkey", "l_partkey")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-      val n1 = graft.operators.Edges.coPurchase(spark, dir).count()
-      sweep()
+      val n1 = Runner.released(spark)(graft.operators.Edges.coPurchase(spark, dir).count())
       // REGENERATE the dataset at the SAME path: two more baskets add
       // the (1,3) edge — a stale materialization would still read 1
       Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L),
         (3L, 1L), (3L, 3L), (4L, 1L), (4L, 3L))
         .toDF("l_orderkey", "l_partkey")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-      val n2 = graft.operators.Edges.coPurchase(spark, dir).count()
-      sweep()
+      val n2 = Runner.released(spark)(graft.operators.Edges.coPurchase(spark, dir).count())
       assert(n1 == 1L && n2 == 2L,
         s"source fingerprint must invalidate the materialization: $n1 -> $n2")
     } finally {
@@ -302,12 +297,13 @@ class Round12Spec extends AnyFunSuite with SparkTestBase {
       (1L, s"x1 x2 $run y1"),
       (2L, s"z1 $run z2 z3"),
       (3L, "solo words only here nothing shared")).toDF("doc_id", "text")
-    val out = graft.operators.Dedup
-      .exactSubstringApply(docs, "text", "doc_id", k = 5, window = 64,
-        anchorCap = 256, minLen = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-      .sortBy(_._1)
-    sweep()
+    val out = Runner.released(spark) {
+      graft.operators.Dedup
+        .exactSubstringApply(docs, "text", "doc_id", k = 5, window = 64,
+          anchorCap = 256, minLen = 10)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+        .sortBy(_._1)
+    }
     assert(out(0) == ((1L, 15L, 0L, s"x1 x2 $run y1")),
       s"the earlier occurrence's doc must survive intact: ${out(0)}")
     assert(out(1) == ((2L, 15L, 12L, "z1 z2 z3")),

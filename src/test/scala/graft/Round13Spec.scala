@@ -31,12 +31,17 @@ import graft.streaming.StreamingOps
   */
 class Round13Spec extends AnyFunSuite with SparkTestBase {
 
-  /** The round-12 formulation — the SHARED executable reference
-    * ([[KeepTokens.hofRebuild]], one definition serving this parity pin
-    * and tools.CutRebuildBench's baseline).
+  /** The round-12 HOF formulation, verbatim — the executable reference
+    * the native [[KeepTokens]] merge-walk is differenced against.
     */
   private def hofRebuild(w: Column, cs: Column): Column =
-    KeepTokens.hofRebuild(w, cs)
+    array_join(
+      transform(
+        filter(
+          transform(w, (x, i) => struct(x.as("tk"), (i + 1).as("p"))),
+          s => !array_contains(cs, s.getField("p"))),
+        s => s.getField("tk")),
+      " ")
 
   test("KeepTokens ≡ HOF rebuild on random and edge-case cut sets") {
     import spark.implicits._
@@ -335,17 +340,13 @@ class Round13Spec extends AnyFunSuite with SparkTestBase {
         .toDF("l_orderkey", "l_partkey").withColumn("pt", col("l_orderkey") % 2)
         .write.mode("overwrite").partitionBy("pt")
         .parquet(s"$dir/lineitem.parquet")
-      val n1 = graft.operators.Edges.coPurchase(spark, dir).count()
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      val n1 = Runner.released(spark)(graft.operators.Edges.coPurchase(spark, dir).count())
       Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L),
         (3L, 1L), (3L, 3L), (4L, 1L), (4L, 3L))
         .toDF("l_orderkey", "l_partkey").withColumn("pt", col("l_orderkey") % 2)
         .write.mode("overwrite").partitionBy("pt")
         .parquet(s"$dir/lineitem.parquet")
-      val n2 = graft.operators.Edges.coPurchase(spark, dir).count()
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      val n2 = Runner.released(spark)(graft.operators.Edges.coPurchase(spark, dir).count())
       assert(n1 == 1L && n2 == 2L,
         s"recursive fingerprint must see leaf files: $n1 -> $n2")
     } finally rmTree(dir)
@@ -372,17 +373,13 @@ class Round13Spec extends AnyFunSuite with SparkTestBase {
           .toDF("l_orderkey", "l_partkey")
           .coalesce(1).write.mode("overwrite").parquet(s"$d/lineitem.parquet")
       }
-      graft.operators.Edges.coPurchase(spark, dirA).count()
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      Runner.released(spark)(graft.operators.Edges.coPurchase(spark, dirA).count())
       val a1 = live(dirA)
       assert(a1.size == 1, s"dir A must have one live table: $a1")
       val locA = new org.apache.hadoop.fs.Path(
         org.apache.spark.sql.graft.Bridge.tableLocation(spark, a1.head))
       val fs = locA.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.operators.Edges.coPurchase(spark, dirB).count()
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      Runner.released(spark)(graft.operators.Edges.coPurchase(spark, dirB).count())
       assert(live(dirA) == a1,
         s"building dir B must not GC dir A's table: ${live(dirA)} vs $a1")
       assert(fs.exists(locA), s"dir A's warehouse files must survive: $locA")
@@ -400,9 +397,7 @@ class Round13Spec extends AnyFunSuite with SparkTestBase {
       Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L))
         .toDF("l_orderkey", "l_partkey")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-      graft.operators.Edges.coPurchase(spark, dir).count()
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      Runner.released(spark)(graft.operators.Edges.coPurchase(spark, dir).count())
       val t1 = liveTables()
       assert(t1.size == 1, s"expected one fresh table: $t1")
       val loc1 = new org.apache.hadoop.fs.Path(
@@ -416,9 +411,7 @@ class Round13Spec extends AnyFunSuite with SparkTestBase {
         (4L, 1L), (4L, 3L))
         .toDF("l_orderkey", "l_partkey")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-      graft.operators.Edges.coPurchase(spark, dir).count()
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      Runner.released(spark)(graft.operators.Edges.coPurchase(spark, dir).count())
       val t2 = liveTables()
       assert(t2.size == 1 && t2 != t1,
         s"superseded table must be GC'd, new one live: $t1 -> $t2")

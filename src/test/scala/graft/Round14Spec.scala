@@ -284,9 +284,7 @@ class Round14Spec extends AnyFunSuite with SparkTestBase {
         spark.sql(s"DROP TABLE IF EXISTS `$t`")
         spark.sql(s"CREATE TABLE `$t` AS SELECT 1 AS a")
       }
-      graft.operators.Edges.coPurchase(spark, dirA).count()
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      Runner.released(spark)(graft.operators.Edges.coPurchase(spark, dirA).count())
       assert(!spark.catalog.tableExists(legacyA),
         s"dir A's legacy-format table must be swept: $legacyA")
       assert(spark.catalog.tableExists(legacyB),

@@ -136,10 +136,10 @@ class Round15Spec extends AnyFunSuite with SparkTestBase {
 
   test("q371 manifest invariants: non-tail sequences read exactly 512 tokens; bucket totals conserve") {
     val dir = "/root/testdata/sf0.01"
-    val rows = SparkEntry.queries("q371_pack_manifest")(spark, dir)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(5)))
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val rows = Runner.released(spark) {
+      SparkEntry.queries("q371_pack_manifest")(spark, dir)
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(5)))
+    }
     assert(rows.nonEmpty)
     val lastSeq = rows.groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
     for ((b, s, _, toks) <- rows) {
@@ -152,15 +152,15 @@ class Round15Spec extends AnyFunSuite with SparkTestBase {
     // packed corpus token mass per bucket (no token lost or doubled
     // by the interval transpose)
     val manifestMass = rows.groupBy(_._1).view.mapValues(_.map(_._4).sum).toMap
-    val packedMass = graft.operators.Curation
-      .packSequences(
-        spark.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id"), col("text")),
-        "text", "doc_id", seqLen = 512, buckets = 8)
-      .groupBy("bucket").agg(sum(col("n_tok")).as("t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val packedMass = Runner.released(spark) {
+      graft.operators.Curation
+        .packSequences(
+          spark.read.parquet(s"$dir/documents.parquet")
+            .select(col("doc_id"), col("text")),
+          "text", "doc_id", seqLen = 512, buckets = 8)
+        .groupBy("bucket").agg(sum(col("n_tok")).as("t"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    }
     for ((b, t) <- packedMass if t > 0)
       assert(manifestMass(b) == t, s"bucket $b: manifest $manifestMass vs packed $t")
   }
@@ -227,11 +227,11 @@ class Round15Spec extends AnyFunSuite with SparkTestBase {
   test("q366 rewrite is row-identical to the decile-window formulation") {
     import org.apache.spark.sql.expressions.Window
     val dir = "/root/testdata/sf0.01"
-    val got = SparkEntry.queries("q366_curriculum_order")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-      .sortBy(_._1)
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val got = Runner.released(spark) {
+      SparkEntry.queries("q366_curriculum_order")(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+        .sortBy(_._1)
+    }
     // the replaced formulation, verbatim (correct but parallelism-capped
     // at 10 by the decile partition key — the round-14 weak)
     val deciled = graft.operators.Quantiles.ntileExact(
@@ -241,13 +241,13 @@ class Round15Spec extends AnyFunSuite with SparkTestBase {
       col("doc_id").cast("string"))), 1, 13), 16, 10).cast("long")
     val w = Window.partitionBy(col("decile"))
       .orderBy(col("u").asc, col("doc_id").asc)
-    val want = deciled.withColumn("u", u)
-      .withColumn("position", row_number().over(w).cast("long"))
-      .select(col("doc_id"), col("decile"), col("position"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-      .sortBy(_._1)
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val want = Runner.released(spark) {
+      deciled.withColumn("u", u)
+        .withColumn("position", row_number().over(w).cast("long"))
+        .select(col("doc_id"), col("decile"), col("position"))
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+        .sortBy(_._1)
+    }
     assert(got.length == want.length && got.length > 0)
     assert(got.sameElements(want),
       s"first diff: ${got.zip(want).find(p => p._1 != p._2)}")

@@ -8,12 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Round8Spec extends AnyFunSuite with SparkTestBase {
 
-  private def rows(q: String) = {
-    val r = SparkEntry.queries(q)(spark, sfDir).collect()
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
-    r
-  }
+  private def rows(q: String) =
+    Runner.released(spark)(SparkEntry.queries(q)(spark, sfDir).collect())
 
   test("q238: funnel conserves mass — each stage's n_in is the prior stage's n_pass") {
     val f = rows("q238_filter_funnel").sortBy(_.getInt(0))

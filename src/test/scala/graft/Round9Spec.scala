@@ -16,9 +16,7 @@ class Round9Spec extends AnyFunSuite with SparkTestBase {
 
   private def assertBitEqual(a: DataFrame, b: DataFrame, what: String): Unit = {
     val extra = a.except(b).count()
-    val missing = b.except(a).count()
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val missing = Runner.released(spark)(b.except(a).count())
     assert(extra == 0 && missing == 0,
       s"$what: $extra rows only in restarted run, $missing only in uninterrupted run")
   }
@@ -46,10 +44,10 @@ class Round9Spec extends AnyFunSuite with SparkTestBase {
   test("q295: clip embeddings cover exactly q61's frame grid with means in [0,1)") {
     val clips = run("q295_clip_embeddings").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), (2 to 5).map(r.getDouble)))).toMap
-    val frames = run("q61_frame_counts").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val frames = Runner.released(spark) {
+      run("q61_frame_counts").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(clips.keySet == frames.keySet, "clip set must equal the video set")
     clips.foreach { case (id, (n, ps)) =>
       assert(n == frames(id), s"clip $id pooled $n frames, q61 sampled ${frames(id)}")
@@ -101,14 +99,14 @@ class Round9Spec extends AnyFunSuite with SparkTestBase {
 
   test("q93 drift pin: the Bloom answer coincides with exact q78 at sf0.01") {
     val dir = "/root/testdata/sf0.01"
-    val bloom = graft.queries.DedupQueries.q93BloomDecontaminate(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
-    val exact = graft.queries.DedupQueries.q78Decontaminate(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val bloom = Runner.released(spark) {
+      graft.queries.DedupQueries.q93BloomDecontaminate(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    }
+    val exact = Runner.released(spark) {
+      graft.queries.DedupQueries.q78Decontaminate(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    }
     assert(exact.length == 379,
       s"exact decontamination baseline moved: ${exact.length} docs")
     assert(bloom == exact,
@@ -117,15 +115,11 @@ class Round9Spec extends AnyFunSuite with SparkTestBase {
   }
 
   test("batched BPE learner == sequential learner at every batch width") {
-    val seq = graft.queries.TextQueries.bpeRounds(spark, sfDir, 8)._1
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val seq = Runner.released(spark)(graft.queries.TextQueries.bpeRounds(spark, sfDir, 8)._1)
     var anyMultiMergeRound = false
     for (b <- Seq(1, 2, 4, 8)) {
-      val (merges, batches) =
-        graft.queries.TextQueries.bpeRoundsBatched(spark, sfDir, 8, b)
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      val (merges, batches) = Runner.released(spark)(
+        graft.queries.TextQueries.bpeRoundsBatched(spark, sfDir, 8, b))
       assert(merges == seq,
         s"batch width $b diverged from the sequential merge log")
       assert(batches.sum == 8)
@@ -137,9 +131,7 @@ class Round9Spec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q289: PPR mass is seed-bounded, parts-only, and seed-sensitive") {
-    val r = run("q289_personalized_pagerank").collect()
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val r = Runner.released(spark)(run("q289_personalized_pagerank").collect())
     assert(r.length == 10)
     r.foreach { row =>
       val fp = row.getLong(1)
@@ -153,10 +145,10 @@ class Round9Spec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q290: per-part recs are rank-consecutive and symmetric in shared count") {
-    val r = run("q290_covisitation").collect()
-      .map(row => (row.getLong(0), row.getLong(1), row.getLong(2), row.getInt(3)))
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    val r = Runner.released(spark) {
+      run("q290_covisitation").collect()
+        .map(row => (row.getLong(0), row.getLong(1), row.getLong(2), row.getInt(3)))
+    }
     assert(r.nonEmpty)
     r.groupBy(_._1).foreach { case (x, rows) =>
       assert(rows.map(_._4).sorted.toSeq == (1 to rows.length),

@@ -173,8 +173,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.functions._
     val kept = graft.queries.SimilarityQueries.q89SemanticDedup(spark, sfDir)
     val keptIds = kept.select("vec_id").as[Long].collect().toSet
-    val n = spark.read.parquet(s"$sfDir/embeddings.parquet").count()
-    spark.catalog.clearCache()
+    val n = Runner.released(spark)(spark.read.parquet(s"$sfDir/embeddings.parquet").count())
     // survivors are a strict, non-empty subset on a fixture with near-dups
     assert(keptIds.nonEmpty && keptIds.size <= n)
     // re-derive the dropped set independently: any vector with a

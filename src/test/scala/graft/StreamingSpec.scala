@@ -108,9 +108,10 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // expected survivors per the BATCH exact path: non-benchmark docs
     // minus q78's flagged set (bloom FPs could only shrink this further;
     // DedupSpec pins the FP excess at ~zero on this fixture)
-    val flagged = graft.queries.DedupQueries.q78Decontaminate(spark, sfDir)
-      .select("doc_id").as[Long].collect().toSet
-    spark.catalog.clearCache()
+    val flagged = Runner.released(spark) {
+      graft.queries.DedupQueries.q78Decontaminate(spark, sfDir)
+        .select("doc_id").as[Long].collect().toSet
+    }
     val rest = corpus.filter($"doc_id" >= 20)
       .select($"doc_id", $"text").as[(Long, String)].collect()
     val expected = rest.map(_._1).toSet -- flagged
