@@ -6,7 +6,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 /** Benchmark main — runs the headline query set on
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
+  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...,"cores":...}`.
   *
   * The headline set covers every engine area (index build, relational
   * joins/windows, dedup, similarity, text analysis, event windows) —
@@ -132,15 +132,16 @@ object Bench {
 
   /** The top-5 movers of `cur` against `prevLine`, the full line of an
     * earlier sweep, by relative change: name -> (previous, current)
-    * seconds. Empty unless `prevLine` parses and was recorded at `sfDir`,
-    * since minima of two datasets do not compare. An entry that failed
-    * (-1) or is absent on either side is skipped.
+    * seconds. Empty unless `prevLine` parses and was recorded at `sfDir`
+    * with `cores` (`SPARK_GRAFT_CPUS`), since minima of two datasets or
+    * two core counts do not compare. An entry that failed (-1) or is
+    * absent on either side is skipped.
     */
-  private[graft] def movers(prevLine: Option[String], sfDir: String,
+  private[graft] def movers(prevLine: Option[String], sfDir: String, cores: String,
       cur: Seq[(String, Double)]): Seq[(String, (Double, Double))] = {
     val prev = prevLine
       .flatMap(l => Try(new ObjectMapper().readTree(l)).toOption)
-      .filter(_.path("sf").asText == sfDir)
+      .filter(p => p.path("sf").asText == sfDir && p.path("cores").asText == cores)
       .map(_.path("queries").properties.asScala
         .map(e => e.getKey -> e.getValue.asDouble(-1.0)).toMap)
       .getOrElse(Map.empty[String, Double])
@@ -224,7 +225,7 @@ object Bench {
     val ab = absent.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = all.map(_._2).filter(_ >= 0).sum
     val fullLine =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"reps":$reps,"max":$mx,"absent":$ab,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"reps":$reps,"max":$mx,"absent":$ab,"sf":"$sfDir","cores":"$cpus"}"""
 
     // Artifact self-containment (round-14 verdict): the driver captures
     // only the LAST 2000 chars of stdout, and the full per-query
@@ -249,7 +250,7 @@ object Bench {
       if (fullFile.getParent != null) java.nio.file.Files.createDirectories(fullFile.getParent)
       java.nio.file.Files.writeString(fullFile, fullLine + "\n")
     }
-    val mv = movers(prevLine, sfDir, all)
+    val mv = movers(prevLine, sfDir, cpus, all)
       .map { case (k, (p, v)) => "\"" + k + f"""\":[$p%.3f,$v%.3f]""" }
       .mkString("{", ",", "}")
     val top5 = all.filter(_._2 >= 0).sortBy(-_._2).take(5)

@@ -77,28 +77,8 @@ case class DocStats(child: Expression, stopLists: Seq[(String, Seq[String])])
       return InternalRow.fromSeq(zeros.toIndexedSeq) :: Nil
     }
     val in = line.getBytes
-    // pass 1: character-level counters (one scan, no allocation)
-    var nWs = 0      // non-ws runs
-    var nPunct = 0   // chars outside [A-Za-z0-9\s]
-    var nChars = 0   // total chars (non-continuation bytes)
-    var inRun = false
-    var i = 0
-    while (i < in.length) {
-      val b = in(i)
-      val cont = (b & 0xc0) == 0x80 // UTF-8 continuation byte
-      if (!cont) {
-        nChars += 1
-        val isWs = b == ' ' || (b >= 9 && b <= 13)
-        val alnum = (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') ||
-          (b >= '0' && b <= '9')
-        if (isWs) inRun = false
-        else {
-          if (!inRun) { nWs += 1; inRun = true }
-          if (!alnum) nPunct += 1
-        }
-      }
-      i += 1
-    }
+    // pass 1: character classes, the pass TokenCounts shares
+    val chars = CharClassCounts.of(in)
     // pass 2: cleaned words (shared tokenizer — dedup/ranking parity)
     val words = WordNgrams.cleanWords(in)
     var lenSum = 0L
@@ -115,10 +95,10 @@ case class DocStats(child: Expression, stopLists: Seq[(String, Seq[String])])
       wi += 1
     }
     val out = new Array[Any](5 + k)
-    out(0) = nWs
+    out(0) = chars.nonWsRuns
     out(1) = words.length
-    out(2) = nPunct
-    out(3) = nChars
+    out(2) = chars.other
+    out(3) = chars.chars
     out(4) = lenSum
     var oi = 0
     while (oi < k) { out(5 + oi) = hits(oi); oi += 1 }

@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Documents
 
 /** Multimodal column plumbing for training-data pipelines: image/audio/
   * video carried as opaque `binary` payloads with typed metadata, plus
@@ -53,7 +54,7 @@ object MultimodalPipeline {
     */
   def ingestFromDocuments(spark: SparkSession, dir: String): Dataset[MediaItem] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    Documents.read(spark, dir)
       .select(
         col("doc_id").as("id"),
         element_at(

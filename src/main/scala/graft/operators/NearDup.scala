@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Documents
 
 /** Shared near-duplicate candidate/pair builders over the `documents`
   * table — the dedup-family analog of [[Edges]] for the graph family:
@@ -26,12 +27,6 @@ object NearDup {
   val ShingleN = 3
   val NumHashes = 8
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    // the shingle generator above this scan is the near-dup family's
-    // dominant narrow stage; see ScanSpread
-    graft.sources.ScanSpread.spread(
-      spark.read.parquet(s"$dir/documents.parquet"))
-
   /** Distinct (doc_id, sh) long-format shingle table, materialized
     * through ONE doc-keyed exchange — the input both candidate
     * generators and the exact verifier read. The r16 persist here was
@@ -44,7 +39,7 @@ object NearDup {
     * signatures, set sizes) arrive co-partitioned.
     */
   def shingleTable(spark: SparkSession, dir: String): DataFrame =
-    Dedup.shinglePairs(docs(spark, dir), "text", "doc_id", ShingleN)
+    Dedup.shinglePairs(Documents.spread(spark, dir), "text", "doc_id", ShingleN)
       .repartition(col("doc_id"))
 
   /** EXACT shared-shingle Jaccard pairs at [[Threshold]] with their
@@ -52,7 +47,7 @@ object NearDup {
     * cross-product-free). Schema: (id_a, id_b, jaccard).
     */
   def exactPairs(spark: SparkSession, dir: String): DataFrame =
-    Dedup.ngramJaccard(docs(spark, dir), "text", "doc_id", Threshold, ShingleN)
+    Dedup.ngramJaccard(Documents.spread(spark, dir), "text", "doc_id", Threshold, ShingleN)
 
   /** [[exactPairs]] projected to the bare edge list — what the
     * clustering/survivorship consumers (q37/q38/q114/q256) join on.

@@ -77,10 +77,11 @@ object Ranking {
     * Scale: ONE pass over the token stream computes the document length
     * AND every query term's tf as columns of a single map-side-combinable
     * aggregation (only (doc, dl, tf…) rows cross the shuffle — never
-    * token text); the per-term rows are then unpivoted from that
-    * doc-sized table, and global stats / df are tiny derived aggregates
-    * broadcast back. The per-doc table is persisted — three downstream
-    * consumers (tf rows, df, corpus stats), one computation.
+    * token text). N, sum(dl) and every term's df are ONE 1-row aggregate
+    * of that doc-sized table, broadcast back onto it; the per-term rows
+    * are then unpivoted. Nothing is persisted: both consumers read the
+    * same per-doc exchange, which AQE reuses, so the corpus is tokenized
+    * once and no stages race to fill a cache.
     */
   def bm25(
       docs: DataFrame, textCol: String, idCol: String,
@@ -105,21 +106,19 @@ object Ranking {
     val perDoc = toks
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("dl"), tfCols: _*)
-      .persist()
-    val stats = perDoc.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-    val tf = perDoc
-      .select(col(idCol), col("dl"), explode(array(terms.zipWithIndex.map {
-        case (t, i) => struct(lit(t).as("word"), col(s"_tf$i").as("tf"))
-      }: _*)).as("wt"))
-      .select(col(idCol), col("dl"), col("wt.word").as("word"), col("wt.tf").as("tf"))
-      .filter(col("tf") > 0)
-    val df = tf.groupBy("word").agg(count(lit(1)).as("df"))
+    val dfCols = terms.indices.map(i => count(when(col(s"_tf$i") > 0, 1)).as(s"_df$i"))
+    val stats = perDoc.agg(count(lit(1)).as("n_docs"), (sum("dl").as("sum_dl") +: dfCols): _*)
     val idf: Column =
       log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
     val norm: Column =
       col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") * col("n_docs") / col("sum_dl"))
-    tf.join(broadcast(df), "word")
-      .crossJoin(broadcast(stats))
+    perDoc.crossJoin(broadcast(stats))
+      .select(col(idCol), col("dl"), col("n_docs"), col("sum_dl"),
+        explode(array(terms.zipWithIndex.map { case (t, i) =>
+          struct(lit(t).as("word"), col(s"_tf$i").as("tf"), col(s"_df$i").as("df"))
+        }: _*)).as("wt"))
+      .select(col(idCol), col("dl"), col("n_docs"), col("sum_dl"), col("wt.*"))
+      .filter(col("tf") > 0)
       .select(
         col(idCol), col("word"), col("tf"), col("df"), col("dl"),
         round(idf * col("tf") * (k1 + 1) / norm, 6).as("bm25"))
@@ -179,10 +178,11 @@ object Ranking {
       toks: DataFrame, idCol: String,
       terms: DataFrame, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // dl feeds stats AND the final join; tf feeds dfx AND the final
-    // join — persist both (the static bm25's perDoc discipline;
-    // without it Catalyst prunes each branch into a structurally
-    // different subtree with no exchange reuse and re-tokenizes the
-    // corpus once per consumer). The query runner's sweep frees them.
+    // join — persist both (unlike the static bm25's perDoc, whose two
+    // consumers read the same columns, Catalyst prunes these branches
+    // into structurally different subtrees with no exchange reuse and
+    // would re-tokenize the corpus once per consumer). The query
+    // runner's sweep frees them.
     val dl = toks.groupBy(col(idCol)).agg(count(lit(1)).as("dl")).persist()
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
     // distinct() is the dynamic twin of the static bm25's

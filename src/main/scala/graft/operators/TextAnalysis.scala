@@ -157,15 +157,11 @@ object TextAnalysis {
 
   /** Token counts per document: whitespace tokens, alpha runs, digit runs,
     * and a BPE-ish segmentation count (letter runs + digit runs + each
-    * non-alnum non-space char).
+    * non-alnum non-space char), from one native pass
+    * ([[graft.functions.TokenCounts]]).
     */
   def tokenCounts(docs: DataFrame, textCol: String, idCol: String): DataFrame =
-    docs.select(
-      col(idCol),
-      size(filter(split(trim(col(textCol)), "\\s+"), t => length(t) > 0)).as("n_ws_tokens"),
-      regexp_count(col(textCol), lit("[A-Za-z]+")).as("n_alpha_runs"),
-      regexp_count(col(textCol), lit("[0-9]+")).as("n_digit_runs"),
-      regexp_count(col(textCol), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]")).as("n_bpeish"))
+    docs.select(col(idCol), graft.functions.TokenCounts(col(textCol)))
 
   /** One-pass combined profile: quality metrics AND language scores from
     * a single materialized word array — the curation pipeline's narrow

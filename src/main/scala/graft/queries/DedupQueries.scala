@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import graft.sources.Documents
 
 /** Deduplication query pack over `documents` (q30-q33): exact hash dedup,
   * MinHash+LSH near-dup with exact-Jaccard verification, shared-shingle
@@ -10,11 +11,6 @@ import graft.operators.Dedup
   * makes every stage bit-reproducible in the DuckDB oracle.
   */
 object DedupQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    // heavy per-document pipelines sit above this scan; see ScanSpread
-    graft.sources.ScanSpread.spread(
-      spark.read.parquet(s"$dir/documents.parquet"))
 
   /** q31: MinHash (8 hashes) + LSH (4 bands × 2 rows) candidates, verified
     * with exact Jaccard over the shingle sets. Two-row bands make the
@@ -41,7 +37,7 @@ object DedupQueries {
     * projection; the final matrix is |sources|²-bounded.
     */
   def q127SourceOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Documents.spread(spark, dir)
     // persisted: the near-dup pair table is tiny but its plan is the
     // whole shingle-join pipeline — without the persist, broadcast
     // planning of the two provenance joins re-executes that pipeline
@@ -69,7 +65,7 @@ object DedupQueries {
     * sides read them, and the signature build is two aggregations deep.
     */
   def q36SimhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    val sigs = Dedup.simhash16(docs(spark, dir), "text", "doc_id").persist()
+    val sigs = Dedup.simhash16(Documents.spread(spark, dir), "text", "doc_id").persist()
     Dedup.simhashPairs(sigs, "doc_id", maxDist = 3)
   }
 
@@ -83,7 +79,7 @@ object DedupQueries {
     * fixture scale, can afford the naive all-pairs Hamming filter.
     */
   def q77Simhash64Pairs(spark: SparkSession, dir: String): DataFrame = {
-    val sigs = Dedup.simhash(docs(spark, dir), "text", "doc_id", bits = 64).persist()
+    val sigs = Dedup.simhash(Documents.spread(spark, dir), "text", "doc_id", bits = 64).persist()
     Dedup.simhashPairs(sigs, "doc_id", maxDist = 7, bits = 64)
   }
 
@@ -97,7 +93,7 @@ object DedupQueries {
     * Real deployments use longer n-grams (8-13); the plan is identical.
     */
   def q78Decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Dedup.shinglePairs(docs(spark, dir), "text", "doc_id").persist()
+    val sh = Dedup.shinglePairs(Documents.spread(spark, dir), "text", "doc_id").persist()
     val bench = sh.filter(col("doc_id") < 20).select("sh").distinct()
     sh.filter(col("doc_id") >= 20)
       .join(bench, Seq("sh"))
@@ -121,7 +117,7 @@ object DedupQueries {
     * contamination (an uncontaminated corpus emits nothing).
     */
   def q365ContaminationProvenance(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Dedup.shinglePairs(docs(spark, dir), "text", "doc_id").persist()
+    val sh = Dedup.shinglePairs(Documents.spread(spark, dir), "text", "doc_id").persist()
     val bench = sh.filter(col("doc_id") < 20)
       .select(col("doc_id").as("bench_id"), col("sh"))
     val bsz = bench.groupBy("bench_id").agg(count(lit(1)).as("n_bench"))
@@ -152,7 +148,7 @@ object DedupQueries {
     */
   def q159SplitLeakage(spark: SparkSession, dir: String): DataFrame = {
     val d = graft.operators.Curation.hashSplit(
-      docs(spark, dir).select("doc_id", "text"), "doc_id",
+      Documents.spread(spark, dir).select("doc_id", "text"), "doc_id",
       Seq("test" -> "1a", "val" -> "34"), "train")
     val trainSh = Dedup
       .shinglePairs(d.filter(col("split") === "train"), "text", "doc_id")
@@ -189,7 +185,7 @@ object DedupQueries {
     * false-positive doc excess is bounded.
     */
   def q93BloomDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Dedup.shinglePairs(docs(spark, dir), "text", "doc_id").persist()
+    val sh = Dedup.shinglePairs(Documents.spread(spark, dir), "text", "doc_id").persist()
     // benchmark-sized sketch build (the q78 analog of collecting the
     // benchmark set, but ~3.4 bytes/item instead of the string payload);
     // parameters live in ONE place, shared with the streaming path —
@@ -218,7 +214,7 @@ object DedupQueries {
     * words.
     */
   def q96DupPassageFraction(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Dedup.shinglePairs(docs(spark, dir), "text", "doc_id").persist()
+    val sh = Dedup.shinglePairs(Documents.spread(spark, dir), "text", "doc_id").persist()
     val sdf = sh.groupBy("sh").agg(count(lit(1)).as("df"))
     sh.join(sdf, Seq("sh"))
       .groupBy("doc_id")
@@ -240,7 +236,7 @@ object DedupQueries {
     * [[Dedup.shinglePairs]] applies to this query as a whole.
     */
   def q79Repetition(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Documents.spread(spark, dir)
     val tot = d.select(
       col("doc_id"),
       greatest(graft.functions.AlnumWordCount(col("text")) - 2, lit(1))
@@ -291,7 +287,7 @@ object DedupQueries {
     */
   def q256QualitySurvivorship(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val d = docs(spark, dir)
+    val d = Documents.spread(spark, dir)
     val labels = Dedup.connectedComponents(
       graft.operators.NearDup.exactPairIds(spark, dir))
     val words = d.select(col("doc_id"),
@@ -333,7 +329,7 @@ object DedupQueries {
     * zero-straddle property over the full verified pair set.
     */
   def q358LeakageSafeSplit(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir).select(col("doc_id"))
+    val d = Documents.spread(spark, dir).select(col("doc_id"))
     val labels =
       Dedup.connectedComponents(graft.operators.NearDup.exactPairIds(spark, dir))
         .select(col("id").as("doc_id"), col("comp"))
@@ -350,7 +346,7 @@ object DedupQueries {
     */
   def q38DedupApply(spark: SparkSession, dir: String): DataFrame =
     Dedup.keepClusterKeepers(
-      docs(spark, dir),
+      Documents.spread(spark, dir),
       graft.operators.NearDup.exactPairIds(spark, dir),
       "doc_id")
 
@@ -361,7 +357,7 @@ object DedupQueries {
     */
   def q114ClusterWeights(spark: SparkSession, dir: String): DataFrame =
     Dedup.clusterWeights(
-      docs(spark, dir),
+      Documents.spread(spark, dir),
       graft.operators.NearDup.exactPairIds(spark, dir),
       "doc_id")
 
@@ -376,7 +372,7 @@ object DedupQueries {
     * [[Dedup.prefixFilterJaccard]] for the pigeonhole argument.
     */
   def q152PrefixFilterJoin(spark: SparkSession, dir: String): DataFrame =
-    Dedup.prefixFilterJaccard(docs(spark, dir), "text", "doc_id", threshold = 0.5)
+    Dedup.prefixFilterJaccard(Documents.spread(spark, dir), "text", "doc_id", threshold = 0.5)
 
   /** q194: asymmetric shingle-CONTAINMENT pairs — |A∩B| / |A| ≥ 0.5,
     * emitted per DIRECTION. The sub-document duplication detector
@@ -391,7 +387,7 @@ object DedupQueries {
     * directions fall out of one aggregated pair row).
     */
   def q194ContainmentPairs(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Dedup.shinglePairs(docs(spark, dir), "text", "doc_id").persist()
+    val sh = Dedup.shinglePairs(Documents.spread(spark, dir), "text", "doc_id").persist()
     val sizes = sh.groupBy(col("doc_id").as("id")).agg(count(lit(1)).as("n"))
     sh.select(col("doc_id").as("id_a"), col("sh"))
       .join(sh.select(col("doc_id").as("id_b"), col("sh")), Seq("sh"))
@@ -540,7 +536,7 @@ object DedupQueries {
     * shuffle carries hashes, not text.
     */
   def q243NgramNovelty(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Documents.spread(spark, dir)
     val sn = substring(col("source"), 4, 10).cast("int")
     def grams(df: org.apache.spark.sql.DataFrame) =
       df.select(col("doc_id"), graft.functions.WordNgrams(col("text"), 5).as("sh"))
@@ -569,11 +565,11 @@ object DedupQueries {
     "q256_quality_survivorship" -> (q256QualitySurvivorship _),
     "q272_modality_disagreement" -> (q272ModalityDisagreement _),
     "q38_dedup_apply" -> (q38DedupApply _),
-    "q30_exact_dedup" -> ((s, dir) => Dedup.exact(docs(s, dir), "text", "doc_id")),
+    "q30_exact_dedup" -> ((s, dir) => Dedup.exact(Documents.spread(s, dir), "text", "doc_id")),
     "q31_minhash_lsh" -> (q31MinhashLsh _),
     "q32_ngram_jaccard" -> ((s, dir) =>
       graft.operators.NearDup.exactPairs(s, dir)),
-    "q33_simhash" -> ((s, dir) => Dedup.simhash16(docs(s, dir), "text", "doc_id")),
+    "q33_simhash" -> ((s, dir) => Dedup.simhash16(Documents.spread(s, dir), "text", "doc_id")),
     "q36_simhash_pairs" -> (q36SimhashPairs _),
     "q77_simhash64_pairs" -> (q77Simhash64Pairs _),
     "q78_decontaminate" -> (q78Decontaminate _),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Curation, Dedup, TextAnalysis}
+import graft.sources.Documents
 
 /** Corpus-hygiene query pack (round 7): incremental cross-corpus dedup
   * (q97), deterministic language rebalancing (q98), data-dependent
@@ -13,11 +14,6 @@ import graft.operators.{Curation, Dedup, TextAnalysis}
   * drift between engines.
   */
 object HygieneQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    // heavy per-document pipelines sit above this scan; see ScanSpread
-    graft.sources.ScanSpread.spread(
-      spark.read.parquet(s"$dir/documents.parquet"))
 
   /** Source number: the fixture's `source` column is `src<N>`; the
     * "old corpus" is N < 10, the "new increment" N >= 10.
@@ -33,7 +29,7 @@ object HygieneQueries {
     * matched-id set ([[Dedup.dedupAgainstCorpus]]).
     */
   def q97DedupCrossCorpus(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Documents.spread(spark, dir)
     Dedup.dedupAgainstCorpus(
       d.filter(srcNum >= 10), d.filter(srcNum < 10),
       "text", "doc_id", threshold = 0.05)
@@ -50,7 +46,7 @@ object HygieneQueries {
     * `floor(rate·2^24)` hex bound, so the kept sets agree row-for-row.
     */
   def q98RebalanceSample(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Documents.spread(spark, dir)
     // languages-sized aggregate (bounded driver state, like IVF seeds)
     val counts = d.groupBy("lang").agg(count(lit(1)).as("cnt")).collect()
     val minC = counts.map(_.getLong(1)).min
@@ -72,7 +68,7 @@ object HygieneQueries {
     * the q58 trade.
     */
   def q100LengthGate(spark: SparkSession, dir: String): DataFrame = {
-    val wc = docs(spark, dir).select(
+    val wc = Documents.spread(spark, dir).select(
       col("doc_id"),
       graft.functions.AlnumWordCount(col("text")).cast("long").as("n_words"))
     val th = wc.agg(
@@ -91,7 +87,7 @@ object HygieneQueries {
     * passages across documents, so the rewrite is non-trivial.
     */
   def q101PassageDedup(spark: SparkSession, dir: String): DataFrame =
-    Dedup.passageDedup(docs(spark, dir), "text", "doc_id", passageWords = 5)
+    Dedup.passageDedup(Documents.spread(spark, dir), "text", "doc_id", passageWords = 5)
 
   /** q102: PII redaction — replace e-mails, IPv4s, and card-like digit
     * runs with typed placeholders and count redacted spans
@@ -102,7 +98,7 @@ object HygieneQueries {
     * pinned on synthetic PII in `TextAnalysisSpec`.
     */
   def q102PiiScrub(spark: SparkSession, dir: String): DataFrame =
-    TextAnalysis.piiScrub(docs(spark, dir), "text", "doc_id")
+    TextAnalysis.piiScrub(Documents.spread(spark, dir), "text", "doc_id")
 
   /** q103: maximal duplicated-span extraction (substring-dedup
     * primitive, [[Dedup.dupSpans]]) — per document, the maximal runs of
@@ -112,7 +108,7 @@ object HygieneQueries {
     * window arithmetic exactly.
     */
   def q103DupSpans(spark: SparkSession, dir: String): DataFrame =
-    Dedup.dupSpans(docs(spark, dir), "text", "doc_id", n = 3)
+    Dedup.dupSpans(Documents.spread(spark, dir), "text", "doc_id", n = 3)
 
   /** q334: longest duplicated substrings — the EXACT-substring rung of
     * the dedup ladder ([[Dedup.exactSubstrings]]: Lee et al. 2022's
@@ -130,7 +126,7 @@ object HygieneQueries {
     * q103 on a two-doc fixture plus cap and left-maximality semantics.
     */
   def q334ExactSubstrings(spark: SparkSession, dir: String): DataFrame =
-    Dedup.exactSubstrings(docs(spark, dir), "text", "doc_id",
+    Dedup.exactSubstrings(Documents.spread(spark, dir), "text", "doc_id",
         k = 5, window = 64, anchorCap = 256)
       .orderBy(col("len_tokens").desc, col("doc_a"), col("pos_a"),
         col("doc_b"), col("pos_b"))
@@ -148,7 +144,7 @@ object HygieneQueries {
     * hash on `text_kept` itself.
     */
   def q344SubstringDedupApply(spark: SparkSession, dir: String): DataFrame =
-    Dedup.exactSubstringApply(docs(spark, dir), "text", "doc_id",
+    Dedup.exactSubstringApply(Documents.spread(spark, dir), "text", "doc_id",
       k = 5, window = 64, anchorCap = 256, minLen = 10)
 
   /** q104: column profile over `lineitem` — the ANALYZE-style stats
@@ -173,7 +169,7 @@ object HygieneQueries {
     * (count desc, pair asc) order.
     */
   def q105BpePairs(spark: SparkSession, dir: String): DataFrame = {
-    val wf = docs(spark, dir)
+    val wf = Documents.spread(spark, dir)
       .select(graft.functions.AlnumTokens(col("text")))
       .groupBy("word").agg(count(lit(1)).as("freq"))
     wf.filter(length(col("word")) >= 2)
@@ -231,7 +227,7 @@ object HygieneQueries {
       col("n_chars").cast("double")
     val w = Window.partitionBy(col("source"))
       .orderBy(col("priority").asc, col("doc_id").asc)
-    docs(spark, dir)
+    Documents.spread(spark, dir)
       .select(col("source"), col("doc_id"), col("n_chars"), pri.as("priority"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 20)
@@ -273,7 +269,7 @@ object HygieneQueries {
     val u = v / 4294967296.0 - 0.5
     val lnq = round(log(greatest(lit(1e-12),
       lit(1.0) - lit(2.0) * abs(u))) * 1e9, 0).cast("long")
-    docs(spark, dir)
+    Documents.spread(spark, dir)
       .groupBy("source", "lang")
       .agg(count(lit(1)).as("n"))
       .withColumn("lq", lnq)
@@ -301,7 +297,7 @@ object HygieneQueries {
     */
   def q269QuantileNormalize(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val d = docs(spark, dir).select(col("doc_id"), col("source"), col("n_chars"))
+    val d = Documents.spread(spark, dir).select(col("doc_id"), col("source"), col("n_chars"))
     val n = d.count()
     val r = d
       .withColumn("r", row_number().over(
@@ -333,7 +329,7 @@ object HygieneQueries {
     * only corpus-sized exchange) folded to group grain.
     */
   def q282LDiversity(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Documents.spread(spark, dir)
       .select(col("lang"), col("source"),
         floor(col("n_chars") / 100).cast("long").as("len_b"))
       .groupBy("lang", "source")
@@ -366,7 +362,7 @@ object HygieneQueries {
     */
   def q325TCloseness(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val b = docs(spark, dir)
+    val b = Documents.spread(spark, dir)
       .select(col("lang"), col("source"),
         floor(col("n_chars") / 100).cast("long").as("len_b"))
     // ONE corpus scan: glob and groups are rollups of the persisted
@@ -404,7 +400,7 @@ object HygieneQueries {
   }
 
   def q154KAnonymity(spark: SparkSession, dir: String): DataFrame = {
-    docs(spark, dir)
+    Documents.spread(spark, dir)
       .select(col("lang"), col("source"),
         floor(col("n_chars") / 100).cast("long").as("len_b"))
       .createOrReplaceTempView("docs_q154")
@@ -437,7 +433,7 @@ object HygieneQueries {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    docs(spark, dir)
+    Documents.spread(spark, dir)
       .select(col("source"), col("doc_id"), col("n_chars"))
       .withColumn("cum", sum(col("n_chars")).over(w))
       .withColumn("bin",
@@ -465,7 +461,7 @@ object HygieneQueries {
     * one doc-grain agg, one 1-row fold; the funnel explode is 4 rows.
     */
   def q238FilterFunnel(spark: SparkSession, dir: String): DataFrame = {
-    val wc = docs(spark, dir)
+    val wc = Documents.spread(spark, dir)
       .select(col("doc_id"), graft.functions.AlnumTokens(col("text")))
       .groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
       .groupBy("doc_id")
@@ -473,7 +469,7 @@ object HygieneQueries {
         count(lit(1)).as("n_types"),
         max(col("cnt")).as("max_freq"),
         sum(length(col("word")) * col("cnt")).as("sum_len"))
-    val st = docs(spark, dir).select(col("doc_id"))
+    val st = Documents.spread(spark, dir).select(col("doc_id"))
       .join(wc, Seq("doc_id"), "left")
       .select(
         coalesce(col("n_words"), lit(0L)).as("nw"),
@@ -516,7 +512,7 @@ object HygieneQueries {
     * |sources|-grain.
     */
   def q242MixTemperature(spark: SparkSession, dir: String): DataFrame = {
-    val tok = docs(spark, dir)
+    val tok = Documents.spread(spark, dir)
       .select(col("source"), graft.functions.AlnumTokens(col("text")))
       .groupBy("source").agg(count(lit(1)).as("n_tokens"))
     val afp = round(exp(lit(0.7) * log(col("n_tokens").cast("double"))) * 1e6)
@@ -592,7 +588,7 @@ object HygieneQueries {
     */
   private[graft] def doremiTrajectory(spark: SparkSession, dir: String)
       : Seq[(Int, String, Long, Long)] = {
-    val words = docs(spark, dir)
+    val words = Documents.spread(spark, dir)
       .select(col("source"), graft.functions.AlnumTokens(col("text")))
       .select("source", "word")
     val freq = words.groupBy("word").agg(count(lit(1)).as("cnt")).persist()
@@ -660,7 +656,7 @@ object HygieneQueries {
   def q384DoremiResamplePlan(spark: SparkSession, dir: String): DataFrame = {
     val traj = doremiTrajectory(spark, dir)
     val w5 = traj.filter(_._1 == DoremiRounds).map(t => t._2 -> t._4).toMap
-    val nd = docs(spark, dir).groupBy("source")
+    val nd = Documents.spread(spark, dir).groupBy("source")
       .agg(count(lit(1)).as("n_docs"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
     val srcs = nd.map(_._1)
@@ -697,7 +693,7 @@ object HygieneQueries {
     * + B-row rollup.
     */
   def q244PaddingEfficiency(spark: SparkSession, dir: String): DataFrame = {
-    val perDoc = docs(spark, dir)
+    val perDoc = Documents.spread(spark, dir)
       .select(col("doc_id"), graft.functions.AlnumTokens(col("text")))
       .groupBy("doc_id").agg(count(lit(1)).as("n_tok"))
       .persist()
@@ -729,7 +725,7 @@ object HygieneQueries {
     * — then a constant-width stack; no joins, no windows.
     */
   def q300CorpusCard(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Documents.spread(spark, dir)
     val tok = d
       .select(graft.functions.AlnumTokens(col("text")))
       .agg(count(lit(1)).as("n_tokens"),
@@ -807,7 +803,7 @@ object HygieneQueries {
     // unspread reader: only 3 narrow columns and one map-side-combinable
     // agg sit above the scan — the ScanSpread exchange costs more than
     // the work it parallelizes (measured r17; see SearchQueries.docsLight)
-    val d = spark.read.parquet(s"$dir/documents.parquet")
+    val d = Documents.read(spark, dir)
       .select(col("source"), col("doc_id"), col("n_chars"))
     // exact integer moments; raw weight rw = n·σ with σ from one double
     // division + one sqrt — the only float ops before the quantize
@@ -875,7 +871,7 @@ object HygieneQueries {
   def q373QuantileSketch(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val k = 256
-    val s = docs(spark, dir).select(
+    val s = Documents.spread(spark, dir).select(
         conv(substring(md5(col("doc_id").cast("string")), 1, 13), 16, 10)
           .cast("long").as("u"),
         col("doc_id"),
@@ -910,7 +906,7 @@ object HygieneQueries {
     import org.apache.spark.sql.expressions.Window
     val k = 128
     val topk = udaf(graft.functions.TopKAgg(k))
-    val base = docs(spark, dir).select(
+    val base = Documents.spread(spark, dir).select(
       col("source"), col("doc_id"),
       conv(substring(md5(col("doc_id").cast("string")), 1, 13), 16, 10)
         .cast("long").as("u"),

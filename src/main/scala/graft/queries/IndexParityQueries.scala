@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamingOps
+import graft.sources.Documents
 
 /** Alternate-path builds of the q1 inverted index, each oracle-checked
   * against q1's DuckDB SQL (q249's over the surviving documents) — so
@@ -27,13 +28,16 @@ object IndexParityQueries {
     * duplicated pair would show up as a wrong df in the oracle compare.
     */
   private def indexFromPairs(pairs: DataFrame): DataFrame =
-    pairs
-      .groupBy("word")
-      .agg(sort_array(collect_list(col("doc_id"))).as("p"))
-      .select(
-        col("word"),
-        array_join(col("p"), " ").as("postings"),
-        size(col("p")).cast("long").as("df"))
+    render(pairs.groupBy("word").agg(sort_array(collect_list(col("doc_id"))).as("p")))
+
+  /** `(word, p)` rows, `p` each word's ascending doc ids, as q1's output:
+    * the space-joined postings and their count.
+    */
+  private def render(postings: DataFrame): DataFrame =
+    postings.select(
+      col("word"),
+      array_join(col("p"), " ").as("postings"),
+      size(col("p")).cast("long").as("df"))
 
   /** q75: feed the corpus through a MemoryStream in doc_id-ordered
     * micro-batches (deterministic split), run the streaming
@@ -60,7 +64,7 @@ object IndexParityQueries {
     import scala.jdk.CollectionConverters._
     val sink = "graft_q75_docwords"
     spark.catalog.dropTempView(sink) // re-runnable within one session
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Documents.read(spark, dir)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .sort("doc_id")
     val n = docs.count()
@@ -81,20 +85,24 @@ object IndexParityQueries {
   /** q117: LSM-style index compaction — the index maintained as a BASE
     * segment plus a DELTA segment (the plain `(doc_id, word)` postings of
     * two disjoint document sets, the shape an incremental indexer leaves
-    * on disk), then compacted by unioning the two segments' postings and
-    * re-grouping per word. Must hash-equal the from-scratch q1 rebuild.
+    * on disk), then compacted by concatenating each word's base and delta
+    * postings. Must hash-equal the from-scratch q1 rebuild.
     *
-    * Scale shape: the merge is one word-keyed exchange of the union and
-    * one built-in `collect_list` aggregate over plain columns. The
-    * doc_id%3 split is a fixture stand-in for the real base/delta
-    * boundary (ingest time); any disjoint split must compact to the same
-    * index, which is exactly what the oracle checks.
+    * Scale shape: one scan and one tokenization of the corpus, the
+    * per-doc dedup exchange, then one word-keyed aggregate that builds
+    * both segments' postings as two `collect_list`s split by a computed
+    * segment column, merged with `sort_array(concat(...))`. The doc_id%3
+    * split is a fixture stand-in for the real base/delta boundary (ingest
+    * time); any disjoint split must compact to the same index, which is
+    * exactly what the oracle checks. The scan is not spread: tokenize and
+    * two aggregates are lighter than the ScanSpread exchange.
     */
   def q117IndexCompaction(spark: SparkSession, dir: String): DataFrame = {
-    val docWords = ReferenceQueries.docWords(spark, dir)
-    val base = docWords.filter(col("doc_id") % 3 =!= 0)
-    val delta = docWords.filter(col("doc_id") % 3 === 0)
-    indexFromPairs(base.unionByName(delta))
+    val docWords = graft.operators.Tokenizer.docWords(Documents.read(spark, dir), "text", "doc_id")
+    val delta = col("doc_id") % 3 === 0
+    render(docWords.groupBy("word").agg(sort_array(concat(
+      collect_list(when(!delta, col("doc_id"))),
+      collect_list(when(delta, col("doc_id"))))).as("p")))
   }
 
   /** q249: tombstone deletes compacted OUT of the index — the LSM delete

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.multimodal.MultimodalPipeline
+import graft.sources.Documents
 
 /** Multimodal query pack (q60-q61): the binary-payload pipeline run over
   * the `documents` fixture. The decode step is a deterministic stub
@@ -73,7 +74,7 @@ object MultimodalQueries {
     * the code derivation, not the join or verify.
     */
   def q318PhashNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Documents.read(spark, dir)
       .select(col("doc_id").as("id"),
         graft.functions.TextFunctions.normText(col("text")).as("norm"))
     val coded = docs.select(

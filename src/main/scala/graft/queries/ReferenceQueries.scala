@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Tokenizer
+import graft.sources.Documents
 
 /** SURVEY §2.3 declared query inventory — the reference's semantics
   * (tokenize → clean → dedup → index) exposed as six queries over the
@@ -13,19 +14,13 @@ import graft.operators.Tokenizer
   */
 object ReferenceQueries {
 
-  private def documents(spark: SparkSession, dir: String): DataFrame =
-    // the tokenizer/HLL register builds above this scan are per-row
-    // heavy; see ScanSpread
-    graft.sources.ScanSpread.spread(
-      spark.read.parquet(s"$dir/documents.parquet"))
-
   /** Raw (doc_id, word) token stream — reference O3-O5. */
   def tokens(spark: SparkSession, dir: String): DataFrame =
-    Tokenizer.tokens(documents(spark, dir), "text", Seq("doc_id"))
+    Tokenizer.tokens(Documents.spread(spark, dir), "text", Seq("doc_id"))
 
   /** Distinct (doc_id, word) — reference O6 per-doc dedup. */
   def docWords(spark: SparkSession, dir: String): DataFrame =
-    Tokenizer.docWords(documents(spark, dir), "text", "doc_id")
+    Tokenizer.docWords(Documents.spread(spark, dir), "text", "doc_id")
 
   /** Q1: the inverted index itself — word → space-joined ascending distinct
     * doc IDs (string-rendered for engine-agnostic comparison) + df.
@@ -187,7 +182,7 @@ object ReferenceQueries {
     */
   def q369HllPerLang(spark: SparkSession, dir: String): DataFrame = {
     val ranks = hllRanks(
-      Tokenizer.tokens(documents(spark, dir), "text", Seq("lang"))
+      Tokenizer.tokens(Documents.spread(spark, dir), "text", Seq("lang"))
         .select(col("lang"), col("word")))
     hllFold(
       ranks.groupBy("lang", "j").agg(max(col("rank")).as("m_j")),
@@ -269,7 +264,7 @@ object ReferenceQueries {
     */
   def q376HllMergeShards(spark: SparkSession, dir: String): DataFrame = {
     val shardRegs = hllRanks(
-      Tokenizer.tokens(documents(spark, dir), "text", Seq("lang"))
+      Tokenizer.tokens(Documents.spread(spark, dir), "text", Seq("lang"))
         .select(col("lang"), col("word")))
       .groupBy("lang", "j").agg(max(col("rank")).as("m_j"))
     hllFold(shardRegs.groupBy("j").agg(max(col("m_j")).as("m_j")))
@@ -294,7 +289,7 @@ object ReferenceQueries {
   def q383HllIntersectLangs(spark: SparkSession, dir: String): DataFrame = {
     val regs = hllRanks(
       Tokenizer.tokens(
-        documents(spark, dir).filter(col("lang").isin("en", "de")),
+        Documents.spread(spark, dir).filter(col("lang").isin("en", "de")),
         "text", Seq("lang"))
         .select(col("lang"), col("word")))
       .groupBy("lang", "j").agg(max(col("rank")).as("m_j"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.AsOfJoin
+import graft.sources.Documents
 
 /** Relational query pack over the TPC-H-ish driver tables — the extended
   * analytics surface of SURVEY §2.2 (joins, windows, grouping sets, set
@@ -3795,7 +3796,7 @@ object RelationalQueries {
       .select(col("s"), conv(substring(md5(concat(lit("graft-vn-"),
         col("s").cast("string"), lit("|"), col("v").cast("string"))), 1, 13),
         16, 10).cast("long").as("pos"))
-    val h = t(spark, dir, "documents")
+    val h = Documents.read(spark, dir)
       .select(col("doc_id"), conv(substring(md5(concat(lit("graft-ring-"),
         col("doc_id").cast("string"))), 1, 13), 16, 10).cast("long").as("h"))
     val packed = ((col("pos") - col("h") + lit(Ring)) % lit(Ring)) * 8 + col("s")

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.operators.Ranking
+import graft.sources.Documents
 
 /** Search/ranking query pack over `documents` (q8/q9/q26/q27/q29): the
   * IR query layer served by the inverted index the reference builds —
@@ -12,21 +13,6 @@ import graft.operators.Ranking
   * [[graft.operators.Ranking]]).
   */
 object SearchQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    // heavy per-document pipelines sit above this scan; see ScanSpread
-    graft.sources.ScanSpread.spread(
-      spark.read.parquet(s"$dir/documents.parquet"))
-
-  /** Unspread documents reader for the LIGHT search paths (tokenize +
-    * one agg — q9/q234/q237/q341): the ScanSpread round-robin exchange
-    * costs more than the narrow work it parallelizes there (measured
-    * r17: q341 1.07 → 0.73 s, q9 0.96 → ?, see OPTIMIZATION_r17.md;
-    * the r16 relational revert found the same trade). Heavy pipelines
-    * (q326's shared tf build, the tfidf/cosine family) keep [[docs]].
-    */
-  private def docsLight(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   /** BM25 query terms — high-df corpus words chosen so every sf matches. */
   private val Bm25Terms = Seq("hash", "join", "scan")
@@ -50,7 +36,7 @@ object SearchQueries {
     import graft.operators.Similarity
     // lexical leg: single-term BM25 top-20 through the shared
     // Ranking.bm25TopK (bounded TopKAgg keyed by the term)
-    val sparse = Ranking.bm25TopK(docs(spark, dir), "text", "doc_id", Seq("hash"), 20)
+    val sparse = Ranking.bm25TopK(Documents.spread(spark, dir), "text", "doc_id", Seq("hash"), 20)
       .select(col("doc_id"), col("rank").as("ra"))
     val v = Similarity.prepared(
       spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding")
@@ -90,7 +76,7 @@ object SearchQueries {
     import graft.operators.Similarity
     // stage 1 through the shared Ranking.bm25TopK (bounded TopKAgg,
     // q234's shape): ≤ 20 rows per partition cross the shuffle
-    val sparse = Ranking.bm25TopK(docs(spark, dir), "text", "doc_id", Seq("hash"), 20)
+    val sparse = Ranking.bm25TopK(Documents.spread(spark, dir), "text", "doc_id", Seq("hash"), 20)
       .select(col("doc_id"), col("bm25"), col("rank").as("ra"))
       .persist()
     val v = Similarity.prepared(
@@ -129,7 +115,7 @@ object SearchQueries {
     */
   def q326RocchioPrf(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val d = docs(spark, dir)
+    val d = Documents.spread(spark, dir)
     val seed = "hash"
     val k1 = 1.2; val b = 0.75
     // ONE token-grain pass for the whole query (r17 optimization): the
@@ -266,7 +252,7 @@ object SearchQueries {
   def q330WildcardSearch(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val patterns = Seq("s*", "*er", "c*n", "*e", "b*h")
-    val vocab = Ranking.tokensWithPos(docs(spark, dir), "text", "doc_id")
+    val vocab = Ranking.tokensWithPos(Documents.spread(spark, dir), "text", "doc_id")
       .drop("pos").distinct()
       .groupBy("word").agg(count(lit(1)).as("df"))
     val rot = vocab
@@ -311,7 +297,7 @@ object SearchQueries {
     */
   def q341SpellCorrect(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val vocabAll = Ranking.tokensWithPos(docsLight(spark, dir), "text", "doc_id")
+    val vocabAll = Ranking.tokensWithPos(Documents.read(spark, dir), "text", "doc_id")
       .groupBy("word").agg(count(lit(1)).as("freq"))
     val dict = vocabAll.filter(length(col("word")) >= 4)
     // deterministic probes: corrupt each dictionary word at its middle
@@ -360,7 +346,7 @@ object SearchQueries {
     * |terms|·k rows.
     */
   def q234Bm25TopK(spark: SparkSession, dir: String): DataFrame =
-    Ranking.bm25TopK(docsLight(spark, dir), "text", "doc_id", Bm25Terms, 5)
+    Ranking.bm25TopK(Documents.read(spark, dir), "text", "doc_id", Bm25Terms, 5)
 
   /** Boolean AND search — documents containing EVERY query term, with
     * their source. The term predicate filters postings at the tokenizer
@@ -386,12 +372,12 @@ object SearchQueries {
     * distinct (word, doc_id) postings of the query terms go straight into
     * the doc-keyed count-equality of [[booleanAnd]]. The oracle is q140's
     * plain formulation; the query differs from q140 only in the unspread
-    * [[docsLight]] read (tokenize + one agg). DETERMINISM: integer
+    * scan, [[Documents.read]] (tokenize + one agg). DETERMINISM: integer
     * counts. Scale shape: the term filter prunes the scan to the query
     * terms' postings.
     */
   def q237ServeFromIndex(spark: SparkSession, dir: String): DataFrame =
-    booleanAnd(docsLight(spark, dir))
+    booleanAnd(Documents.read(spark, dir))
 
   /** RBO@10 fixed-point weight factors: w_d·(2520/d) where
     * w_d = 0.9^(d-1)·1e9 = 9^(d-1)·10^(10-d) is an EXACT integer for
@@ -423,7 +409,7 @@ object SearchQueries {
   def q241RboRankings(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    val d = docs(spark, dir)
+    val d = Documents.spread(spark, dir)
     val bm = Ranking.bm25(d, "text", "doc_id", Bm25Terms)
       .select(col("word"), col("doc_id"), col("bm25"))
     val tf = Ranking.tfidf(d, "text", "doc_id")
@@ -464,7 +450,7 @@ object SearchQueries {
     */
   def q247PhraseFromIndex(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    Ranking.tokensWithPos(docs(spark, dir), "text", "doc_id")
+    Ranking.tokensWithPos(Documents.spread(spark, dir), "text", "doc_id")
       .filter(col("word").isin("hash", "join"))
       .groupBy("doc_id")
       .agg(
@@ -490,7 +476,7 @@ object SearchQueries {
   def q248MinWindow(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    val tp = Ranking.tokensWithPos(docs(spark, dir), "text", "doc_id")
+    val tp = Ranking.tokensWithPos(Documents.spread(spark, dir), "text", "doc_id")
       .filter(col("word").isin(Bm25Terms: _*))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -516,14 +502,14 @@ object SearchQueries {
     "q326_rocchio_prf" -> (q326RocchioPrf _),
     "q330_wildcard_search" -> (q330WildcardSearch _),
     "q341_spell_correct" -> (q341SpellCorrect _),
-    "q8_tfidf" -> ((s, dir) => Ranking.tfidf(docs(s, dir), "text", "doc_id")),
-    "q9_bm25" -> ((s, dir) => Ranking.bm25(docsLight(s, dir), "text", "doc_id", Bm25Terms)),
+    "q8_tfidf" -> ((s, dir) => Ranking.tfidf(Documents.spread(s, dir), "text", "doc_id")),
+    "q9_bm25" -> ((s, dir) => Ranking.bm25(Documents.read(s, dir), "text", "doc_id", Bm25Terms)),
     "q26_phrase_count" -> ((s, dir) =>
-      Ranking.phraseCount(docs(s, dir), "text", "doc_id", Seq("hash", "join"))),
+      Ranking.phraseCount(Documents.spread(s, dir), "text", "doc_id", Seq("hash", "join"))),
     "q29_keywords" -> ((s, dir) =>
-      Ranking.keywords(docs(s, dir), "text", "doc_id", k = 3)),
+      Ranking.keywords(Documents.spread(s, dir), "text", "doc_id", k = 3)),
     "q27_positional_index" -> ((s, dir) =>
-      Ranking.positionalIndex(docs(s, dir), "text", "doc_id")),
+      Ranking.positionalIndex(Documents.spread(s, dir), "text", "doc_id")),
     // q140: boolean AND search — the index SERVING path (see
     // booleanAnd). At 100 TB the same answer reads the PREBUILT index's
     // postings (q27/q1) — term-keyed, so each query term reads one
@@ -532,8 +518,8 @@ object SearchQueries {
     // similarity join over the inverted index (see
     // Ranking.sparseCosinePairs for the determinism + scale contract)
     "q153_sparse_cosine" -> ((s, dir) =>
-      Ranking.sparseCosinePairs(docs(s, dir), "text", "doc_id", threshold = 0.3)),
-    "q140_boolean_search" -> ((s, dir) => booleanAnd(docs(s, dir))))
+      Ranking.sparseCosinePairs(Documents.spread(s, dir), "text", "doc_id", threshold = 0.3)),
+    "q140_boolean_search" -> ((s, dir) => booleanAnd(Documents.spread(s, dir))))
 
   /** DuckDB word-array CTE — the SQL twin of TextFunctions.wordsArr (the
     * text-pipeline `[a-z0-9]` alphabet, same as TextQueries.WordsCte).

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import graft.sources.Documents
 
 /** Similarity-search query pack over `embeddings` (q34/q35, q40-q43):
   * embedding-cosine near-dup pairs (exact + LSH), exact brute-force kNN,
@@ -569,7 +570,7 @@ object SimilarityQueries {
     * work anywhere.
     */
   def q207SourceCentroidSim(spark: SparkSession, dir: String): DataFrame = {
-    val src = spark.read.parquet(s"$dir/documents.parquet")
+    val src = Documents.read(spark, dir)
       .select(col("doc_id").as("vec_id"), col("source"))
     val cent = spark.read.parquet(s"$dir/embeddings.parquet")
       .join(src, Seq("vec_id"))

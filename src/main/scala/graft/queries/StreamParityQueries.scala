@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamingOps
+import graft.sources.Documents
 
 /** Streaming operators run against the REAL corpus and checked by the
   * driver's DuckDB oracle — extending the hard correctness gate from
@@ -25,7 +26,7 @@ object StreamParityQueries {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
     spark.catalog.dropTempView(sink) // re-runnable within one session
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Documents.read(spark, dir)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .sort("doc_id")
     val n = docs.count()
@@ -128,7 +129,7 @@ object StreamParityQueries {
     import scala.jdk.CollectionConverters._
     val sink = "graft_q385_doremi"
     spark.catalog.dropTempView(sink)
-    val d = spark.read.parquet(s"$dir/documents.parquet")
+    val d = Documents.read(spark, dir)
     val freq = d.select(graft.functions.AlnumTokens(col("text")))
       .groupBy("word").agg(count(lit(1)).as("cnt")).persist()
     val total = freq.agg(sum(col("cnt"))).collect()(0).getLong(0)
@@ -210,7 +211,7 @@ object StreamParityQueries {
       mode = "complete")
       .select(explode(col("tops")).as("t"))
       .select(col("t._2").as("doc_id"))
-    val s = spark.read.parquet(s"$dir/documents.parquet")
+    val s = Documents.read(spark, dir)
       .join(broadcast(winners), Seq("doc_id"))
       .select(u.as("u"), col("doc_id"),
         coalesce(graft.functions.AlnumWordCount(col("text")).cast("long"),
@@ -910,7 +911,7 @@ object StreamParityQueries {
     * must pass min + retention, i.e. range > 2 × retention).
     */
   private def assertDocTsRange(spark: SparkSession, dir: String): Unit = {
-    val r = spark.read.parquet(s"$dir/documents.parquet")
+    val r = Documents.read(spark, dir)
       .agg(min(col("doc_id")), max(col("doc_id"))).head()
     val range = r.getLong(1) - r.getLong(0)
     require(range <= YearMs / 1000L,
@@ -965,7 +966,7 @@ object StreamParityQueries {
   def q343StreamNearDupRecovery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     assertDocTsRange(spark, dir)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Documents.read(spark, dir)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .sort("doc_id")
     // verdicts only, so the shared harness's driver buffer is bounded
@@ -1006,7 +1007,7 @@ object StreamParityQueries {
     import spark.implicits._
     val sink = "graft_q345_evict"
     spark.catalog.dropTempView(sink)
-    val docs0 = spark.read.parquet(s"$dir/documents.parquet")
+    val docs0 = Documents.read(spark, dir)
       .select(col("doc_id"), col("text"))
     // batch-side eligibility on the SAME row-local banding the stream
     // runs (lshBands is batch-reusable by construction)
@@ -1084,7 +1085,7 @@ object StreamParityQueries {
     import scala.jdk.CollectionConverters._
     val sink = "graft_q346_neardup_ooo"
     spark.catalog.dropTempView(sink)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Documents.read(spark, dir)
       .select(col("doc_id"), col("text"))
       .orderBy(md5(col("doc_id").cast("string"))) // deterministic id-shuffle
       .as[(Long, String)]
@@ -1132,7 +1133,7 @@ object StreamParityQueries {
     import scala.jdk.CollectionConverters._
     val sink = "graft_q348_reservoir"
     spark.catalog.dropTempView(sink)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Documents.read(spark, dir)
       .select(col("source"), col("doc_id"))
       .orderBy(md5(col("doc_id").cast("string"))) // deterministic id-shuffle
       .as[StreamingOps.DocArrival]
@@ -1169,7 +1170,7 @@ object StreamParityQueries {
     import scala.jdk.CollectionConverters._
     val sink = "graft_q349_wreservoir"
     spark.catalog.dropTempView(sink)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Documents.read(spark, dir)
       .select(col("source"), col("doc_id"), col("n_chars").cast("double").as("weight"))
       .orderBy(md5(col("doc_id").cast("string"))) // deterministic id-shuffle
       .as[StreamingOps.WeightedArrival]
@@ -1206,7 +1207,7 @@ object StreamParityQueries {
     */
   def q350StreamReservoirRecovery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Documents.read(spark, dir)
       .select(col("source"), col("doc_id"))
       .orderBy(md5(col("doc_id").cast("string"))) // deterministic id-shuffle
       .as[StreamingOps.DocArrival]
@@ -1230,7 +1231,7 @@ object StreamParityQueries {
   def q351StreamWeightedReservoirRecovery(
       spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Documents.read(spark, dir)
       .select(col("source"), col("doc_id"),
         col("n_chars").cast("double").as("weight"))
       .orderBy(md5(col("doc_id").cast("string"))) // deterministic id-shuffle
@@ -1902,7 +1903,7 @@ object StreamParityQueries {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
     val ckpt = java.nio.file.Files.createTempDirectory("graft-recov").toString
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Documents.read(spark, dir)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .sort("doc_id")
     val n = docs.count()

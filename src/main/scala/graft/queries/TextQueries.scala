@@ -2,17 +2,13 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.TextAnalysis
+import graft.sources.Documents
 
 /** Text-analysis query pack over `documents` (q20-q23): language ID,
   * quality scoring, token counting, fingerprinting — each an oracle-checked
   * view of a TextAnalysis operator.
   */
 object TextQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    // heavy per-document pipelines sit above this scan; see ScanSpread
-    graft.sources.ScanSpread.spread(
-      spark.read.parquet(s"$dir/documents.parquet"))
 
   /** q88's unigram-LM quality score, shared with q121: per-doc token
     * count and mean log-probability under the corpus unigram model.
@@ -27,7 +23,7 @@ object TextQueries {
     */
   private[graft] def logprobScores(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val words = docs(s, dir)
+    val words = Documents.spread(s, dir)
       .select(col("doc_id"), graft.functions.AlnumTokens(col("text")))
       .select("doc_id", "word")
     val freq = words.groupBy("word").agg(count(lit(1)).as("cnt")).persist()
@@ -92,7 +88,7 @@ object TextQueries {
     */
   def q24WinnowPairs(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val fps = docs(spark, dir)
+    val fps = Documents.spread(spark, dir)
       .select(col("doc_id"), graft.functions.Winnow(col("text"), 5, 4).as("fp"))
       .persist()
     val rare = fps.groupBy("fp").agg(count(lit(1)).as("df")).filter(col("df") <= 20)
@@ -126,7 +122,7 @@ object TextQueries {
     */
   private[graft] def bpeSeed(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    docs(s, dir)
+    Documents.spread(s, dir)
       .select(graft.functions.AlnumTokens(col("text")))
       .groupBy("word").agg(count(lit(1)).as("freq"))
   }
@@ -142,7 +138,7 @@ object TextQueries {
     * semantics/scale discussion.
     */
   private[graft] def bpeApplyTable(s: SparkSession, dir: String): DataFrame =
-    bpeApplyProjection(docs(s, dir),
+    bpeApplyProjection(Documents.spread(s, dir),
       bpeRounds(s, dir, 5, needTotals = false)._1.map(m => (m._2, m._3)))
 
   /** The APPLY projection itself, over any (doc_id, text) relation —
@@ -583,7 +579,7 @@ object TextQueries {
   private def backoffSplitDocs(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     graft.operators.Curation.hashSplit(
-      docs(s, dir).select(col("doc_id"), col("text")),
+      Documents.spread(s, dir).select(col("doc_id"), col("text")),
       "doc_id", Seq("test" -> "1a", "val" -> "34"), "train")
       .persist()
   }
@@ -721,7 +717,7 @@ object TextQueries {
     // are [a-z0-9]+ so "u v" ↔ (u, v) bijectively, and the context /
     // continuation keys are codegen'd substring_index slices.
     val wd = graft.operators.Curation.hashSplit(
-      docs(s, dir).select(col("doc_id"), col("text")),
+      Documents.spread(s, dir).select(col("doc_id"), col("text")),
       "doc_id", Seq("test" -> "1a", "val" -> "34"), "train")
       .persist()
     def bis(df: DataFrame) = df.select(col("doc_id"),
@@ -787,7 +783,7 @@ object TextQueries {
     // chains re-ran the interpreted tokenizer per branch. Occurrence
     // mode emits nothing for docs shorter than n — exactly the old
     // size(w) >= n filters. Same gram multiset, same buckets.
-    val d = docs(s, dir)
+    val d = Documents.spread(s, dir)
     def grams1(n: Int) = d.select(col("doc_id"), col("lang"),
       graft.functions.WordNgrams(col("text"), n, distinct = false).as("g"))
     val grams = grams1(1).unionByName(grams1(2))
@@ -857,7 +853,7 @@ object TextQueries {
   def q332NegativeSampling(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val pos = graft.operators.Ranking
-      .tokensWithPos(docs(s, dir), "text", "doc_id").persist()
+      .tokensWithPos(Documents.spread(s, dir), "text", "doc_id").persist()
     val shifted = Seq(1, 2).map { o =>
       pos.as("a").join(pos.as("b"),
         col("a.doc_id") === col("b.doc_id")
@@ -929,7 +925,7 @@ object TextQueries {
     // window, composes with streaming ingest unchanged.
     "q253_token_fertility" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      docs(s, dir)
+      Documents.spread(s, dir)
         .select(col("source"), col("lang"),
           length(col("text")).as("nc"),
           size(filter(split(trim(col("text")), "\\s+"),
@@ -965,7 +961,7 @@ object TextQueries {
     // broadcasts back. No corpus-grain shuffle beyond the token agg.
     "q257_feature_hash" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tf = docs(s, dir)
+      val tf = Documents.spread(s, dir)
         .select(graft.functions.AlnumTokens(col("text")))
         .select(col("word"))
         .groupBy("word").agg(count(lit(1)).as("tf"))
@@ -1060,7 +1056,7 @@ object TextQueries {
     // proof at corpus grain (Round15Spec carries the per-word pins,
     // including adversarial overlap/self-merge/unseen fixtures).
     "q368_bpe_apply_ranked" -> ((s, dir) =>
-      bpeApplyProjection(docs(s, dir),
+      bpeApplyProjection(Documents.spread(s, dir),
         bpeRounds(s, dir, 5, needTotals = false)._1.map(m => (m._2, m._3)),
         ranked = true)),
     // q377: unigram-LM (SentencePiece-style) tokenizer LEARN — the
@@ -1088,7 +1084,7 @@ object TextQueries {
     // kernel is O(len · maxPieceLen) hash probes per first-seen word,
     // |vocab|-independent (the q368 scale argument).
     "q378_unigram_apply" -> ((s, dir) =>
-      unigramApplyProjection(docs(s, dir),
+      unigramApplyProjection(Documents.spread(s, dir),
         unigramVocab(s, dir).map { case (p, _, l) => (p, l) })),
     // q362: tokenizer ROUND-TRIP capstone (the q86 composition
     // discipline) — learned tokenizer to packed training batches in one
@@ -1151,7 +1147,7 @@ object TextQueries {
     "q363_bpe_fertility" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       bpeApplyTable(s, dir)
-        .join(docs(s, dir).select(col("doc_id"), col("lang")), Seq("doc_id"))
+        .join(Documents.spread(s, dir).select(col("doc_id"), col("lang")), Seq("doc_id"))
         .groupBy("lang")
         .agg(sum(col("n_words")).as("n_words"),
           sum(col("n_bpe_tokens")).as("n_bpe_tokens"))
@@ -1176,7 +1172,7 @@ object TextQueries {
     // corpus size.
     "q364_span_corruption" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      docs(s, dir)
+      Documents.spread(s, dir)
         .select(col("doc_id"),
           size(graft.functions.TextFunctions.wordsArr(col("text")))
             .cast("long").as("n"))
@@ -1216,7 +1212,7 @@ object TextQueries {
         spanOffsetCol(col("doc_id"), k, blockLen(k))
       def sentinel(k: org.apache.spark.sql.Column) =
         concat(lit("<extra_id_"), k.cast("string"), lit(">"))
-      val base = docs(s, dir)
+      val base = Documents.spread(s, dir)
         .select(col("doc_id"),
           graft.functions.TextFunctions.wordsArr(col("text")).as("w"))
         .withColumn("n_tokens", size(col("w")).cast("long"))
@@ -1294,7 +1290,7 @@ object TextQueries {
     "q277_autocomplete" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
-      docs(s, dir)
+      Documents.spread(s, dir)
         .select(graft.functions.AlnumTokens(col("text")))
         .select(col("word"))
         .filter(length(col("word")) >= 3)
@@ -1320,7 +1316,7 @@ object TextQueries {
     "q279_stylometry" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
-      val sw = docs(s, dir)
+      val sw = Documents.spread(s, dir)
         .select(col("source"), graft.functions.AlnumTokens(col("text")))
         .groupBy("source", "word").agg(count(lit(1)).as("c"))
         .persist()
@@ -1372,9 +1368,9 @@ object TextQueries {
     "q232_quality_dup_rate" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
-      val q = graft.operators.TextAnalysis.quality(docs(s, dir), "text", "doc_id")
+      val q = graft.operators.TextAnalysis.quality(Documents.spread(s, dir), "text", "doc_id")
         .select(col("doc_id"), col("stopword_ratio"))
-      val dup = docs(s, dir)
+      val dup = Documents.spread(s, dir)
         .select(col("doc_id"), md5(col("text")).as("fp"))
         .withColumn("is_dup",
           when(count(lit(1)).over(Window.partitionBy(col("fp"))) > 1, 1)
@@ -1399,7 +1395,7 @@ object TextQueries {
     // one |sources|-sized agg off the same frequency table.
     "q229_source_lexical_sim" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val wf = docs(s, dir)
+      val wf = Documents.spread(s, dir)
         .select(col("source"), graft.functions.AlnumTokens(col("text")))
         .groupBy("source", "word").agg(count(lit(1)).as("f"))
         .persist()
@@ -1434,7 +1430,7 @@ object TextQueries {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
       val k = 16
-      val sk = docs(s, dir)
+      val sk = Documents.spread(s, dir)
         .select(col("source"), graft.functions.AlnumTokens(col("text")))
         // the generator also emits `pos` — project to (source, word)
         // BEFORE distinct or the dedup key silently includes position
@@ -1472,7 +1468,7 @@ object TextQueries {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
       val k = 16
-      val vocab = docs(s, dir)
+      val vocab = Documents.spread(s, dir)
         .select(col("source"), graft.functions.AlnumTokens(col("text")))
         .select(col("source"), col("word")).distinct()
         .persist()
@@ -1532,7 +1528,7 @@ object TextQueries {
     // is `word`, not `source`.
     "q186_hapax_stats" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val ws = docs(s, dir)
+      val ws = Documents.spread(s, dir)
         .select(col("source"), graft.functions.AlnumTokens(col("text")))
         .groupBy("word", "source").agg(count(lit(1)).as("c"))
       val glob = ws.groupBy("word").agg(sum(col("c")).as("cnt"))
@@ -1558,7 +1554,7 @@ object TextQueries {
       val segs = filter(
         transform(split(col("text"), "[.!?]+"), x => trim(x)),
         x => length(x) > 0)
-      docs(s, dir)
+      Documents.spread(s, dir)
         .select(col("doc_id"), segs.as("segs"))
         .select(col("doc_id"),
           size(col("segs")).as("n_sentences"),
@@ -1586,7 +1582,7 @@ object TextQueries {
       // clean ONCE per row behind an explode barrier — referencing the
       // regex expression inside the transform() lambda would re-run it
       // per trigram position (measured 10× slower)
-      val cleaned = docs(s, dir).select(col("lang"),
+      val cleaned = Documents.spread(s, dir).select(col("lang"),
         trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " ")).as("ct"))
       val ct = col("ct")
       val tris = when(length(ct) >= 3,
@@ -1614,7 +1610,7 @@ object TextQueries {
     "q191_ks_test" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
-      val d = docs(s, dir).select(col("source"), col("n_chars"))
+      val d = Documents.spread(s, dir).select(col("source"), col("n_chars"))
       val perSV = d.groupBy("source", "n_chars").agg(count(lit(1)).as("c"))
       val srcTot = perSV.groupBy("source").agg(sum(col("c")).as("n_src"))
       val values = perSV.groupBy("n_chars").agg(sum(col("c")).as("cg"))
@@ -1651,7 +1647,7 @@ object TextQueries {
     // with thousands of sources you'd threshold to top-vocab first).
     "q177_js_divergence" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tok = docs(s, dir)
+      val tok = Documents.spread(s, dir)
         .select(col("source"), graft.functions.AlnumTokens(col("text")))
       val sw = tok.groupBy("source", "word").agg(count(lit(1)).as("c"))
       val st = sw.groupBy("source").agg(sum(col("c")).as("tot_s"))
@@ -1693,7 +1689,7 @@ object TextQueries {
     "q181_zipf_fit" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
-      val freq = docs(s, dir)
+      val freq = Documents.spread(s, dir)
         .select(graft.functions.AlnumTokens(col("text")))
         .groupBy("word").agg(count(lit(1)).as("cnt"))
       val xy = freq
@@ -1728,7 +1724,7 @@ object TextQueries {
     // doc_ids instead of every document.
     "q182_heaps_law" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tok = docs(s, dir)
+      val tok = Documents.spread(s, dir)
         .select(col("doc_id"), graft.functions.AlnumTokens(col("text")))
       val perDoc = tok.groupBy("doc_id").agg(count(lit(1)).as("n_tok"))
       val firstSeen = tok.groupBy("word").agg(min(col("doc_id")).as("fd"))
@@ -1758,7 +1754,7 @@ object TextQueries {
     // table, so the whole plan is free of unpartitioned windows.
     "q179_lift_table" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val scored = docs(s, dir).select(
+      val scored = Documents.spread(s, dir).select(
         col("doc_id"), col("n_chars").as("score"),
         (col("lang") === "en").cast("long").as("pos"))
       val dec = graft.operators.Quantiles
@@ -1779,37 +1775,39 @@ object TextQueries {
             / (col("tp").cast("double") / col("tn")), 6).as("lift"),
           round(col("cum_pos").cast("double") / col("tp"), 6).as("cum_gain"))
     }),
-    "q20_lang_id" -> ((s, dir) => TextAnalysis.langId(docs(s, dir), "text", "doc_id")),
-    "q21_quality" -> ((s, dir) => TextAnalysis.quality(docs(s, dir), "text", "doc_id")),
-    "q22_token_counts" -> ((s, dir) => TextAnalysis.tokenCounts(docs(s, dir), "text", "doc_id")),
+    "q20_lang_id" -> ((s, dir) => TextAnalysis.langId(Documents.spread(s, dir), "text", "doc_id")),
+    "q21_quality" -> ((s, dir) => TextAnalysis.quality(Documents.spread(s, dir), "text", "doc_id")),
+    // q22: one byte pass per document is lighter than the ScanSpread
+    // exchange would be, so the scan is not spread
+    "q22_token_counts" -> ((s, dir) => TextAnalysis.tokenCounts(Documents.read(s, dir), "text", "doc_id")),
     // q354: Gopher repetition gate — exact integer n-gram character
     // masses per document (Rae et al. 2021 A1.1), the repetition
     // dimension q238's funnel misses; document-local, zero shuffles.
     "q354_gopher_repetition" -> ((s, dir) =>
-      TextAnalysis.gopherRepetition(docs(s, dir), "text", "doc_id")),
-    "q23_fingerprints" -> ((s, dir) => TextAnalysis.fingerprints(docs(s, dir), "text", "doc_id")),
+      TextAnalysis.gopherRepetition(Documents.spread(s, dir), "text", "doc_id")),
+    "q23_fingerprints" -> ((s, dir) => TextAnalysis.fingerprints(Documents.spread(s, dir), "text", "doc_id")),
     "q24_winnow_pairs" -> (q24WinnowPairs _),
-    "q25_lang_ngram" -> ((s, dir) => TextAnalysis.langIdNgram(docs(s, dir), "text", "doc_id")),
+    "q25_lang_ngram" -> ((s, dir) => TextAnalysis.langIdNgram(Documents.spread(s, dir), "text", "doc_id")),
     "q70_curation" -> ((s, dir) =>
-      graft.operators.Curation.curate(docs(s, dir), "text", "doc_id", Seq("en", "de"))),
+      graft.operators.Curation.curate(Documents.spread(s, dir), "text", "doc_id", Seq("en", "de"))),
     // q71: deterministic train/val/test assignment by md5(doc_id) prefix —
     // ~10.2% test (md5 prefix 00-19), ~10.2% val (1a-33), rest train.
     // Reproducible under re-runs/repartitioning, unlike sampling.
     "q71_hash_split" -> ((s, dir) =>
       graft.operators.Curation.hashSplit(
-        docs(s, dir).select("doc_id"), "doc_id",
+        Documents.spread(s, dir).select("doc_id"), "doc_id",
         Seq("test" -> "1a", "val" -> "34"), "train")),
     // q72: cap documents per source (deterministic md5-ranked choice) —
     // the over-represented-domain bound of a corpus curation pipeline.
     "q72_cap_per_source" -> ((s, dir) =>
       graft.operators.Curation.capPerGroup(
-        docs(s, dir).select("doc_id", "source"), "source", "doc_id", k = 15)),
+        Documents.spread(s, dir).select("doc_id", "source"), "source", "doc_id", k = 15)),
     // q81: deterministic domain-mixture resampling — src0 upsampled 2.5
     // epochs, src1 1.25, src2 kept at 20%, src3 dropped, the rest 1.0.
     // Exercises every weight regime (multi-epoch, fractional, sub-1, 0).
     "q81_mix_sources" -> ((s, dir) =>
       graft.operators.Curation.mixSources(
-        docs(s, dir).select("doc_id", "source"), "source", "doc_id",
+        Documents.spread(s, dir).select("doc_id", "source"), "source", "doc_id",
         Map("src0" -> 2.5, "src1" -> 1.25, "src2" -> 0.2, "src3" -> 0.0),
         default = 1.0)),
     // q82: overlapping token-window chunking (size 40, stride 25) — the
@@ -1817,14 +1815,14 @@ object TextQueries {
     // per-chunk md5 fingerprint for chunk-level dedup/provenance.
     "q82_token_chunks" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      docs(s, dir).select(
+      Documents.spread(s, dir).select(
         col("doc_id"), graft.functions.TokenChunks(col("text"), 40, 25))
     }),
     // q84: GPT-style sequence packing — concatenate docs per hash bucket,
     // cut every 512 tokens; each doc learns its sequence id and offset.
     "q84_pack_sequences" -> ((s, dir) =>
       graft.operators.Curation.packSequences(
-        docs(s, dir), "text", "doc_id", seqLen = 512, buckets = 8)),
+        Documents.spread(s, dir), "text", "doc_id", seqLen = 512, buckets = 8)),
     // q87: vocabulary coverage — top-20 words by occurrence count and
     // the cumulative fraction of ALL token occurrences they cover (the
     // vocab-truncation / tokenizer-design statistic). The frequency agg
@@ -1842,7 +1840,7 @@ object TextQueries {
     // one division per output row.
     "q245_coverage_curve" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val freq = docs(s, dir)
+      val freq = Documents.spread(s, dir)
         .select(graft.functions.AlnumTokens(col("text")))
         .groupBy("word").agg(count(lit(1)).as("cnt"))
       val ranked = graft.operators.Quantiles
@@ -1871,9 +1869,9 @@ object TextQueries {
     "q246_lang_mismatch" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val pred = graft.operators.TextAnalysis
-        .langId(docs(s, dir), "text", "doc_id")
+        .langId(Documents.spread(s, dir), "text", "doc_id")
         .select(col("doc_id"), col("pred_lang"))
-      docs(s, dir).select(col("doc_id"), col("lang"), col("source"))
+      Documents.spread(s, dir).select(col("doc_id"), col("lang"), col("source"))
         .join(pred, Seq("doc_id"))
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
@@ -1887,7 +1885,7 @@ object TextQueries {
     "q87_vocab_coverage" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
-      val freq = docs(s, dir)
+      val freq = Documents.spread(s, dir)
         .select(graft.functions.AlnumTokens(col("text")))
         .groupBy("word").agg(count(lit(1)).as("cnt"))
         .persist()
@@ -1907,7 +1905,7 @@ object TextQueries {
     // determinism + scale contract). The oracle unrolls the identical
     // integer recurrence iteration by iteration.
     "q115_textrank" -> ((s, dir) =>
-      graft.operators.GraphRank.textRank(docs(s, dir), "text", "doc_id")),
+      graft.operators.GraphRank.textRank(Documents.spread(s, dir), "text", "doc_id")),
     // q113: count-min sketch heavy hitters — the bounded-memory frequency
     // sketch (depth 4 × width 1024 here; d×w counters at ANY corpus
     // scale, vs an unbounded exact-count hash table over the open key
@@ -1928,7 +1926,7 @@ object TextQueries {
           .cast("long") % W
       val rb = explode(array((0 until D).map(r =>
         struct(lit(r).as("r"), bucket(r).as("b"))): _*)).as("rb")
-      val freq = docs(s, dir)
+      val freq = Documents.spread(s, dir)
         .select(graft.functions.AlnumTokens(col("text")))
         .groupBy("word").agg(count(lit(1)).as("cnt"))
         .persist() // vocab-sized; feeds sketch AND probe set (runner clears)
@@ -1950,7 +1948,7 @@ object TextQueries {
     // is the same code path its standalone query verifies; the semi-join
     // keeps the packing input narrow.
     "q86_training_corpus" -> ((s, dir) => {
-      val d = docs(s, dir)
+      val d = Documents.spread(s, dir)
       val kept = graft.operators.Curation
         .curate(d, "text", "doc_id", Seq("en", "de")).select("doc_id")
       graft.operators.Curation.packSequences(
@@ -1985,7 +1983,7 @@ object TextQueries {
     // combinable; no window, no driver state.
     "q156_token_entropy" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val wc = docs(s, dir)
+      val wc = Documents.spread(s, dir)
         .select(col("doc_id"), graft.functions.AlnumTokens(col("text")))
         .groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
       wc.groupBy("doc_id")
@@ -2015,7 +2013,7 @@ object TextQueries {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
       val rk = md5(concat_ws("#", col("source"), col("doc_id").cast("string")))
-      docs(s, dir).select(col("doc_id"), col("source"))
+      Documents.spread(s, dir).select(col("doc_id"), col("source"))
         .withColumn("rn",
           row_number().over(Window.partitionBy("source").orderBy(rk)))
         .withColumn("n", count(lit(1)).over(Window.partitionBy("source")))
@@ -2033,7 +2031,7 @@ object TextQueries {
     // products in double — identical in both engines.
     "q162_chi2_independence" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val o = docs(s, dir).groupBy("source", "lang").agg(count(lit(1)).as("o"))
+      val o = Documents.spread(s, dir).groupBy("source", "lang").agg(count(lit(1)).as("o"))
       val rt = o.groupBy("source").agg(sum(col("o")).as("rt"))
       val ct = o.groupBy("lang").agg(sum(col("o")).as("ct"))
       val tot = o.agg(sum(col("o")).as("tot"))
@@ -2057,9 +2055,9 @@ object TextQueries {
     // class-margin tables are tiny.
     "q164_confusion_matrix" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val pred = TextAnalysis.langId(docs(s, dir), "text", "doc_id")
+      val pred = TextAnalysis.langId(Documents.spread(s, dir), "text", "doc_id")
         .select(col("doc_id"), col("pred_lang"))
-      val conf = docs(s, dir).select(col("doc_id"), col("lang"))
+      val conf = Documents.spread(s, dir).select(col("doc_id"), col("lang"))
         .join(pred, "doc_id")
         .groupBy("lang", "pred_lang").agg(count(lit(1)).as("n"))
       val byGold = conf.groupBy(col("lang").as("cls"))
@@ -2100,7 +2098,7 @@ object TextQueries {
     "q165_auc_rank" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
-      val per = docs(s, dir)
+      val per = Documents.spread(s, dir)
         .select(col("n_chars").as("score"),
           (col("lang") === "en").cast("long").as("pos"))
         .groupBy("score")
@@ -2132,9 +2130,9 @@ object TextQueries {
     // scan + a bounded-group agg.
     "q166_calibration" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val sc = TextAnalysis.langId(docs(s, dir), "text", "doc_id")
+      val sc = TextAnalysis.langId(Documents.spread(s, dir), "text", "doc_id")
         .select(col("doc_id"), col("s_en"))
-      val nw = docs(s, dir)
+      val nw = Documents.spread(s, dir)
         .select(col("doc_id"),
           size(graft.functions.TextFunctions.wordsArr(col("text")))
             .as("n_words"), col("lang"))
@@ -2166,7 +2164,7 @@ object TextQueries {
     // word + a |sources|-sized rollup; no windows.
     "q170_source_kl" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val tok = docs(s, dir)
+      val tok = Documents.spread(s, dir)
         .select(col("source"), graft.functions.AlnumTokens(col("text")))
       val sw = tok.groupBy("source", "word").agg(count(lit(1)).as("c"))
       val st = sw.groupBy("source").agg(sum(col("c")).as("tot_s"))
@@ -2194,7 +2192,7 @@ object TextQueries {
     "q121_source_topk" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val topk = udaf(graft.functions.TopKAgg(3))
-      docs(s, dir).select(col("doc_id"), col("source"))
+      Documents.spread(s, dir).select(col("doc_id"), col("source"))
         .join(logprobScores(s, dir).select(col("doc_id"), col("mean_logprob")), Seq("doc_id"))
         .groupBy("source")
         .agg(topk(col("mean_logprob"), col("doc_id")).as("tops"))
@@ -2213,7 +2211,7 @@ object TextQueries {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
       val h = md5(concat(lit("graft-order-42-"), col("doc_id").cast("string")))
-      docs(s, dir).select(col("doc_id"), h.as("h"))
+      Documents.spread(s, dir).select(col("doc_id"), h.as("h"))
         .withColumn("shard",
           pmod(conv(substring(col("h"), 1, 4), 16, 10).cast("int"), lit(16)))
         .withColumn("pos",
@@ -2231,7 +2229,7 @@ object TextQueries {
     // Same fixed-point order-invariance trick as q88.
     "q92_bigram_coherence" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val bg = docs(s, dir).select(
+      val bg = Documents.spread(s, dir).select(
         col("doc_id"),
         graft.functions.WordNgrams(col("text"), 2, distinct = false).as("bg"))
       val bgFreq = bg.groupBy("bg").agg(count(lit(1)).as("cbg")).persist()
@@ -2261,7 +2259,7 @@ object TextQueries {
     // rounds at 6dp on both engines (the q88/q92 recipe).
     "q136_pmi_collocations" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val bg = docs(s, dir).select(
+      val bg = Documents.spread(s, dir).select(
         graft.functions.WordNgrams(col("text"), 2, distinct = false).as("bg"))
       val bgf = bg.groupBy("bg").agg(count(lit(1)).as("cab")).persist()
       val tot = bgf.agg(sum(col("cab")).as("nbg"))
@@ -2287,7 +2285,7 @@ object TextQueries {
     "q94_packing_efficiency" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       graft.operators.Curation
-        .packSequences(docs(s, dir), "text", "doc_id", seqLen = 512, buckets = 8)
+        .packSequences(Documents.spread(s, dir), "text", "doc_id", seqLen = 512, buckets = 8)
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("total_tokens"))
         .withColumn("n_seqs", expr("(total_tokens + 511) DIV 512"))
@@ -2313,7 +2311,7 @@ object TextQueries {
     // narrow projection, zero shuffles, any corpus size.
     "q372_fim_plan" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      fimBase(docs(s, dir)).select(
+      fimBase(Documents.spread(s, dir)).select(
         col("doc_id"), col("n_tokens"), col("fim"),
         when(col("fim"), col("a")).otherwise(col("n_tokens")).as("p_len"),
         when(col("fim"), col("b") - col("a")).otherwise(0L).as("m_len"),
@@ -2330,7 +2328,7 @@ object TextQueries {
     // is three array slices + joins per document.
     "q379_fim_apply" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      fimBase(docs(s, dir)).select(
+      fimBase(Documents.spread(s, dir)).select(
         col("doc_id"), col("n_tokens"), col("fim"),
         array_join(slice(col("w"), lit(1),
           when(col("fim"), col("a")).otherwise(col("n_tokens")).cast("int")),
@@ -2361,7 +2359,7 @@ object TextQueries {
     "q371_pack_manifest" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val spans = graft.operators.Curation
-        .packSequences(docs(s, dir), "text", "doc_id", seqLen = 512, buckets = 8)
+        .packSequences(Documents.spread(s, dir), "text", "doc_id", seqLen = 512, buckets = 8)
         .filter(col("n_tok") >= 1L)
         .withColumn("cum_start", col("seq_id") * 512L + col("tok_offset"))
         .withColumn("cum_end", col("cum_start") + col("n_tok"))

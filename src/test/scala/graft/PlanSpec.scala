@@ -163,6 +163,43 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("short queries: building q22, q117, q234 and q237 runs no Spark job") {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bridge.waitListenerBusEmpty(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (q <- Seq("q22_token_counts", "q117_index_compaction", "q234_bm25_topk",
+          "q237_serve_from_index")) {
+        SparkEntry.queries(q)(spark, sfDir)
+        Bridge.waitListenerBusEmpty(spark)
+        assert(jobs.get == 0, s"building $q ran ${jobs.get} Spark job(s)")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("q234/q117: one documents scan; q234's BM25 stats read no cache") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    object Aqe extends AdaptiveSparkPlanHelper
+    for (q <- Seq("q234_bm25_topk", "q117_index_compaction")) {
+      val df = SparkEntry.queries(q)(spark, sfDir)
+      val executed = Runner.released(spark) {
+        df.collect() // the adaptive plan is final only after execution
+        df.queryExecution.executedPlan
+      }
+      val scans = Aqe.collect(executed) {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.getName == "documents.parquet") => s
+      }
+      assert(scans.size == 1, s"$q must scan documents once:\n$executed")
+      assert(Aqe.collect(executed) { case c: InMemoryTableScanExec => c }.isEmpty,
+        s"$q must not read a cache:\n$executed")
+    }
+  }
+
   test("q43: centroid aggregation is partial+final (map-side combine)") {
     val p = plan("q43_label_centroids")
     assert("HashAggregate".r.findAllIn(p).size >= 2,

@@ -44,6 +44,33 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestBase {
     assert(r.getAs[Int]("n_bpeish") == 7)      // ab,12,cd,!,x,1,y
   }
 
+  test("native token counts equal the regex formulation, per code point, NULL to NULL") {
+    import org.apache.spark.sql.functions._
+    // the regex formulation the native counter replaced, kept as the reference
+    def byRegex(d: DataFrame): DataFrame = d.select(
+      col("doc_id"),
+      size(filter(split(trim(col("text")), "\\s+"), t => length(t) > 0)).as("n_ws_tokens"),
+      regexp_count(col("text"), lit("[A-Za-z]+")).as("n_alpha_runs"),
+      regexp_count(col("text"), lit("[0-9]+")).as("n_digit_runs"),
+      regexp_count(col("text"), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]")).as("n_bpeish"))
+    val texts = Seq("", null, "\tlead tab", "one\r\ntwo\r\n", "x1y", "?!.,;", "...  --",
+      "café naïve", "a😀b 7😀", "é", "  spaced  out  ",
+      "\u000b\u000cff\u00a0nbsp", "ab12cd!x1y 42")
+    val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val real = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    for (in <- Seq(d, real)) {
+      val got = TextAnalysis.tokenCounts(in, "text", "doc_id").collect().toSeq
+      val want = byRegex(in).collect().toSeq
+      assert(got.sortBy(_.getLong(0)) == want.sortBy(_.getLong(0)))
+    }
+    val nul = TextAnalysis.tokenCounts(d.filter(col("text").isNull), "text", "doc_id").collect()
+    assert(nul.length == 1 && (1 to 4).forall(nul.head.isNullAt))
+    val emoji = TextAnalysis.tokenCounts(d.filter(col("doc_id") === 8L), "text", "doc_id")
+      .collect().head
+    // a, b, 7 and two emoji: each emoji is one code point, so one bpe piece
+    assert(emoji.getInt(4) == 5)
+  }
+
   test("fingerprints equal iff normalized content equal") {
     val d = docs(
       1L -> "Alpha beta   gamma delta",
