@@ -6,6 +6,7 @@ import scala.util.{Failure, Success}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.Bridge
+import graft.operators.Rounds
 
 /** Dev tool: time registered queries from [[SparkEntry.queries]] in one
   * JVM, on Bench's session and timing boundary ([[Runner.run]]) —
@@ -16,7 +17,8 @@ import org.apache.spark.sql.graft.Bridge
   *     run-to-run variance are visible. After the final rep of each query
   *     its per-stage table prints: wall, executor CPU, tasks, input,
   *     shuffle read/write and spill per completed stage, the stage page
-  *     of a headless JVM (the UI is off). A per-query `min=` line per
+  *     of a headless JVM (the UI is off), then the round census of its
+  *     checkpointed loops ([[graft.operators.Rounds]]). A per-query `min=` line per
   *     name closes the run (the steady-state numbers SCALE.md commits).
   *   - `ALL`: every registered query once, per-run lines only — the
   *     10x-scale smoke pass that catches queries correct at oracle scale
@@ -29,11 +31,12 @@ object BenchOne {
       id: Int, name: String, ms: Long, cpuMs: Long, tasks: Int,
       inputMB: Double, shufReadMB: Double, shufWriteMB: Double, spillMB: Double)
 
-  /** Completed-stage metrics Spark already aggregates; the listener only
-    * collects them, so the measured run is undisturbed.
+  /** Completed-stage metrics Spark already aggregates, and the round
+    * census; the listeners only collect them, so the run is undisturbed.
     */
   private class StageTable(spark: SparkSession) extends SparkListener {
     private val stages = new ConcurrentLinkedQueue[Stage]()
+    private val census = new Rounds.Census(spark)
     spark.sparkContext.addSparkListener(this)
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
@@ -58,7 +61,7 @@ object BenchOne {
         System.err.println(s"[benchone] WARN listener bus did not drain ($e); the stage table may be incomplete")
       }
 
-    def reset(): Unit = { drain(); stages.clear() }
+    def reset(): Unit = { drain(); stages.clear(); census.take() }
 
     def print(q: String): Unit = {
       drain()
@@ -71,6 +74,14 @@ object BenchOne {
         println(f"${s.ms}%7d ${s.cpuMs}%7d ${s.tasks}%5d ${s.inputMB}%8.1f " +
           f"${s.shufReadMB}%8.1f ${s.shufWriteMB}%8.1f ${s.spillMB}%6.1f  " +
           s"[${s.id}] ${s.name.take(90)}")
+      }
+      val rounds = census.take()
+      if (rounds.nonEmpty) {
+        println(s"[benchone] $q: ${rounds.size} round checkpoints in final rep")
+        println(f"${"ms"}%7s ${"rows"}%9s ${"n_changed"}%9s  round")
+        rounds.foreach { r =>
+          println(f"${r.ms}%7.0f ${r.rows}%9d ${r.changed.fold("-")(_.toString)}%9s  ${r.name}")
+        }
       }
     }
   }

@@ -392,18 +392,8 @@ object Dedup {
     * is still changing after `maxIter` rounds the method THROWS rather
     * than silently returning partially-propagated (wrong) labels.
     *
-    * Each round's result is eagerly `localCheckpoint`ed — the MANDATORY
-    * move for iterative DataFrame algorithms: without it every round's
-    * logical plan embeds the previous round's, growing the plan
-    * exponentially until planning itself OOMs (observed on a 300-node
-    * chain). On a cluster with unreliable executors, substitute a
-    * reliable `checkpoint` directory for the same truncation.
-    *
-    * Ownership of the RETURNED labels' checkpoint blocks passes to the
-    * caller: free them once results are materialized, either directly
-    * (`Bridge.freeLocalCheckpoint(labels)`) or via [[graft.Runner.release]],
-    * the single release point every harness runs after each query —
-    * `clearCache()` alone cannot reach checkpoint blocks.
+    * Each round's labels are one [[Rounds]] checkpoint, observed for
+    * `n_changed`; the returned labels' checkpoint passes to the caller.
     *
     * INPUT CONTRACT: pass a DEDUPED pair table. Labels are identical
     * either way (every aggregation in the loop is a duplicate-
@@ -416,162 +406,102 @@ object Dedup {
     */
   def connectedComponents(
       pairs: DataFrame, maxIter: Int = 50, saltBuckets: Int = 1): DataFrame = {
-    require(maxIter >= 1, "connectedComponents needs at least one round")
     require(saltBuckets >= 1, "saltBuckets must be >= 1")
-    // checkpoint blocks live OUTSIDE the CacheManager (clearCache never
-    // frees them), so every superseded round is released explicitly via
-    // Bridge.freeLocalCheckpoint
-    import org.apache.spark.sql.graft.Bridge.freeLocalCheckpoint
-    // SKEW PATH (saltBuckets > 1): both per-round joins key on columns
-    // whose load is proportional to graph structure — the neighborMin
-    // join on dst concentrates a hub's whole degree in one partition,
-    // and the pointer-jump join on comp concentrates a GIANT COMPONENT's
-    // whole membership on its one min-id label (the worse of the two
-    // once components coalesce). Salting splits each hot key S ways:
-    // the big (edge / node) side carries salt = hash(src|id) mod S and
-    // the small lookup side replicates xS — per-round lookup-side cost
-    // grows x S (node-table-sized), per-partition hot-key load drops /S.
-    // Pick S from the degree profile (q268); AQE skew splitting cannot
-    // help here because the big side is deliberately pre-partitioned +
-    // checkpointed, so the per-round joins see no fresh shuffle to
-    // re-split. Labels are salt-invariant (DedupSpec pins hub-fixture
-    // equality), so the default S=1 keeps every existing plan unchanged.
-    val salted = saltBuckets > 1
-    // pre-partitioned on the per-round join key (dst [, salt]) BEFORE
-    // the one-time checkpoint: every propagation round joins
-    // edges⋈labels on it, and the edge table is the big side at scale —
-    // shuffling it once here instead of once per round removes the
-    // dominant per-round exchange (the checkpointed LogicalRDD
-    // preserves the hash partitioning)
-    // NO distinct: every aggregation this loop runs over the edge table
-    // is a MIN (seed neighbor-min, per-round neighbor-min), and min is
-    // duplicate-insensitive — labels are identical with or without the
-    // dedup exchange. The near-dup callers pass an already-unique
-    // (id_a < id_b) pair table anyway; a caller with a heavily
-    // duplicated edge list should dedup before calling (r16
-    // optimization: one full exchange + aggregation of the pair stream
-    // removed from the edge materialization).
-    // symmetrize with ONE pass over the pair pipeline (explode, not
-    // union): the union's two legs each re-executed the full (possibly
-    // expensive — ngramJaccard for the near-dup callers) pairs subtree
-    // inside the edge checkpoint job. Row set identical; measured
-    // q38 3.32→2.97 s / q358 3.40→2.80 s at sf0.1 (r16 optimization).
-    val edges0 = pairs
-      .select(explode(array(
-        struct(col("id_a").as("src"), col("id_b").as("dst")),
-        struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .withColumn("salt",
-        if (salted) pmod(hash(col("src")), lit(saltBuckets)) else lit(0))
-    val edges = (if (salted) edges0.repartition(col("dst"), col("salt"))
-                 else edges0.repartition(col("dst")))
-      .localCheckpoint(true)
-    // xS replication of a node-grain lookup side — the salted joins'
-    // small side
-    def saltExplode(d: DataFrame): DataFrame =
-      d.withColumn("salt",
-        explode(array((0 until saltBuckets).map(lit(_)): _*)))
-    // seed labels with min(id, min neighbor) — the same aggregation a
-    // plain distinct-node init would pay, but it IS round one of
-    // min-label propagation, so shallow (quasi-clique) components
-    // converge one full round of joins+checkpoints earlier (hash aggs
-    // are skew-resilient already: partial aggregation combines map-side)
-    var labels = edges
-      .groupBy(col("src").as("id"))
-      .agg(min(col("dst")).as("nmin"))
-      .select(col("id"), least(col("id"), col("nmin")).as("comp"))
-      .localCheckpoint(true)
-    // dev-only round profiler (GRAFT_CC_PROF=1): prints cumulative wall
-    // time after the seed build and each propagation round
-    val profT0 = System.nanoTime()
-    def prof(l: String): Unit = if (sys.env.contains("GRAFT_CC_PROF"))
-      println(f"[ccprof] $l: ${(System.nanoTime() - profT0) / 1e9}%.3f s")
-    prof("seed labels built")
-    var i = 0
-    var converged = false
-    while (i < maxIter && !converged) {
-      val labDst = labels.select(col("id").as("dst"), col("comp"))
-      val neighborMin = (if (salted)
-          edges.join(saltExplode(labDst), Seq("dst", "salt"))
-        else edges.join(labDst, "dst"))
+    Rounds("connectedComponents", maxIter) { rs =>
+      // SKEW PATH (saltBuckets > 1): both per-round joins key on columns
+      // whose load is proportional to graph structure — the neighborMin
+      // join on dst concentrates a hub's whole degree in one partition,
+      // and the pointer-jump join on comp concentrates a GIANT COMPONENT's
+      // whole membership on its one min-id label (the worse of the two
+      // once components coalesce). Salting splits each hot key S ways:
+      // the big (edge / node) side carries salt = hash(src|id) mod S and
+      // the small lookup side replicates xS — per-round lookup-side cost
+      // grows x S (node-table-sized), per-partition hot-key load drops /S.
+      // Pick S from the degree profile (q268); AQE skew splitting cannot
+      // help here because the big side is deliberately pre-partitioned +
+      // checkpointed, so the per-round joins see no fresh shuffle to
+      // re-split. Labels are salt-invariant (DedupSpec pins hub-fixture
+      // equality), so the default S=1 keeps every existing plan unchanged.
+      val salted = saltBuckets > 1
+      // pre-partitioned on the per-round join key (dst [, salt]) BEFORE
+      // the one-time checkpoint: every propagation round joins
+      // edges⋈labels on it, and the edge table is the big side at scale —
+      // shuffling it once here instead of once per round removes the
+      // dominant per-round exchange (the checkpointed LogicalRDD
+      // preserves the hash partitioning)
+      // no distinct: see the input contract above
+      // symmetrize with ONE pass over the pair pipeline (explode, not
+      // union): a union's two legs would each re-execute the (possibly
+      // expensive — ngramJaccard for the near-dup callers) pairs subtree.
+      val edges0 = pairs
+        .select(explode(array(
+          struct(col("id_a").as("src"), col("id_b").as("dst")),
+          struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+        .withColumn("salt",
+          if (salted) pmod(hash(col("src")), lit(saltBuckets)) else lit(0))
+      val edges = rs.checkpoint(
+        if (salted) edges0.repartition(col("dst"), col("salt"))
+        else edges0.repartition(col("dst")), "edges")
+      // xS replication of a node-grain lookup side — the salted joins'
+      // small side
+      def saltExplode(d: DataFrame): DataFrame =
+        d.withColumn("salt",
+          explode(array((0 until saltBuckets).map(lit(_)): _*)))
+      // seed labels with min(id, min neighbor) — the same aggregation a
+      // plain distinct-node init would pay, but it IS round one of
+      // min-label propagation, so shallow (quasi-clique) components
+      // converge one full round of joins+checkpoints earlier (hash aggs
+      // are skew-resilient already: partial aggregation combines map-side)
+      var labels = rs.checkpoint(edges
         .groupBy(col("src").as("id"))
-        .agg(min("comp").as("ncomp"))
-      val propagated = labels
-        .join(neighborMin, Seq("id"), "left")
-        .select(
-          col("id"),
-          least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"),
-          col("comp").as("prev")) // carried so convergence needs no re-join
-      // pointer doubling: also take the label OF the current label (labels
-      // point at node ids, so the label table is its own lookup table) —
-      // halves every label-chain per round, so convergence is O(log D)
-      // instead of O(D) on long chains. The jump table is the PREVIOUS
-      // round's labels — already a materialized checkpoint — not this
-      // round's propagated plan: stale-by-one jumps are still valid
-      // contractions (labels only decrease, and prev(comp) is the label
-      // of a same-component node) and still halve chains, but the whole
-      // round becomes ONE plan → ONE checkpoint materialization instead
-      // of two, halving per-round job count on a cluster
-      // one stale jump halves label chains per round; a SECOND jump
-      // through the same materialized table triples the per-round reach
-      // ((k+1)× for k jumps) for one more node-grain join inside the
-      // same plan — on a diameter-D component the round count drops
-      // from ~log₂D to ~log₃D with no extra materialization (r16
-      // optimization: the fixture's longest chain converged in 7
-      // rounds at one jump, 5 at two). Stale jumps stay valid
-      // contractions for the same reason as the single jump (labels
-      // only decrease; prev(comp) is a same-component node's label).
-      def jump(d: DataFrame, n: Int): DataFrame = {
-        val jt = labels.select(col("id").as("comp"), col("comp").as(s"_g$n"))
-        (if (salted)
-          d.withColumn("salt", pmod(hash(col("id")), lit(saltBuckets)))
-            .join(saltExplode(jt), Seq("comp", "salt"), "left")
-            .drop("salt")
-        else d.join(jt, Seq("comp"), "left"))
+        .agg(min(col("dst")).as("nmin"))
+        .select(col("id"), least(col("id"), col("nmin")).as("comp")))
+      rs.fixpoint { _ =>
+        val labDst = labels.select(col("id").as("dst"), col("comp"))
+        val neighborMin = (if (salted)
+            edges.join(saltExplode(labDst), Seq("dst", "salt"))
+          else edges.join(labDst, "dst"))
+          .groupBy(col("src").as("id"))
+          .agg(min("comp").as("ncomp"))
+        val propagated = labels
+          .join(neighborMin, Seq("id"), "left")
           .select(
             col("id"),
-            least(col("comp"), coalesce(col(s"_g$n"), col("comp"))).as("comp"),
-            col("prev"))
+            least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"),
+            col("comp").as("prev")) // carried so convergence needs no re-join
+        // pointer jumping: also take the label OF the current label
+        // (labels point at node ids, so the label table is its own lookup
+        // table). The jump table is the PREVIOUS round's checkpoint, not
+        // this round's plan, so a round stays ONE checkpoint job; a
+        // stale-by-one jump is still a valid contraction (labels only
+        // decrease, and prev(comp) is a same-component node's label).
+        // Two jumps triple the per-round reach, so a diameter-D chain
+        // needs ~log₃D rounds instead of D (the fixture's longest chain:
+        // 7 rounds at one jump, 5 at two).
+        def jump(d: DataFrame, n: Int): DataFrame = {
+          val jt = labels.select(col("id").as("comp"), col("comp").as(s"_g$n"))
+          (if (salted)
+            d.withColumn("salt", pmod(hash(col("id")), lit(saltBuckets)))
+              .join(saltExplode(jt), Seq("comp", "salt"), "left")
+              .drop("salt")
+          else d.join(jt, Seq("comp"), "left"))
+            .select(
+              col("id"),
+              least(col("comp"), coalesce(col(s"_g$n"), col("comp"))).as("comp"),
+              col("prev"))
+        }
+        // labels only decrease, so "any label moved" is count(comp < prev).
+        // More jumps do not help on the q38 graph (7 rounds at two jumps
+        // and at four, n_changed 85→29→8→4→2→2→0): the tail is LOCAL
+        // ROOTS, labels pointing at nodes that believe themselves the
+        // minimum, which only the 1-hop neighborMin frontier moves.
+        labels = rs.next(labels, jump(jump(propagated, 1), 2),
+          changed = count(when(col("comp") < col("prev"), 1)))
+        rs.changed(labels) > 0L
       }
-      // convergence is OBSERVED during the checkpoint job itself
-      // (CollectMetrics over the carried prev column) — the previous
-      // shape paid a separate probe job per round just to scan the
-      // checkpointed table for one boolean (r16 optimization; labels
-      // only ever decrease, so "any label moved" is count(comp < prev))
-      val obs = org.apache.spark.sql.Observation()
-      // Measured r17: MORE stale jumps do NOT cut the round count on
-      // the q38 fixture graph (7 rounds at two jumps AND at four; the
-      // per-round changed counts 85→29→8→4→2→2→0 show a tail of LOCAL
-      // ROOTS — labels pointing at nodes that believe themselves the
-      // minimum — which stale jumps cannot contract; only the 1-hop
-      // neighborMin frontier moves them). Two jumps stay (they do
-      // engage on the early rounds' label chains); the structural fix
-      // for the tail would be star contraction, out of scope here.
-      val updated = jump(jump(propagated, 1), 2)
-        .observe(obs, count(when(col("comp") < col("prev"), 1)).as("n_changed"))
-        .localCheckpoint(true)
-      // bounded wait + exact fallback probe (ADVICE r16: get() alone
-      // could hang on a metrics-delivery regression). A stage-retry
-      // over-count is harmless here: labels only decrease, so a
-      // spurious nonzero just forces one extra idempotent round.
-      val nChanged = Observed.long(obs, "n_changed") {
-        updated.filter(col("comp") < col("prev")).limit(1).count()
-      }
-      val changed = nChanged > 0L
-      freeLocalCheckpoint(labels)
-      labels = updated
-      converged = !changed
-      i += 1
-      prof(s"round $i done (n_changed=$nChanged)")
+      rs.keep(labels).select(col("id"), col("comp"))
     }
-    if (!converged) {
-      freeLocalCheckpoint(labels); freeLocalCheckpoint(edges)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxIter rounds — " +
-          "a component's diameter exceeds maxIter; raise maxIter")
-    }
-    freeLocalCheckpoint(edges)
-    labels.select(col("id"), col("comp"))
   }
 
   /** Width-parameterized SimHash (1 <= bits <= 64) over the document's
@@ -801,14 +731,20 @@ object Dedup {
     */
   def exactSubstrings(
       docs: DataFrame, textCol: String, idCol: String,
-      k: Int = 5, window: Int = 64, anchorCap: Int = 256): DataFrame = {
+      k: Int = 5, window: Int = 64, anchorCap: Int = 256): DataFrame =
+    exactSubstrings(docs, textCol, idCol, k, window, anchorCap, _.persist())
+
+  /** [[exactSubstrings]] with its two twice-read intermediates cached by `cache`. */
+  private def exactSubstrings(
+      docs: DataFrame, textCol: String, idCol: String,
+      k: Int, window: Int, anchorCap: Int, cache: DataFrame => DataFrame): DataFrame = {
     require(k >= 2, "exactSubstrings needs k >= 2")
     require(window >= k, "exactSubstrings needs window >= k")
     require(anchorCap >= 2, "exactSubstrings needs anchorCap >= 2")
-    val wd = docs
+    // read by the anchor pass and the candidate re-join
+    val wd = cache(docs
       .select(col(idCol),
-        graft.functions.TextFunctions.wordsArr(col(textCol)).as("w"))
-      .persist() // read by the anchor pass and the candidate re-join
+        graft.functions.TextFunctions.wordsArr(col(textCol)).as("w")))
     val posTab = wd.filter(size(col("w")) >= k)
       .select(col(idCol),
         explode(transform(sequence(lit(1), size(col("w")) - (k - 1)),
@@ -816,11 +752,9 @@ object Dedup {
             md5(concat_ws(" ", slice(col("w"), i, lit(k)))).as("fp")))).as("g"))
       .select(col(idCol), col("g.pos").as("pos"), col("g.fp").as("fp"))
     // full per-anchor occurrence counts, read twice: the 2..cap band
-    // filter AND the left-anchor band lookup of step 4 (the runner's
-    // sweep frees the cache)
-    val anchorCounts = posTab.groupBy("fp")
-      .agg(count(lit(1)).as("n"))
-      .persist()
+    // filter AND the left-anchor band lookup of step 4
+    val anchorCounts = cache(posTab.groupBy("fp")
+      .agg(count(lit(1)).as("n")))
     val anchors = anchorCounts
       .filter(col("n") >= 2 && col("n") <= anchorCap)
       .select("fp")
@@ -913,12 +847,17 @@ object Dedup {
   def exactSubstringApply(
       docs: DataFrame, textCol: String, idCol: String,
       k: Int = 5, window: Int = 64, anchorCap: Int = 256,
-      minLen: Int = 10): DataFrame = {
+      minLen: Int = 10): DataFrame =
+    exactSubstringApply(docs, textCol, idCol, k, window, anchorCap, minLen, _.persist())
+
+  private def exactSubstringApply(
+      docs: DataFrame, textCol: String, idCol: String, k: Int, window: Int,
+      anchorCap: Int, minLen: Int, cache: DataFrame => DataFrame): DataFrame = {
     require(minLen >= k, "exactSubstringApply needs minLen >= k")
     val later = col("doc_a") > col("doc_b") ||
       (col("doc_a") === col("doc_b") && col("pos_a") > col("pos_b"))
     val vpos = when(later, col("pos_a")).otherwise(col("pos_b"))
-    val cuts = exactSubstrings(docs, textCol, idCol, k, window, anchorCap)
+    val cuts = exactSubstrings(docs, textCol, idCol, k, window, anchorCap, cache)
       .filter(col("len_tokens") >= minLen)
       .select(
         when(later, col("doc_a")).otherwise(col("doc_b")).as(idCol),
@@ -944,47 +883,49 @@ object Dedup {
   }
 
   /** [[exactSubstringApply]] iterated to its fixed point: re-applies the
-    * cut pass to its own `text_kept` until a pass cuts nothing (or
-    * `maxPasses` passes ran — each pass strictly shrinks the surviving
-    * token total, so the loop always terminates; over-window regions
-    * lose one `window`-sized head per pass, see the fixed-point note on
-    * [[exactSubstringApply]]). Output schema matches the single pass:
+    * cut pass to its own `text_kept` until a pass cuts nothing. Each
+    * pass strictly shrinks the surviving token total, so the loop
+    * terminates; over-window regions lose one `window`-sized head per
+    * pass, see the fixed-point note on [[exactSubstringApply]]. If pass
+    * `maxPasses` still cuts, it throws rather than return a state that
+    * is not a fixed point. Output schema matches the single pass:
     * `(id, n_tokens, n_cut, text_kept)` with `n_tokens` the ORIGINAL
     * token count and `n_cut` the TOTAL positions cut across passes.
     *
-    * Scale shape: a driver-side loop of the bounded single-pass plan,
-    * `localCheckpoint` per pass (uncut lineage would re-embed every
-    * prior pass's subtree — the MMR lesson), one scalar probe per pass
-    * for the stop condition. Pass count is data-dependent but tiny:
-    * ⌈longest duplicated region / window⌉ + 1.
+    * Scale shape: a [[Rounds]] loop of the bounded single-pass plan,
+    * one checkpoint per pass whose observed `sum(n_cut)` is the stop
+    * test, one more to merge a cutting pass into the state; each pass's
+    * cached intermediates are freed with the loop. Pass count
+    * is data-dependent but tiny: ⌈longest duplicated region / window⌉ + 1.
     */
   def exactSubstringApplyToFixedPoint(
       docs: DataFrame, textCol: String, idCol: String,
       k: Int = 5, window: Int = 64, anchorCap: Int = 256,
-      minLen: Int = 10, maxPasses: Int = 8): DataFrame = {
-    require(maxPasses >= 1, "exactSubstringApplyToFixedPoint needs maxPasses >= 1")
-    var state = exactSubstringApply(
-      docs, textCol, idCol, k, window, anchorCap, minLen).localCheckpoint()
-    var lastPassCuts =
-      state.agg(coalesce(sum("n_cut"), lit(0L))).head.getLong(0)
-    var passes = 1
-    while (lastPassCuts > 0L && passes < maxPasses) {
-      val again = exactSubstringApply(
-        state.select(col(idCol), col("text_kept").as(textCol)),
-        textCol, idCol, k, window, anchorCap, minLen).localCheckpoint()
-      lastPassCuts = again.agg(coalesce(sum("n_cut"), lit(0L))).head.getLong(0)
-      if (lastPassCuts > 0L) {
-        state = state.select(col(idCol), col("n_tokens"), col("n_cut"))
-          .join(again.select(
-            col(idCol), col("n_cut").as("_cut2"), col("text_kept")), Seq(idCol))
-          .select(col(idCol), col("n_tokens"),
-            (col("n_cut") + col("_cut2")).as("n_cut"), col("text_kept"))
-          .localCheckpoint()
+      minLen: Int = 10, maxPasses: Int = 8): DataFrame =
+    Rounds("exactSubstringApplyToFixedPoint", maxPasses) { rs =>
+      var state: DataFrame = null
+      rs.fixpoint { _ =>
+        val again = rs.checkpoint(exactSubstringApply(
+          if (state == null) docs
+          else state.select(col(idCol), col("text_kept").as(textCol)),
+          textCol, idCol, k, window, anchorCap, minLen, rs.persisted),
+          changed = coalesce(sum("n_cut"), lit(0L)))
+        val cut = rs.changed(again) > 0L
+        if (state == null) state = again
+        else {
+          if (cut) state = rs.next(state,
+            state.select(col(idCol), col("n_tokens"), col("n_cut"))
+              .join(again.select(
+                col(idCol), col("n_cut").as("_cut2"), col("text_kept")), Seq(idCol))
+              .select(col(idCol), col("n_tokens"),
+                (col("n_cut") + col("_cut2")).as("n_cut"), col("text_kept")),
+            "merged")
+          rs.free(again)
+        }
+        cut
       }
-      passes += 1
+      rs.keep(state)
     }
-    state
-  }
 
   /** Passage-level exact dedup APPLIED (C4/RefinedWeb-style): cut every
     * document into NON-overlapping `passageWords`-word passages, keep

@@ -474,74 +474,46 @@ object Edges {
       .agg(count(lit(1)).as("sup"))
 
   /** Bounded-round k-TRUSS peel (Cohen 2008) over a canonical (a < b)
-    * distinct edge list: each round recomputes per-edge triangle
-    * support over the SURVIVING edges and semi-joins away every edge
-    * supported by fewer than k−2 triangles — removals cascade because
-    * a dropped edge kills its triangles' support next round. Returns
-    * the round-0..rounds edge sets (round 0 = input); once a round
-    * removes nothing the peel is at its fixpoint and the remaining
-    * rounds reuse that checkpoint instead of re-proving stability
-    * with full wedge joins (see the early-exit below). Each round's
-    * survivor set is localCheckpoint-ed, not merely persisted: a round
-    * reads its predecessor FOUR times (both wedge sides, the closure
-    * canon, the semi-join left), so an uncut lineage re-embeds the
-    * whole edge build ~4^r times into round r's plan and the codegen
-    * alone exhausts the driver heap — the checkpoint truncates the
-    * plan at the materialized blocks (the q311 lesson). The runner's
-    * sweep frees the blocks. After the fixpoint, the remaining entries
-    * of the result are the SAME checkpointed DataFrame, so a caller
-    * that frees rounds one by one must dedup them by reference first
-    * (`Bridge.freeLocalCheckpoint` on an alias still in use would drop
-    * blocks a later round reads). Scale shape per round: one degree-oriented wedge join
-    * (out-degree O(√|E|) under the orientation bound) + one edge-keyed
-    * count agg + one edge-keyed semi-join — never an all-pairs step.
+    * distinct edge list: each round ([[ktrussStep]]) recomputes per-edge
+    * triangle support over the SURVIVING edges and semi-joins away every
+    * edge supported by fewer than k−2 triangles — removals cascade
+    * because a dropped edge kills its triangles' support next round.
+    * Returns the round-0..rounds edge sets (round 0 = input), each a
+    * [[Rounds]] checkpoint: a round reads its predecessor four times
+    * (both wedge sides, the closure canon, the semi-join left).
+    * Early exit (r17): each round's survivor set is a SUBSET of its
+    * predecessor (the semi-join only removes), so equal counts ⟹
+    * identical sets ⟹ every later round is the same edge set. Once a
+    * round removes nothing, the remaining rounds reuse that checkpoint
+    * instead of re-proving stability with full wedge joins. The counts
+    * ride the checkpoint jobs and are confirmed exactly
+    * ([[Rounds.sameRows]]), since a retry over-count could fake an
+    * equality. Round10Spec pins the stable-fixpoint and cascade cases.
+    * Scale shape per round: one degree-oriented wedge join (out-degree
+    * O(√|E|) under the orientation bound) + one edge-keyed count agg +
+    * one edge-keyed semi-join — never an all-pairs step.
     */
-  def ktruss(e0: DataFrame, k: Int, rounds: Int,
-             cut: Boolean = true): Seq[DataFrame] = {
+  def ktruss(e0: DataFrame, k: Int, rounds: Int): Seq[DataFrame] = {
     require(k >= 3, "ktruss needs k >= 3")
-    // `cut = false` disables the per-round localCheckpoint so the whole
-    // multi-round JOIN SHAPE stays visible in one logical plan — the
-    // plan-guard inspection mode (PlanSpec); an eager checkpoint
-    // otherwise replaces every round's joins with a LogicalRDD scan and
-    // makes plan assertions vacuous. Production callers keep the
-    // default: at rounds ≥ 3 the uncut plan re-embeds the edge build
-    // ~4^r times and OOMs the driver at codegen (measured).
-    // Early-exit (r17): each round's survivor set is a SUBSET of its
-    // predecessor (the semi-join only removes), so equal counts ⟹
-    // identical sets ⟹ every later round is provably the same edge
-    // set — stop paying the wedge join and reuse the fixpoint
-    // checkpoint for the remaining rounds (row-identical output by the
-    // subset argument; Round10Spec pins the stable-fixpoint and
-    // cascade cases). The count rides the checkpoint materialization
-    // itself as an Observation — no extra job. Only in cut mode: the
-    // uncut (PlanSpec) path runs no action, so an Observation there
-    // would block forever, and plan inspection wants the full unrolled
-    // shape anyway.
-    def c(df: DataFrame): (DataFrame, Long) = if (cut) {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-      // bounded wait + exact fallback (ADVICE r16 — see Observed)
-      (ck, Observed.long(obs, "n")(ck.count()))
-    } else (df, -1L)
-    var (cur, curN) = c(e0)
-    val out = scala.collection.mutable.Buffer(cur)
-    var stable = false
-    for (_ <- 1 to rounds) {
-      if (!stable) {
-        val keep = edgeSupport(cur).filter(col("sup") >= k - 2)
-        val (nxt, nxtN) = c(cur.join(keep, Seq("a", "b"), "left_semi"))
-        // observed counts can over-count under stage retries, and a
-        // spurious equality here would reuse a NON-fixpoint edge set —
-        // so equality of the riding metrics is only the trigger, and
-        // the early exit is CONFIRMED by exact counts over the two
-        // materialized checkpoints (runs once, at the fixpoint round)
-        stable = cut && nxtN == curN && nxt.count() == cur.count()
-        cur = nxt; curN = nxtN
+    Rounds("ktruss", rounds) { rs =>
+      var cur = rs.keep(rs.checkpoint(e0))
+      val out = scala.collection.mutable.Buffer(cur)
+      var stable = false
+      rs.each { _ =>
+        if (!stable) {
+          val nxt = rs.keep(rs.checkpoint(ktrussStep(cur, k)))
+          stable = rs.sameRows(cur, nxt)
+          cur = nxt
+        }
+        out += cur
       }
-      out += cur
+      out.toSeq
     }
-    out.toSeq
   }
+
+  /** One k-truss round: the edges of `cur` in at least k−2 triangles of `cur`. */
+  private[graft] def ktrussStep(cur: DataFrame, k: Int): DataFrame =
+    cur.join(edgeSupport(cur).filter(col("sup") >= k - 2), Seq("a", "b"), "left_semi")
 
   /** Per-node triangle participation (node, n_tri): every closed triple
     * credits its three corners — Σ n_tri = 3 × [[triangleCount]] by
@@ -616,127 +588,134 @@ object Edges {
   /** Bounded-round deterministic greedy matching over a canonical
     * (a < b) distinct edge list — the mutual-minimum handshake (the
     * deterministic core of Israeli–Itai style distributed matching):
-    * each round every ACTIVE node proposes to its minimum-id active
-    * neighbor, an edge joins the matching iff both endpoints proposed
-    * each other, matched nodes leave the graph, and the survivor edges
-    * feed the next round. Every round matches at least one edge of any
-    * non-empty residual graph (the globally minimum active edge is
-    * always mutual), so `rounds` rounds yield a maximal matching on
-    * graphs whose residual shrinks fast — and the per-round matched
-    * set is always a valid matching by the mutual condition. Returns
-    * the per-round matched edge sets (size `rounds`). DETERMINISM:
-    * min-id proposals are exact integer aggregates, no tie possible
-    * (neighbor sets are sets). Scale shape per round: one node-keyed
-    * min agg over the symmetrized survivor edges + one self-equi-join
-    * of the node-grain proposal table on (u,v)=(v,u) + two node-keyed
-    * anti-joins — never all-pairs. The survivor set is
-    * localCheckpoint-ed each round (read three times by round r+1:
-    * both symmetrization arms + the anti-join left — the q321 lineage
-    * lesson); the runner's sweep frees the blocks.
+    * each round ([[matchingStep]]) every ACTIVE node proposes to its
+    * minimum-id active neighbor, an edge joins the matching iff both
+    * endpoints proposed each other, matched nodes leave the graph, and
+    * the survivor edges feed the next round. Every round matches at
+    * least one edge of any non-empty residual graph (the globally
+    * minimum active edge is always mutual), so `rounds` rounds yield a
+    * maximal matching on graphs whose residual shrinks fast — and the
+    * per-round matched set is always a valid matching by the mutual
+    * condition. Returns the per-round matched edge sets (size
+    * `rounds`). DETERMINISM: min-id proposals are exact integer
+    * aggregates, no tie possible (neighbor sets are sets). Scale shape
+    * per round: one node-keyed min agg over the symmetrized survivor
+    * edges + one self-equi-join of the node-grain proposal table on
+    * (u,v)=(v,u) + two node-keyed anti-joins — never all-pairs. The
+    * survivor set is a [[Rounds]] checkpoint (read three times by round
+    * r+1: both symmetrization arms + the anti-join left).
     */
-  def greedyMatching(e0: DataFrame, rounds: Int,
-                     cut: Boolean = true): Seq[DataFrame] = {
-    // `cut = false` = the PlanSpec inspection mode (see [[ktruss]])
-    def c(df: DataFrame) = if (cut) df.localCheckpoint() else df
-    var cur = c(e0)
-    val out = scala.collection.mutable.Buffer.empty[DataFrame]
-    for (_ <- 1 to rounds) {
-      val dir = cur.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(cur.select(col("b").as("u"), col("a").as("v")))
-      val prop = dir.groupBy("u").agg(min(col("v")).as("v"))
-      val matched = c(prop.as("p")
-        .join(prop.as("q"),
-          col("p.u") === col("q.v") && col("p.v") === col("q.u"))
-        .filter(col("p.u") < col("p.v"))
-        .select(col("p.u").as("a"), col("p.v").as("b")))
-      out += matched
-      val mn = matched.select(col("a").as("n"))
-        .unionByName(matched.select(col("b").as("n")))
-      cur = c(cur
-        .join(mn, cur("a") === mn("n"), "left_anti")
-        .join(mn, cur("b") === mn("n"), "left_anti"))
+  def greedyMatching(e0: DataFrame, rounds: Int): Seq[DataFrame] =
+    Rounds("greedyMatching", rounds) { rs =>
+      var cur = rs.checkpoint(e0)
+      val out = scala.collection.mutable.Buffer.empty[DataFrame]
+      rs.each { _ =>
+        val matched = rs.keep(rs.checkpoint(matchingStep(cur), "matched"))
+        out += matched
+        val mn = matched.select(col("a").as("n"))
+          .unionByName(matched.select(col("b").as("n")))
+        cur = rs.next(cur, cur
+          .join(mn, cur("a") === mn("n"), "left_anti")
+          .join(mn, cur("b") === mn("n"), "left_anti"))
+      }
+      out.toSeq
     }
-    out.toSeq
+
+  /** Both orientations (u, v) of an (a, b) edge list. */
+  private def directed(e: DataFrame): DataFrame =
+    e.select(col("a").as("u"), col("b").as("v"))
+      .unionByName(e.select(col("b").as("u"), col("a").as("v")))
+
+  /** One matching round: the mutual-minimum edges of the residual `cur`. */
+  private[graft] def matchingStep(cur: DataFrame): DataFrame = {
+    val prop = directed(cur).groupBy("u").agg(min(col("v")).as("v"))
+    prop.as("p")
+      .join(prop.as("q"),
+        col("p.u") === col("q.v") && col("p.v") === col("q.u"))
+      .filter(col("p.u") < col("p.v"))
+      .select(col("p.u").as("a"), col("p.v").as("b"))
   }
 
   /** Bounded-round deterministic maximal independent set over a
     * canonical (a < b) distinct edge list — Luby's algorithm with
     * id-based symmetry breaking (the derandomized round): each round
-    * every ACTIVE node joins the MIS iff its id is smaller than every
-    * active neighbor's (two adjacent nodes can never both win — one is
-    * larger), then MIS nodes AND their neighbors leave; isolated
-    * survivors (no remaining active edge) are trivially independent
-    * and join the same round. Every round the locally-minimum nodes
-    * of the residual are nonempty, so the MIS grows monotonically and
-    * the union over rounds is independent by construction — the
-    * symmetry-breaking primitive under distributed coloring and
-    * scheduling, the node-side sibling of [[greedyMatching]]'s edge
-    * handshake. Returns the per-round MIS node sets (`node` column).
-    * DETERMINISM: min-id comparisons over neighbor sets, exact
-    * integers. Scale shape per round: one node-keyed min agg over the
-    * symmetrized survivor edges + one anti-join to find the isolated,
-    * one neighbor expansion join of the (small) MIS set + two
-    * node-keyed anti-joins for the removal; survivor edges and nodes
-    * localCheckpoint-ed (each read ≥3 times next round — the q321
-    * lineage lesson); the runner's sweep frees the blocks.
+    * ([[misStep]]) every ACTIVE node joins the MIS iff its id is smaller
+    * than every active neighbor's (two adjacent nodes can never both
+    * win — one is larger), then MIS nodes AND their neighbors leave;
+    * isolated survivors (no remaining active edge) are trivially
+    * independent and join the same round. Every round the
+    * locally-minimum nodes of the residual are nonempty, so the MIS
+    * grows monotonically and the union over rounds is independent by
+    * construction — the symmetry-breaking primitive under distributed
+    * coloring and scheduling, the node-side sibling of
+    * [[greedyMatching]]'s edge handshake. Returns the per-round MIS
+    * node sets (`node` column). DETERMINISM: min-id comparisons over
+    * neighbor sets, exact integers. Scale shape per round: one
+    * node-keyed min agg over the symmetrized survivor edges + one
+    * anti-join to find the isolated, one neighbor expansion join of the
+    * (small) MIS set + two node-keyed anti-joins for the removal;
+    * survivor edges and nodes are [[Rounds]] checkpoints (each read ≥3
+    * times next round).
     */
-  def maximalIndependentSet(e0: DataFrame, rounds: Int,
-                            cut: Boolean = true): Seq[DataFrame] = {
-    // `cut = false` = the PlanSpec inspection mode (see [[ktruss]])
-    def c(df: DataFrame) = if (cut) df.localCheckpoint() else df
-    var edges = c(e0)
-    var nodes = c(e0.select(col("a").as("node"))
-      .unionByName(e0.select(col("b").as("node")))
-      .distinct())
-    val out = scala.collection.mutable.Buffer.empty[DataFrame]
-    for (_ <- 1 to rounds) {
-      val dir = edges.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(edges.select(col("b").as("u"), col("a").as("v")))
-      val nbrMin = dir.groupBy("u").agg(min(col("v")).as("mn"))
-      val mis = c(nodes
-        .join(nbrMin, nodes("node") === nbrMin("u"), "left")
-        .filter(col("mn").isNull || col("node") < col("mn"))
-        .select(col("node")))
-      out += mis
-      val removed = mis
-        .unionByName(dir.join(mis, dir("u") === mis("node"))
-          .select(dir("v").as("node")))
-        .distinct()
-      nodes = c(nodes.join(removed, Seq("node"), "left_anti"))
-      edges = c(edges
-        .join(nodes.select(col("node").as("a")), Seq("a"), "left_semi")
-        .join(nodes.select(col("node").as("b")), Seq("b"), "left_semi"))
+  def maximalIndependentSet(e0: DataFrame, rounds: Int): Seq[DataFrame] =
+    Rounds("maximalIndependentSet", rounds) { rs =>
+      var edges = rs.checkpoint(e0, "edges")
+      var nodes = rs.checkpoint(e0.select(col("a").as("node"))
+        .unionByName(e0.select(col("b").as("node")))
+        .distinct(), "nodes")
+      val out = scala.collection.mutable.Buffer.empty[DataFrame]
+      rs.each { _ =>
+        val mis = rs.keep(rs.checkpoint(misStep(edges, nodes), "mis"))
+        out += mis
+        val dir = directed(edges)
+        val removed = mis
+          .unionByName(dir.join(mis, dir("u") === mis("node"))
+            .select(dir("v").as("node")))
+          .distinct()
+        nodes = rs.next(nodes, nodes.join(removed, Seq("node"), "left_anti"), "nodes")
+        edges = rs.next(edges, edges
+          .join(nodes.select(col("node").as("a")), Seq("a"), "left_semi")
+          .join(nodes.select(col("node").as("b")), Seq("b"), "left_semi"), "edges")
+      }
+      out.toSeq
     }
-    out.toSeq
+
+  /** One Luby round: the `nodes` whose id beats every neighbor's over `edges`. */
+  private[graft] def misStep(edges: DataFrame, nodes: DataFrame): DataFrame = {
+    val nbrMin = directed(edges).groupBy("u").agg(min(col("v")).as("mn"))
+    nodes
+      .join(nbrMin, nodes("node") === nbrMin("u"), "left")
+      .filter(col("mn").isNull || col("node") < col("mn"))
+      .select(col("node"))
   }
 
   /** Bounded-step deterministic random walks over a symmetric (a, b)
-    * edge list from `seeds` (walk_id, node) rows: `steps` transitions,
-    * each the (md5(walk|step|neighbor), id)-argmin over the current
-    * node's neighbors — the repo's reproducible-hash convention
-    * standing in for RNG, so the walk corpus is identical across runs,
-    * partitionings, and engines. Returns (walk_id, node, path) with
-    * path the '>'-joined node sequence. The walk set never grows (one
-    * row per walk per step); each step is one walk-keyed equi-join
-    * against the edge list + one walk-keyed min agg. `cut = false` =
-    * the PlanSpec inspection mode (see [[ktruss]]); callers persist
-    * the edge side across steps.
+    * edge list from `seeds` (walk_id, node) rows: `steps` transitions
+    * ([[walkStep]]), each the (md5(walk|step|neighbor), id)-argmin over
+    * the current node's neighbors — the repo's reproducible-hash
+    * convention standing in for RNG, so the walk corpus is identical
+    * across runs, partitionings, and engines. Returns (walk_id, node,
+    * path) with path the '>'-joined node sequence. The walk set never
+    * grows (one row per walk per step); each step is one walk-keyed
+    * equi-join against the edge list + one walk-keyed min agg, a
+    * [[Rounds]] checkpoint. Callers persist the edge side across steps.
     */
-  def randomWalks(e: DataFrame, seeds: DataFrame, steps: Int,
-                  cut: Boolean = true): DataFrame = {
-    def c(df: DataFrame) = if (cut) df.localCheckpoint() else df
-    var cur = c(seeds.select(col("walk_id"), col("node"),
-      col("node").cast("string").as("path")))
-    for (t <- 1 to steps) {
-      cur = c(cur.join(e, cur("node") === e("a"))
-        .select(col("walk_id"), col("path"), col("b").as("v"),
-          md5(concat_ws("|", col("walk_id").cast("string"), lit(t.toString),
-            col("b").cast("string"))).as("h"))
-        .groupBy("walk_id", "path")
-        .agg(min(struct(col("h"), col("v"))).as("m"))
-        .select(col("walk_id"), col("m.v").as("node"),
-          concat(col("path"), lit(">"), col("m.v").cast("string")).as("path")))
+  def randomWalks(e: DataFrame, seeds: DataFrame, steps: Int): DataFrame =
+    Rounds("randomWalks", steps) { rs =>
+      var cur = rs.checkpoint(seeds.select(col("walk_id"), col("node"),
+        col("node").cast("string").as("path")))
+      rs.each(t => cur = rs.next(cur, walkStep(cur, e, t)))
+      rs.keep(cur)
     }
-    cur
-  }
+
+  /** Walk step `t`: every walk of `cur` moves to its hash-argmin neighbor in `e`. */
+  private[graft] def walkStep(cur: DataFrame, e: DataFrame, t: Int): DataFrame =
+    cur.join(e, cur("node") === e("a"))
+      .select(col("walk_id"), col("path"), col("b").as("v"),
+        md5(concat_ws("|", col("walk_id").cast("string"), lit(t.toString),
+          col("b").cast("string"))).as("h"))
+      .groupBy("walk_id", "path")
+      .agg(min(struct(col("h"), col("v"))).as("m"))
+      .select(col("walk_id"), col("m.v").as("node"),
+        concat(col("path"), lit(">"), col("m.v").cast("string")).as("path"))
 }

@@ -123,67 +123,59 @@ object Similarity {
     * shape), with every per-step window partitioned by query_id. At
     * catalog scale the corpus appears ONLY in the stage-1 scan and the
     * vector-fetch scan; the candidate frames and per-step picks are
-    * localCheckpoint-ed (lineage-cut — see the inline note; blocks freed
-    * by the runner's persisted-RDD sweep), so the per-step cost is a
-    * CONSTANT handful of candidate-sized jobs regardless of corpus size.
+    * [[Rounds]] checkpoints, so the per-step cost is a CONSTANT handful
+    * of candidate-sized jobs regardless of corpus size.
     */
   def mmrRerank(queries: DataFrame, corpus: DataFrame, idCol: String,
-                poolK: Int, selectK: Int): DataFrame = {
-    val pool = bruteForceTopK(queries, corpus, idCol, poolK)
-      .select(col("query_id"), col("cand_id"), col("cos").as("rel"))
-    // localCheckpoint, not persist: the |Q|·poolK pool is the root of
-    // 3·selectK downstream join/window plans — an uncut lineage would
-    // re-embed the corpus scan + TopKAgg subtree in every one of them
-    // (MB-scale task binaries, one codegen compile each; measured ~10 s
-    // of pure planning at sf0.1). Checkpointed, every step plans against
-    // a short in-memory root. Blocks are freed by the runner's
-    // persisted-RDD sweep, same as the BPE learner's symbol table.
-    val cand = corpus
-      .select(col(idCol).as("cand_id"), col("v"), col("nv"))
-      .join(broadcast(pool), Seq("cand_id"))
-      .localCheckpoint()
-    val sims = cand.select(col("query_id"), col("cand_id"), col("v"), col("nv"))
-      .join(
-        cand.select(col("query_id"), col("cand_id").as("other"),
-          col("v").as("ov"), col("nv").as("onv")),
-        Seq("query_id"))
-      .filter(col("cand_id") =!= col("other"))
-      .select(col("query_id"), col("cand_id"), col("other"),
-        cosPre(col("v"), col("nv"), col("ov"), col("onv")).as("sim"))
-      .localCheckpoint()
-    val base = cand.select("query_id", "cand_id", "rel")
-    val first = base
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("rel").desc, col("cand_id"))))
-      .filter(col("rn") === 1)
-      .select(col("query_id"), lit(1).as("step"), col("cand_id"),
-        round(col("rel") * lit(0.5), 6).as("mmr"))
-      // each pick is ≤|Q| rows but feeds BOTH the anti- and semi-join of
-      // every later step — uncut, step s would re-embed (and re-run)
-      // every earlier step's plan twice (2^selectK window jobs);
-      // checkpointed, each step plans against the materialized rows
-      .localCheckpoint()
-    val picks = (2 to selectK).foldLeft(Vector(first)) { (acc, s) =>
-      val prev = acc.map(_.select(col("query_id"), col("cand_id")))
-        .reduce(_ unionByName _)
-      val pick = base
-        .join(broadcast(prev), Seq("query_id", "cand_id"), "left_anti")
-        .join(sims, Seq("query_id", "cand_id"))
-        .join(broadcast(prev.withColumnRenamed("cand_id", "other")),
-          Seq("query_id", "other"), "left_semi")
-        .groupBy("query_id", "cand_id", "rel")
-        .agg(max(col("sim")).as("msim"))
-        .withColumn("mmr",
-          round(col("rel") * lit(0.5) - col("msim") * lit(0.5), 6))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("mmr").desc, col("cand_id"))))
-        .filter(col("rn") === 1)
-        .select(col("query_id"), lit(s).as("step"), col("cand_id"), col("mmr"))
-        .localCheckpoint()
-      acc :+ pick
+                poolK: Int, selectK: Int): DataFrame =
+    Rounds("mmrRerank", selectK) { rs =>
+      val pool = bruteForceTopK(queries, corpus, idCol, poolK)
+        .select(col("query_id"), col("cand_id"), col("cos").as("rel"))
+      // the pool roots 3·selectK join/window plans; freed after the picks
+      val cand = rs.checkpoint(corpus
+        .select(col(idCol).as("cand_id"), col("v"), col("nv"))
+        .join(broadcast(pool), Seq("cand_id")), "cand")
+      val sims = rs.checkpoint(
+        cand.select(col("query_id"), col("cand_id"), col("v"), col("nv"))
+          .join(
+            cand.select(col("query_id"), col("cand_id").as("other"),
+              col("v").as("ov"), col("nv").as("onv")),
+            Seq("query_id"))
+          .filter(col("cand_id") =!= col("other"))
+          .select(col("query_id"), col("cand_id"), col("other"),
+            cosPre(col("v"), col("nv"), col("ov"), col("onv")).as("sim")),
+        "sims")
+      val base = cand.select("query_id", "cand_id", "rel")
+      // each pick feeds both the anti- and semi-join of every later step
+      var picks = Vector.empty[DataFrame]
+      rs.each { s =>
+        val pick = if (s == 1) base
+          .withColumn("rn", row_number().over(
+            Window.partitionBy("query_id").orderBy(col("rel").desc, col("cand_id"))))
+          .filter(col("rn") === 1)
+          .select(col("query_id"), lit(1).as("step"), col("cand_id"),
+            round(col("rel") * lit(0.5), 6).as("mmr"))
+        else {
+          val prev = picks.map(_.select(col("query_id"), col("cand_id")))
+            .reduce(_ unionByName _)
+          base
+            .join(broadcast(prev), Seq("query_id", "cand_id"), "left_anti")
+            .join(sims, Seq("query_id", "cand_id"))
+            .join(broadcast(prev.withColumnRenamed("cand_id", "other")),
+              Seq("query_id", "other"), "left_semi")
+            .groupBy("query_id", "cand_id", "rel")
+            .agg(max(col("sim")).as("msim"))
+            .withColumn("mmr",
+              round(col("rel") * lit(0.5) - col("msim") * lit(0.5), 6))
+            .withColumn("rn", row_number().over(
+              Window.partitionBy("query_id").orderBy(col("mmr").desc, col("cand_id"))))
+            .filter(col("rn") === 1)
+            .select(col("query_id"), lit(s).as("step"), col("cand_id"), col("mmr"))
+        }
+        picks :+= rs.keep(rs.checkpoint(pick))
+      }
+      picks.reduce(_ unionByName _)
     }
-    picks.reduce(_ unionByName _)
-  }
 
   /** Facility-location greedy coreset selection — the submodular
     * "pick k documents that best COVER the corpus in embedding space"
@@ -201,54 +193,54 @@ object Similarity {
     * 6dp cosine is 1e6-quantized to a long at the score table, so every
     * gain sum and coverage max is exact integer arithmetic; winners tie
     * by id. The score table, the per-step winner and the coverage
-    * vector are localCheckpoint-ed (coverage is read by the gain pass
-    * AND the merge of every later step — the q311 lineage lesson);
-    * blocks freed by the runner's sweep. Output: (step, idCol, gain,
-    * total_coverage) — selection order with the coverage curve, the
-    * diminishing-returns read-out a curation pipeline uses to choose k.
+    * vector are [[Rounds]] checkpoints (coverage is read by the gain
+    * pass AND the merge of every later step; the output reads every
+    * step's winner and coverage, so those pass to the caller). Output:
+    * (step, idCol, gain, total_coverage) — selection order with the
+    * coverage curve, the diminishing-returns read-out a curation
+    * pipeline uses to choose k.
     */
   def facilityLocationSelect(
-      corpus: DataFrame, idCol: String, poolN: Int, selectK: Int): DataFrame = {
-    val pool = corpus
-      .select(col(idCol).as("c"), col("v").as("cv"), col("nv").as("cn"),
-        md5(col(idCol).cast("string")).as("h"))
-      .orderBy(col("h"), col("c")).limit(poolN)
-      .select("c", "cv", "cn")
-    val scores = corpus.select(col(idCol).as("x"), col("v"), col("nv"))
-      .crossJoin(broadcast(pool))
-      .select(col("x"), col("c"),
-        round(cosPre(col("v"), col("nv"), col("cv"), col("cn")) * 1e6)
-          .cast("long").as("s"))
-      .localCheckpoint()
-    var cov = corpus.select(col(idCol).as("x"))
-      .withColumn("cov", lit(0L)).localCheckpoint()
-    var selected: DataFrame = null
-    val out = scala.collection.mutable.Buffer.empty[DataFrame]
-    for (s <- 1 to selectK) {
-      val remaining =
-        if (selected == null) scores
-        else scores.join(broadcast(selected), Seq("c"), "left_anti")
-      val gains = remaining.join(cov, Seq("x"))
-        .groupBy("c")
-        .agg(sum(greatest(col("s") - col("cov"), lit(0L))).as("gain_fp"))
-      val win = gains.orderBy(col("gain_fp").desc, col("c").asc)
-        .limit(1).localCheckpoint()
-      selected =
-        if (selected == null) win.select("c")
-        else selected.unionByName(win.select("c")).localCheckpoint()
-      cov = cov
-        .join(scores.join(broadcast(win.select("c")), Seq("c"), "left_semi")
-          .select(col("x"), col("s")), Seq("x"))
-        .select(col("x"), greatest(col("cov"), col("s")).as("cov"))
-        .localCheckpoint()
-      val covTot = cov.agg(sum(col("cov")).as("cov_fp"))
-      out += win.crossJoin(broadcast(covTot))
-        .select(lit(s).as("step"), col("c").as(idCol),
-          round(col("gain_fp") / 1e6, 6).as("gain"),
-          round(col("cov_fp") / 1e6, 6).as("total_coverage"))
+      corpus: DataFrame, idCol: String, poolN: Int, selectK: Int): DataFrame =
+    Rounds("facilityLocationSelect", selectK) { rs =>
+      val pool = corpus
+        .select(col(idCol).as("c"), col("v").as("cv"), col("nv").as("cn"),
+          md5(col(idCol).cast("string")).as("h"))
+        .orderBy(col("h"), col("c")).limit(poolN)
+        .select("c", "cv", "cn")
+      val scores = rs.checkpoint(corpus.select(col(idCol).as("x"), col("v"), col("nv"))
+        .crossJoin(broadcast(pool))
+        .select(col("x"), col("c"),
+          round(cosPre(col("v"), col("nv"), col("cv"), col("cn")) * 1e6)
+            .cast("long").as("s")), "scores")
+      var cov = rs.checkpoint(corpus.select(col(idCol).as("x"))
+        .withColumn("cov", lit(0L)), "cov")
+      var selected: DataFrame = null
+      val out = scala.collection.mutable.Buffer.empty[DataFrame]
+      rs.each { s =>
+        val remaining =
+          if (selected == null) scores
+          else scores.join(broadcast(selected), Seq("c"), "left_anti")
+        val gains = remaining.join(cov, Seq("x"))
+          .groupBy("c")
+          .agg(sum(greatest(col("s") - col("cov"), lit(0L))).as("gain_fp"))
+        val win = rs.keep(rs.checkpoint(
+          gains.orderBy(col("gain_fp").desc, col("c").asc).limit(1), "win"))
+        selected =
+          if (selected == null) win.select("c")
+          else rs.next(selected, selected.unionByName(win.select("c")), "selected")
+        cov = rs.keep(rs.next(cov, cov
+          .join(scores.join(broadcast(win.select("c")), Seq("c"), "left_semi")
+            .select(col("x"), col("s")), Seq("x"))
+          .select(col("x"), greatest(col("cov"), col("s")).as("cov")), "cov"))
+        val covTot = cov.agg(sum(col("cov")).as("cov_fp"))
+        out += win.crossJoin(broadcast(covTot))
+          .select(lit(s).as("step"), col("c").as(idCol),
+            round(col("gain_fp") / 1e6, 6).as("gain"),
+            round(col("cov_fp") / 1e6, 6).as("total_coverage"))
+      }
+      out.reduce(_ unionByName _)
     }
-    out.reduce(_ unionByName _)
-  }
 
   /** Deterministic pseudo-random hyperplane component for (plane, dim):
     * uniform in [-0.5, 0.5), derived from md5 — no RNG state, so the

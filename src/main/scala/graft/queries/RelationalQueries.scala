@@ -3278,7 +3278,7 @@ object RelationalQueries {
     * integer supports, census aggregates. Scale shape per round: the
     * degree-oriented wedge join (out-degree O(√|E|)), one edge-keyed
     * count agg, one edge-keyed semi-join; never all-pairs, each
-    * round's survivor set persisted.
+    * round's survivor set checkpointed ([[graft.operators.Rounds]]).
     */
   def q321Ktruss(spark: SparkSession, dir: String): DataFrame = {
     val e0 = graft.operators.Edges.coPurchase(spark, dir)
@@ -3304,9 +3304,9 @@ object RelationalQueries {
     * endpoint checksums), rounds 1–3. DETERMINISM: min-id proposals
     * are exact integer aggregates over neighbor SETS — no ties exist.
     * Scale shape per round: one node-keyed min agg + one node-grain
-    * proposal self-join + two anti-joins; survivor edges
-    * localCheckpoint-ed against the 3-reads-per-round lineage blowup
-    * (the q321 lesson). The oracle unrolls the three rounds.
+    * proposal self-join + two anti-joins; survivor edges checkpointed
+    * per round ([[graft.operators.Rounds]]). The oracle unrolls the
+    * three rounds.
     */
   def q324GreedyMatching(spark: SparkSession, dir: String): DataFrame = {
     val e0 = graft.operators.Edges.coPurchase(spark, dir)
@@ -3333,8 +3333,8 @@ object RelationalQueries {
     * admitted + id checksum). DETERMINISM: min-id comparisons, census
     * aggregates. Scale shape per round: one node-keyed min agg, one
     * MIS-sized neighbor expansion, node-keyed anti/semi-joins — never
-    * all-pairs; survivors localCheckpoint-ed (the q321 lineage
-    * lesson). Oracle = three unrolled rounds.
+    * all-pairs; survivors checkpointed per round
+    * ([[graft.operators.Rounds]]). Oracle = three unrolled rounds.
     */
   def q327Mis(spark: SparkSession, dir: String): DataFrame = {
     val e0 = graft.operators.Edges.coPurchase(spark, dir)
@@ -3405,8 +3405,8 @@ object RelationalQueries {
     * lexicographic minimum — a total order. Scale shape: the walk set
     * NEVER grows (one row per walk per step); each step is one
     * walk-keyed equi-join against the persisted symmetric edge list +
-    * one walk-keyed min agg, localCheckpoint-ed (read by the next
-    * step and the path carry — the q321 lineage lesson). At catalog
+    * one walk-keyed min agg, checkpointed per step
+    * ([[graft.operators.Rounds]]). At catalog
     * scale walks per node × steps is the only multiplier, and the
     * edge table is pre-partitioned once on the source endpoint (q37's
     * discipline). The oracle unrolls the same 4 hash-argmin steps.

@@ -417,109 +417,87 @@ object TextQueries {
       : (Seq[(Int, String, String, Long, String)], Seq[Int]) = {
     import org.apache.spark.sql.functions._
     require(maxBatch >= 1, "bpeRoundsBatched needs maxBatch >= 1")
-    var syms = words
-      .withColumn("syms", expr(
-        "transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
-      .select("word", "freq", "syms").persist()
     val merges = collection.mutable.Buffer.empty[(Int, String, String, Long, String)]
     val batchSizes = collection.mutable.Buffer.empty[Int]
-    while (merges.size < totalMerges) {
-      val want = math.min(maxBatch, totalMerges - merges.size)
-      val top = syms.filter(size(col("syms")) >= 2)
-        .select(col("freq"), explode(expr(
-          """transform(sequence(1, size(syms) - 1),
-            |  i -> struct(element_at(syms, i) AS a,
-            |              element_at(syms, i + 1) AS b))""".stripMargin))
-          .as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(want + 1).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      if (top.isEmpty) {
-        // exhausted pair table: free the live symbol table exactly as
-        // the normal exit does (the seed is a plain persist; later
-        // rounds hold a localCheckpoint whose blocks must be freed
-        // explicitly) — this path must not lean on the runner's sweep
-        if (merges.nonEmpty)
-          org.apache.spark.sql.graft.Bridge.freeLocalCheckpoint(syms)
-        else syms.unpersist()
-        return (merges.toSeq, batchSizes.toSeq)
-      }
-      val accepted = collection.mutable.Buffer(top.head)
-      var open = true
-      for (p <- top.tail.take(want - 1) if open) {
-        val pSyms = Set(p._1, p._2)
-        val ok = accepted.forall { q =>
-          val qSyms = Set(q._1, q._2)
-          pSyms.intersect(qSyms).isEmpty &&
-            !qSyms.contains(p._1 + p._2) && !pSyms.contains(q._1 + q._2) &&
-            p._1 + p._2 != q._1 + q._2
+    // every super-round accepts at least one merge, so totalMerges
+    // rounds always suffice
+    graft.operators.Rounds("bpeRoundsBatched", totalMerges) { rs =>
+      var syms = rs.persisted(words
+        .withColumn("syms", expr(
+          "transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
+        .select("word", "freq", "syms"))
+      rs.fixpoint { _ =>
+        val want = math.min(maxBatch, totalMerges - merges.size)
+        val top = syms.filter(size(col("syms")) >= 2)
+          .select(col("freq"), explode(expr(
+            """transform(sequence(1, size(syms) - 1),
+              |  i -> struct(element_at(syms, i) AS a,
+              |              element_at(syms, i + 1) AS b))""".stripMargin))
+            .as("p"))
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(sum(col("freq")).as("cnt"))
+          .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
+          .limit(want + 1).collect()
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+        top.nonEmpty && {
+          val accepted = collection.mutable.Buffer(top.head)
+          var open = true
+          for (p <- top.tail.take(want - 1) if open) {
+            val pSyms = Set(p._1, p._2)
+            val ok = accepted.forall { q =>
+              val qSyms = Set(q._1, q._2)
+              pSyms.intersect(qSyms).isEmpty &&
+                !qSyms.contains(p._1 + p._2) && !pSyms.contains(q._1 + q._2) &&
+                p._1 + p._2 != q._1 + q._2
+            }
+            if (ok) accepted += p else open = false
+          }
+          // strict-gap trim: everything at or below the first excluded
+          // count could be overtaken (or tied) by a pair the batch changes
+          if (top.length > accepted.length) {
+            val t = top(accepted.length)._3
+            while (accepted.length > 1 && accepted.last._3 <= t)
+              accepted.dropRightInPlace(1)
+          }
+          // vocabulary-clash trim: if an accepted pair's concatenation is
+          // ALREADY a symbol in the current vocabulary, merging it CREATES
+          // new occurrences of that symbol, so pairs touching it can GROW
+          // past later accepted merges — the one case the count bound
+          // (new pairs ≤ an excluded pair's count) does not cover. One
+          // vocab-grain membership scan per super-round finds the clashing
+          // concatenations; everything accepted AFTER the first clash is
+          // dropped (the clash merge itself is still the exact sequential
+          // winner of its own round).
+          if (accepted.length > 1) {
+            val concats = accepted.map(p => p._1 + p._2).toSeq
+            val present = syms
+              .select(explode(col("syms")).as("_s"))
+              .filter(col("_s").isin(concats: _*))
+              .select("_s").distinct().collect().map(_.getString(0)).toSet
+            if (present.nonEmpty) {
+              val firstClash = accepted.indexWhere(p => present.contains(p._1 + p._2))
+              if (firstClash >= 0 && firstClash + 1 < accepted.length)
+                accepted.takeInPlace(firstClash + 1)
+            }
+          }
+          val entries = accepted
+            .map(p => s"'${p._1}|${p._2}', '${p._1}${p._2}'").mkString(", ")
+          syms = rs.next(syms, syms.withColumn("syms", expr(
+            s"""aggregate(syms, CAST(array() AS array<string>), (acc, x) ->
+               |  CASE WHEN size(acc) > 0 AND element_at(map($entries),
+               |            concat(element_at(acc, -1), '|', x)) IS NOT NULL
+               |       THEN concat(slice(acc, 1, size(acc) - 1),
+               |                   array(element_at(map($entries),
+               |                     concat(element_at(acc, -1), '|', x))))
+               |       ELSE concat(acc, array(x)) END)""".stripMargin)))
+          accepted.foreach { p =>
+            merges += ((merges.size + 1, p._1, p._2, p._3, p._1 + p._2))
+          }
+          batchSizes += accepted.size
+          merges.size < totalMerges
         }
-        if (ok) accepted += p else open = false
       }
-      // strict-gap trim: everything at or below the first excluded
-      // count could be overtaken (or tied) by a pair the batch changes
-      if (top.length > accepted.length) {
-        val t = top(accepted.length)._3
-        while (accepted.length > 1 && accepted.last._3 <= t)
-          accepted.dropRightInPlace(1)
-      }
-      // vocabulary-clash trim: if an accepted pair's concatenation is
-      // ALREADY a symbol in the current vocabulary, merging it CREATES
-      // new occurrences of that symbol, so pairs touching it can GROW
-      // past later accepted merges — the one case the count bound
-      // (new pairs ≤ an excluded pair's count) does not cover. One
-      // vocab-grain membership scan per super-round finds the clashing
-      // concatenations; everything accepted AFTER the first clash is
-      // dropped (the clash merge itself is still the exact sequential
-      // winner of its own round).
-      if (accepted.length > 1) {
-        val concats = accepted.map(p => p._1 + p._2).toSeq
-        val present = syms
-          .select(explode(col("syms")).as("_s"))
-          .filter(col("_s").isin(concats: _*))
-          .select("_s").distinct().collect().map(_.getString(0)).toSet
-        if (present.nonEmpty) {
-          val firstClash = accepted.indexWhere(p => present.contains(p._1 + p._2))
-          if (firstClash >= 0 && firstClash + 1 < accepted.length)
-            accepted.takeInPlace(firstClash + 1)
-        }
-      }
-      val entries = accepted
-        .map(p => s"'${p._1}|${p._2}', '${p._1}${p._2}'").mkString(", ")
-      // localCheckpoint, not persist: persist keeps the FULL logical
-      // lineage, and ~10+ chained aggregate-fold projections explode
-      // the analyzer (OOM observed at 50 merges on sf1 — the q203
-      // lineage lesson applied to the learner loop); the eager
-      // checkpoint truncates the plan each super-round and the
-      // superseded blocks are freed explicitly
-      val merged = syms.withColumn("syms", expr(
-        s"""aggregate(syms, CAST(array() AS array<string>), (acc, x) ->
-           |  CASE WHEN size(acc) > 0 AND element_at(map($entries),
-           |            concat(element_at(acc, -1), '|', x)) IS NOT NULL
-           |       THEN concat(slice(acc, 1, size(acc) - 1),
-           |                   array(element_at(map($entries),
-           |                     concat(element_at(acc, -1), '|', x))))
-           |       ELSE concat(acc, array(x)) END)""".stripMargin))
-        .localCheckpoint(true)
-      // first iteration's syms is the plain persisted seed (no
-      // checkpoint blocks to free — freeLocalCheckpoint would throw)
-      if (merges.nonEmpty)
-        org.apache.spark.sql.graft.Bridge.freeLocalCheckpoint(syms)
-      else syms.unpersist()
-      syms = merged
-      accepted.foreach { p =>
-        merges += ((merges.size + 1, p._1, p._2, p._3, p._1 + p._2))
-      }
-      batchSizes += accepted.size
     }
-    // the live table is a localCheckpoint whenever ≥1 round completed
-    // (its blocks live outside the CacheManager — plain unpersist would
-    // silently leak them); only the untouched seed is a plain persist
-    if (merges.nonEmpty)
-      org.apache.spark.sql.graft.Bridge.freeLocalCheckpoint(syms)
-    else syms.unpersist()
     (merges.toSeq, batchSizes.toSeq)
   }
 

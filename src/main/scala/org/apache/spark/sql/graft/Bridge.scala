@@ -2,10 +2,9 @@ package org.apache.spark.sql.graft
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.LogicalRDD
 
 /** Column <-> Expression bridge. Spark 4 made these conversions
   * `private[sql]`; extensions conventionally expose them from a package
@@ -22,29 +21,6 @@ object Bridge {
     */
   def waitListenerBusEmpty(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
-
-  /** Free the storage blocks behind a `localCheckpoint`ed Dataset.
-    * Checkpoint blocks are RDD-level caches OUTSIDE the CacheManager, so
-    * `spark.catalog.clearCache()` never releases them; iterative
-    * algorithms that checkpoint per round must drop superseded rounds
-    * explicitly or dead label tables accumulate for the session's life.
-    *
-    * CONTRACT: the argument must be the checkpointed Dataset ITSELF (its
-    * plan root a single `LogicalRDD`) and the caller its sole owner —
-    * checkpoint blocks cannot be recomputed, so unpersisting a
-    * checkpointed table that a derived plan merely references would
-    * irrecoverably destroy a shared input. Enforced: any other plan
-    * shape throws instead of guessing.
-    */
-  def freeLocalCheckpoint(ds: Dataset[_]): Unit =
-    ds.queryExecution.logical match {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case other => throw new IllegalArgumentException(
-        "freeLocalCheckpoint requires the checkpointed Dataset itself " +
-          s"(plan root LogicalRDD), got ${other.nodeName} — freeing " +
-          "LogicalRDDs reachable from a derived plan could destroy " +
-          "unrecomputable inputs shared with other plans")
-    }
 
   /** Free EVERY persisted RDD in the session — `persist()`ed plans and
     * `localCheckpoint` blocks alike (the latter live outside the

@@ -251,21 +251,23 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
   }
 
   releasedTest("checkpointed iterative ops keep keyed-join rounds (uncut plan inspection)") {
-    // q321/q324/q327/q331 localCheckpoint every round EAGERLY, so their
+    // q321/q324/q327/q331 checkpoint every round EAGERLY, so their
     // query-level plans are LogicalRDD scans and the main guard above
     // would be vacuous on them (round-10 review finding). Inspect the
-    // genuine multi-round join shape via the operators' cut = false
-    // mode at a bounded round count (the uncut lineage is exactly why
-    // production keeps cut = true).
+    // genuine join shape by planning each loop's round step directly on
+    // the uncheckpointed input (two composed steps for the walks).
     import graft.operators.Edges
+    import org.apache.spark.sql.functions.col
     val e0 = Edges.coPurchase(spark, sfDir).persist()
-    val seeds = e0.select(org.apache.spark.sql.functions.col("a").as("walk_id"),
-      org.apache.spark.sql.functions.col("a").as("node")).limit(5)
+    val nodes = e0.select(col("a").as("node"))
+      .unionByName(e0.select(col("b").as("node"))).distinct()
+    val seeds = e0.select(col("a").as("walk_id"), col("a").as("node"),
+      col("a").cast("string").as("path")).limit(5)
     val plans = Seq(
-      "ktruss" -> Edges.ktruss(e0, k = 3, rounds = 1, cut = false).last,
-      "matching" -> Edges.greedyMatching(e0, rounds = 1, cut = false).head,
-      "mis" -> Edges.maximalIndependentSet(e0, rounds = 1, cut = false).head,
-      "walks" -> Edges.randomWalks(e0, seeds, steps = 2, cut = false))
+      "ktruss" -> Edges.ktrussStep(e0, k = 3),
+      "matching" -> Edges.matchingStep(e0),
+      "mis" -> Edges.misStep(e0, nodes),
+      "walks" -> Edges.walkStep(Edges.walkStep(seeds, e0, 1), e0, 2))
     for ((name, df) <- plans) {
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("Join"), s"$name uncut plan shows no join - vacuous:\n$p")

@@ -171,7 +171,7 @@ class Round13Spec extends AnyFunSuite with SparkTestBase {
     assert(drift.isEmpty, s"second apply changed text: ${drift.mkString("; ")}")
   }
 
-  test("over-window regions are NOT one-pass idempotent; the fixed-point helper converges") {
+  releasedTest("over-window regions are NOT one-pass idempotent; the fixed-point helper converges") {
     import spark.implicits._
     // A 120-token exact duplicate: pass 1 reports only the left-maximal
     // head capped at window(64) — interior anchors re-surface the left
@@ -195,10 +195,20 @@ class Round13Spec extends AnyFunSuite with SparkTestBase {
       once.select(col("id"), col("text_kept").as("text")), "text", "id")
     assert(pass2.agg(sum("n_cut")).head.getLong(0) > 0L,
       "expected the surviving tail to be re-reported")
+    // pass 1 still cuts, so one pass is not a fixed point: the bound throws
+    intercept[IllegalStateException](operators.Dedup.exactSubstringApplyToFixedPoint(
+      corpus, "text", "id", maxPasses = 1))
     // the fixed-point helper excises the full region (2 passes here):
-    // original token count, total cuts = the whole doc, empty survivor
+    // original token count, total cuts = the whole doc, empty survivor;
+    // it frees its superseded passes, so only the result's blocks stay
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
     val fp = operators.Dedup.exactSubstringApplyToFixedPoint(
       corpus, "text", "id")
+    val resultIds = fp.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id }.toSet
+    assert(persisted -- before == resultIds,
+      s"left persisted: ${persisted -- before}, result reads $resultIds")
     val rows = fp.collect().map(r => r.getLong(0) -> r).toMap
     assert(rows(1L).getLong(2) == 0L, s"doc 1 must survive whole: ${rows(1L)}")
     assert(rows(2L).getLong(1) == 120L && rows(2L).getLong(2) == 120L,
