@@ -1,16 +1,17 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.{IndexWriter, InvertedIndex, Tokenizer}
+import graft.operators.{IndexWriter, InvertedIndex}
 import graft.sources.Corpus
 
 /** End-to-end inverted-index build — the reference's entire program
   * (`src/main.cpp:30-59`) as one declarative Spark plan:
   *
-  *   manifest (driver) → per-task document reads → explode(split) → clean/lower → filter
-  *   → per-doc distinct (partial agg) → groupBy(word) collect_set (final agg)
-  *   → letter column → format → letter repartition → sorted letter runs,
-  *   each written by its task straight to a staged `<letter>.txt`.
+  *   manifest (driver) → per-task document reads, each document's distinct
+  *   words streamed from its file → partial postings runs per word
+  *   → word shuffle → merged postings runs → letter column → format
+  *   → letter repartition → sorted letter runs, each written by its task
+  *   straight to a staged `<letter>.txt`.
   *
   * The reference's M mapper / R reducer threads, mutex work queue and
   * barriers all map onto Spark's task scheduler and the two shuffle
@@ -21,15 +22,14 @@ import graft.sources.Corpus
   */
 object IndexJob {
 
-  /** Build the index DataFrame `(word, postings, df, letter)` for a corpus.
-    * Raw tokens feed the aggregation directly — collect_set dedups, so the
-    * plan has ONE exchange (word agg), not two (see
-    * InvertedIndex.buildFromTokens).
+  /** Build the index DataFrame `(word, postings, df, letter)` for a corpus:
+    * each document indexed once, as its distinct words
+    * ([[graft.sources.Corpus.documentWords]]), into the word aggregation
+    * ([[graft.operators.InvertedIndex.buildFromTokens]]) — ONE exchange.
+    * Building it runs no Spark job and reads no document.
     */
-  def index(spark: SparkSession, manifestPath: String, baseDir: String): DataFrame = {
-    val docs = Corpus.read(spark, manifestPath, baseDir)
-    InvertedIndex.buildFromTokens(Tokenizer.tokens(docs, "line", Seq("doc_id")))
-  }
+  def index(spark: SparkSession, manifestPath: String, baseDir: String): DataFrame =
+    InvertedIndex.buildFromTokens(Corpus.documentWords(spark, manifestPath, baseDir))
 
   /** Build and write `a.txt`…`z.txt` under `outDir` (golden-compatible);
     * `outDir` must be local and visible to every task.

@@ -1,5 +1,6 @@
 package graft.functions
 
+import java.util.Arrays
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
@@ -12,18 +13,15 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native tokenizer Generator (the engine's UDTF surface): one pass over
   * the line bytes that fuses the reference's whole inner loop —
-  * whitespace split (`fin >> word`, `/root/reference/src/functions.cpp:77`),
+  * whitespace split (`fin >> word`, reference `src/functions.cpp:77`),
   * non-letter deletion + lowercase (`:39-46,81`), and empty-token drop
-  * (`:83-84`) — emitting one row per surviving word.
+  * (`:83-84`) — emitting one row per surviving word. The byte rules are
+  * [[WordScanner]]'s, shared with [[DocumentWords]].
   *
   * Vs the composed built-ins (`explode(split(line, "\\s+"))` →
   * `ascii_clean_lower` → `filter`): no regex engine, no intermediate
   * token array, no post-filter — a single byte loop with one small
-  * allocation per emitted word. Whitespace is the C `isspace` set
-  * {space, \t, \n, \v, \f, \r}, matching both `>>` and Java's `\s`;
-  * non-letter, non-whitespace bytes are skipped WITHIN a token (so
-  * `x1y` → `xy`), and multi-byte UTF-8 is stripped byte-wise exactly
-  * like C-locale `isalpha`.
+  * allocation per emitted word.
   */
 case class Tokenize(child: Expression)
     extends UnaryExpression with Generator with CodegenFallback {
@@ -42,51 +40,14 @@ case class Tokenize(child: Expression)
     val line = child.eval(input).asInstanceOf[UTF8String]
     if (line == null) Nil
     else {
-      val in = line.getBytes
       val out = new ArrayBuffer[InternalRow]()
-      var wordStart = -1 // first letter byte of the current word, -1 = none
-      var clean = true   // current word has only lowercase letters so far
-      var buf: ArrayBuffer[Byte] = null
-      var i = 0
-      while (i <= in.length) {
-        val b = if (i < in.length) in(i) else ' '.toByte // virtual trailing space
-        val isWs = b == ' ' || (b >= 9 && b <= 13)
-        val lower = b >= 'a' && b <= 'z'
-        val upper = b >= 'A' && b <= 'Z'
-        if (isWs) {
-          // token boundary: emit pending word
-          if (buf != null && buf.nonEmpty) {
-            out += InternalRow(UTF8String.fromBytes(buf.toArray))
-          } else if (buf == null && wordStart >= 0) {
-            out += InternalRow(UTF8String.fromBytes(in, wordStart, i - wordStart))
-          }
-          wordStart = -1; clean = true; buf = null
-        } else if (lower || upper) {
-          if (clean && lower && buf == null) {
-            if (wordStart < 0) wordStart = i // contiguous lowercase run
-          } else {
-            if (buf == null) {
-              buf = new ArrayBuffer[Byte]()
-              if (wordStart >= 0) { var k = wordStart; while (k < i) { buf += in(k); k += 1 } }
-              wordStart = 0 // mark started
-              clean = false
-            }
-            buf += (if (upper) (b + 32).toByte else b)
-          }
-        } else {
-          // non-letter, non-whitespace: skipped within the token; if we were
-          // tracking a contiguous lowercase slice, fall back to buffering
-          if (buf == null && wordStart >= 0) {
-            buf = new ArrayBuffer[Byte]()
-            var k = wordStart; while (k < i) { buf += in(k); k += 1 }
-            clean = false
-          } else if (buf == null) {
-            // token starts with junk; remember that the token has begun
-            // (nothing buffered yet, wordStart stays -1 → handled by buf)
-          }
-        }
-        i += 1
+      val words = new WordScanner {
+        def word(bytes: Array[Byte], len: Int): Unit =
+          out += InternalRow(UTF8String.fromBytes(Arrays.copyOf(bytes, len)))
       }
+      val bytes = line.getBytes
+      words.feed(bytes, bytes.length)
+      words.end()
       out
     }
   }
@@ -99,4 +60,43 @@ object Tokenize {
   /** Column-level wrapper (use in `select` — plans a Generate). */
   def apply(c: Column): Column =
     Bridge.column(Tokenize(Bridge.expression(c)))
+}
+
+/** The reference's word rules over raw bytes, the one copy every reader
+  * of raw text uses. A token is a maximal run of non-whitespace bytes,
+  * whitespace being the C `isspace` set {space, \t, \n, \v, \f, \r}
+  * (`fin >> word`, and Java's `\s`). Its word is its ASCII letters,
+  * lowercased and joined (`x1y` → `xy`, `don't` → `dont`); every other
+  * byte, multi-byte UTF-8 included, is dropped as C-locale `isalpha`
+  * drops it, and a token with no letter is no word.
+  *
+  * The scanner keeps the pending word between [[feed]] calls, so a file
+  * can be fed in chunks and a word may straddle two of them.
+  */
+private[graft] abstract class WordScanner {
+  private var pending = new Array[Byte](32)
+  private var len = 0
+
+  /** Called once per word: its bytes are `bytes(0 until len)`, valid only
+    * until the scanner is fed again.
+    */
+  protected def word(bytes: Array[Byte], len: Int): Unit
+
+  /** Scan `bytes(0 until n)`. */
+  final def feed(bytes: Array[Byte], n: Int): Unit = {
+    var i = 0
+    while (i < n) {
+      val b = bytes(i)
+      if (b == ' ' || (b >= 9 && b <= 13)) end()
+      else if ((b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z')) {
+        if (len == pending.length) pending = Arrays.copyOf(pending, 2 * len)
+        pending(len) = (b | 0x20).toByte // ASCII letters: set the lowercase bit
+        len += 1
+      }
+      i += 1
+    }
+  }
+
+  /** End the pending token, as whitespace or the end of the text does. */
+  final def end(): Unit = if (len > 0) { word(pending, len); len = 0 }
 }

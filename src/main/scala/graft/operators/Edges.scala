@@ -427,10 +427,11 @@ object Edges {
   }
 
   /** The closed (x, y, z) triangle triples behind [[triangleCount]] —
-    * each triangle exactly once, x its minimum-(degree, id) vertex.
+    * each triangle exactly once, x its minimum-(degree, id) vertex — of
+    * the degree-oriented edges `ed` ([[orientByDegree]]), which the plan
+    * reads three times: callers persist it.
     */
-  private def triangleTriples(e: DataFrame): DataFrame = {
-    val ed = orientByDegree(e).persist()
+  private def triangleTriples(ed: DataFrame): DataFrame = {
     val wedges = ed.select(col("src"), col("dst").as("y"))
       .join(ed.select(col("src"), col("dst").as("z")), Seq("src"))
       .filter(col("y") < col("z"))
@@ -453,17 +454,19 @@ object Edges {
     * lifecycle (the query runner's sweep frees it).
     */
   def triangleCount(e: DataFrame): DataFrame =
-    triangleTriples(e).agg(count(lit(1)).as("n_triangles"))
+    triangleTriples(orientByDegree(e).persist()).agg(count(lit(1)).as("n_triangles"))
 
-  /** Per-edge triangle SUPPORT (a, b, sup) over a canonical (a < b)
-    * distinct edge list: each degree-oriented closed triple credits its
-    * three id-canonicalized edges, one edge-keyed count agg. Edges in
-    * no triangle produce no row (support 0 by absence) — the truss
-    * peel's semi-join reads that absence as removal. Same
-    * power-law-safe wedge plan as [[triangleCount]].
+  /** Per-edge triangle SUPPORT (a, b, sup) over the degree-oriented
+    * edges `ed` ([[orientByDegree]]) of a canonical (a < b) distinct edge
+    * list: each closed triple credits its three id-canonicalized edges,
+    * one edge-keyed count agg. Edges in no triangle produce no row
+    * (support 0 by absence) — the truss peel's semi-join reads that
+    * absence as removal. Same power-law-safe wedge plan as
+    * [[triangleCount]]; the plan reads `ed` three times, so callers
+    * persist it.
     */
-  def edgeSupport(e: DataFrame): DataFrame =
-    triangleTriples(e)
+  def edgeSupport(ed: DataFrame): DataFrame =
+    triangleTriples(ed)
       .select(explode(array(
         struct(least(col("src"), col("y")).as("a"),
           greatest(col("src"), col("y")).as("b")),
@@ -480,7 +483,9 @@ object Edges {
     * because a dropped edge kills its triangles' support next round.
     * Returns the round-0..rounds edge sets (round 0 = input), each a
     * [[Rounds]] checkpoint: a round reads its predecessor four times
-    * (both wedge sides, the closure canon, the semi-join left).
+    * (both wedge sides, the closure canon, the semi-join left). The
+    * round's degree-oriented edges are persisted for the wedge plan and
+    * freed as soon as its checkpoint is material.
     * Early exit (r17): each round's survivor set is a SUBSET of its
     * predecessor (the semi-join only removes), so equal counts ⟹
     * identical sets ⟹ every later round is the same edge set. Once a
@@ -501,7 +506,9 @@ object Edges {
       var stable = false
       rs.each { _ =>
         if (!stable) {
-          val nxt = rs.keep(rs.checkpoint(ktrussStep(cur, k)))
+          val ed = rs.persisted(orientByDegree(cur))
+          val nxt = rs.keep(rs.checkpoint(ktrussStep(cur, ed, k)))
+          rs.free(ed) // the checkpoint no longer reads it
           stable = rs.sameRows(cur, nxt)
           cur = nxt
         }
@@ -511,9 +518,11 @@ object Edges {
     }
   }
 
-  /** One k-truss round: the edges of `cur` in at least k−2 triangles of `cur`. */
-  private[graft] def ktrussStep(cur: DataFrame, k: Int): DataFrame =
-    cur.join(edgeSupport(cur).filter(col("sup") >= k - 2), Seq("a", "b"), "left_semi")
+  /** One k-truss round: the edges of `cur` in at least k−2 triangles of
+    * `cur`, whose degree-oriented edges are `ed`.
+    */
+  private[graft] def ktrussStep(cur: DataFrame, ed: DataFrame, k: Int): DataFrame =
+    cur.join(edgeSupport(ed).filter(col("sup") >= k - 2), Seq("a", "b"), "left_semi")
 
   /** Per-node triangle participation (node, n_tri): every closed triple
     * credits its three corners — Σ n_tri = 3 × [[triangleCount]] by
@@ -521,7 +530,7 @@ object Edges {
     * node-keyed hash agg; the input to local clustering coefficients.
     */
   def trianglesPerNode(e: DataFrame): DataFrame =
-    triangleTriples(e)
+    triangleTriples(orientByDegree(e).persist())
       .select(explode(array(col("src"), col("y"), col("z"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("n_tri"))
 
@@ -603,20 +612,23 @@ object Edges {
     * edges + one self-equi-join of the node-grain proposal table on
     * (u,v)=(v,u) + two node-keyed anti-joins — never all-pairs. The
     * survivor set is a [[Rounds]] checkpoint (read three times by round
-    * r+1: both symmetrization arms + the anti-join left).
+    * r+1: both symmetrization arms + the anti-join left); the last round
+    * computes none.
     */
   def greedyMatching(e0: DataFrame, rounds: Int): Seq[DataFrame] =
     Rounds("greedyMatching", rounds) { rs =>
       var cur = rs.checkpoint(e0)
       val out = scala.collection.mutable.Buffer.empty[DataFrame]
-      rs.each { _ =>
+      rs.each { r =>
         val matched = rs.keep(rs.checkpoint(matchingStep(cur), "matched"))
         out += matched
-        val mn = matched.select(col("a").as("n"))
-          .unionByName(matched.select(col("b").as("n")))
-        cur = rs.next(cur, cur
-          .join(mn, cur("a") === mn("n"), "left_anti")
-          .join(mn, cur("b") === mn("n"), "left_anti"))
+        if (r < rounds) { // nothing reads the last round's survivors
+          val mn = matched.select(col("a").as("n"))
+            .unionByName(matched.select(col("b").as("n")))
+          cur = rs.next(cur, cur
+            .join(mn, cur("a") === mn("n"), "left_anti")
+            .join(mn, cur("b") === mn("n"), "left_anti"))
+        }
       }
       out.toSeq
     }
@@ -655,7 +667,7 @@ object Edges {
     * anti-join to find the isolated, one neighbor expansion join of the
     * (small) MIS set + two node-keyed anti-joins for the removal;
     * survivor edges and nodes are [[Rounds]] checkpoints (each read ≥3
-    * times next round).
+    * times next round); the last round computes none.
     */
   def maximalIndependentSet(e0: DataFrame, rounds: Int): Seq[DataFrame] =
     Rounds("maximalIndependentSet", rounds) { rs =>
@@ -664,18 +676,20 @@ object Edges {
         .unionByName(e0.select(col("b").as("node")))
         .distinct(), "nodes")
       val out = scala.collection.mutable.Buffer.empty[DataFrame]
-      rs.each { _ =>
+      rs.each { r =>
         val mis = rs.keep(rs.checkpoint(misStep(edges, nodes), "mis"))
         out += mis
-        val dir = directed(edges)
-        val removed = mis
-          .unionByName(dir.join(mis, dir("u") === mis("node"))
-            .select(dir("v").as("node")))
-          .distinct()
-        nodes = rs.next(nodes, nodes.join(removed, Seq("node"), "left_anti"), "nodes")
-        edges = rs.next(edges, edges
-          .join(nodes.select(col("node").as("a")), Seq("a"), "left_semi")
-          .join(nodes.select(col("node").as("b")), Seq("b"), "left_semi"), "edges")
+        if (r < rounds) { // nothing reads the last round's survivors
+          val dir = directed(edges)
+          val removed = mis
+            .unionByName(dir.join(mis, dir("u") === mis("node"))
+              .select(dir("v").as("node")))
+            .distinct()
+          nodes = rs.next(nodes, nodes.join(removed, Seq("node"), "left_anti"), "nodes")
+          edges = rs.next(edges, edges
+            .join(nodes.select(col("node").as("a")), Seq("a"), "left_semi")
+            .join(nodes.select(col("node").as("b")), Seq("b"), "left_semi"), "edges")
+        }
       }
       out.toSeq
     }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.CollectPostings
 
 /** Inverted-index construction (reference `src/functions.cpp:104-127`):
   * word → sorted set of distinct doc IDs ("postings"), plus the derived
@@ -14,28 +15,28 @@ import org.apache.spark.sql.functions._
   *     `z.txt` 33 lines) and cap parallelism at 26. `letter` is carried
   *     only as a derived output/partition column, which preserves output
   *     semantics exactly while scaling to any partition count (SURVEY §4.3);
-  *   - `collect_set` + `sort_array` reproduces `std::set<int>` union
-  *     (ascending, unique) deterministically;
-  *   - at 100 TB, per-word postings for stop-words grow unboundedly; the
-  *     aggregation spills (Spark `ObjectHashAggregate` → sort-based
-  *     fallback), and df-only consumers should aggregate a
-  *     partial-aggregatable `count(distinct doc_id)` instead, which never
-  *     materializes postings.
+  *   - postings are collected by [[graft.functions.CollectPostings]] as
+  *     primitive sorted runs of `long`s, ascending and unique like the
+  *     reference's `std::set<int>` union, with no boxed set per word and
+  *     no `sort_array` after it. A stop word's state still grows with its
+  *     document frequency (8 bytes a document); df-only consumers should
+  *     aggregate a partial-aggregatable `count(distinct doc_id)` instead,
+  *     which never materializes postings.
   */
 object InvertedIndex {
 
-  /** Raw `(doc_id, word)` tokens → `(word, postings, df, letter)`.
+  /** `(doc_id, word)` rows → `(word, postings, df, letter)`.
     * Postings are ascending distinct doc IDs; `letter` = first letter.
-    * One shuffle: `collect_set` is itself distinct, so no `dropDuplicates`
-    * exchange is needed ahead of the word aggregation — the map-side
-    * partial `collect_set` performs the per-doc dedup the reference does
-    * in its `partial_map` (`src/functions.cpp:75-87`), and only set
-    * partials cross the wire.
+    * One shuffle, on `word`: the aggregate has set semantics, so raw
+    * tokens and per-document distinct pairs ([[graft.sources.Corpus.documentWords]],
+    * the reference's per-file `partial_map`, `src/functions.cpp:75-87`)
+    * give the same index; distinct pairs just feed it fewer rows. No
+    * `dropDuplicates` exchange is needed ahead of it.
     */
   def buildFromTokens(tokens: DataFrame): DataFrame =
     tokens
       .groupBy("word")
-      .agg(sort_array(collect_set(col("doc_id"))).as("postings"))
+      .agg(CollectPostings(col("doc_id")).as("postings"))
       .withColumn("df", size(col("postings")).cast("long"))
       .withColumn("letter", substring(col("word"), 1, 1))
 

@@ -226,9 +226,10 @@ object Similarity {
           .agg(sum(greatest(col("s") - col("cov"), lit(0L))).as("gain_fp"))
         val win = rs.keep(rs.checkpoint(
           gains.orderBy(col("gain_fp").desc, col("c").asc).limit(1), "win"))
+        // a union of kept one-row checkpoints: nothing to materialize
         selected =
           if (selected == null) win.select("c")
-          else rs.next(selected, selected.unionByName(win.select("c")), "selected")
+          else selected.unionByName(win.select("c"))
         cov = rs.keep(rs.next(cov, cov
           .join(scores.join(broadcast(win.select("c")), Seq("c"), "left_semi")
             .select(col("x"), col("s")), Seq("x"))

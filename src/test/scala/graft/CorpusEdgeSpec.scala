@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.executor.TaskMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{IndexWriter, InvertedIndex, Tokenizer}
@@ -15,7 +15,8 @@ import graft.sources.Corpus
   * produce exactly the reference's semantics (all 26 letter files, empty
   * where no words, df-ordered rows). Also pins how documents are found
   * and read: relative base directories, names that URL-encode, missing
-  * files, line ends, invalid UTF-8 and the scan's input metrics; and how
+  * files, line ends, invalid UTF-8, the scans' input metrics and the
+  * per-document distinct words the index build reads; and how
   * the letter sink replaces stale output, cleans its staging dir and
   * reports its output metrics.
   */
@@ -99,8 +100,23 @@ class CorpusEdgeSpec extends AnyFunSuite with SparkTestBase {
   test("a manifest entry naming a missing file fails the build with its path") {
     val base = text("d1.txt" -> "pear", "gone.txt" -> "plum")
     Files.delete(base.resolve("gone.txt"))
+    val manifest = base.resolve("manifest.txt").toString
+    // the driver reads only the manifest: building and planning the
+    // index runs no job and opens no document (a read folded into the
+    // local manifest relation would throw here, on the driver)
+    val jobs = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bridge.waitListenerBusEmpty(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      IndexJob.index(spark, manifest, base.toString).queryExecution.executedPlan
+      Bridge.waitListenerBusEmpty(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, "building and planning the index must run no job")
     val out = Files.createTempDirectory("graft-edge-out")
-    val e = intercept[Exception](index(base.resolve("manifest.txt").toString, base.toString, out))
+    val e = intercept[Exception](index(manifest, base.toString, out))
     val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
     assert(messages.exists(m => m != null && m.contains(base.resolve("gone.txt").toString)), e)
     assert(!Files.exists(stagingOf(out)), "a failed build must not leave its staging dir")
@@ -141,16 +157,73 @@ class CorpusEdgeSpec extends AnyFunSuite with SparkTestBase {
     assert(got('w') == "wax:[2]")
   }
 
-  test("the document scan reports every corpus byte and line to listeners") {
+  /** Four small documents, LF, CRLF and bare-CR lines and one empty file. */
+  private def metered(): (Path, Long) = {
     val base = text("d1.txt" -> "alpha beta\ngamma\n", "d2.txt" -> "delta", "d3.txt" -> "", "d4.txt" -> "x\r\ny\rz")
-    val files = (1 to 4).map(i => base.resolve(s"d$i.txt"))
+    base -> (1 to 4).map(i => Files.size(base.resolve(s"d$i.txt"))).sum
+  }
+
+  test("the document scan reports every corpus byte and line to listeners") {
+    val (base, size) = metered()
     val docs = Corpus.read(spark, base.resolve("manifest.txt").toString, base.toString)
     val Seq(bytes, records) = taskTotals(_.inputMetrics.bytesRead, _.inputMetrics.recordsRead) {
       val out = Files.createTempDirectory("graft-edge-out").toString
       IndexWriter.write(InvertedIndex.buildFromTokens(Tokenizer.tokens(docs, "line", Seq("doc_id"))), out)
     }
-    assert(bytes == files.map(Files.size).sum)
+    assert(bytes == size)
     assert(records == 6) // 2 + 1 + 0 + 3 lines
+  }
+
+  test("the index build reports every corpus byte and document to listeners") {
+    val (base, size) = metered()
+    val Seq(bytes, records) = taskTotals(_.inputMetrics.bytesRead, _.inputMetrics.recordsRead) {
+      index(base)
+    }
+    assert(bytes == size)
+    assert(records == 4) // one per document
+  }
+
+  /** `Corpus.documentWords` of the corpus at `base`, and the deduplicated
+    * `Tokenizer.tokens` over `Corpus.read` it must equal, sorted.
+    */
+  private def bothWords(base: Path, manifest: String = "manifest.txt"): (Seq[(Long, String)], Seq[(Long, String)]) = {
+    val s = spark
+    import s.implicits._
+    val m = base.resolve(manifest).toString
+    val words = Corpus.documentWords(spark, m, base.toString).as[(Long, String)].collect().toSeq.sorted
+    val tokens = Tokenizer.tokens(Corpus.read(spark, m, base.toString), "line", Seq("doc_id"))
+      .dropDuplicates().as[(Long, String)].collect().toSeq.sorted
+    (words, tokens)
+  }
+
+  test("document words equal the deduplicated line tokens on every edge corpus") {
+    def bytes(parts: Any*): Array[Byte] = parts.flatMap {
+      case s: String => s.getBytes(UTF_8).toSeq
+      case b: Int => Seq(b.toByte)
+    }.toArray
+    val corpora = Seq(
+      Paths.get(getClass.getResource("/index_small").toURI) -> "test_small.txt",
+      text("d1.txt" -> "apple apple APPLE banana", "d2.txt" -> "!!! ??? ... 123 456",
+        "d3.txt" -> "", "d4.txt" -> "a1pple z9z") -> "manifest.txt",
+      text("d1.txt" -> "quince\r\nraisin sage\rtart\r\n", "d2.txt" -> "sage\r\r\nugli") -> "manifest.txt",
+      corpus(Seq("d1.txt" -> bytes("ho", 0xC3, "ney bee", 0xFF, 0xFE, "s"),
+        "d2.txt" -> bytes(0xE2, 0x80, "vine ", 0xC3, "\n", 0x80, "wax"))) -> "manifest.txt")
+    for ((base, manifest) <- corpora) {
+      val (words, tokens) = bothWords(base, manifest)
+      assert(words.nonEmpty && words == tokens, base)
+    }
+  }
+
+  test("a word straddling two read chunks is one word") {
+    val chunk = graft.functions.DocumentWords.ChunkBytes
+    // "Stra-ddle" starts 4 bytes before the first chunk ends
+    val head = ("ab " * (chunk / 3)).take(chunk - 4).padTo(chunk - 4, ' ')
+    val tail = " tail\n" + "cd " * chunk
+    val base = text("big.txt" -> (head + "Stra-ddle" + tail), "small.txt" -> "straddle ab")
+    assert(Files.size(base.resolve("big.txt")) > 2 * chunk)
+    val (words, tokens) = bothWords(base)
+    assert(words == tokens)
+    assert(words == Seq(1L -> "ab", 1L -> "cd", 1L -> "straddle", 1L -> "tail", 2L -> "ab", 2L -> "straddle"))
   }
 
   test("the letter sink reports every output byte and row to listeners") {

@@ -170,6 +170,31 @@ class FunctionsSpec extends AnyFunSuite with SparkTestBase {
     assert(native == composed)
   }
 
+  test("collect_postings: ascending distinct ids from unsorted runs, merged runs and empty groups") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.LongType
+    import graft.functions.CollectPostings
+    val f = CollectPostings(BoundReference(0, LongType, nullable = true))
+    def run(ids: Any*) = ids.foldLeft(f.createAggregationBuffer())((r, v) => f.update(r, InternalRow(v)))
+    def postings(r: CollectPostings.Run) = f.eval(r).asInstanceOf[ArrayData].toLongArray().toSeq
+    assert(postings(run(9L, 3L, 3L, 7L, null, 1L, 9L)) == Seq(1L, 3L, 7L, 9L))
+    // duplicates across buffers, each shipped as its serialized run
+    def shipped(ids: Long*) = f.deserialize(f.serialize(run(ids: _*)))
+    assert(postings(f.merge(shipped(5L, 2L, 8L), shipped(8L, 1L, 5L, 5L))) == Seq(1L, 2L, 5L, 8L))
+    assert(postings(f.merge(shipped(1L, 2L), shipped(3L, 4L))) == Seq(1L, 2L, 3L, 4L))
+    assert(postings(f.createAggregationBuffer()).isEmpty)
+    // through the planned partial and final aggregation, and a global
+    // aggregate over no rows
+    val df = Seq((4L, "x"), (1L, "x"), (3L, "y"), (1L, "x"), (2L, "x"), (4L, "x"))
+      .toDF("doc_id", "word").repartition(3)
+    val got = df.groupBy("word").agg(CollectPostings(col("doc_id")).as("p"))
+      .as[(String, Seq[Long])].collect().toMap
+    assert(got == Map("x" -> Seq(1L, 2L, 4L), "y" -> Seq(3L)))
+    assert(df.filter(lit(false)).agg(CollectPostings(col("doc_id"))).as[Seq[Long]].head().isEmpty)
+  }
+
   test("SimplifyAsciiCleanLower removes redundant applications") {
     import graft.plans.SimplifyAsciiCleanLower
     val prev = spark.experimental.extraOptimizations

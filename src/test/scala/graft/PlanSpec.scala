@@ -264,7 +264,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     val seeds = e0.select(col("a").as("walk_id"), col("a").as("node"),
       col("a").cast("string").as("path")).limit(5)
     val plans = Seq(
-      "ktruss" -> Edges.ktrussStep(e0, k = 3),
+      "ktruss" -> Edges.ktrussStep(e0, Edges.orientByDegree(e0), k = 3),
       "matching" -> Edges.matchingStep(e0),
       "mis" -> Edges.misStep(e0, nodes),
       "walks" -> Edges.walkStep(Edges.walkStep(seeds, e0, 1), e0, 2))

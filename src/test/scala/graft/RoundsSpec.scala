@@ -80,10 +80,46 @@ class RoundsSpec extends SparkTestBase with TimeLimits {
     val stable = Edges.ktruss(e, k = 3, rounds = 3)
     assert(cascade(3) eq cascade(4))
     assert((stable(1) eq stable(2)) && (stable(2) eq stable(3)))
-    assert((cascade ++ stable).flatMap(checkpointIds).toSet.subsetOf(persistedIds -- before),
-      "a returned round was freed")
+    // each round's oriented-edge cache is freed once its checkpoint is
+    // material: what stays persisted is exactly the returned rounds
+    assert((cascade ++ stable).flatMap(checkpointIds).toSet == persistedIds -- before,
+      s"left persisted: ${persistedIds -- before}")
     assert(cascade.map(_.collect().length) == Seq(5, 1, 0, 0, 0))
     assert(stable.map(_.collect().length) == Seq(5, 5, 5, 5))
+  }
+
+  /** The census entries of `loop` while `body` runs. */
+  private def censusOf(loop: String)(body: => Unit): Seq[String] = {
+    val census = new Rounds.Census(spark)
+    try {
+      body
+      Bridge.waitListenerBusEmpty(spark)
+      census.take().map(_.name).filter(_.startsWith(s"$loop:"))
+    } finally spark.listenerManager.unregister(census)
+  }
+
+  releasedTest("matching and MIS checkpoint no survivors after their last round") {
+    val s = spark
+    import s.implicits._
+    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
+    val matching = censusOf("greedyMatching") {
+      Edges.greedyMatching(path, rounds = 2).foreach(_.collect())
+    }
+    assert(matching == Seq("greedyMatching:0", "greedyMatching:1:matched", "greedyMatching:1",
+      "greedyMatching:2:matched"), matching.mkString("\n"))
+    val mis = censusOf("maximalIndependentSet") {
+      Edges.maximalIndependentSet(path, rounds = 2).foreach(_.collect())
+    }
+    assert(mis == Seq("0:edges", "0:nodes", "1:mis", "1:nodes", "1:edges", "2:mis")
+      .map("maximalIndependentSet:" + _), mis.mkString("\n"))
+  }
+
+  releasedTest("q328 checkpoints each step's winner and coverage, never the selected union") {
+    val fl = censusOf("facilityLocationSelect") {
+      SparkEntry.queries("q328_coreset_select")(spark, sfDir).queryExecution.toRdd.count()
+    }
+    assert(fl == (Seq("0:scores", "0:cov") ++ (1 to 4).flatMap(r => Seq(s"$r:win", s"$r:cov")))
+      .map("facilityLocationSelect:" + _), fl.mkString("\n"))
   }
 
   releasedTest("the census names one entry per CC round of q38, ending at n_changed 0") {
