@@ -1,8 +1,6 @@
 package graft.functions
 
 import java.net.URI
-import java.util.Arrays
-import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
@@ -11,7 +9,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryEx
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** Native Generator: the distinct words of the document at a path URI,
@@ -19,11 +16,12 @@ import org.apache.spark.util.SerializableConfiguration
   * (`src/functions.cpp:75-87`) at the source.
   *
   * The task opens the file through Hadoop's `FileSystem` with `conf` and
-  * streams it in [[DocumentWords.ChunkBytes]] chunks through the
-  * tokenizer's [[WordScanner]], so a document costs its vocabulary, not
-  * its size, and line ends are whitespace like any other. Every byte read
-  * counts toward the task's input metrics, one record per document; a
-  * missing file fails the task with its path.
+  * streams it in [[DocumentWords.ChunkBytes]] chunks through a
+  * [[WordSet]] (the tokenizer's [[WordScanner]] rules and the dedup
+  * [[DistinctWords]] uses for a text in a row), so a document costs its
+  * vocabulary, not its size, and line ends are whitespace like any
+  * other. Every byte read counts toward the task's input metrics, one
+  * record per document; a missing file fails the task with its path.
   *
   * It is a Generator, not a plain expression, so the optimizer never
   * folds it into the driver's local manifest relation: the files are read
@@ -46,12 +44,7 @@ case class DocumentWords(child: Expression, conf: SerializableConfiguration)
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val path = new Path(new URI(child.eval(input).toString))
-    val distinct = new java.util.HashSet[UTF8String]()
-    val words = new WordScanner {
-      def word(bytes: Array[Byte], len: Int): Unit =
-        if (!distinct.contains(UTF8String.fromBytes(bytes, 0, len)))
-          distinct.add(UTF8String.fromBytes(Arrays.copyOf(bytes, len)))
-    }
+    val words = new WordSet
     val in = path.getFileSystem(conf.value).open(path)
     var read = 0L
     try {
@@ -62,10 +55,9 @@ case class DocumentWords(child: Expression, conf: SerializableConfiguration)
         read += n
         n = in.read(chunk)
       }
-      words.end()
     } finally in.close()
     Bridge.addInputRead(read)
-    distinct.iterator.asScala.map(w => InternalRow(w))
+    words.rows()
   }
 
   override protected def withNewChildInternal(newChild: Expression): DocumentWords =

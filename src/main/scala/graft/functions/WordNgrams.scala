@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets
+import java.util.Arrays
 import scala.collection.mutable
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
@@ -121,20 +123,10 @@ object WordNgrams {
     */
   private[graft] def cleanWords(in: Array[Byte]): Array[String] = {
     val words = mutable.ArrayBuffer.empty[String]
-    val buf = new java.lang.StringBuilder
-    var i = 0
-    while (i <= in.length) {
-      val b = if (i < in.length) in(i) else ' '.toByte
-      val isWs = b == ' ' || (b >= 9 && b <= 13)
-      if (isWs) {
-        if (buf.length > 0) { words += buf.toString; buf.setLength(0) }
-      } else if (b >= 'a' && b <= 'z' || b >= '0' && b <= '9') {
-        buf.append(b.toChar)
-      } else if (b >= 'A' && b <= 'Z') {
-        buf.append((b + 32).toChar)
-      }
-      i += 1
-    }
+    new AlnumScanner {
+      def word(bytes: Array[Byte], len: Int): Unit =
+        words += new String(bytes, 0, len, StandardCharsets.ISO_8859_1)
+    }.scan(in)
     words.toArray
   }
 
@@ -161,4 +153,40 @@ object WordNgrams {
 
   def apply(c: Column, n: Int, distinct: Boolean): Column =
     Bridge.column(WordNgrams(Bridge.expression(c), n, distinct))
+}
+
+/** The text pipelines' word rules over raw bytes, behind
+  * [[WordNgrams.cleanWords]] and [[HasAllWords]]. A token is a maximal run
+  * of non-whitespace bytes (Java's `\s`: space and `\t \n \x0B \f \r`);
+  * its word is its ASCII letters and digits, letters lowercased, joined
+  * (`A-1` → `a1`, `don't` → `dont`); every other byte is dropped, and a
+  * token with neither is no word. The index tokenizer's [[WordScanner]]
+  * keeps letters only.
+  */
+private[graft] abstract class AlnumScanner {
+  private var pending = new Array[Byte](32)
+  private var len = 0
+
+  /** Called once per word: its bytes are `bytes(0 until len)`, valid only
+    * until the next word.
+    */
+  protected def word(bytes: Array[Byte], len: Int): Unit
+
+  /** Scan one whole text. */
+  final def scan(in: Array[Byte]): Unit = {
+    var i = 0
+    while (i < in.length) {
+      val b = in(i)
+      if (b == ' ' || (b >= 9 && b <= 13)) end()
+      else if ((b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')) {
+        if (len == pending.length) pending = Arrays.copyOf(pending, 2 * len)
+        pending(len) = (b | 0x20).toByte // lowercases a letter; digits have the bit set
+        len += 1
+      }
+      i += 1
+    }
+    end()
+  }
+
+  private def end(): Unit = if (len > 0) { word(pending, len); len = 0 }
 }

@@ -52,10 +52,13 @@ object Tokenizer {
   }
 
   /** Distinct (doc, word) pairs — the reference's per-doc partial map
-    * (`src/functions.cpp:75-87`). Catalyst plans this as partial+final
-    * HashAggregate, i.e. the map-side combine happens before the shuffle,
-    * exactly like the reference's per-file `unordered_map` dedup.
+    * (`src/functions.cpp:75-87`). Each row emits each distinct word of its
+    * text once, through the native [[graft.functions.DistinctWords]]
+    * Generator, so the plan is scan → generate with no exchange. The rows
+    * are distinct pairs because each document is one row: `docIdCol` must
+    * be the table's non-null, unique key, as `documents.doc_id` is
+    * ([[graft.sources.Documents]]).
     */
   def docWords(df: DataFrame, textCol: String, docIdCol: String): DataFrame =
-    tokens(df, textCol, Seq(docIdCol)).dropDuplicates(docIdCol, "word")
+    df.select(col(docIdCol), graft.functions.DistinctWords(col(textCol)).as("word"))
 }

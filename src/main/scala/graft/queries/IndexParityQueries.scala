@@ -88,14 +88,15 @@ object IndexParityQueries {
     * on disk), then compacted by concatenating each word's base and delta
     * postings. Must hash-equal the from-scratch q1 rebuild.
     *
-    * Scale shape: one scan and one tokenization of the corpus, the
-    * per-doc dedup exchange, then one word-keyed aggregate that builds
+    * Scale shape: one scan and one tokenization of the corpus, each
+    * document's words deduplicated in its row (no exchange), then one
+    * word-keyed aggregate, the plan's only exchange, that builds
     * both segments' postings as two `collect_list`s split by a computed
     * segment column, merged with `sort_array(concat(...))`. The doc_id%3
     * split is a fixture stand-in for the real base/delta boundary (ingest
     * time); any disjoint split must compact to the same index, which is
     * exactly what the oracle checks. The scan is not spread: tokenize and
-    * two aggregates are lighter than the ScanSpread exchange.
+    * one aggregate are lighter than the ScanSpread exchange.
     */
   def q117IndexCompaction(spark: SparkSession, dir: String): DataFrame = {
     val docWords = graft.operators.Tokenizer.docWords(Documents.read(spark, dir), "text", "doc_id")

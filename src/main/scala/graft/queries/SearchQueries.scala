@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.operators.Ranking
-import graft.sources.Documents
+import graft.sources.{Documents, Embeddings}
 
 /** Search/ranking query pack over `documents` (q8/q9/q26/q27/q29): the
   * IR query layer served by the inverted index the reference builds —
@@ -15,7 +15,7 @@ import graft.sources.Documents
 object SearchQueries {
 
   /** BM25 query terms — high-df corpus words chosen so every sf matches. */
-  private val Bm25Terms = Seq("hash", "join", "scan")
+  private[graft] val Bm25Terms = Seq("hash", "join", "scan")
 
   /** q208: reciprocal-rank-fusion hybrid retrieval — the modern RAG/search
     * serving recipe: a lexical candidate list (single-term BM25 top-20 for
@@ -39,7 +39,7 @@ object SearchQueries {
     val sparse = Ranking.bm25TopK(Documents.spread(spark, dir), "text", "doc_id", Seq("hash"), 20)
       .select(col("doc_id"), col("rank").as("ra"))
     val v = Similarity.prepared(
-      spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding")
+      Embeddings.read(spark, dir), "vec_id", "embedding")
     val dense = Similarity.bruteForceTopK(v.filter(col("vec_id") === 0), v, "vec_id", 20)
       .select(col("cand_id").as("doc_id"), col("rank").as("rb"))
     // fusion: ≤ 40 candidate rows, persisted — read by both the top-10
@@ -80,7 +80,7 @@ object SearchQueries {
       .select(col("doc_id"), col("bm25"), col("rank").as("ra"))
       .persist()
     val v = Similarity.prepared(
-      spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding")
+      Embeddings.read(spark, dir), "vec_id", "embedding")
     val cand = v.join(
       broadcast(sparse.select(col("doc_id").as("vec_id"))), Seq("vec_id"))
     Similarity.bruteForceTopK(v.filter(col("vec_id") === 0), cand, "vec_id", 10)
@@ -348,33 +348,25 @@ object SearchQueries {
   def q234Bm25TopK(spark: SparkSession, dir: String): DataFrame =
     Ranking.bm25TopK(Documents.read(spark, dir), "text", "doc_id", Bm25Terms, 5)
 
-  /** Boolean AND search — documents containing EVERY query term, with
-    * their source. The term predicate filters postings at the tokenizer
-    * (only matching words survive the scan), per-doc distinct is
-    * map-side, and the postings intersection is one doc-keyed
-    * count-equality aggregate — no join in the hot path (the trailing
-    * source lookup is a key join against the doc table). Shared by q140
-    * (spread scan) and q237 (light scan).
+  /** Boolean AND search — the documents containing EVERY query term, with
+    * their source: one native per-row predicate
+    * ([[graft.functions.HasAllWords]], the [[graft.functions.AlnumTokens]]
+    * words), so the plan is scan → filter → project with no aggregate and
+    * no join. `doc_id` is the documents key ([[Documents]]), so each
+    * matching document is one row. Shared by q140 (spread scan) and q237
+    * (plain scan).
     */
-  private def booleanAnd(d: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    d.select(col("doc_id"), graft.functions.AlnumTokens(col("text")))
-      .filter(col("word").isin(Bm25Terms: _*))
-      .select(col("doc_id"), col("word")).distinct()
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_hit"))
-      .filter(col("n_hit") === Bm25Terms.length)
-      .join(d.select(col("doc_id"), col("source")), Seq("doc_id"))
+  private[graft] def booleanAnd(d: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    d.filter(graft.functions.HasAllWords(col("text"), Bm25Terms))
       .select(col("doc_id"), col("source"))
   }
 
-  /** q237: boolean search served from the term-filtered postings: the
-    * distinct (word, doc_id) postings of the query terms go straight into
-    * the doc-keyed count-equality of [[booleanAnd]]. The oracle is q140's
-    * plain formulation; the query differs from q140 only in the unspread
-    * scan, [[Documents.read]] (tokenize + one agg). DETERMINISM: integer
-    * counts. Scale shape: the term filter prunes the scan to the query
-    * terms' postings.
+  /** q237: boolean search as a filter on the document rows, with no
+    * exchange: [[booleanAnd]] over the plain scan, [[Documents.read]]. The
+    * oracle is q140's plain formulation; the query differs from q140 only
+    * in the unspread scan. DETERMINISM: a per-row predicate. Scale shape:
+    * one scan, one byte pass per document, no shuffle.
     */
   def q237ServeFromIndex(spark: SparkSession, dir: String): DataFrame =
     booleanAnd(Documents.read(spark, dir))
@@ -607,7 +599,7 @@ object SearchQueries {
          |        AS DOUBLE) / $RboDenom, 6) AS rbo
          |FROM pd GROUP BY word""".stripMargin,
     // q140's PLAIN scan formulation — the driver compare proves the
-    // postings count-equality intersect equals the direct scan
+    // per-row predicate equals the postings count-equality intersect
     "q237_serve_from_index" ->
       s"""$WordsCte,
          |toks AS (SELECT doc_id, unnest(w) AS word FROM wd),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
-import graft.sources.Documents
+import graft.sources.{Documents, Embeddings}
 
 /** Similarity-search query pack over `embeddings` (q34/q35, q40-q43):
   * embedding-cosine near-dup pairs (exact + LSH), exact brute-force kNN,
@@ -17,8 +17,7 @@ object SimilarityQueries {
     // vector scoring (seed cosines, candidate dots) is per-row heavy;
     // see ScanSpread
     Similarity.prepared(
-      graft.sources.ScanSpread.spread(
-        spark.read.parquet(s"$dir/embeddings.parquet")), "vec_id", "embedding")
+      graft.sources.ScanSpread.spread(Embeddings.read(spark, dir)), "vec_id", "embedding")
 
   /** q34: embedding near-dup — unordered pairs with 6dp cosine >= 0.30. */
   def q34EmbedPairs(spark: SparkSession, dir: String): DataFrame = {
@@ -203,7 +202,7 @@ object SimilarityQueries {
     */
   def q43LabelCentroids(spark: SparkSession, dir: String): DataFrame =
     Similarity.labelCentroids(
-      spark.read.parquet(s"$dir/embeddings.parquet")
+      Embeddings.read(spark, dir)
         .select(
           col("label"),
           graft.functions.TextFunctions.toDouble(col("embedding")).as("v")),
@@ -222,7 +221,7 @@ object SimilarityQueries {
     * no shuffle; the per-label agg is map-side combinable.
     */
   def q193Silhouette(spark: SparkSession, dir: String): DataFrame = {
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val e = Embeddings.read(spark, dir)
       .select(col("vec_id"), col("label"),
         graft.functions.TextFunctions.toDouble(col("embedding")).as("v"))
     val carr = Similarity.labelCentroids(e.select(col("label"), col("v")), "label")
@@ -263,7 +262,7 @@ object SimilarityQueries {
     val qarr = transform(
       graft.functions.TextFunctions.toDouble(col("embedding")),
       x => round(x * lit(1e6)).cast("long"))
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val e = Embeddings.read(spark, dir)
       .select(col("vec_id"), qarr.as("q"))
       .persist()
     val nDim = size(col("q"))
@@ -370,7 +369,7 @@ object SimilarityQueries {
   def q83QuantizeEmbed(spark: SparkSession, dir: String): DataFrame = {
     val q = graft.functions.QuantizeInt8(
       graft.functions.TextFunctions.toDouble(col("embedding"))).as("q")
-    spark.read.parquet(s"$dir/embeddings.parquet")
+    Embeddings.read(spark, dir)
       .select(col("vec_id"), q)
       .select(
         col("vec_id"),
@@ -397,7 +396,7 @@ object SimilarityQueries {
   def q85KnnQuantized(spark: SparkSession, dir: String): DataFrame = {
     val v = graft.functions.TextFunctions.toDouble(col("embedding"))
     val amax = array_max(transform(v, abs(_)))
-    val codes = spark.read.parquet(s"$dir/embeddings.parquet")
+    val codes = Embeddings.read(spark, dir)
       .filter(amax > 0.0) // zero vectors have no direction to rank by
       .select(
         col("vec_id"),
@@ -468,7 +467,7 @@ object SimilarityQueries {
     */
   def q91MatryoshkaKnn(spark: SparkSession, dir: String): DataFrame = {
     val v = Similarity.prepared(
-      spark.read.parquet(s"$dir/embeddings.parquet")
+      Embeddings.read(spark, dir)
         .select(col("vec_id"), slice(col("embedding"), 1, 16).as("emb16")),
       "vec_id", "emb16")
     Similarity.bruteForceTopK(v.filter(col("vec_id") < 10), v, "vec_id", k = 5)
@@ -552,7 +551,7 @@ object SimilarityQueries {
     // more than it parallelizes (measured r17; same trade as the light
     // SearchQueries paths — see SearchQueries.docsLight)
     Similarity.kmeans(Similarity.prepared(
-      spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding"),
+      Embeddings.read(spark, dir), "vec_id", "embedding"),
       "vec_id", k = 8, passes = 2)
 
   /** q207: inter-source semantic similarity matrix — each source's
@@ -572,7 +571,7 @@ object SimilarityQueries {
   def q207SourceCentroidSim(spark: SparkSession, dir: String): DataFrame = {
     val src = Documents.read(spark, dir)
       .select(col("doc_id").as("vec_id"), col("source"))
-    val cent = spark.read.parquet(s"$dir/embeddings.parquet")
+    val cent = Embeddings.read(spark, dir)
       .join(src, Seq("vec_id"))
       .select(col("source"),
         posexplode(graft.functions.TextFunctions.toDouble(col("embedding")))
@@ -608,7 +607,7 @@ object SimilarityQueries {
     * is dims-sized.
     */
   def q211EmbedProfile(spark: SparkSession, dir: String): DataFrame = {
-    val comp = spark.read.parquet(s"$dir/embeddings.parquet")
+    val comp = Embeddings.read(spark, dir)
       .select(posexplode(
         graft.functions.TextFunctions.toDouble(col("embedding")))
         .as(Seq("dim", "x")))
@@ -680,7 +679,7 @@ object SimilarityQueries {
     */
   def q221EmbedMedians(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val comp = spark.read.parquet(s"$dir/embeddings.parquet")
+    val comp = Embeddings.read(spark, dir)
       .select(col("vec_id"), posexplode(
         graft.functions.TextFunctions.toDouble(col("embedding")))
         .as(Seq("dim", "x")))

@@ -10,6 +10,13 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * DocumentsSchemaSpec checks the declaration against the footers of the
   * fixture tables, so a regenerated table with another shape fails there
   * instead of being read with the wrong types.
+  *
+  * `doc_id` is the table's key: non-null and unique, one row per
+  * document (DocumentsSchemaSpec checks it on the fixtures). The
+  * per-document operators rely on it to do their work inside the row with
+  * no `doc_id`-keyed exchange: [[graft.operators.Tokenizer.docWords]]
+  * emits distinct `(doc_id, word)` pairs per row, and the boolean search
+  * (`SearchQueries.booleanAnd`) is a filter on the row.
   */
 object Documents {
 

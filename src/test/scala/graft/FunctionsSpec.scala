@@ -170,6 +170,56 @@ class FunctionsSpec extends AnyFunSuite with SparkTestBase {
     assert(native == composed)
   }
 
+  test("docWords (one row per document) equals tokens + dropDuplicates on edge texts") {
+    import graft.operators.Tokenizer
+    val texts = Seq[(Long, String)](
+      1L -> "", 2L -> null, 3L -> "Alpha\r\nbeta\r\nalpha\r\n", 4L -> "one\rtwo\rONE\r",
+      6L -> "Word word WORD wOrD words", 7L -> "don't dont do-n't x1y xy Mr. mr “mr”",
+      8L -> "  \t \u000b\f ")
+    // invalid UTF-8: a stray 0xff inside a word, a truncated 2-byte and a
+    // truncated 3-byte sequence as whole tokens, and the word repeated
+    val invalid = "61ff6220c32820e2822820626164204162"
+    val df = texts.toDF("doc_id", "text").union(Seq(5L -> invalid).toDF("doc_id", "hex")
+      .select(col("doc_id"), unhex(col("hex")).cast("string").as("text")))
+    assert(df.filter(col("doc_id") === 5).select(octet_length(col("text"))).as[Int].head() ==
+      invalid.length / 2, "the invalid bytes must reach the tokenizer as they are")
+    val native = Tokenizer.docWords(df, "text", "doc_id").as[(Long, String)].collect().toSeq.sorted
+    val composed = Tokenizer.tokens(df, "text", Seq("doc_id")).dropDuplicates("doc_id", "word")
+      .as[(Long, String)].collect().toSeq.sorted
+    assert(native == composed)
+    assert(native.filter(_._1 == 5L) == Seq(5L -> "ab", 5L -> "bad"))
+  }
+
+  test("booleanAnd (a per-row filter) equals the count-equality-plus-join formulation") {
+    import graft.functions.AlnumTokens
+    import graft.queries.SearchQueries
+    val terms = SearchQueries.Bm25Terms
+    assert(terms == Seq("hash", "join", "scan"), "the fixture texts are written for these terms")
+    val d = Seq[(Long, String, String)](
+      (1L, "HASH join, Scan.", "a"), // split by case and punctuation
+      (2L, "ha-sh jo'in sc.an", "b"), // punctuation inside the tokens
+      (3L, "hash join", "c"), // one term missing
+      (4L, "hashing join scanner", "d"), // two terms only as substrings
+      (5L, "hashjoin scan", "e"),
+      (6L, "hash hash join\tjoin\r\nscan", null), // repeats, other whitespace
+      (7L, null, "g"),
+      (8L, "", "h"),
+      (9L, "hash1 join scan", "i"), // digits stay in the word
+      (10L, "scan join hash", "j"))
+      .toDF("doc_id", "text", "source")
+    val got = SearchQueries.booleanAnd(d).as[(Long, String)].collect().toSeq.sorted
+    val counted = d.select(col("doc_id"), AlnumTokens(col("text")))
+      .filter(col("word").isin(terms: _*))
+      .select(col("doc_id"), col("word")).distinct()
+      .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
+      .filter(col("n_hit") === terms.length)
+      .join(d.select(col("doc_id"), col("source")), Seq("doc_id"))
+      .select(col("doc_id"), col("source"))
+      .as[(Long, String)].collect().toSeq.sorted
+    assert(got == counted)
+    assert(got.map(_._1) == Seq(1L, 2L, 6L, 10L))
+  }
+
   test("collect_postings: ascending distinct ids from unsorted runs, merged runs and empty groups") {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.BoundReference

@@ -200,6 +200,26 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("q237 plans no exchange and no join; q117 one exchange, on word") {
+    // both read documents whose doc_id is the key, so the per-document
+    // work stays in the row: a doc-keyed exchange coming back fails here
+    object Aqe extends AdaptiveSparkPlanHelper
+    def executed(q: String): SparkPlan = {
+      val df = SparkEntry.queries(q)(spark, sfDir)
+      Runner.released(spark) {
+        df.collect() // the adaptive plan is final only after execution
+        df.queryExecution.executedPlan
+      }
+    }
+    val q237 = executed("q237_serve_from_index")
+    assert(Aqe.collect(q237) { case e: Exchange => e }.isEmpty, s"q237 plans an exchange:\n$q237")
+    assert(Aqe.collect(q237) { case j: BaseJoinExec => j }.isEmpty, s"q237 plans a join:\n$q237")
+    val q117 = executed("q117_index_compaction")
+    val exchanges = Aqe.collect(q117) { case e: Exchange => e }
+    assert(exchanges.size == 1 && exchanges.head.toString.contains("hashpartitioning(word"),
+      s"expected the word aggregation as q117's only exchange:\n$q117")
+  }
+
   test("q43: centroid aggregation is partial+final (map-side combine)") {
     val p = plan("q43_label_centroids")
     assert("HashAggregate".r.findAllIn(p).size >= 2,
