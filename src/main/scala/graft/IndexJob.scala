@@ -8,24 +8,26 @@ import graft.sources.Corpus
   * (`src/main.cpp:30-59`) as one declarative Spark plan:
   *
   *   manifest (driver) → per-task document reads, each document's distinct
-  *   words streamed from its file → partial postings runs per word
-  *   → word shuffle → merged postings runs → letter column → format
-  *   → letter repartition → sorted letter runs, each written by its task
-  *   straight to a staged `<letter>.txt`.
+  *   words streamed from its file → one partial word → postings map per
+  *   first letter → letter shuffle → merged maps, one row per word →
+  *   format → sorted letter runs, each written by its task straight to a
+  *   staged `<letter>.txt`.
   *
   * The reference's M mapper / R reducer threads, mutex work queue and
-  * barriers all map onto Spark's task scheduler and the two shuffle
-  * boundaries Catalyst inserts (word aggregation, letter repartition).
-  * A pass runs the two shuffle-map stages and one sink job; the driver
-  * only reads the manifest and renames the 26 finished files (see
+  * barriers all map onto Spark's task scheduler and the one shuffle
+  * boundary Catalyst inserts: the letter aggregation's exchange is also
+  * the sink's, as the reference's reducers both merge and write their
+  * letters. A pass runs one shuffle-map stage and one sink job; the
+  * driver only reads the manifest and renames the 26 finished files (see
   * [[graft.operators.IndexWriter]], which also says where `outDir` may live).
   */
 object IndexJob {
 
   /** Build the index DataFrame `(word, postings, df, letter)` for a corpus:
     * each document indexed once, as its distinct words
-    * ([[graft.sources.Corpus.documentWords]]), into the word aggregation
-    * ([[graft.operators.InvertedIndex.buildFromTokens]]) — ONE exchange.
+    * ([[graft.sources.Corpus.documentWords]]), into the letter aggregation
+    * ([[graft.operators.InvertedIndex.buildFromTokens]]) — ONE exchange,
+    * hash-partitioned on `letter`, which [[run]]'s sink reuses.
     * Building it runs no Spark job and reads no document.
     */
   def index(spark: SparkSession, manifestPath: String, baseDir: String): DataFrame =

@@ -257,7 +257,7 @@ object Edges {
     */
   private def coPurchasePairs(
       spark: SparkSession, dir: String, minSupport: Long): DataFrame = {
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = graft.sources.Relational.read(spark, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
     val baskets = li.groupBy("ok")
       .agg(array_sort(collect_set(col("pk"))).as("parts"))
@@ -312,9 +312,9 @@ object Edges {
       gcStale = Some((Seq(s"graft_custpart_${dirPrefix(tag)}",
           s"graft_custpart_${legacyDirPrefix(tag)}"),
         s"graft_custpart_$tag"))) {
-      val o = spark.read.parquet(s"$dir/orders.parquet")
+      val o = graft.sources.Relational.read(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"))
-      val li = spark.read.parquet(s"$dir/lineitem.parquet")
+      val li = graft.sources.Relational.read(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"))
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .select(col("o_custkey").as("c"), col("l_partkey").as("p"))

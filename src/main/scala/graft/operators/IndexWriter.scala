@@ -15,7 +15,11 @@ import scala.jdk.CollectionConverters._
   *
   *   - `repartition(letter)` hashes each letter into one shuffle partition
   *     at any partition count (AQE may coalesce partitions, never split
-  *     one); the aggregation upstream stays word-partitioned.
+  *     one). An index that is already hash-partitioned on `letter`, as
+  *     [[InvertedIndex.buildFromTokens]] returns it, needs no second
+  *     exchange: the planner drops this one, and the sink runs in the
+  *     stage that finishes the letter aggregate. Any other index (say,
+  *     one partitioned on `word`) is shuffled here.
   *   - `sortWithinPartitions(letter, df desc, word asc)` turns each letter
   *     into one contiguous run in final order (reference `compare_func`).
   *   - One `foreachPartition` job: each task writes each of its runs to a

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Curation, Dedup, TextAnalysis}
-import graft.sources.Documents
+import graft.sources.{Documents, Relational}
 
 /** Corpus-hygiene query pack (round 7): incremental cross-corpus dedup
   * (q97), deterministic language rebalancing (q98), data-dependent
@@ -153,7 +153,7 @@ object HygieneQueries {
     */
   def q104TableProfile(spark: SparkSession, dir: String): DataFrame =
     graft.sources.Tables.profile(
-      spark.read.parquet(s"$dir/lineitem.parquet"),
+      Relational.read(spark, dir, "lineitem"),
       Seq("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
         "l_discount", "l_returnflag", "l_linestatus"))
 
@@ -189,7 +189,7 @@ object HygieneQueries {
     * expression on both engines, so edges bin identically.
     */
   def q106Histogram(spark: SparkSession, dir: String): DataFrame = {
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = Relational.read(spark, dir, "lineitem")
       .select(col("l_extendedprice").as("x"))
     val mm = li.agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
     li.crossJoin(broadcast(mm))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.AsOfJoin
-import graft.sources.Documents
+import graft.sources.{Documents, Relational}
 
 /** Relational query pack over the TPC-H-ish driver tables — the extended
   * analytics surface of SURVEY §2.2 (joins, windows, grouping sets, set
@@ -20,8 +20,13 @@ import graft.sources.Documents
   */
 object RelationalQueries {
 
+  /** A fixture table: the TPC-H-shaped ones with their declared schemas
+    * ([[Relational]]); `events` from its footer, since its timestamp
+    * type varies (see [[events]]).
+    */
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    if (name == "events") spark.read.parquet(s"$dir/events.parquet")
+    else Relational.read(spark, dir, name)
 
   /** `events.ts` has shipped as either TIMESTAMP(NANOS) — which Spark's
     * parquet reader rejects without the legacy conf — or plain

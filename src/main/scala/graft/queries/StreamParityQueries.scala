@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamingOps
-import graft.sources.Documents
+import graft.sources.{Documents, Relational}
 
 /** Streaming operators run against the REAL corpus and checked by the
   * driver's DuckDB oracle — extending the hard correctness gate from
@@ -2494,8 +2494,8 @@ object StreamParityQueries {
     import scala.jdk.CollectionConverters._
     val sink = "graft_q314_enrich"
     spark.catalog.dropTempView(sink)
-    val dim = spark.read.parquet(s"$dir/customer.parquet")
-      .join(spark.read.parquet(s"$dir/nation.parquet"),
+    val dim = Relational.read(spark, dir, "customer")
+      .join(Relational.read(spark, dir, "nation"),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey").as("user_id"), col("n_name"))
     val ev = RelationalQueries.events(spark, dir)

@@ -196,21 +196,67 @@ class CorpusEdgeSpec extends AnyFunSuite with SparkTestBase {
     (words, tokens)
   }
 
-  test("document words equal the deduplicated line tokens on every edge corpus") {
+  /** `index_small` and the edge corpora above, each with its manifest's name. */
+  private def edgeCorpora(): Seq[(Path, String)] = {
     def bytes(parts: Any*): Array[Byte] = parts.flatMap {
       case s: String => s.getBytes(UTF_8).toSeq
       case b: Int => Seq(b.toByte)
     }.toArray
-    val corpora = Seq(
+    Seq(
       Paths.get(getClass.getResource("/index_small").toURI) -> "test_small.txt",
       text("d1.txt" -> "apple apple APPLE banana", "d2.txt" -> "!!! ??? ... 123 456",
         "d3.txt" -> "", "d4.txt" -> "a1pple z9z") -> "manifest.txt",
+      text("d1.txt" -> "kiwi lime", "d2.txt" -> "kiwi") -> "manifest.txt",
+      text("50%off.txt" -> "mango", "c#notes.txt" -> "mango nectar", "a%20b.txt" -> "olive") -> "manifest.txt",
       text("d1.txt" -> "quince\r\nraisin sage\rtart\r\n", "d2.txt" -> "sage\r\r\nugli") -> "manifest.txt",
       corpus(Seq("d1.txt" -> bytes("ho", 0xC3, "ney bee", 0xFF, 0xFE, "s"),
-        "d2.txt" -> bytes(0xE2, 0x80, "vine ", 0xC3, "\n", 0x80, "wax"))) -> "manifest.txt")
-    for ((base, manifest) <- corpora) {
+        "d2.txt" -> bytes(0xE2, 0x80, "vine ", 0xC3, "\n", 0x80, "wax"))) -> "manifest.txt",
+      text("d1.txt" -> "alpha beta\ngamma alpha", "d2.txt" -> "beta delta", "d3.txt" -> "zeta") -> "manifest.txt")
+  }
+
+  test("document words equal the deduplicated line tokens on every edge corpus") {
+    for ((base, manifest) <- edgeCorpora()) {
       val (words, tokens) = bothWords(base, manifest)
       assert(words.nonEmpty && words == tokens, base)
+    }
+  }
+
+  test("the letter aggregate's sort-based fallback writes the same bytes") {
+    // At a fallback threshold of 1, ObjectHashAggregate goes over to sorting
+    // after a task's first group, as it would for words starting with more
+    // than 128 distinct characters: CollectIndex buffers are then
+    // serialized, sorted, deserialized and merged on that path.
+    def letterFiles(base: Path, manifest: String): Seq[Seq[Byte]] = {
+      val out = Files.createTempDirectory("graft-edge-out")
+      IndexJob.run(spark, base.resolve(manifest).toString, base.toString, out.toString)
+      ('a' to 'z').map(l => Files.readAllBytes(out.resolve(s"$l.txt")).toSeq)
+    }
+    val corpora = edgeCorpora()
+    val hashed = corpora.map { case (b, m) => letterFiles(b, m) }
+    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val prev = spark.conf.getOption(key)
+    val fellBack = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        e.taskInfo.accumulables.filter(_.name.contains("number of sort fallback tasks"))
+          .foreach(a => fellBack.addAndGet(a.update.fold(0L)(_.toString.toLong)))
+    }
+    Bridge.waitListenerBusEmpty(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val sorted = try {
+      spark.conf.set(key, "1")
+      val files = corpora.map { case (b, m) => letterFiles(b, m) }
+      Bridge.waitListenerBusEmpty(spark)
+      files
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    assert(fellBack.get > 0, "no task took the sort-based path")
+    corpora.indices.foreach(i => assert(sorted(i) == hashed(i), corpora(i)._1))
+    val small = corpora.head._1
+    ('a' to 'z').zip(sorted.head).foreach { case (l, got) =>
+      assert(got == Files.readAllBytes(small.resolve(s"test_out_small/$l.txt")).toSeq, s"$l.txt differs")
     }
   }
 

@@ -1,10 +1,13 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, count, count_distinct, lit}
-import graft.sources.{Documents, Embeddings}
+import org.apache.spark.sql.graft.Bridge
+import graft.sources.{Documents, Embeddings, Relational}
 
-/** The declared `documents` and `embeddings` schemas are the ones the
-  * fixture files carry: a regenerated table with other columns or types
+/** The declared `documents`, `embeddings` and relational schemas are the
+  * ones the fixture files carry: a regenerated table with other columns or types
   * fails here, not as a query quietly reading nulls or the wrong type.
   */
 class DocumentsSchemaSpec extends SparkTestBase {
@@ -26,6 +29,34 @@ class DocumentsSchemaSpec extends SparkTestBase {
       assert(Embeddings.schema == inferred, s"$sf: declared ${Embeddings.schema.treeString}" +
         s" but the file has ${inferred.treeString}")
     }
+  }
+
+  test("the declared relational schemas equal the footer schemas at sf0.001, sf0.01 and sf0.1") {
+    // timestamps included: lineitem and orders carry tz-less timestamp[us]
+    assert(Relational.schemas.keySet ==
+      Set("lineitem", "orders", "customer", "part", "supplier", "nation", "region"))
+    for (sf <- scaleFactors; (table, declared) <- Relational.schemas) {
+      val inferred = spark.read.parquet(s"$testdata/$sf/$table.parquet").schema
+      assert(declared == inferred, s"$sf/$table: declared ${declared.treeString}" +
+        s" but the file has ${inferred.treeString}")
+    }
+  }
+
+  test("building queries over the relational tables runs no schema-inference job") {
+    // q10 reads lineitem; q11 joins lineitem, orders, customer, nation and region
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bridge.waitListenerBusEmpty(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (q <- Seq("q10_pricing_summary", "q11_revenue_by_nation")) {
+        SparkEntry.queries(q)(spark, sfDir)
+        Bridge.waitListenerBusEmpty(spark)
+        assert(jobs.get == 0, s"building $q ran ${jobs.get} Spark job(s)")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("documents.doc_id is a non-null, unique key at sf0.001, sf0.01 and sf0.1") {

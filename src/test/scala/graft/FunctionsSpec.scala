@@ -220,29 +220,53 @@ class FunctionsSpec extends AnyFunSuite with SparkTestBase {
     assert(got.map(_._1) == Seq(1L, 2L, 6L, 10L))
   }
 
-  test("collect_postings: ascending distinct ids from unsorted runs, merged runs and empty groups") {
+  test("collect_index: per-word distinct ids from unsorted, merged, null, empty input") {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.BoundReference
     import org.apache.spark.sql.catalyst.util.ArrayData
-    import org.apache.spark.sql.types.LongType
-    import graft.functions.CollectPostings
-    val f = CollectPostings(BoundReference(0, LongType, nullable = true))
-    def run(ids: Any*) = ids.foldLeft(f.createAggregationBuffer())((r, v) => f.update(r, InternalRow(v)))
-    def postings(r: CollectPostings.Run) = f.eval(r).asInstanceOf[ArrayData].toLongArray().toSeq
-    assert(postings(run(9L, 3L, 3L, 7L, null, 1L, 9L)) == Seq(1L, 3L, 7L, 9L))
-    // duplicates across buffers, each shipped as its serialized run
-    def shipped(ids: Long*) = f.deserialize(f.serialize(run(ids: _*)))
-    assert(postings(f.merge(shipped(5L, 2L, 8L), shipped(8L, 1L, 5L, 5L))) == Seq(1L, 2L, 5L, 8L))
-    assert(postings(f.merge(shipped(1L, 2L), shipped(3L, 4L))) == Seq(1L, 2L, 3L, 4L))
-    assert(postings(f.createAggregationBuffer()).isEmpty)
-    // through the planned partial and final aggregation, and a global
-    // aggregate over no rows
-    val df = Seq((4L, "x"), (1L, "x"), (3L, "y"), (1L, "x"), (2L, "x"), (4L, "x"))
+    import org.apache.spark.sql.types.{LongType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.CollectIndex
+    val f = CollectIndex(BoundReference(0, StringType, nullable = true),
+      BoundReference(1, LongType, nullable = true))
+    def words(pairs: (String, Any)*) = pairs.foldLeft(f.createAggregationBuffer()) {
+      case (b, (w, d)) => f.update(b, InternalRow(if (w == null) null else UTF8String.fromString(w), d))
+    }
+    def index(b: CollectIndex.Words): Map[String, (Seq[Long], Long)] = {
+      val a = f.eval(b).asInstanceOf[ArrayData]
+      (0 until a.numElements()).map { i =>
+        val r = a.getStruct(i, 3)
+        r.getUTF8String(0).toString -> (r.getArray(1).toLongArray().toSeq, r.getLong(2))
+      }.toMap
+    }
+    // unsorted ids, repeats, null ids and null words, words of several letters
+    assert(index(words("b" -> 9L, "a" -> 3L, "b" -> 3L, "b" -> 3L, "b" -> 7L, "c" -> null,
+      (null, 4L), "b" -> 1L, "b" -> 9L, "apple" -> 2L)) ==
+      Map("b" -> (Seq(1L, 3L, 7L, 9L), 4L), "a" -> (Seq(3L), 1L), "c" -> (Nil, 0L),
+        "apple" -> (Seq(2L), 1L)))
+    // duplicates across buffers, each shipped as its serialized map
+    def shipped(pairs: (String, Any)*) = f.deserialize(f.serialize(words(pairs: _*)))
+    assert(index(f.merge(shipped("x" -> 5L, "x" -> 2L, "y" -> 8L, "z" -> null),
+      shipped("x" -> 8L, "y" -> 1L, "x" -> 5L, "x" -> 5L, "z" -> 3L))) ==
+      Map("x" -> (Seq(2L, 5L, 8L), 3L), "y" -> (Seq(1L, 8L), 2L), "z" -> (Seq(3L), 1L)))
+    assert(index(f.merge(shipped("x" -> 1L, "x" -> 2L), shipped("x" -> 3L, "x" -> 4L))) ==
+      Map("x" -> (Seq(1L, 2L, 3L, 4L), 4L)))
+    assert(index(shipped()).isEmpty && index(f.createAggregationBuffer()).isEmpty)
+    // through the planned partial and final aggregation, grouped by first
+    // letter as the index build groups it, and a global aggregate over no rows
+    val df = Seq((4L, "xa"), (1L, "xa"), (3L, "y"), (1L, "xa"), (2L, "xb"), (4L, "xa"), (2L, "y"))
       .toDF("doc_id", "word").repartition(3)
-    val got = df.groupBy("word").agg(CollectPostings(col("doc_id")).as("p"))
-      .as[(String, Seq[Long])].collect().toMap
-    assert(got == Map("x" -> Seq(1L, 2L, 4L), "y" -> Seq(3L)))
-    assert(df.filter(lit(false)).agg(CollectPostings(col("doc_id"))).as[Seq[Long]].head().isEmpty)
+    val agg = df.groupBy(substring(col("word"), 1, 1).as("letter"))
+      .agg(CollectIndex(col("word"), col("doc_id")).as("words"))
+    val planned = agg.queryExecution.executedPlan.toString
+    assert("collect_index".r.findAllIn(planned).size >= 2 && planned.contains("partial_collect_index"),
+      s"expected a partial and a final collect_index:\n$planned")
+    val got = agg.select(col("letter"), inline(col("words")))
+      .as[(String, String, Seq[Long], Long)].collect().map(r => r._2 -> (r._1, r._3, r._4)).toMap
+    assert(got == Map("xa" -> ("x", Seq(1L, 4L), 2L), "xb" -> ("x", Seq(2L), 1L),
+      "y" -> ("y", Seq(2L, 3L), 2L)))
+    assert(df.filter(lit(false)).agg(CollectIndex(col("word"), col("doc_id")))
+      .head().getSeq[Any](0).isEmpty)
   }
 
   test("SimplifyAsciiCleanLower removes redundant applications") {

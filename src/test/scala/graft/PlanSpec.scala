@@ -4,12 +4,14 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.WriteFilesExec
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, REPARTITION_BY_COL,
-  ShuffleExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ENSURE_REQUIREMENTS, Exchange,
+  REPARTITION_BY_COL, ShuffleExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -45,6 +47,41 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(shuffles(p) == 1, s"expected 1 exchange, plan:\n$p")
   }
 
+  /** The executed plans of the actions `body` runs. */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    Bridge.waitListenerBusEmpty(spark)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      Bridge.waitListenerBusEmpty(spark)
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** A hash exchange on the first letter of `word`: on `letter`, or on the
+    * aggregate's grouping key that the plan below defines as
+    * `substring(word, 1, 1)`.
+    */
+  private def onLetter(e: ShuffleExchangeLike): Boolean = e.outputPartitioning match {
+    case HashPartitioning(Seq(k: Attribute), _) =>
+      k.name == "letter" || e.child.exists(_.expressions.exists {
+        case a: Alias => a.exprId == k.exprId && a.child.sql == "substring(word, 1, 1)"
+        case _ => false
+      })
+    case _ => false
+  }
+
+  private def shuffleExchanges(plans: Seq[SparkPlan]): Seq[ShuffleExchangeExec] =
+    plans.flatMap(p => Aqe.collect(p) { case e: ShuffleExchangeExec => e })
+
   test("index build: corpus read runs no job; one exchange, no join") {
     val small = Paths.get(getClass.getResource("/index_small").toURI).toString
     val manifest = s"$small/test_small.txt"
@@ -63,42 +100,45 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     val idx = IndexJob.index(spark, manifest, small)
     idx.collect()
     val executed = idx.queryExecution.executedPlan
-    object Aqe extends AdaptiveSparkPlanHelper
     val exchanges = Aqe.collect(executed) { case e: Exchange => e }
-    assert(exchanges.size == 1 && exchanges.head.isInstanceOf[ShuffleExchangeLike] &&
-      exchanges.head.toString.contains("hashpartitioning(word"),
-      s"expected the word aggregation as the only exchange:\n$executed")
+    assert(exchanges.size == 1 && (exchanges.head match {
+      case e: ShuffleExchangeLike => onLetter(e)
+      case _ => false
+    }), s"expected the letter aggregation as the only exchange:\n$executed")
     assert(Aqe.collect(executed) { case b: BroadcastExchangeLike => b }.isEmpty, executed)
     assert(Aqe.collect(executed) { case j: BaseJoinExec => j }.isEmpty, s"no join expected:\n$executed")
   }
 
   test("index sink: tasks write the letter files; the letter exchange is sized by AQE") {
     val small = Paths.get(getClass.getResource("/index_small").toURI).toString
-    val plans = new ConcurrentLinkedQueue[SparkPlan]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    Bridge.waitListenerBusEmpty(spark)
-    spark.listenerManager.register(listener)
-    try {
-      IndexJob.run(spark, s"$small/test_small.txt", small, Files.createTempDirectory("graft-plan-out").toString)
-      Bridge.waitListenerBusEmpty(spark)
-    } finally spark.listenerManager.unregister(listener)
-    object Aqe extends AdaptiveSparkPlanHelper
-    val executed = plans.asScala.toSeq
+    val executed = executedPlans(
+      IndexJob.run(spark, s"$small/test_small.txt", small, Files.createTempDirectory("graft-plan-out").toString))
     assert(executed.nonEmpty, "the sink action must report its plan")
     val writes = executed.flatMap(p => Aqe.collect(p) {
       case w: DataWritingCommandExec => w
       case w: WriteFilesExec => w
     })
     assert(writes.isEmpty, s"the letter files must not go through a Spark file writer:\n${executed.mkString("\n")}")
-    val letter = executed.flatMap(p => Aqe.collect(p) {
-      case e: ShuffleExchangeExec if e.outputPartitioning.toString.startsWith("hashpartitioning(letter") => e
-    })
-    assert(letter.size == 1 && letter.head.shuffleOrigin == REPARTITION_BY_COL,
-      s"expected one letter exchange from repartition(letter), no fixed count:\n${executed.mkString("\n")}")
+    // the aggregate's letter exchange is the sink's: repartition(letter)
+    // is planned away, and no fixed partition count is set
+    val shuffles = shuffleExchanges(executed)
+    assert(shuffles.size == 1 && shuffles.head.shuffleOrigin == ENSURE_REQUIREMENTS && onLetter(shuffles.head),
+      s"expected the letter aggregate's exchange as the only one:\n${executed.mkString("\n")}")
+  }
+
+  test("index sink: an index not hashed on letter gets its own letter exchange") {
+    val small = Paths.get(getClass.getResource("/index_small").toURI).toString
+    val byWord = IndexJob.index(spark, s"$small/test_small.txt", small)
+      .repartition(org.apache.spark.sql.functions.col("word"))
+    val out = Files.createTempDirectory("graft-plan-word-out")
+    val executed = executedPlans(graft.operators.IndexWriter.write(byWord, out.toString))
+    val letter = shuffleExchanges(executed).filter(e => e.shuffleOrigin == REPARTITION_BY_COL && onLetter(e))
+    assert(letter.size == 1,
+      s"expected the sink's repartition(letter) exchange:\n${executed.mkString("\n")}")
+    ('a' to 'z').foreach { l =>
+      assert(Files.readAllBytes(out.resolve(s"$l.txt")).sameElements(
+        Files.readAllBytes(Paths.get(small, "test_out_small", s"$l.txt"))), s"$l.txt differs from its golden")
+    }
   }
 
   test("q12/q13: semi and anti joins stay semi/anti (no row duplication)") {
