@@ -1,9 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.streaming.StreamingOps
+import graft.streaming.{Feed, StreamingOps}
 import graft.sources.Documents
 
 /** Alternate-path builds of the q1 inverted index, each oracle-checked
@@ -39,47 +38,21 @@ object IndexParityQueries {
       array_join(col("p"), " ").as("postings"),
       size(col("p")).cast("long").as("df"))
 
-  /** q75: feed the corpus through a MemoryStream in doc_id-ordered
-    * micro-batches (deterministic split), run the streaming
-    * tokenize→clean→dedup with its cross-batch state, and index the
-    * accumulated pairs. MemoryStream + the driver-side feed loop are the
+  /** q75: the corpus arrives in doc_id-ordered micro-batches (four, of
+    * at most 1024 docs: [[StreamParityQueries.corpusChunks]]), the
+    * streaming tokenize→clean→dedup runs with its cross-batch state, and
+    * the accumulated pairs are indexed. The MemoryStream feed is the
     * test-harness SOURCE only (production reads Kafka/files via
     * readStream); the operator under test is the unbounded
-    * [[StreamingOps.incrementalDocWords]] plan itself.
-    *
-    * Driver memory is BOUNDED: the feed streams a globally doc_id-sorted
-    * `toLocalIterator` (one partition resident at a time) in chunks of at
-    * most `maxChunk` docs — the corpus never sits on the driver whole, so
-    * the parity gate survives fixtures 100x this size. At fixture scale
-    * the chunking reproduces the original `numBatches` split exactly
-    * (ceil(n/numBatches) ≤ maxChunk there), so the result — and the
-    * batch/streaming parity it proves — is unchanged; larger corpora
-    * just run more micro-batches, which the cross-batch dedup state is
-    * indifferent to.
+    * [[StreamingOps.incrementalDocWords]] plan itself. The driver holds
+    * one chunk at a time, so the parity gate survives fixtures 100x this
+    * size; larger corpora just run more micro-batches, which the
+    * cross-batch dedup state is indifferent to.
     */
-  def q75IncrementalIndex(
-      spark: SparkSession, dir: String, numBatches: Int = 4,
-      maxChunk: Int = 1024): DataFrame = {
+  def q75IncrementalIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val sink = "graft_q75_docwords"
-    spark.catalog.dropTempView(sink) // re-runnable within one session
-    val docs = Documents.read(spark, dir)
-      .select(col("doc_id"), col("text")).as[(Long, String)]
-      .sort("doc_id")
-    val n = docs.count()
-    val chunk = math.min(math.max(1L, (n + numBatches - 1) / numBatches),
-      maxChunk.toLong).toInt
-    val ms = MemoryStream[(Long, String)](spark)
-    val q = StreamingOps.incrementalDocWords(ms.toDF.toDF("doc_id", "text"))
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      docs.toLocalIterator().asScala.grouped(chunk).foreach { batch =>
-        ms.addData(batch.toIndexedSeq)
-        q.processAllAvailable() // barrier => each group is its own micro-batch
-      }
-    } finally q.stop()
-    indexFromPairs(spark.table(sink))
+    indexFromPairs(Feed(spark, "append", StreamParityQueries.corpusChunks(spark, dir, 1024))(ds =>
+      StreamingOps.incrementalDocWords(ds.toDF("doc_id", "text"))))
   }
 
   /** q117: LSM-style index compaction — the index maintained as a BASE
@@ -121,7 +94,7 @@ object IndexParityQueries {
       ReferenceQueries.docWords(spark, dir).filter(col("doc_id") % 7 =!= 0))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q75_incremental_index" -> ((s, dir) => q75IncrementalIndex(s, dir)),
+    "q75_incremental_index" -> (q75IncrementalIndex _),
     "q117_index_compaction" -> (q117IndexCompaction _),
     "q249_tombstone_compaction" -> (q249TombstoneCompaction _))
 

@@ -20,13 +20,11 @@ import graft.sources.{Documents, Relational}
   */
 object RelationalQueries {
 
-  /** A fixture table: the TPC-H-shaped ones with their declared schemas
-    * ([[Relational]]); `events` from its footer, since its timestamp
-    * type varies (see [[events]]).
+  /** A TPC-H-shaped fixture table with its declared schema
+    * ([[Relational]]); `events` is read through [[events]].
     */
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") spark.read.parquet(s"$dir/events.parquet")
-    else Relational.read(spark, dir, name)
+    Relational.read(spark, dir, name)
 
   /** `events.ts` has shipped as either TIMESTAMP(NANOS) — which Spark's
     * parquet reader rejects without the legacy conf — or plain
@@ -39,7 +37,7 @@ object RelationalQueries {
     */
   private[queries] def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = t(spark, dir, "events")
+    val raw = spark.read.parquet(s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -2213,7 +2211,7 @@ object RelationalQueries {
   def q261SeqPerplexity(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val tr = t(spark, dir, "events")
+    val tr = events(spark, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .withColumn("next_type", lead(col("event_type"), 1).over(w))
       .filter(col("next_type").isNotNull)
@@ -2280,7 +2278,7 @@ object RelationalQueries {
     * day-grain with the totals broadcast; moments are one 1-row agg.
     */
   def q283JackknifeRatio(spark: SparkSession, dir: String): DataFrame = {
-    val day = t(spark, dir, "events")
+    val day = events(spark, dir)
       .groupBy(col("ts").cast("date").as("d"))
       .agg(sum((col("event_type") === "purchase").cast("long")).as("x"),
         sum((col("event_type") === "view").cast("long")).as("y"))
@@ -2629,7 +2627,7 @@ object RelationalQueries {
   def q266MarkovAttribution(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val pos = t(spark, dir, "events")
+    val pos = events(spark, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .withColumn("pos", row_number().over(w))
     val cut = pos.filter(col("event_type") === "purchase")
@@ -2698,7 +2696,7 @@ object RelationalQueries {
     */
   def q265CumulativeUniques(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val du = t(spark, dir, "events")
+    val du = events(spark, dir)
       .select(col("user_id"), col("ts").cast("date").as("d"))
       .distinct().persist()
     val daily = du.groupBy("d").agg(count(lit(1)).as("daily_active"))

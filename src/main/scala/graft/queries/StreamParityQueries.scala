@@ -1,47 +1,63 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.streaming.StreamingOps
+import graft.streaming.{Feed, StreamingOps}
+import graft.streaming.StreamingOps.epochMicros
 import graft.sources.{Documents, Relational}
 
 /** Streaming operators run against the REAL corpus and checked by the
   * driver's DuckDB oracle — extending the hard correctness gate from
-  * the index parity query (q75) to the ingest-hygiene surface.
-  * MemoryStream + the chunked driver feed are the test-harness SOURCE
-  * only (production reads Kafka/files via readStream); the operator
-  * under test is the unbounded plan itself.
+  * the index parity query (q75) to the ingest-hygiene surface. Each gate
+  * states its micro-batch sequence and its plan; [[graft.streaming.Feed]]
+  * runs them (the MemoryStream is the test-harness SOURCE only;
+  * production reads Kafka/files via readStream, and the operator under
+  * test is the unbounded plan itself); the view/click gates deal each
+  * batch to their two streams through [[graft.streaming.Feed.drive]].
+  * Three gates drive their own queries, each for a step no other gate
+  * needs: the processing-time TTL gates q347/q352 (a sink-count
+  * barrier, since `processAllAvailable` never returns on a
+  * processing-time plan) and q357 (a state-store format flip and a
+  * checkpoint inspection at each of its restarts).
   */
 object StreamParityQueries {
 
-  /** Feed `(doc_id, text)` rows through a MemoryStream in doc_id-sorted
-    * chunks of at most `maxChunk` docs, each chunk its own micro-batch
-    * (q75's bounded-driver-memory harness, shared).
+  /** The corpus as `(doc_id, text)` in doc_id order, four micro-batches
+    * of at most `maxChunk` docs each (q75's split, shared by the corpus
+    * gates): larger corpora run more micro-batches, which cross-batch
+    * state is indifferent to, and the driver holds one chunk at a time.
     */
-  private def runChunked(
-      spark: SparkSession, dir: String, sink: String,
-      plan: DataFrame => DataFrame, numBatches: Int = 4,
-      maxChunk: Int = 1024, mode: String = "append"): DataFrame = {
+  private[queries] def corpusChunks(
+      spark: SparkSession, dir: String, maxChunk: Int): Iterator[Seq[(Long, String)]] = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    spark.catalog.dropTempView(sink) // re-runnable within one session
     val docs = Documents.read(spark, dir)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .sort("doc_id")
     val n = docs.count()
-    val chunk = math.min(math.max(1L, (n + numBatches - 1) / numBatches),
-      maxChunk.toLong).toInt
-    val ms = MemoryStream[(Long, String)](spark)
-    val q = plan(ms.toDF.toDF("doc_id", "text"))
-      .writeStream.format("memory").queryName(sink).outputMode(mode).start()
-    try {
-      docs.toLocalIterator().asScala.grouped(chunk).foreach { batch =>
-        ms.addData(batch.toIndexedSeq)
-        q.processAllAvailable() // barrier => each group is its own micro-batch
-      }
-    } finally q.stop()
-    spark.table(sink)
+    Feed.rows(docs).grouped(math.min(math.max(1L, (n + 3) / 4), maxChunk.toLong).toInt)
+  }
+
+  /** The recovery gates' feed: `ds` (persisted: the count and the drain
+    * each read it) in at least six chunks of at most `maxChunk` rows,
+    * with the restart before the first chunk at or past half the rows.
+    */
+  private def sixths[T](ds: Dataset[T], maxChunk: Long): (Iterator[Seq[T]], Set[Int]) = {
+    val ev = ds.persist()
+    val n = ev.count()
+    val chunk = math.max(1L, math.min(maxChunk, (n + 5) / 6)).toInt
+    (Feed.rows(ev).grouped(chunk), midFeed(n, chunk))
+  }
+
+  /** The batch index of a mid-feed restart: the first unit of `per`
+    * `chunk`-row batches that starts at or past half of the `n` rows,
+    * or none when the feed ends first.
+    */
+  private def midFeed(n: Long, chunk: Int, per: Int = 1): Set[Int] = {
+    val unit = chunk.toLong * per
+    val i = ((n + 1) / 2 + unit - 1) / unit * per
+    if (i * chunk < n) Set(i.toInt) else Set.empty
   }
 
   /** q259: exact dedup ON INGEST, driver-verified — the corpus arrives
@@ -59,14 +75,16 @@ object StreamParityQueries {
     * the deterministic contract, matching what batch dedup guarantees
     * under partition-order freedom.
     */
-  def q259StreamDedup(spark: SparkSession, dir: String): DataFrame =
+  def q259StreamDedup(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     // maxChunk 4096 (vs q75's 1024): still bounded driver memory (~4 MB
     // of text per chunk), 4× fewer micro-batch barriers on big fixtures;
     // at gate scale (sf0.01) the ceil(n/4) split is identical either way
-    runChunked(spark, dir, "graft_q259_survivors",
-      df => StreamingOps.dedupOnIngest(df, "text"), maxChunk = 4096)
+    Feed(spark, "append", corpusChunks(spark, dir, 4096))(ds =>
+      StreamingOps.dedupOnIngest(ds.toDF("doc_id", "text"), "text"))
       .select(md5(graft.functions.TextFunctions.normText(col("text"))).as("fp"))
       .groupBy("fp").agg(count(lit(1)).as("n_emitted"))
+  }
 
   /** q367: BPE APPLY on ingest, driver-verified — q360's stateless
     * encode projection (the SAME `TextQueries.bpeApplyProjection`
@@ -83,10 +101,11 @@ object StreamParityQueries {
     * zero shuffles, per-task memo, vocabulary-sized plan literal.
     */
   def q367StreamBpeApply(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     val merges = TextQueries.bpeRounds(spark, dir, 5, needTotals = false)._1
       .map(m => (m._2, m._3))
-    runChunked(spark, dir, "graft_q367_bpe",
-      df => TextQueries.bpeApplyProjection(df, merges))
+    Feed(spark, "append", corpusChunks(spark, dir, 1024))(ds =>
+      TextQueries.bpeApplyProjection(ds.toDF("doc_id", "text"), merges))
   }
 
   /** q382: unigram-LM APPLY on ingest, driver-verified — q367's
@@ -103,9 +122,10 @@ object StreamParityQueries {
     * ≤(alphabet+200)-piece plan literal.
     */
   def q382StreamUnigramApply(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     val lp = TextQueries.unigramVocab(spark, dir).map { case (p, _, l) => (p, l) }
-    runChunked(spark, dir, "graft_q382_unigram",
-      df => TextQueries.unigramApplyProjection(df, lp))
+    Feed(spark, "append", corpusChunks(spark, dir, 1024))(ds =>
+      TextQueries.unigramApplyProjection(ds.toDF("doc_id", "text"), lp))
   }
 
   /** q385: the DoReMi mixture optimizer ON INGEST, driver-verified —
@@ -126,33 +146,21 @@ object StreamParityQueries {
     */
   def q385StreamDoremiMixture(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val sink = "graft_q385_doremi"
-    spark.catalog.dropTempView(sink)
     val d = Documents.read(spark, dir)
     val freq = d.select(graft.functions.AlnumTokens(col("text")))
       .groupBy("word").agg(count(lit(1)).as("cnt")).persist()
     val total = freq.agg(sum(col("cnt"))).collect()(0).getLong(0)
     val feed = d.select(col("source"), col("doc_id"), col("text"))
       .sort("doc_id").as[(String, Long, String)]
-    val ms = MemoryStream[(String, Long, String)](spark)
-    val state = ms.toDF.toDF("source", "doc_id", "text")
-      .select(col("source"), graft.functions.AlnumTokens(col("text")))
-      .join(freq, Seq("word"))
-      .select(col("source"),
-        round(log(col("cnt").cast("double") / lit(total).cast("double"))
-          * 1e6).cast("long").as("lp"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n"), sum(col("lp")).as("slp"))
-    val q = state.writeStream.format("memory").queryName(sink)
-      .outputMode("complete").start()
-    try {
-      feed.toLocalIterator().asScala.grouped(1024).foreach { batch =>
-        ms.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val nll = spark.table(sink)
+    val nll = Feed(spark, "complete", Feed.rows(feed).grouped(1024))(ds =>
+      ds.toDF("source", "doc_id", "text")
+        .select(col("source"), graft.functions.AlnumTokens(col("text")))
+        .join(freq, Seq("word"))
+        .select(col("source"),
+          round(log(col("cnt").cast("double") / lit(total).cast("double"))
+            * 1e6).cast("long").as("lp"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n"), sum(col("lp")).as("slp")))
       .select(col("source"),
         round((-col("slp")).cast("double") / col("n")).cast("long")
           .as("nll_q"))
@@ -175,13 +183,13 @@ object StreamParityQueries {
     * the other sketch a streaming ingest pipeline keeps.
     */
   def q370StreamHll(spark: SparkSession, dir: String): DataFrame = {
-    val regs = runChunked(spark, dir, "graft_q370_hll",
-      df => ReferenceQueries.hllRanks(
-        graft.operators.Tokenizer.tokens(df, "text", Seq("doc_id"))
-          .select("word"))
-        .groupBy("j").agg(max(col("rank")).as("m_j")),
-      mode = "complete")
-    ReferenceQueries.hllFold(regs)
+    import spark.implicits._
+    ReferenceQueries.hllFold(
+      Feed(spark, "complete", corpusChunks(spark, dir, 1024))(ds =>
+        ReferenceQueries.hllRanks(
+          graft.operators.Tokenizer.tokens(ds.toDF("doc_id", "text"), "text", Seq("doc_id"))
+            .select("word"))
+          .groupBy("j").agg(max(col("rank")).as("m_j"))))
   }
 
   /** q375: quantile sketch on ingest, driver-verified — q373's md5
@@ -200,15 +208,15 @@ object StreamParityQueries {
     * (see its scaladoc for why the key is the 52-bit md5 prefix).
     */
   def q375StreamQuantileSketch(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val k = 256
     val topk = udaf(graft.functions.TopKAgg(k))
     val u = conv(substring(md5(col("doc_id").cast("string")), 1, 13), 16, 10)
       .cast("long")
-    val winners = runChunked(spark, dir, "graft_q375_qsketch",
-      df => df.select(col("doc_id"), u.as("u"))
-        .agg(topk((-col("u")).cast("double"), col("doc_id")).as("tops")),
-      mode = "complete")
+    val winners = Feed(spark, "complete", corpusChunks(spark, dir, 1024))(ds =>
+      ds.toDF("doc_id", "text").select(col("doc_id"), u.as("u"))
+        .agg(topk((-col("u")).cast("double"), col("doc_id")).as("tops")))
       .select(explode(col("tops")).as("t"))
       .select(col("t._2").as("doc_id"))
     val s = Documents.read(spark, dir)
@@ -258,27 +266,11 @@ object StreamParityQueries {
     */
   def q267StreamEwma(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val sink = "graft_q267_ewma"
-    spark.catalog.dropTempView(sink)
-    val ev = valEvents(spark, dir)
-    val ms = MemoryStream[StreamingOps.ValEvent](spark)
-    val q = StreamingOps.ewmaPerKey(ms.toDS())
-      .writeStream.format("memory").queryName(sink).outputMode("update").start()
-    try {
-      // 16384-event chunks: still bounded driver memory; the per-batch
-      // cost is the state-store pass over every ACTIVE key, so batch
-      // count — not batch size — dominates the harness cost at scale
-      ev.toLocalIterator().asScala.grouped(16384).foreach { batch =>
-        ms.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(sink)
-      .groupBy("user_id")
-      .agg(max(struct(col("n_events"), col("ewma"))).as("m"))
-      .select(col("user_id"), col("m.n_events").as("n_events"),
-        col("m.ewma").as("ewma"))
+    // 16384-event chunks: still bounded driver memory; the per-batch
+    // cost is the state-store pass over every ACTIVE key, so batch
+    // count — not batch size — dominates the harness cost at scale
+    ewmaFinalState(Feed(spark, "update", Feed.rows(valEvents(spark, dir)).grouped(16384))(
+      StreamingOps.ewmaPerKey))
   }
 
   /** q284: per-key streaming Holt (level, trend) state, driver-verified
@@ -294,24 +286,8 @@ object StreamParityQueries {
     */
   def q284StreamHolt(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val sink = "graft_q284_holt"
-    spark.catalog.dropTempView(sink)
-    val ev = valEvents(spark, dir)
-    val ms = MemoryStream[StreamingOps.ValEvent](spark)
-    val q = StreamingOps.holtPerKey(ms.toDS())
-      .writeStream.format("memory").queryName(sink).outputMode("update").start()
-    try {
-      ev.toLocalIterator().asScala.grouped(16384).foreach { batch =>
-        ms.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(sink)
-      .groupBy("user_id")
-      .agg(max(struct(col("n_events"), col("level"), col("trend"))).as("m"))
-      .select(col("user_id"), col("m.n_events").as("n_events"),
-        col("m.level").as("level"), col("m.trend").as("trend"))
+    holtFinalState(Feed(spark, "update", Feed.rows(valEvents(spark, dir)).grouped(16384))(
+      StreamingOps.holtPerKey))
   }
 
   // batch gaps-and-islands at the per-session grain: island id = running
@@ -567,38 +543,12 @@ object StreamParityQueries {
   private[graft] def q335StreamQuota(
       spark: SparkSession, dir: String, changelog: Boolean): DataFrame = {
     import spark.implicits._
-    quotaRollup(runStatefulGate(spark, "graft_q335_quota",
-      valEvents(spark, dir),
-      (ds: org.apache.spark.sql.Dataset[StreamingOps.ValEvent]) =>
-        StreamingOps.quotaPerKey(ds, cap = 5L).toDF(),
-      changelog = changelog))
-  }
-
-  /** The TransformWithState gates' shared harness (q335/q338/q339):
-    * feed a sorted Dataset through a MemoryStream in 16384-row chunks
-    * (one micro-batch barrier per chunk — the q267 budget) under the
-    * RocksDB provider the state-v2 API requires, and return the memory
-    * sink's contents.
-    */
-  private def runStatefulGate[T: org.apache.spark.sql.Encoder](
-      spark: SparkSession, sink: String,
-      feed: org.apache.spark.sql.Dataset[T],
-      plan: org.apache.spark.sql.Dataset[T] => DataFrame,
-      changelog: Boolean = true): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.catalog.dropTempView(sink)
-    withRocksDbStateStore(spark, changelog) {
-      val ms = MemoryStream[T](spark)
-      val q = plan(ms.toDS())
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try {
-        feed.toLocalIterator().asScala.grouped(16384).foreach { batch =>
-          ms.addData(batch.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      spark.table(sink)
-    }
+    // the TransformWithState gates (q335/q338/q339) feed q267's
+    // 16384-row chunks under the RocksDB provider state v2 requires
+    quotaRollup(withRocksDbStateStore(spark, changelog) {
+      Feed(spark, "append", Feed.rows(valEvents(spark, dir)).grouped(16384))(
+        StreamingOps.quotaPerKey(_, cap = 5L))
+    })
   }
 
   /** Exact batch barrier for plans `processAllAvailable` cannot wait on
@@ -654,13 +604,13 @@ object StreamParityQueries {
     * against state N−1 reproduces the same rows — while a state bug
     * emits different ones and fails the hash).
     */
-  def q336StreamQuotaRecovery(spark: SparkSession, dir: String): DataFrame =
-    quotaRollup(
-      withRocksDbStateStore(spark) {
-        runValEventWithRestart(spark, dir,
-          ds => StreamingOps.quotaPerKey(ds, cap = 5L).toDF(),
-          outputMode = "append")
-      }.distinct())
+  def q336StreamQuotaRecovery(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    quotaRollup(withRocksDbStateStore(spark) {
+      val (batches, restarts) = sixths(valEvents(spark, dir), 16384L)
+      Feed(spark, "append", batches, restarts)(StreamingOps.quotaPerKey(_, cap = 5L))
+    }.distinct())
+  }
 
   /** q357: the RocksDB checkpoint-format MIGRATION gate — q336 proves
     * state survives a restart under ONE format; Round12Spec proves the
@@ -740,7 +690,7 @@ object StreamParityQueries {
           new java.util.LinkedHashSet(buf)), outSchema))
     } finally {
       if (q != null) q.stop()
-      deleteRecursively(ckpt)
+      FileUtils.deleteQuietly(new java.io.File(ckpt))
     }
   }
 
@@ -760,9 +710,9 @@ object StreamParityQueries {
         col("event_id"), col("event_type"))
       .as[StreamingOps.TypedEvent]
       .sort("ts", "event_id")
-    runStatefulGate(spark, "graft_q338_typecounts", ev,
-      (ds: org.apache.spark.sql.Dataset[StreamingOps.TypedEvent]) =>
-        StreamingOps.typeCountsPerKey(ds).toDF())
+    withRocksDbStateStore(spark) {
+      Feed(spark, "append", Feed.rows(ev).grouped(16384))(StreamingOps.typeCountsPerKey)
+    }
       .groupBy("user_id", "event_type")
       .agg(max(col("cnt")).as("cnt"))
   }
@@ -778,9 +728,10 @@ object StreamParityQueries {
     */
   def q339StreamRecentItems(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    runStatefulGate(spark, "graft_q339_recent", valEvents(spark, dir),
-      (ds: org.apache.spark.sql.Dataset[StreamingOps.ValEvent]) =>
-        StreamingOps.recentItemsPerKey(ds, keep = 3).toDF())
+    withRocksDbStateStore(spark) {
+      Feed(spark, "append", Feed.rows(valEvents(spark, dir)).grouped(16384))(
+        StreamingOps.recentItemsPerKey(_, keep = 3))
+    }
       .groupBy("user_id")
       .agg(max(struct(col("n_seen"), col("recent"))).as("m"))
       .select(col("user_id"), col("m.n_seen").as("n_seen"),
@@ -814,14 +765,8 @@ object StreamParityQueries {
     */
   def q340StreamDedupBounded(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val sink = "graft_q340_bounded"
-    spark.catalog.dropTempView(sink)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("ts", "event_id") // user-grain, never global
-    // 2024-01-01T00:00:00Z; timestamp_seconds is epoch-based, so the
-    // construction (and its oracle mirror) is timezone-independent
-    val epoch0 = 1704067200L
     // persisted: the maxSlice 1-row collect and the feed drain otherwise
     // each re-run the scan + per-user window (runner owns the lifecycle)
     val users = RelationalQueries.events(spark, dir)
@@ -830,7 +775,7 @@ object StreamParityQueries {
       .withColumn("slice",
         lit(2L) * floor(col("rn") / 4).cast("long") + pmod(col("user_id"), lit(2L)))
       .select(col("user_id"),
-        timestamp_seconds(lit(epoch0) + col("slice") * 7200L +
+        timestamp_seconds(lit(Epoch0) + col("slice") * 7200L +
           pmod(col("rn"), lit(4L)) * 10L).as("ts"),
         col("event_id"), col("slice"))
       .persist()
@@ -846,31 +791,16 @@ object StreamParityQueries {
     val maxSlice = users.agg(max(col("slice"))).head().getLong(0) // 1-row collect
     val ticks = spark.range(0L, maxSlice + 1L)
       .select(lit(-1L).as("user_id"),
-        timestamp_seconds(lit(epoch0) + col("id") * 7200L + lit(30L)).as("ts"),
+        timestamp_seconds(lit(Epoch0) + col("id") * 7200L + lit(30L)).as("ts"),
         (-col("id") - 1L).as("event_id"), col("id").as("slice"))
     val feed = users.unionByName(ticks)
       .as[StreamingOps.SlicedEvent]
       .sort("slice", "user_id", "event_id")
-    val ms = MemoryStream[StreamingOps.SlicedEvent](spark)
-    val q = StreamingOps
-      .dedupBoundedOnIngest(ms.toDF(), Seq("user_id"), "ts", "60 seconds")
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      // one micro-batch per slice: the slice boundary IS the watermark
-      // step the contract above reasons about, so it must be a real
-      // batch boundary, not a row-count accident
-      val buf = scala.collection.mutable.ArrayBuffer[StreamingOps.SlicedEvent]()
-      var cur = Long.MinValue
-      def flush(): Unit = if (buf.nonEmpty) {
-        ms.addData(buf.toIndexedSeq); q.processAllAvailable(); buf.clear()
-      }
-      feed.toLocalIterator().asScala.foreach { e =>
-        if (e.slice != cur) { flush(); cur = e.slice }
-        buf += e
-      }
-      flush()
-    } finally q.stop()
-    spark.table(sink)
+    // one micro-batch per slice: the slice boundary IS the watermark
+    // step the contract above reasons about, so it must be a real
+    // batch boundary, not a row-count accident
+    Feed(spark, "append", Feed.runs(Feed.rows(feed))(_.slice))(ds =>
+      StreamingOps.dedupBoundedOnIngest(ds.toDF(), Seq("user_id"), "ts", "60 seconds"))
       .filter(col("user_id") >= 0L) // drop the harness ticker key
       .groupBy("user_id", "slice")
       .agg(count(lit(1)).as("n_emitted"))
@@ -939,11 +869,11 @@ object StreamParityQueries {
     * the digests and misses buckets outright.
     */
   def q342StreamNearDup(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     assertDocTsRange(spark, dir)
-    runChunked(spark, dir, "graft_q342_neardup",
-      df => StreamingOps.nearDupOnIngest(
-        withDocTs(df), "text", "doc_id", "ts", retentionMs = YearMs).toDF(),
-      maxChunk = 4096)
+    Feed(spark, "append", corpusChunks(spark, dir, 4096))(ds =>
+      StreamingOps.nearDupOnIngest(
+        withDocTs(ds.toDF("doc_id", "text")), "text", "doc_id", "ts", retentionMs = YearMs))
       .groupBy("doc_id")
       .agg(min(col("dup_of")).as("dup_of"))
   }
@@ -969,14 +899,12 @@ object StreamParityQueries {
     val docs = Documents.read(spark, dir)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .sort("doc_id")
-    // verdicts only, so the shared harness's driver buffer is bounded
-    // by (near-dup docs × matching bands), not the corpus
-    runFeedWithRestart(spark, docs,
-      (ds: org.apache.spark.sql.Dataset[(Long, String)]) =>
-        StreamingOps.nearDupOnIngest(
-          withDocTs(ds.toDF("doc_id", "text")),
-          "text", "doc_id", "ts", retentionMs = YearMs).toDF(),
-      outputMode = "append", maxChunk = 4096L)
+    // verdicts only, so the feed's driver buffer is bounded by
+    // (near-dup docs × matching bands), not the corpus
+    val (batches, restarts) = sixths(docs, 4096L)
+    Feed(spark, "append", batches, restarts)(ds =>
+      StreamingOps.nearDupOnIngest(
+        withDocTs(ds.toDF("doc_id", "text")), "text", "doc_id", "ts", retentionMs = YearMs))
       .distinct()
       .groupBy("doc_id")
       .agg(min(col("dup_of")).as("dup_of"))
@@ -1005,8 +933,6 @@ object StreamParityQueries {
     */
   def q345StreamNearDupEvict(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sink = "graft_q345_evict"
-    spark.catalog.dropTempView(sink)
     val docs0 = Documents.read(spark, dir)
       .select(col("doc_id"), col("text"))
     // batch-side eligibility on the SAME row-local banding the stream
@@ -1047,20 +973,12 @@ object StreamParityQueries {
       Seq(mk(s0, r, 0L, 0L, text), mk(s0, r, 1L, 10L, text),
         mk(s0 + 4L, r, 2L, 20L, text))
     }.sortBy(f => (f.slice, f.doc_id))
-    val ms = MemoryStream[(Long, String, java.sql.Timestamp)](spark)
-    val q = StreamingOps.nearDupOnIngest(
-        ms.toDF.toDF("doc_id", "text", "ts"),
-        "text", "doc_id", "ts", retentionMs = 60000L)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      // one micro-batch per slice — the slice boundary IS the watermark
-      // step the eviction argument above reasons about (q340's rule)
-      rows.groupBy(_.slice).toSeq.sortBy(_._1).foreach { case (_, fs) =>
-        ms.addData(fs.map(f => (f.doc_id, f.text, f.ts)).toIndexedSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(sink)
+    // one micro-batch per slice — the slice boundary IS the watermark
+    // step the eviction argument above reasons about (q340's rule)
+    Feed(spark, "append",
+      Feed.runs(rows.iterator)(_.slice).map(_.map(f => (f.doc_id, f.text, f.ts))))(ds =>
+      StreamingOps.nearDupOnIngest(
+        ds.toDF("doc_id", "text", "ts"), "text", "doc_id", "ts", retentionMs = 60000L))
       .groupBy("doc_id")
       .agg(min(col("dup_of")).as("dup_of"))
   }
@@ -1082,29 +1000,19 @@ object StreamParityQueries {
     */
   def q346StreamNearDupOoo(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val sink = "graft_q346_neardup_ooo"
-    spark.catalog.dropTempView(sink)
     val docs = Documents.read(spark, dir)
       .select(col("doc_id"), col("text"))
       .orderBy(md5(col("doc_id").cast("string"))) // deterministic id-shuffle
       .as[(Long, String)]
-    val ms = MemoryStream[(Long, String, java.sql.Timestamp)](spark)
-    val q = StreamingOps.nearDupOnIngestUnordered(
-        ms.toDF.toDF("doc_id", "text", "ts"),
-        "text", "doc_id", "ts", retentionMs = YearMs)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      // arrival time = chunk index (the unordered operator's retention
-      // clock is ARRIVAL-based — ingest time, not any doc property)
-      docs.toLocalIterator().asScala.grouped(4096).zipWithIndex.foreach {
-        case (batch, i) =>
-          val ts = usTimestamp((Epoch0 + i) * 1000000L)
-          ms.addData(batch.map { case (id, t) => (id, t, ts) }.toIndexedSeq)
-          q.processAllAvailable()
-      }
-    } finally q.stop()
-    val v = spark.table(sink)
+    // arrival time = chunk index (the unordered operator's retention
+    // clock is ARRIVAL-based — ingest time, not any doc property)
+    val batches = Feed.rows(docs).grouped(4096).zipWithIndex.map { case (batch, i) =>
+      val ts = usTimestamp((Epoch0 + i) * 1000000L)
+      batch.map { case (id, t) => (id, t, ts) }
+    }
+    val v = Feed(spark, "append", batches)(ds =>
+      StreamingOps.nearDupOnIngestUnordered(
+        ds.toDF("doc_id", "text", "ts"), "text", "doc_id", "ts", retentionMs = YearMs))
     v.select(col("band"), col("digest"), col("doc_id"))
       .unionByName(v.select(col("band"), col("digest"), col("dup_of").as("doc_id")))
       .distinct()
@@ -1130,28 +1038,42 @@ object StreamParityQueries {
     */
   def q348StreamReservoir(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val sink = "graft_q348_reservoir"
-    spark.catalog.dropTempView(sink)
-    val docs = Documents.read(spark, dir)
+    reservoirFinalState(Feed(spark, "update", Feed.rows(arrivals(spark, dir)).grouped(4096))(
+      StreamingOps.reservoirPerKey(_, k = 20)))
+  }
+
+  /** The reservoir gates' feed (q348/q350): every document's
+    * (source, doc_id) in a deterministic id-shuffled order (md5 of the
+    * id), the adversarial arrival order a delivery-order-invariant
+    * operator must withstand.
+    */
+  private def arrivals(spark: SparkSession, dir: String): Dataset[StreamingOps.DocArrival] = {
+    import spark.implicits._
+    Documents.read(spark, dir)
       .select(col("source"), col("doc_id"))
-      .orderBy(md5(col("doc_id").cast("string"))) // deterministic id-shuffle
+      .orderBy(md5(col("doc_id").cast("string")))
       .as[StreamingOps.DocArrival]
-    val ms = MemoryStream[StreamingOps.DocArrival](spark)
-    val q = StreamingOps.reservoirPerKey(ms.toDS(), k = 20)
-      .writeStream.format("memory").queryName(sink).outputMode("update").start()
-    try {
-      docs.toLocalIterator().asScala.grouped(4096).foreach { batch =>
-        ms.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(sink)
+  }
+
+  /** [[arrivals]] with each document's weight, its n_chars (q349/q351). */
+  private def weightedArrivals(
+      spark: SparkSession, dir: String): Dataset[StreamingOps.WeightedArrival] = {
+    import spark.implicits._
+    Documents.read(spark, dir)
+      .select(col("source"), col("doc_id"), col("n_chars").cast("double").as("weight"))
+      .orderBy(md5(col("doc_id").cast("string")))
+      .as[StreamingOps.WeightedArrival]
+  }
+
+  /** Per-source FINAL reservoir (the max-n update row), shared by the
+    * four reservoir gates.
+    */
+  private def reservoirFinalState(updates: DataFrame): DataFrame =
+    updates
       .groupBy("source")
       .agg(max(struct(col("n_seen"), col("sample"))).as("m"))
       .select(col("source"), col("m.n_seen").as("n_seen"),
         col("m.sample").as("sample"))
-  }
 
   /** q349: WEIGHTED streaming reservoir, driver-verified —
     * [[StreamingOps.weightedReservoirPerKey]] (Efraimidis–Spirakis
@@ -1167,27 +1089,8 @@ object StreamParityQueries {
     */
   def q349StreamWeightedReservoir(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val sink = "graft_q349_wreservoir"
-    spark.catalog.dropTempView(sink)
-    val docs = Documents.read(spark, dir)
-      .select(col("source"), col("doc_id"), col("n_chars").cast("double").as("weight"))
-      .orderBy(md5(col("doc_id").cast("string"))) // deterministic id-shuffle
-      .as[StreamingOps.WeightedArrival]
-    val ms = MemoryStream[StreamingOps.WeightedArrival](spark)
-    val q = StreamingOps.weightedReservoirPerKey(ms.toDS(), k = 20)
-      .writeStream.format("memory").queryName(sink).outputMode("update").start()
-    try {
-      docs.toLocalIterator().asScala.grouped(4096).foreach { batch =>
-        ms.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(sink)
-      .groupBy("source")
-      .agg(max(struct(col("n_seen"), col("sample"))).as("m"))
-      .select(col("source"), col("m.n_seen").as("n_seen"),
-        col("m.sample").as("sample"))
+    reservoirFinalState(Feed(spark, "update", Feed.rows(weightedArrivals(spark, dir)).grouped(4096))(
+      StreamingOps.weightedReservoirPerKey(_, k = 20)))
   }
 
   /** q350: q348's reservoir ACROSS A QUERY RESTART — the recovery gate
@@ -1207,18 +1110,9 @@ object StreamParityQueries {
     */
   def q350StreamReservoirRecovery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docs = Documents.read(spark, dir)
-      .select(col("source"), col("doc_id"))
-      .orderBy(md5(col("doc_id").cast("string"))) // deterministic id-shuffle
-      .as[StreamingOps.DocArrival]
-    runFeedWithRestart(spark, docs,
-      (ds: org.apache.spark.sql.Dataset[StreamingOps.DocArrival]) =>
-        StreamingOps.reservoirPerKey(ds, k = 20).toDF(),
-      outputMode = "update", maxChunk = 4096L)
-      .groupBy("source")
-      .agg(max(struct(col("n_seen"), col("sample"))).as("m"))
-      .select(col("source"), col("m.n_seen").as("n_seen"),
-        col("m.sample").as("sample"))
+    val (batches, restarts) = sixths(arrivals(spark, dir), 4096L)
+    reservoirFinalState(Feed(spark, "update", batches, restarts)(
+      StreamingOps.reservoirPerKey(_, k = 20)))
   }
 
   /** q351: q349's WEIGHTED reservoir across a query restart — the
@@ -1231,19 +1125,9 @@ object StreamParityQueries {
   def q351StreamWeightedReservoirRecovery(
       spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docs = Documents.read(spark, dir)
-      .select(col("source"), col("doc_id"),
-        col("n_chars").cast("double").as("weight"))
-      .orderBy(md5(col("doc_id").cast("string"))) // deterministic id-shuffle
-      .as[StreamingOps.WeightedArrival]
-    runFeedWithRestart(spark, docs,
-      (ds: org.apache.spark.sql.Dataset[StreamingOps.WeightedArrival]) =>
-        StreamingOps.weightedReservoirPerKey(ds, k = 20).toDF(),
-      outputMode = "update", maxChunk = 4096L)
-      .groupBy("source")
-      .agg(max(struct(col("n_seen"), col("sample"))).as("m"))
-      .select(col("source"), col("m.n_seen").as("n_seen"),
-        col("m.sample").as("sample"))
+    val (batches, restarts) = sixths(weightedArrivals(spark, dir), 4096L)
+    reservoirFinalState(Feed(spark, "update", batches, restarts)(
+      StreamingOps.weightedReservoirPerKey(_, k = 20)))
   }
 
   /** q347: the RETENTION-bounded quota, driver-verified —
@@ -1424,7 +1308,7 @@ object StreamParityQueries {
             new java.util.LinkedHashSet(buf)), outSchema)
       } finally {
         if (q != null) q.stop()
-        deleteRecursively(ckpt)
+        FileUtils.deleteQuietly(new java.io.File(ckpt))
       }
     }
     verdicts
@@ -1486,6 +1370,11 @@ object StreamParityQueries {
     }
     def clock(us: Long): StreamingOps.ValEvent = StreamingOps.ValEvent(
       -1L, new java.sql.Timestamp(us / 1000L), -1L, 0.0)
+    /** Each slice as one batch, then one clock batch per barrier. */
+    def batches: Iterator[Seq[StreamingOps.ValEvent]] =
+      bySlice.iterator.flatMap { case (s, rows) => rows +: barriers(s).map(t => Seq(clock(t))) }
+    /** q355's restarts: between each slice's two barrier batches. */
+    def betweenBarriers: Set[Int] = bySlice.indices.map(3 * _ + 2).toSet
   }
 
   private def ewmaEvictFeed(spark: SparkSession, dir: String): EvictFeed = {
@@ -1520,23 +1409,9 @@ object StreamParityQueries {
 
   def q353StreamEwmaEvict(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sink = "graft_q353_ewma_evict"
-    spark.catalog.dropTempView(sink)
-    val f = ewmaEvictFeed(spark, dir)
-    val ms = MemoryStream[StreamingOps.ValEvent](spark)
-    val q = StreamingOps.ewmaPerKeyEvicting(ms.toDS(), EvictRetentionMs)
-      .writeStream.format("memory").queryName(sink).outputMode("update").start()
-    try {
-      f.bySlice.foreach { case (s, rows) =>
-        ms.addData(rows)
-        q.processAllAvailable()
-        f.barriers(s).foreach { t =>
-          ms.addData(Seq(f.clock(t)))
-          q.processAllAvailable()
-        }
-      }
-    } finally q.stop()
-    spark.table(sink).filter(col("user_id") >= 0L)
+    Feed(spark, "update", ewmaEvictFeed(spark, dir).batches)(
+      StreamingOps.ewmaPerKeyEvicting(_, EvictRetentionMs))
+      .filter(col("user_id") >= 0L)
       .select(col("user_id"), col("n_events"), col("ewma"))
   }
 
@@ -1573,23 +1448,9 @@ object StreamParityQueries {
     */
   def q359StreamHoltEvict(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sink = "graft_q359_holt_evict"
-    spark.catalog.dropTempView(sink)
-    val f = ewmaEvictFeed(spark, dir)
-    val ms = MemoryStream[StreamingOps.ValEvent](spark)
-    val q = StreamingOps.holtPerKeyEvicting(ms.toDS(), EvictRetentionMs)
-      .writeStream.format("memory").queryName(sink).outputMode("update").start()
-    try {
-      f.bySlice.foreach { case (s, rows) =>
-        ms.addData(rows)
-        q.processAllAvailable()
-        f.barriers(s).foreach { t =>
-          ms.addData(Seq(f.clock(t)))
-          q.processAllAvailable()
-        }
-      }
-    } finally q.stop()
-    spark.table(sink).filter(col("user_id") >= 0L)
+    Feed(spark, "update", ewmaEvictFeed(spark, dir).batches)(
+      StreamingOps.holtPerKeyEvicting(_, EvictRetentionMs))
+      .filter(col("user_id") >= 0L)
       .select(col("user_id"), col("n_events"), col("level"), col("trend"))
   }
 
@@ -1609,23 +1470,9 @@ object StreamParityQueries {
     */
   def q361StreamHwEvict(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sink = "graft_q361_hw_evict"
-    spark.catalog.dropTempView(sink)
-    val f = ewmaEvictFeed(spark, dir)
-    val ms = MemoryStream[StreamingOps.ValEvent](spark)
-    val q = StreamingOps.holtWintersPerKeyEvicting(ms.toDS(), EvictRetentionMs)
-      .writeStream.format("memory").queryName(sink).outputMode("update").start()
-    try {
-      f.bySlice.foreach { case (s, rows) =>
-        ms.addData(rows)
-        q.processAllAvailable()
-        f.barriers(s).foreach { t =>
-          ms.addData(Seq(f.clock(t)))
-          q.processAllAvailable()
-        }
-      }
-    } finally q.stop()
-    spark.table(sink).filter(col("user_id") >= 0L)
+    Feed(spark, "update", ewmaEvictFeed(spark, dir).batches)(
+      StreamingOps.holtWintersPerKeyEvicting(_, EvictRetentionMs))
+      .filter(col("user_id") >= 0L)
       .select(col("user_id"), col("n_events"), col("level"), col("trend"),
         col("s0"), col("s1"), col("s2"), col("s3"))
   }
@@ -1633,42 +1480,13 @@ object StreamParityQueries {
   def q355StreamEwmaEvictRecovery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val f = ewmaEvictFeed(spark, dir)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-q355").toString
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
-    val ms = MemoryStream[StreamingOps.ValEvent](spark)
-    def plan = StreamingOps.ewmaPerKeyEvicting(ms.toDS(), EvictRetentionMs).toDF()
-    val outSchema = plan.schema
-    def start() = plan.writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.collect().foreach(buf.add); ()
-      }
-      .start()
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      q = start()
-      f.bySlice.foreach { case (s, rows) =>
-        ms.addData(rows)
-        q.processAllAvailable()
-        val Seq(b1, b2) = f.barriers(s)
-        ms.addData(Seq(f.clock(b1)))
-        q.processAllAvailable()
-        // the recovery point: fold state + registered timers + the
-        // watermark barrier 1 committed must all reload — barrier 2's
-        // batch is where the recovered timers have to fire
-        q.stop()
-        q = start()
-        ms.addData(Seq(f.clock(b2)))
-        q.processAllAvailable()
-      }
-      q.stop()
-      spark.createDataFrame(new java.util.ArrayList(buf), outSchema)
-        .filter(col("user_id") >= 0L)
-        .select(col("user_id"), col("n_events"), col("ewma"))
-    } finally {
-      if (q != null) q.stop()
-      deleteRecursively(ckpt)
-    }
+    // the recovery point: fold state + registered timers + the
+    // watermark barrier 1 committed must all reload — barrier 2's
+    // batch is where the recovered timers have to fire
+    Feed(spark, "update", f.batches, f.betweenBarriers)(
+      StreamingOps.ewmaPerKeyEvicting(_, EvictRetentionMs))
+      .filter(col("user_id") >= 0L)
+      .select(col("user_id"), col("n_events"), col("ewma"))
   }
 
   /** q305: watermarked SLIDING-window parity, driver-verified — q297's
@@ -1683,36 +1501,39 @@ object StreamParityQueries {
     */
   def q305StreamSlidingCounts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val sink = "graft_q305_sliding"
-    spark.catalog.dropTempView(sink)
-    val ev = RelationalQueries.events(spark, dir)
+    Feed(spark, "append", typeFeed(spark, dir))(ds =>
+      StreamingOps.eventSlidingCounts(ds.toDF("ts", "event_type")))
+      .filter(col("event_type") =!= "__sentinel")
+  }
+
+  /** The window gates' feed (q297/q305): every event's
+    * (ts, event_type) in time order, then two `__sentinel` rows 2 h and
+    * 4 h past the last event that finalize the tail windows.
+    */
+  private def typeFeed(spark: SparkSession, dir: String)
+      : Iterator[Seq[(java.sql.Timestamp, String)]] = {
+    import spark.implicits._
+    sentinelled(RelationalQueries.events(spark, dir)
       .select(col("ts").cast("timestamp").as("ts"), col("event_type"))
       .as[(java.sql.Timestamp, String)]
-      .sort("ts", "event_type")
-      // persisted: count, max-ts and the feed pass otherwise each
-      // re-scan and re-sort the corpus (disorderPrelude's fix, applied)
-      .persist()
-    val n = ev.count()
+      .sort("ts", "event_type"), 7200L)(ts => (ts, "__sentinel"))
+  }
+
+  /** The watermark gates' feed: `ev` (persisted: the count, the max-ts
+    * pass and the drain each read it) in at least six chunks of at most
+    * 16384 rows, then one sentinel row `stepSec` and one `2·stepSec`
+    * past the last event, each its own batch: the first moves the
+    * watermark past every open window or session, the second runs the
+    * batch that finalizes them.
+    */
+  private def sentinelled[T](ev: Dataset[T], stepSec: Long)(
+      sentinel: java.sql.Timestamp => T): Iterator[Seq[T]] = {
+    val p = ev.persist()
+    val n = p.count()
     val chunk = math.max(1L, math.min(16384L, (n + 5) / 6)).toInt
-    val maxUs = ev.agg(max(unix_micros(col("ts")))).as[Long].collect().head
-    def sentinel(us: Long) = (java.sql.Timestamp.from(
-      java.time.Instant.ofEpochSecond(us / 1000000L, us % 1000000L * 1000L)),
-      "__sentinel")
-    val ms = MemoryStream[(java.sql.Timestamp, String)](spark)
-    val q = StreamingOps.eventSlidingCounts(ms.toDF.toDF("ts", "event_type"))
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      ev.toLocalIterator().asScala.grouped(chunk).foreach { batch =>
-        ms.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-      }
-      for (k <- 1 to 2) {
-        ms.addData(Seq(sentinel(maxUs + k * 7200L * 1000000L)))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(sink).filter(col("event_type") =!= "__sentinel")
+    val maxUs = p.agg(max(unix_micros(col("ts")))).head().getLong(0)
+    Feed.rows(p).grouped(chunk) ++
+      (1 to 2).iterator.map(k => Seq(sentinel(usTimestamp(maxUs + k * stepSec * 1000000L))))
   }
 
   /** q304: per-key streaming Holt-Winters (level, trend, 4-slot
@@ -1727,121 +1548,8 @@ object StreamParityQueries {
     */
   def q304StreamHoltWinters(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val sink = "graft_q304_hw"
-    spark.catalog.dropTempView(sink)
-    val ev = valEvents(spark, dir)
-    val ms = MemoryStream[StreamingOps.ValEvent](spark)
-    val q = StreamingOps.holtWintersPerKey(ms.toDS())
-      .writeStream.format("memory").queryName(sink).outputMode("update").start()
-    try {
-      ev.toLocalIterator().asScala.grouped(16384).foreach { batch =>
-        ms.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(sink)
-      .transform(hwFinalState)
-  }
-
-  /** Recursive best-effort delete of a harness temp dir (checkpoint
-    * locations are per-invocation scratch, never part of the answer).
-    */
-  private def deleteRecursively(path: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p) // must-close stream (fd leak)
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(f => try java.nio.file.Files.deleteIfExists(f) catch {
-          case _: java.io.IOException => ()
-        })
-      finally walk.close()
-    }
-  }
-
-  /** Run a [[StreamingOps.ValEvent]] streaming plan over the
-    * time-ordered events feed WITH ONE QUERY RESTART in the middle: the
-    * first half of the feed goes to one query, the query is STOPPED, a
-    * new query over the same MemoryStream and the SAME CHECKPOINT takes
-    * the rest; both queries append their update rows to one driver
-    * buffer through foreachBatch (the memory sink refuses recovery). mapGroupsWithState state must be reloaded from the
-    * checkpoint's state store bit-exactly — a key whose state reset
-    * re-seeds its fold (wrong n_events AND wrong value) and a source
-    * offset reset double-counts — so comparing the per-key FINAL state
-    * (max-n row across both sinks; updates are idempotent under replay
-    * because n_events strictly increases) against the batch oracle is
-    * the recovery gate. Returns the union of both sinks' updates.
-    */
-  private def runValEventWithRestart(
-      spark: SparkSession, dir: String,
-      plan: org.apache.spark.sql.Dataset[StreamingOps.ValEvent] => DataFrame,
-      outputMode: String = "update"): DataFrame = {
-    import spark.implicits._
-    runFeedWithRestart(spark, valEvents(spark, dir), plan, outputMode,
-      maxChunk = 16384L)
-  }
-
-  /** Generic single-stream restart harness (q285/q286/q307/q336/q343):
-    * feed `ev` in ⌈n/6⌉-row chunks (capped at `maxChunk`), stop the
-    * query once mid-feed and resume it from the same checkpoint, and
-    * return every output row buffered through ForeachBatchSink — the
-    * memory sink refuses checkpoint recovery (not durable), while
-    * ForeachBatchSink is the standard recoverable production pattern.
-    * The driver buffer holds the emitted rows — bounded by the gate's
-    * answer grain, a harness-scale contract like the chunked feed. A
-    * fresh checkpoint per invocation (a reused one would resume past
-    * the re-fed MemoryStream offsets and process nothing); the feed is
-    * persisted (the count and the drain otherwise each re-run the
-    * corpus sort; the runner owns the cache lifecycle). The active
-    * query is stopped on ALL paths BEFORE the checkpoint dir is
-    * deleted — an error mid-feed must not leave a zombie query
-    * writing into a deleted checkpoint for the rest of the run.
-    */
-  private def runFeedWithRestart[I: org.apache.spark.sql.Encoder](
-      spark: SparkSession,
-      feed: org.apache.spark.sql.Dataset[I],
-      plan: org.apache.spark.sql.Dataset[I] => DataFrame,
-      outputMode: String,
-      maxChunk: Long): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-recov").toString
-    val ev = feed.persist()
-    val n = ev.count()
-    // ≥6 chunks (restart after 3) — bounded driver memory either way
-    val chunk = math.max(1L, math.min(maxChunk, (n + 5) / 6)).toInt
-    val ms = MemoryStream[I](spark)
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
-    val outSchema = plan(ms.toDS()).schema
-    def start() = plan(ms.toDS())
-      .writeStream.outputMode(outputMode)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.collect().foreach(buf.add); ()
-      }
-      .start()
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      q = start()
-      var fed = 0L
-      var restarted = false
-      ev.toLocalIterator().asScala.grouped(chunk).foreach { batch =>
-        if (!restarted && fed >= (n + 1) / 2) {
-          q.stop()
-          q = start() // same checkpoint: state must carry over
-          restarted = true
-        }
-        ms.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-        fed += batch.size
-      }
-      q.stop()
-      spark.createDataFrame(
-        new java.util.ArrayList(buf), outSchema)
-    } finally {
-      if (q != null) q.stop() // no-op when already stopped
-      deleteRecursively(ckpt)
-    }
+    hwFinalState(Feed(spark, "update", Feed.rows(valEvents(spark, dir)).grouped(16384))(
+      StreamingOps.holtWintersPerKey))
   }
 
   /** q285: q267's streaming-EWMA parity RE-ASSERTED ACROSS A QUERY
@@ -1852,26 +1560,22 @@ object StreamParityQueries {
     * committed offset (a reset key re-seeds and fails; a replayed
     * offset double-counts n_events and fails).
     */
-  def q285StreamEwmaRecovery(spark: SparkSession, dir: String): DataFrame =
-    runValEventWithRestart(spark, dir,
-      ds => StreamingOps.ewmaPerKey(ds).toDF())
-      .groupBy("user_id")
-      .agg(max(struct(col("n_events"), col("ewma"))).as("m"))
-      .select(col("user_id"), col("m.n_events").as("n_events"),
-        col("m.ewma").as("ewma"))
+  def q285StreamEwmaRecovery(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val (batches, restarts) = sixths(valEvents(spark, dir), 16384L)
+    ewmaFinalState(Feed(spark, "update", batches, restarts)(StreamingOps.ewmaPerKey))
+  }
 
   /** q286: q284's coupled Holt (level, trend) state across a restart —
     * the two-variable recovery gate: both state fields must reload
     * bit-exactly or the post-restart recurrence diverges for every
     * affected key.
     */
-  def q286StreamHoltRecovery(spark: SparkSession, dir: String): DataFrame =
-    runValEventWithRestart(spark, dir,
-      ds => StreamingOps.holtPerKey(ds).toDF())
-      .groupBy("user_id")
-      .agg(max(struct(col("n_events"), col("level"), col("trend"))).as("m"))
-      .select(col("user_id"), col("m.n_events").as("n_events"),
-        col("m.level").as("level"), col("m.trend").as("trend"))
+  def q286StreamHoltRecovery(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val (batches, restarts) = sixths(valEvents(spark, dir), 16384L)
+    holtFinalState(Feed(spark, "update", batches, restarts)(StreamingOps.holtPerKey))
+  }
 
   /** q307: Holt-Winters state ACROSS A RESTART — the recovery family
     * (q285 scalar EWMA, q286 coupled scalar pair, q287 unbounded set)
@@ -1883,10 +1587,11 @@ object StreamParityQueries {
     * batch fold (the oracle, verbatim — same convention as the other
     * recovery gates).
     */
-  def q307StreamHwRecovery(spark: SparkSession, dir: String): DataFrame =
-    runValEventWithRestart(spark, dir,
-      ds => StreamingOps.holtWintersPerKey(ds).toDF())
-      .transform(hwFinalState)
+  def q307StreamHwRecovery(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val (batches, restarts) = sixths(valEvents(spark, dir), 16384L)
+    hwFinalState(Feed(spark, "update", batches, restarts)(StreamingOps.holtWintersPerKey))
+  }
 
   /** q287: dedup-on-ingest ACROSS A RESTART — the corpus arrives over
     * micro-batches with one stop/resume in the middle; the streaming
@@ -1901,90 +1606,39 @@ object StreamParityQueries {
     */
   def q287StreamDedupRecovery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-recov").toString
     val docs = Documents.read(spark, dir)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .sort("doc_id")
-    val n = docs.count()
-    val chunk = math.max(1L, math.min(4096L, (n + 5) / 6)).toInt
-    val ms = MemoryStream[(Long, String)](spark)
-    // survivors only (the fp grain is computed batch-side below), so the
-    // driver buffer is bounded by the DISTINCT-content count
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
-    def start() =
-      StreamingOps.dedupOnIngest(ms.toDF.toDF("doc_id", "text"), "text")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch
-            .select(
-              md5(graft.functions.TextFunctions.normText(col("text"))).as("fp"),
-              col("doc_id"))
-            .as[(String, Long)].collect().foreach(buf.add)
-          ()
-        }
-        .start()
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    val emitted =
-      try {
-        q = start()
-        var fed = 0L
-        var restarted = false
-        docs.toLocalIterator().asScala.grouped(chunk).foreach { batch =>
-          if (!restarted && fed >= (n + 1) / 2) {
-            q.stop()
-            q = start()
-            restarted = true
-          }
-          ms.addData(batch.toIndexedSeq)
-          q.processAllAvailable()
-          fed += batch.size
-        }
-        q.stop()
-        buf.asScala.toSeq.toDF("fp", "doc_id")
-      } finally {
-        if (q != null) q.stop() // all paths, BEFORE the checkpoint delete
-        deleteRecursively(ckpt)
-      }
-    emitted.groupBy("fp").agg(countDistinct(col("doc_id")).as("n_emitted_ids"))
+    val (batches, restarts) = sixths(docs, 4096L)
+    // survivors only, as (fp, doc_id), so the driver buffer is bounded
+    // by the DISTINCT-content count
+    Feed(spark, "append", batches, restarts)(ds =>
+      StreamingOps.dedupOnIngest(ds.toDF("doc_id", "text"), "text")
+        .select(md5(graft.functions.TextFunctions.normText(col("text"))).as("fp"),
+          col("doc_id")))
+      .groupBy("fp").agg(countDistinct(col("doc_id")).as("n_emitted_ids"))
   }
-
-  /** q293: streaming EWMA under OUT-OF-ORDER delivery, driver-verified —
-    * the events feed arrives with ADJACENT CHUNK PAIRS SWAPPED (chunk 2
-    * before chunk 1, 4 before 3, …: deterministic cross-batch disorder),
-    * processed by [[StreamingOps.ewmaPerKeyOrdered]] with a watermark
-    * delay measured from the data to cover the widest swapped pair — so
-    * no event is ever late, every event buffers until the watermark
-    * passes it, and the folds happen in exact (ts, event_id) order
-    * regardless of arrival order. The final per-key state must hash-
-    * equal the SAME in-order batch-fold oracle q267 uses: the disorder
-    * must be answer-invisible. Two watermark-advancing sentinel batches
-    * (user −1, filtered out) flush the buffered tails through the
-    * event-time timeouts.
-    */
-  /** Epoch micros of a timestamp (floorDiv keeps pre-epoch exact) —
-    * shared by every disorder harness below.
-    */
-  private def tsMicros(t: java.sql.Timestamp): Long =
-    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
 
   private def usTimestamp(us: Long): java.sql.Timestamp =
     java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
       us / 1000000L, us % 1000000L * 1000L))
 
-  /** The shared pair-swapped-disorder prelude: the time-sorted events
-    * feed, its chunk width (24 chunks — see the q293 pending-volume
-    * note), the watermark delay that covers the widest swapped pair,
-    * and the global max event micro for sentinel placement.
+  /** The pair-swapped disorder feed (q293/q294/q308 and, with their
+    * restart, q299/q309): the time-ordered events in 12 chunks, each
+    * adjacent pair fed REVERSED (chunk k+1's micro-batch lands before
+    * chunk k's), then two watermark-advancing sentinel batches (user −1,
+    * filtered out) that flush the buffered tails through the event-time
+    * timeouts. `delay` is the watermark delay that covers the widest
+    * swapped pair, measured from the data, so no event is ever late;
+    * `restarts` stops and resumes the query before the first pair at or
+    * past half the feed, straight after a swapped chunk landed, so
+    * pending buffers are guaranteed non-empty at the stop.
     */
   private case class DisorderFeed(
-      ev: org.apache.spark.sql.Dataset[StreamingOps.ValEvent],
-      chunk: Int, delaySec: Long, globalMaxUs: Long, n: Long)
+      batches: Iterator[Seq[StreamingOps.ValEvent]], delay: String, restarts: Set[Int])
 
-  private def disorderPrelude(spark: SparkSession, dir: String): DisorderFeed = {
+  private def disorderFeed(spark: SparkSession, dir: String): DisorderFeed = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
     val ev = valEvents(spark, dir)
       // persisted: the count, the span pass and the feed pass otherwise
       // each re-run the corpus sort (runner owns the cache lifecycle)
@@ -1999,54 +1653,36 @@ object StreamParityQueries {
     val chunk = math.max(1L, math.min(32768L, (n + 11) / 12)).toInt
     var maxSpanUs = 0L
     var globalMaxUs = Long.MinValue
-    ev.toLocalIterator().asScala.grouped(chunk).grouped(2).foreach { pair =>
-      val ts = pair.flatten.map(e => tsMicros(e.ts))
+    Feed.rows(ev).grouped(chunk).grouped(2).foreach { pair =>
+      val ts = pair.flatten.map(e => epochMicros(e.ts))
       maxSpanUs = math.max(maxSpanUs, ts.max - ts.min)
       globalMaxUs = math.max(globalMaxUs, ts.max)
     }
-    DisorderFeed(ev, chunk, maxSpanUs / 1000000L + 61L, globalMaxUs, n)
+    val delaySec = maxSpanUs / 1000000L + 61L
+    DisorderFeed(
+      Feed.swapPairs(Feed.rows(ev).grouped(chunk)) ++ (1 to 2).iterator.map(k =>
+        Seq(StreamingOps.ValEvent(-1L,
+          usTimestamp(globalMaxUs + (delaySec + 120 * k) * 1000000L), 0L, 0.0))),
+      s"$delaySec seconds", midFeed(n, chunk, per = 2))
   }
 
-  private def valSentinel(us: Long) =
-    StreamingOps.ValEvent(-1L, usTimestamp(us), 0L, 0.0)
-
-  private def runValEventOutOfOrder(
-      spark: SparkSession, dir: String, sink: String,
-      plan: (org.apache.spark.sql.Dataset[StreamingOps.ValEvent], String) => DataFrame)
-      : DataFrame = {
+  /** q293: streaming EWMA under OUT-OF-ORDER delivery, driver-verified —
+    * the events feed arrives with ADJACENT CHUNK PAIRS SWAPPED
+    * ([[disorderFeed]]: deterministic cross-batch disorder), processed
+    * by [[StreamingOps.ewmaPerKeyOrdered]] with a watermark delay
+    * measured from the data to cover the widest swapped pair — so no
+    * event is ever late, every event buffers until the watermark passes
+    * it, and the folds happen in exact (ts, event_id) order regardless
+    * of arrival order. The final per-key state must hash-equal the SAME
+    * in-order batch-fold oracle q267 uses: the disorder must be
+    * answer-invisible.
+    */
+  def q293StreamEwmaOutOfOrder(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    spark.catalog.dropTempView(sink)
-    val feed = disorderPrelude(spark, dir)
-    val ms = MemoryStream[StreamingOps.ValEvent](spark)
-    val q = plan(ms.toDS(), s"${feed.delaySec} seconds")
-      .writeStream.format("memory").queryName(sink).outputMode("update").start()
-    try {
-      // feed each pair REVERSED — chunk k+1's micro-batch lands before
-      // chunk k's
-      feed.ev.toLocalIterator().asScala.grouped(feed.chunk).grouped(2).foreach { pair =>
-        pair.reverse.foreach { b =>
-          ms.addData(b.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      }
-      // watermark push + timeout-firing round for the buffered tails
-      for (k <- 1 to 2) {
-        ms.addData(Seq(valSentinel(
-          feed.globalMaxUs + (feed.delaySec + 120 * k) * 1000000L)))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(sink).filter(col("user_id") >= 0)
+    val f = disorderFeed(spark, dir)
+    ewmaFinalState(Feed(spark, "update", f.batches)(
+      StreamingOps.ewmaPerKeyOrdered(_, f.delay)).filter(col("user_id") >= 0))
   }
-
-  def q293StreamEwmaOutOfOrder(spark: SparkSession, dir: String): DataFrame =
-    runValEventOutOfOrder(spark, dir, "graft_q293_ewma_ooo",
-      (ds, delay) => StreamingOps.ewmaPerKeyOrdered(ds, delay).toDF())
-      .groupBy("user_id")
-      .agg(max(struct(col("n_events"), col("ewma"))).as("m"))
-      .select(col("user_id"), col("m.n_events").as("n_events"),
-        col("m.ewma").as("ewma"))
 
   /** q294: the COUPLED Holt (level, trend) state under the same
     * out-of-order feed — q284's disorder twin through
@@ -2054,13 +1690,12 @@ object StreamParityQueries {
     * recursive-CTE recurrence, so the hash proves the two-variable fold
     * is also delivery-order-invisible under the watermark.
     */
-  def q294StreamHoltOutOfOrder(spark: SparkSession, dir: String): DataFrame =
-    runValEventOutOfOrder(spark, dir, "graft_q294_holt_ooo",
-      (ds, delay) => StreamingOps.holtPerKeyOrdered(ds, delay).toDF())
-      .groupBy("user_id")
-      .agg(max(struct(col("n_events"), col("level"), col("trend"))).as("m"))
-      .select(col("user_id"), col("m.n_events").as("n_events"),
-        col("m.level").as("level"), col("m.trend").as("trend"))
+  def q294StreamHoltOutOfOrder(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val f = disorderFeed(spark, dir)
+    holtFinalState(Feed(spark, "update", f.batches)(
+      StreamingOps.holtPerKeyOrdered(_, f.delay)).filter(col("user_id") >= 0))
+  }
 
   /** q308: out-of-order Holt-Winters — the q293/q294 disorder gate for
     * the three-variable seasonal fold
@@ -2074,10 +1709,32 @@ object StreamParityQueries {
     * in-order, recovery and out-of-order gates against ONE batch
     * oracle.
     */
-  def q308StreamHwOutOfOrder(spark: SparkSession, dir: String): DataFrame =
-    runValEventOutOfOrder(spark, dir, "graft_q308_hw_ooo",
-      (ds, delay) => StreamingOps.holtWintersPerKeyOrdered(ds, delay).toDF())
-      .transform(hwFinalState)
+  def q308StreamHwOutOfOrder(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val f = disorderFeed(spark, dir)
+    hwFinalState(Feed(spark, "update", f.batches)(
+      StreamingOps.holtWintersPerKeyOrdered(_, f.delay)).filter(col("user_id") >= 0))
+  }
+
+  /** Per-user FINAL EWMA state (the max-n update row) — the rollup of
+    * the EWMA gates (q267/q285/q293/q299).
+    */
+  private def ewmaFinalState(updates: DataFrame): DataFrame =
+    updates
+      .groupBy("user_id")
+      .agg(max(struct(col("n_events"), col("ewma"))).as("m"))
+      .select(col("user_id"), col("m.n_events").as("n_events"),
+        col("m.ewma").as("ewma"))
+
+  /** Per-user FINAL Holt state (the max-n update row) — the rollup of
+    * the Holt gates (q284/q286/q294).
+    */
+  private def holtFinalState(updates: DataFrame): DataFrame =
+    updates
+      .groupBy("user_id")
+      .agg(max(struct(col("n_events"), col("level"), col("trend"))).as("m"))
+      .select(col("user_id"), col("m.n_events").as("n_events"),
+        col("m.level").as("level"), col("m.trend").as("trend"))
 
   /** Per-user FINAL Holt-Winters state (the max-n update row) — the
     * rollup all four HW gates share (q304/q307/q308/q309); the one
@@ -2106,9 +1763,10 @@ object StreamParityQueries {
     * field, a ms-truncated gap compare or a double-emitted session all
     * fail the hash.
     */
-  def q296StreamSessions(spark: SparkSession, dir: String): DataFrame =
-    runSessionGate(spark, dir, "graft_q296_sessions",
-      ds => StreamingOps.sessionize(ds))
+  def q296StreamSessions(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    closedSessions(Feed(spark, "append", sessionFeed(spark, dir))(StreamingOps.sessionize(_)))
+  }
 
   /** q337: q296's sessionization gate re-run on the TransformWithState
     * API ([[StreamingOps.sessionizeV2]]: event-time mode, per-key
@@ -2119,53 +1777,32 @@ object StreamParityQueries {
     * micro-second boundaries whether the timeout is a GroupState
     * event-time timeout or a v2 registered timer.
     */
-  def q337StreamSessionsV2(spark: SparkSession, dir: String): DataFrame =
-    withRocksDbStateStore(spark) {
-      runSessionGate(spark, dir, "graft_q337_sessions",
-        ds => StreamingOps.sessionizeV2(ds))
-    }
-
-  private def runSessionGate(
-      spark: SparkSession, dir: String, sink: String,
-      plan: org.apache.spark.sql.Dataset[StreamingOps.Event] =>
-        org.apache.spark.sql.Dataset[StreamingOps.SessionUpdate]): DataFrame = {
+  def q337StreamSessionsV2(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    spark.catalog.dropTempView(sink)
-    val ev = RelationalQueries.events(spark, dir)
+    withRocksDbStateStore(spark) {
+      closedSessions(Feed(spark, "append", sessionFeed(spark, dir))(StreamingOps.sessionizeV2(_)))
+    }
+  }
+
+  /** The session gates' feed (q296/q337): every event's (user_id, ts)
+    * in time order, then two sentinel batches 1 h and 2 h past the last
+    * event — gap (30 min) + watermark delay (10 min) + margin: the
+    * first advances the watermark, the second fires the timeouts.
+    */
+  private def sessionFeed(spark: SparkSession, dir: String)
+      : Iterator[Seq[StreamingOps.Event]] = {
+    import spark.implicits._
+    sentinelled(RelationalQueries.events(spark, dir)
       .select(col("user_id"), col("ts").cast("timestamp").as("ts"))
       .as[StreamingOps.Event]
-      .sort("ts", "user_id")
-      // persisted: count, max-ts and the feed otherwise each re-sort
-      // the corpus (runner owns the cache lifecycle)
-      .persist()
-    val n = ev.count()
-    val chunk = math.max(1L, math.min(16384L, (n + 5) / 6)).toInt
-    val maxUs = ev.agg(max(unix_micros(col("ts")))).as[Long].collect().head
-    def sentinel(us: Long) = StreamingOps.Event(-1L,
-      java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-        us / 1000000L, us % 1000000L * 1000L)))
-    val ms = MemoryStream[StreamingOps.Event](spark)
-    val q = plan(ms.toDS())
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      ev.toLocalIterator().asScala.grouped(chunk).foreach { batch =>
-        ms.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-      }
-      // gap (30 min) + watermark delay (10 min) + margin past the last
-      // event, twice: first advances the watermark, second fires the
-      // resulting timeouts
-      for (k <- 1 to 2) {
-        ms.addData(Seq(sentinel(maxUs + k * 3600L * 1000000L)))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(sink)
+      .sort("ts", "user_id"), 3600L)(StreamingOps.Event(-1L, _))
+  }
+
+  private def closedSessions(updates: DataFrame): DataFrame =
+    updates
       .filter(col("user_id") >= 0 && col("closed"))
       .select(col("user_id"), col("session_start"),
         col("n_events").cast("long").as("n_events"))
-  }
 
   /** q297: watermarked tumbling-window parity, driver-verified —
     * [[StreamingOps.eventWindowCounts]] in APPEND mode emits each
@@ -2177,36 +1814,9 @@ object StreamParityQueries {
     */
   def q297StreamWindowCounts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val sink = "graft_q297_windows"
-    spark.catalog.dropTempView(sink)
-    val ev = RelationalQueries.events(spark, dir)
-      .select(col("ts").cast("timestamp").as("ts"), col("event_type"))
-      .as[(java.sql.Timestamp, String)]
-      .sort("ts", "event_type")
-      // persisted: count, max-ts and the feed otherwise each re-sort
-      // the corpus (runner owns the cache lifecycle)
-      .persist()
-    val n = ev.count()
-    val chunk = math.max(1L, math.min(16384L, (n + 5) / 6)).toInt
-    val maxUs = ev.agg(max(unix_micros(col("ts")))).as[Long].collect().head
-    def sentinel(us: Long) = (java.sql.Timestamp.from(
-      java.time.Instant.ofEpochSecond(us / 1000000L, us % 1000000L * 1000L)),
-      "__sentinel")
-    val ms = MemoryStream[(java.sql.Timestamp, String)](spark)
-    val q = StreamingOps.eventWindowCounts(ms.toDF.toDF("ts", "event_type"))
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      ev.toLocalIterator().asScala.grouped(chunk).foreach { batch =>
-        ms.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-      }
-      for (k <- 1 to 2) {
-        ms.addData(Seq(sentinel(maxUs + k * 7200L * 1000000L)))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(sink).filter(col("event_type") =!= "__sentinel")
+    Feed(spark, "append", typeFeed(spark, dir))(ds =>
+      StreamingOps.eventWindowCounts(ds.toDF("ts", "event_type")))
+      .filter(col("event_type") =!= "__sentinel")
   }
 
   /** q298: streaming count-min sketch grid, driver-verified — the
@@ -2219,11 +1829,12 @@ object StreamParityQueries {
     * a stream: the grid is the ONLY state, and batch/stream/any-order
     * ingestion all land on the identical counters.
     */
-  def q298StreamCms(spark: SparkSession, dir: String): DataFrame =
-    runChunked(spark, dir, "graft_q298_cms",
-      df => StreamingOps.cmsSketch(
-        df.select(graft.functions.AlnumTokens(col("text"))).select("word")),
-      maxChunk = 4096, mode = "complete")
+  def q298StreamCms(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    Feed(spark, "complete", corpusChunks(spark, dir, 4096))(ds =>
+      StreamingOps.cmsSketch(
+        ds.toDF("doc_id", "text").select(graft.functions.AlnumTokens(col("text"))).select("word")))
+  }
 
   /** q299: out-of-order delivery AND a checkpoint restart in one gate —
     * the compound stress: the pair-swapped feed runs through
@@ -2234,16 +1845,15 @@ object StreamParityQueries {
     * in flight. Same oracle as q267/q285/q293: the final state must
     * equal the in-order batch fold no matter what the delivery did.
     */
-  def q299StreamEwmaOooRecovery(spark: SparkSession, dir: String): DataFrame =
-    runValEventOutOfOrderWithRestart(spark, dir,
-      (ds, delay) => StreamingOps.ewmaPerKeyOrdered(ds, delay).toDF())
-      .groupBy("user_id")
-      .agg(max(struct(col("n_events"), col("ewma"))).as("m"))
-      .select(col("user_id"), col("m.n_events").as("n_events"),
-        col("m.ewma").as("ewma"))
+  def q299StreamEwmaOooRecovery(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val f = disorderFeed(spark, dir)
+    ewmaFinalState(Feed(spark, "update", f.batches, f.restarts)(
+      StreamingOps.ewmaPerKeyOrdered(_, f.delay)).filter(col("user_id") >= 0))
+  }
 
   /** q309: the COMPOUND gate for the seasonal fold — q299's
-    * disorder+restart harness over
+    * disorder+restart feed over
     * [[StreamingOps.holtWintersPerKeyOrdered]]: the per-key pending
     * LIST and the 4-slot seasonal ARRAY (plus its folded-count slot
     * index) must together survive a mid-feed checkpoint restart while
@@ -2251,64 +1861,11 @@ object StreamParityQueries {
     * strongest state-shape invariant in the gate set: every
     * non-scalar component the store can hold, round-tripped at once.
     */
-  def q309StreamHwOooRecovery(spark: SparkSession, dir: String): DataFrame =
-    runValEventOutOfOrderWithRestart(spark, dir,
-      (ds, delay) => StreamingOps.holtWintersPerKeyOrdered(ds, delay).toDF())
-      .transform(hwFinalState)
-
-  /** The q299 compound harness (pair-swapped feed + one mid-feed
-    * stop/resume against the same checkpoint), shared by the EWMA and
-    * Holt-Winters compound gates: returns the buffered per-batch update
-    * rows (bounded by |keys| × #batches) for the caller's final-state
-    * rollup.
-    */
-  private def runValEventOutOfOrderWithRestart(
-      spark: SparkSession, dir: String,
-      plan: (org.apache.spark.sql.Dataset[StreamingOps.ValEvent], String) => DataFrame)
-      : DataFrame = {
+  def q309StreamHwOooRecovery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-recov").toString
-    val feed = disorderPrelude(spark, dir)
-    val n = feed.n
-    val ms = MemoryStream[StreamingOps.ValEvent](spark)
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
-    def planned = plan(ms.toDS(), s"${feed.delaySec} seconds")
-    val outSchema = planned.schema
-    def start() = planned
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.collect().foreach(buf.add); ()
-      }
-      .start()
-    try {
-      var q = start()
-      var fed = 0L
-      var restarted = false
-      feed.ev.toLocalIterator().asScala.grouped(feed.chunk).grouped(2).foreach { pair =>
-        // restart mid-feed, straight after a SWAPPED chunk landed, so
-        // pending buffers are guaranteed non-empty at the stop
-        if (!restarted && fed >= (n + 1) / 2) {
-          q.stop()
-          q = start()
-          restarted = true
-        }
-        pair.reverse.foreach { b =>
-          ms.addData(b.toIndexedSeq)
-          q.processAllAvailable()
-        }
-        fed += pair.map(_.size).sum
-      }
-      for (k <- 1 to 2) {
-        ms.addData(Seq(valSentinel(
-          feed.globalMaxUs + (feed.delaySec + 120 * k) * 1000000L)))
-        q.processAllAvailable()
-      }
-      q.stop()
-      spark.createDataFrame(new java.util.ArrayList(buf), outSchema)
-        .filter(col("user_id") >= 0)
-    } finally deleteRecursively(ckpt)
+    val f = disorderFeed(spark, dir)
+    hwFinalState(Feed(spark, "update", f.batches, f.restarts)(
+      StreamingOps.holtWintersPerKeyOrdered(_, f.delay)).filter(col("user_id") >= 0))
   }
 
   /** The merged view+click feed every stream-STREAM gate reads: both
@@ -2328,20 +1885,26 @@ object StreamParityQueries {
       .sort("ts", "event_id")
   }
 
-  /** Deal one merged-feed chunk out to the two MemoryStreams (shared by
-    * every stream-STREAM gate; a chunk missing one side simply skips
-    * that source for the batch).
+  /** Run `plan` over a view stream and a click stream in append mode
+    * ([[Feed.drive]]): each merged-feed batch is dealt out to the two
+    * MemoryStreams (a batch missing one side simply skips that source)
+    * and is one micro-batch, with a stop/resume from the same checkpoint
+    * before each batch index in `restarts`.
     */
-  private def dealViewsClicks(
-      batch: Seq[(Long, java.sql.Timestamp, Long, String)],
-      msV: MemoryStream[StreamingOps.ViewEvt],
-      msC: MemoryStream[StreamingOps.ClickEvt]): Unit = {
-    val views = batch.collect {
-      case (u, ts, id, "view") => StreamingOps.ViewEvt(u, id, ts) }
-    val clicks = batch.collect {
-      case (u, ts, id, "click") => StreamingOps.ClickEvt(u, id, ts) }
-    if (views.nonEmpty) msV.addData(views)
-    if (clicks.nonEmpty) msC.addData(clicks)
+  private def viewsClicks(
+      spark: SparkSession, batches: Iterator[Seq[(Long, java.sql.Timestamp, Long, String)]],
+      restarts: Set[Int] = Set.empty)(plan: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    import spark.implicits._
+    val msV = MemoryStream[StreamingOps.ViewEvt](spark)
+    val msC = MemoryStream[StreamingOps.ClickEvt](spark)
+    Feed.drive(spark, "append", batches, restarts) { batch =>
+      val views = batch.collect {
+        case (u, ts, id, "view") => StreamingOps.ViewEvt(u, id, ts) }
+      val clicks = batch.collect {
+        case (u, ts, id, "click") => StreamingOps.ClickEvt(u, id, ts) }
+      if (views.nonEmpty) msV.addData(views)
+      if (clicks.nonEmpty) msC.addData(clicks)
+    }(plan(msV.toDF(), msC.toDF()))
   }
 
   /** q310: the stream-STREAM interval join, driver-verified — the first
@@ -2389,30 +1952,16 @@ object StreamParityQueries {
   def q310StreamIntervalJoin(
       spark: SparkSession, dir: String, stateStore: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
     require(Set("default", "rocksdb")(stateStore),
       s"q310 stateStore must be 'default' or 'rocksdb', got '$stateStore'")
-    def core(): DataFrame = {
-      val sink = "graft_q310_attr"
-      spark.catalog.dropTempView(sink)
-      val ev = viewClickFeed(spark, dir)
-      val msV = MemoryStream[StreamingOps.ViewEvt](spark)
-      val msC = MemoryStream[StreamingOps.ClickEvt](spark)
-      val q = StreamingOps.attributeWithin(msV.toDF(), msC.toDF(), gapMinutes = 240)
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try {
-        // 16384-row chunks over the view+click subset (the q267 budget):
-        // the per-batch cost is the symmetric-join state-store pass, so
-        // barrier count — not batch size — dominates the harness cost
-        // (1024-row chunks measured 330 s at sf0.1; 16384 runs in ~3
-        // batches there)
-        ev.toLocalIterator().asScala.grouped(16384).foreach { batch =>
-          dealViewsClicks(batch, msV, msC)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      spark.table(sink)
-    }
+    // 16384-row chunks over the view+click subset (the q267 budget):
+    // the per-batch cost is the symmetric-join state-store pass, so
+    // barrier count — not batch size — dominates the harness cost
+    // (1024-row chunks measured 330 s at sf0.1; 16384 runs in ~3
+    // batches there)
+    def core(): DataFrame =
+      viewsClicks(spark, Feed.rows(viewClickFeed(spark, dir)).grouped(16384))(
+        StreamingOps.attributeWithin(_, _, gapMinutes = 240))
     if (stateStore == "rocksdb") withRocksDbStateStore(spark)(core()) else core()
   }
 
@@ -2433,49 +1982,12 @@ object StreamParityQueries {
     */
   def q313StreamIntervalJoinRecovery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-recov").toString
-    // persisted: the count and the feed pass otherwise each re-run the
-    // corpus sort (runner owns the cache lifecycle)
-    val ev = viewClickFeed(spark, dir).persist()
-    val n = ev.count()
     // ≥6 chunks (restart after ~3) — bounded driver memory either way;
     // the 16384 cap keeps the barrier count down at bigger fixtures
     // (q310's measured finding)
-    val chunk = math.max(1L, math.min(16384L, (n + 5) / 6)).toInt
-    val msV = MemoryStream[StreamingOps.ViewEvt](spark)
-    val msC = MemoryStream[StreamingOps.ClickEvt](spark)
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
-    def planned = StreamingOps.attributeWithin(msV.toDF(), msC.toDF(), gapMinutes = 240)
-    val outSchema = planned.schema
-    def start() = planned
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.collect().foreach(buf.add); ()
-      }
-      .start()
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      q = start()
-      var fed = 0L
-      var restarted = false
-      ev.toLocalIterator().asScala.grouped(chunk).foreach { batch =>
-        if (!restarted && fed >= (n + 1) / 2) {
-          q.stop()
-          q = start() // same checkpoint: join state must carry over
-          restarted = true
-        }
-        dealViewsClicks(batch, msV, msC)
-        q.processAllAvailable()
-        fed += batch.size
-      }
-      q.stop()
-      spark.createDataFrame(new java.util.ArrayList(buf), outSchema).distinct()
-    } finally {
-      if (q != null) q.stop() // all paths, BEFORE the checkpoint delete
-      deleteRecursively(ckpt)
-    }
+    val (batches, restarts) = sixths(viewClickFeed(spark, dir), 16384L)
+    viewsClicks(spark, batches, restarts)(
+      StreamingOps.attributeWithin(_, _, gapMinutes = 240)).distinct()
   }
 
   /** q314: stream-STATIC dimension enrichment, driver-verified — the
@@ -2491,9 +2003,6 @@ object StreamParityQueries {
     */
   def q314StreamDimEnrich(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val sink = "graft_q314_enrich"
-    spark.catalog.dropTempView(sink)
     val dim = Relational.read(spark, dir, "customer")
       .join(Relational.read(spark, dir, "nation"),
         col("c_nationkey") === col("n_nationkey"))
@@ -2502,18 +2011,9 @@ object StreamParityQueries {
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .as[(Long, java.sql.Timestamp, Long, String)]
       .sort("ts", "event_id")
-    val ms = MemoryStream[(Long, java.sql.Timestamp, Long, String)](spark)
-    val q = StreamingOps.enrichedCounts(
-      ms.toDF.toDF("user_id", "ts", "event_id", "event_type"),
-      dim, "user_id", "n_name")
-      .writeStream.format("memory").queryName(sink).outputMode("complete").start()
-    try {
-      ev.toLocalIterator().asScala.grouped(16384).foreach { batch =>
-        ms.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(sink)
+    Feed(spark, "complete", Feed.rows(ev).grouped(16384))(ds =>
+      StreamingOps.enrichedCounts(
+        ds.toDF("user_id", "ts", "event_id", "event_type"), dim, "user_id", "n_name"))
   }
 
   /** q315: LEFT-OUTER stream-stream interval join, driver-verified —
@@ -2534,53 +2034,43 @@ object StreamParityQueries {
     */
   def q315StreamIntervalJoinOuter(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val sink = "graft_q315_outer"
-    spark.catalog.dropTempView(sink)
     val ev = viewClickFeed(spark, dir).persist()
     val maxUs = ev.select(max(unix_micros(col("ts")))).head.getLong(0)
     val gapMin = 240
-    val msV = MemoryStream[StreamingOps.ViewEvt](spark)
-    val msC = MemoryStream[StreamingOps.ClickEvt](spark)
-    val q = StreamingOps.attributeWithin(
-      msV.toDF(), msC.toDF(), gapMinutes = gapMin, joinType = "leftOuter")
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      ev.toLocalIterator().asScala.grouped(16384).foreach { batch =>
-        dealViewsClicks(batch, msV, msC)
-        q.processAllAvailable()
-      }
-      // two flush rounds past max view_ts + gap + delay: round 1 moves
-      // the watermark, round 2 evicts + emits the trailing null rows
-      for (k <- 1 to 2) {
-        val us = maxUs + (gapMin + 10 + 2 * k) * 60L * 1000000L
-        msV.addData(Seq(StreamingOps.ViewEvt(-1L, -1L, usTimestamp(us))))
-        msC.addData(Seq(StreamingOps.ClickEvt(-1L, -1L, usTimestamp(us))))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(sink).filter(col("user_id") >= 0)
+    // two flush rounds past max view_ts + gap + delay, a sentinel on each
+    // side: round 1 moves the watermark, round 2 evicts + emits the
+    // trailing null rows
+    val flush = (1 to 2).iterator.map { k =>
+      val ts = usTimestamp(maxUs + (gapMin + 10 + 2 * k) * 60L * 1000000L)
+      Seq((-1L, ts, -1L, "view"), (-1L, ts, -1L, "click"))
+    }
+    viewsClicks(spark, Feed.rows(ev).grouped(16384) ++ flush)(
+      StreamingOps.attributeWithin(_, _, gapMinutes = gapMin, joinType = "leftOuter"))
+      .filter(col("user_id") >= 0)
   }
 
-  /** The q293-family disorder prelude for the TWO-SIDED feed: the
-    * merged view+click feed, a 12-chunk width, and the watermark delay
-    * covering the widest swapped chunk pair.
+  /** The q293-family disorder feed for the TWO-SIDED gates (q316/q317):
+    * the merged view+click feed in 12 chunks with each adjacent pair
+    * swapped, the watermark delay covering the widest swapped pair, and
+    * q317's restart before the first pair at or past half the feed,
+    * straight after a swapped chunk landed, so the join buffers hold
+    * unmatched early arrivals at the stop.
     */
   private case class VcDisorderFeed(
-      ev: org.apache.spark.sql.Dataset[(Long, java.sql.Timestamp, Long, String)],
-      chunk: Int, delaySec: Long, n: Long)
+      batches: Iterator[Seq[(Long, java.sql.Timestamp, Long, String)]],
+      delay: String, restarts: Set[Int])
 
-  private def vcDisorderPrelude(spark: SparkSession, dir: String): VcDisorderFeed = {
-    import scala.jdk.CollectionConverters._
+  private def vcDisorderFeed(spark: SparkSession, dir: String): VcDisorderFeed = {
     val ev = viewClickFeed(spark, dir).persist()
     val n = ev.count()
     val chunk = math.max(1L, math.min(32768L, (n + 11) / 12)).toInt
     var maxSpanUs = 0L
-    ev.toLocalIterator().asScala.grouped(chunk).grouped(2).foreach { pair =>
-      val ts = pair.flatten.map(t => tsMicros(t._2))
+    Feed.rows(ev).grouped(chunk).grouped(2).foreach { pair =>
+      val ts = pair.flatten.map(t => epochMicros(t._2))
       maxSpanUs = math.max(maxSpanUs, ts.max - ts.min)
     }
-    VcDisorderFeed(ev, chunk, maxSpanUs / 1000000L + 61L, n)
+    VcDisorderFeed(Feed.swapPairs(Feed.rows(ev).grouped(chunk)),
+      s"${maxSpanUs / 1000000L + 61L} seconds", midFeed(n, chunk, per = 2))
   }
 
   /** q316: the interval join under OUT-OF-ORDER delivery — adjacent
@@ -2596,25 +2086,9 @@ object StreamParityQueries {
     * family established.
     */
   def q316StreamIntervalJoinOutOfOrder(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val sink = "graft_q316_ooo"
-    spark.catalog.dropTempView(sink)
-    val feed = vcDisorderPrelude(spark, dir)
-    val msV = MemoryStream[StreamingOps.ViewEvt](spark)
-    val msC = MemoryStream[StreamingOps.ClickEvt](spark)
-    val q = StreamingOps.attributeWithin(
-      msV.toDF(), msC.toDF(), gapMinutes = 240, delay = s"${feed.delaySec} seconds")
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      feed.ev.toLocalIterator().asScala.grouped(feed.chunk).grouped(2).foreach { pair =>
-        pair.reverse.foreach { b =>
-          dealViewsClicks(b, msV, msC)
-          q.processAllAvailable()
-        }
-      }
-    } finally q.stop()
-    spark.table(sink)
+    val f = vcDisorderFeed(spark, dir)
+    viewsClicks(spark, f.batches)(
+      StreamingOps.attributeWithin(_, _, gapMinutes = 240, delay = f.delay))
   }
 
   /** q317: disorder AND a checkpoint restart in one gate — the q299/q309
@@ -2626,44 +2100,9 @@ object StreamParityQueries {
     * idempotent-sink discipline.
     */
   def q317StreamIntervalJoinOooRecovery(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-recov").toString
-    val feed = vcDisorderPrelude(spark, dir)
-    val msV = MemoryStream[StreamingOps.ViewEvt](spark)
-    val msC = MemoryStream[StreamingOps.ClickEvt](spark)
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
-    def planned = StreamingOps.attributeWithin(
-      msV.toDF(), msC.toDF(), gapMinutes = 240, delay = s"${feed.delaySec} seconds")
-    val outSchema = planned.schema
-    def start() = planned
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.collect().foreach(buf.add); ()
-      }
-      .start()
-    try {
-      var q = start()
-      var fed = 0L
-      var restarted = false
-      feed.ev.toLocalIterator().asScala.grouped(feed.chunk).grouped(2).foreach { pair =>
-        // restart straight after a SWAPPED chunk landed, so the buffers
-        // are guaranteed to hold unmatched early arrivals at the stop
-        if (!restarted && fed >= (feed.n + 1) / 2) {
-          q.stop()
-          q = start()
-          restarted = true
-        }
-        pair.reverse.foreach { b =>
-          dealViewsClicks(b, msV, msC)
-          q.processAllAvailable()
-        }
-        fed += pair.map(_.size).sum
-      }
-      q.stop()
-      spark.createDataFrame(new java.util.ArrayList(buf), outSchema).distinct()
-    } finally deleteRecursively(ckpt)
+    val f = vcDisorderFeed(spark, dir)
+    viewsClicks(spark, f.batches, f.restarts)(
+      StreamingOps.attributeWithin(_, _, gapMinutes = 240, delay = f.delay)).distinct()
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

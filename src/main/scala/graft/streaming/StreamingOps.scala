@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.Tokenizer
@@ -523,8 +523,8 @@ object StreamingOps {
   case class Event(user_id: Long, ts: Timestamp)
   case class SessionUpdate(user_id: Long, session_start: Long, n_events: Int, closed: Boolean)
   /** Typed feed rows for the two sides of [[attributeWithin]] — field
-    * names ARE the operator's input column contract, so
-    * `MemoryStream[ViewEvt].toDF` needs no renames in the gates.
+    * names ARE the operator's input column contract, so a stream of
+    * them needs no renames in the gates.
     */
   case class ViewEvt(user_id: Long, view_id: Long, view_ts: Timestamp)
   case class ClickEvt(click_user: Long, click_id: Long, click_ts: Timestamp)
@@ -566,11 +566,8 @@ object StreamingOps {
     * so combine whole seconds (floorDiv for pre-epoch safety) with
     * nanos/1000.
     */
-  private def epochMicros(ts: Timestamp): Long =
+  private[graft] def epochMicros(ts: Timestamp): Long =
     Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
-
-  case class EwmaState(ewma: Double, n: Long)
-  case class EwmaUpdate(user_id: Long, n_events: Long, ewma: Double)
 
   case class QuotaVerdict(user_id: Long, event_id: Long, admitted: Boolean)
 
@@ -606,7 +603,7 @@ object StreamingOps {
         key: Long, rows: Iterator[ValEvent],
         timerValues: org.apache.spark.sql.streaming.TimerValues)
         : Iterator[QuotaVerdict] = {
-      val sorted = rows.toSeq.sortBy(e => (epochMicros(e.ts), e.event_id))
+      val sorted = inOrder(rows)
       var n = if (nAdmitted.exists()) nAdmitted.get() else 0L
       val out = sorted.map { e =>
         val ok = n < cap
@@ -668,295 +665,217 @@ object StreamingOps {
         OutputMode.Append())
   }
 
-  /** Per-key EWMA (α = ½) as streaming state — the q143 batch fold run
-    * incrementally: state per key is O(1) (current smoothed value +
-    * count); each micro-batch's events fold in (ts, event_id) order ON
-    * TOP of the carried state, so for in-order delivery the stream's
-    * final answer bit-equals the batch fold over the full history
-    * (eᵢ = xᵢ/2 + eᵢ₋₁/2 is computed step-for-step identically —
-    * parity asserted in StreamingSpec). The per-batch sort is bounded
-    * by one key's batch arrivals, the mapGroupsWithState analog of
-    * q143's per-user sorted array. State is O(1) per key but LIFETIME
-    * (`NoTimeout`); on ingest whose key universe grows unboundedly use
-    * [[ewmaPerKeyEvicting]] — the same fold with a retention knob.
-    */
-  def ewmaPerKey(events: Dataset[ValEvent]): Dataset[EwmaUpdate] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[EwmaState, EwmaUpdate](GroupStateTimeout.NoTimeout()) {
-        (uid: Long, batch: Iterator[ValEvent], state: GroupState[EwmaState]) =>
-          val sorted = batch.toSeq.sortBy(e => (epochMicros(e.ts), e.event_id))
-          var st = state.getOption.getOrElse(EwmaState(0.0, 0L))
-          sorted.foreach { e =>
-            st =
-              if (st.n == 0L) EwmaState(e.value, 1L)
-              else EwmaState(st.ewma / 2 + e.value / 2, st.n + 1)
-          }
-          state.update(st)
-          EwmaUpdate(uid, st.n, st.ewma)
-      }
-  }
-
-  case class OrderedEwmaState(
-      pending: List[(Long, Long, Double)], ewma: Double, n: Long)
-
-  /** Per-key EWMA under OUT-OF-ORDER delivery: the watermarked variant
-    * [[ewmaPerKey]]'s contract defers to. Arrivals buffer per key as
-    * (micros, event_id, value) pending state; once the event-time
-    * watermark passes an event, no older event can still arrive (the
-    * watermark guarantee), so everything strictly below the watermark
-    * folds in exact (ts, event_id) order onto the carried O(1) EWMA —
-    * the stream's final state equals the batch fold over the in-order
-    * history for ANY delivery order whose disorder stays within
-    * `delay`. Pending state is bounded by the arrival disorder × rate
-    * (watermark-evicted), the classic bounded-disorder buffer; an
-    * event arriving LATER than the watermark would fold at arrival
-    * (the standard allowed-lateness trade — the driver gate's feed
-    * keeps disorder inside the delay, so none occurs there). Keys with
-    * pending data register an event-time timeout at their oldest
-    * unfolded micro-second, so the tail folds when the watermark
-    * passes it even if the key never receives another event.
-    */
-  def ewmaPerKeyOrdered(
-      events: Dataset[ValEvent], delay: String): Dataset[EwmaUpdate] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", delay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[OrderedEwmaState, EwmaUpdate](
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, batch: Iterator[ValEvent], state: GroupState[OrderedEwmaState]) =>
-          val st0 = state.getOption.getOrElse(OrderedEwmaState(Nil, 0.0, 0L))
-          val pending = st0.pending ++
-            batch.map(e => (epochMicros(e.ts), e.event_id, e.value))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          // strictly-below: an event AT the watermark could still have
-          // same-timestamp peers arriving; it folds next round
-          val (ready, rest) = pending.partition(_._1 < wmUs)
-          var ew = st0.ewma
-          var n = st0.n
-          ready.sortBy(p => (p._1, p._2)).foreach { p =>
-            if (n == 0L) { ew = p._3; n = 1L }
-            else { ew = ew / 2 + p._3 / 2; n += 1 }
-          }
-          state.update(OrderedEwmaState(rest, ew, n))
-          if (rest.nonEmpty) {
-            val wake = rest.map(_._1).min / 1000L + 1L
-            state.setTimeoutTimestamp(
-              math.max(wake, state.getCurrentWatermarkMs() + 1L))
-          }
-          if (n > 0) Iterator.single(EwmaUpdate(uid, n, ew)) else Iterator.empty
-      }
-  }
-
-  case class OrderedHoltState(
-      pending: List[(Long, Long, Double)], l: Double, b: Double, n: Long)
-
-  /** [[holtPerKey]]'s out-of-order twin — the same bounded-disorder
-    * buffer-and-fold machinery as [[ewmaPerKeyOrdered]], applied to the
-    * COUPLED (level, trend) recurrence: arrivals buffer per key, events
-    * strictly below the event-time watermark fold in exact
-    * (ts, event_id) order, event-time timeouts flush tails. Final state
-    * equals the in-order batch recurrence for any delivery whose
-    * disorder stays within `delay`.
-    */
-  def holtPerKeyOrdered(
-      events: Dataset[ValEvent], delay: String): Dataset[HoltUpdate] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", delay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[OrderedHoltState, HoltUpdate](
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, batch: Iterator[ValEvent], state: GroupState[OrderedHoltState]) =>
-          val st0 = state.getOption.getOrElse(OrderedHoltState(Nil, 0.0, 0.0, 0L))
-          val pending = st0.pending ++
-            batch.map(e => (epochMicros(e.ts), e.event_id, e.value))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ready, rest) = pending.partition(_._1 < wmUs)
-          var l = st0.l
-          var b = st0.b
-          var n = st0.n
-          ready.sortBy(p => (p._1, p._2)).foreach { p =>
-            if (n == 0L) { l = p._3; b = 0.0; n = 1L }
-            else {
-              val l2 = (p._3 + l + b) / 2
-              b = (l2 - l + b) / 2
-              l = l2
-              n += 1
-            }
-          }
-          state.update(OrderedHoltState(rest, l, b, n))
-          if (rest.nonEmpty) {
-            val wake = rest.map(_._1).min / 1000L + 1L
-            state.setTimeoutTimestamp(
-              math.max(wake, state.getCurrentWatermarkMs() + 1L))
-          }
-          if (n > 0) Iterator.single(HoltUpdate(uid, n, l, b)) else Iterator.empty
-      }
-  }
-
+  case class EwmaState(ewma: Double, n: Long)
+  case class EwmaUpdate(user_id: Long, n_events: Long, ewma: Double)
   case class HoltState(l: Double, b: Double, n: Long)
   case class HoltUpdate(user_id: Long, n_events: Long, level: Double, trend: Double)
-
-  /** Per-key Holt linear-trend state (α = β = ½) — q251's coupled
-    * (level, trend) fold run incrementally on an unbounded stream:
-    * state per key is O(1) (l, b, count); the first event seeds
-    * (l = x, b = 0) and each subsequent event applies the identical
-    * IEEE steps l' = (x + l + b)/2, b' = (l' − l + b)/2 the batch fold
-    * uses, so for in-order delivery the stream's final state bit-equals
-    * the batch `aggregate` over the full history (parity asserted in
-    * StreamingSpec). The continuously-maintained one-step forecast is
-    * l + b — the state a live anomaly gate reads without ever
-    * recomputing the series. Lifetime state; [[holtPerKeyEvicting]]
-    * is the retention-bounded form.
-    */
-  def holtPerKey(events: Dataset[ValEvent]): Dataset[HoltUpdate] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[HoltState, HoltUpdate](GroupStateTimeout.NoTimeout()) {
-        (uid: Long, batch: Iterator[ValEvent], state: GroupState[HoltState]) =>
-          val sorted = batch.toSeq.sortBy(e => (epochMicros(e.ts), e.event_id))
-          var st = state.getOption.getOrElse(HoltState(0.0, 0.0, 0L))
-          sorted.foreach { e =>
-            st =
-              if (st.n == 0L) HoltState(e.value, 0.0, 1L)
-              else {
-                val l2 = (e.value + st.l + st.b) / 2
-                HoltState(l2, (l2 - st.l + st.b) / 2, st.n + 1)
-              }
-          }
-          state.update(st)
-          HoltUpdate(uid, st.n, st.l, st.b)
-      }
-  }
-
-  case class OrderedHwState(
-      pending: List[(Long, Long, Double)], l: Double, b: Double,
-      seas: Seq[Double], n: Long)
-
-  /** [[holtWintersPerKey]]'s out-of-order twin — the
-    * [[ewmaPerKeyOrdered]] bounded-disorder buffer-and-fold machinery
-    * applied to the three-variable seasonal recurrence: arrivals buffer
-    * per key, events strictly below the event-time watermark fold in
-    * exact (ts, event_id) order onto the carried (l, b, seasonal-array)
-    * state, event-time timeouts flush tails. The slot index is the
-    * FOLDED count (n mod 4), not arrival order, so disorder inside the
-    * delay cannot rotate the seasonal assignment — final state equals
-    * the in-order batch fold for any such delivery.
-    */
-  def holtWintersPerKeyOrdered(
-      events: Dataset[ValEvent], delay: String): Dataset[HwUpdate] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", delay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[OrderedHwState, HwUpdate](
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, batch: Iterator[ValEvent], state: GroupState[OrderedHwState]) =>
-          val st0 = state.getOption.getOrElse(
-            OrderedHwState(Nil, 0.0, 0.0, Seq.fill(4)(0.0), 0L))
-          val pending = st0.pending ++
-            batch.map(e => (epochMicros(e.ts), e.event_id, e.value))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ready, rest) = pending.partition(_._1 < wmUs)
-          var l = st0.l
-          var b = st0.b
-          var seas = st0.seas
-          var n = st0.n
-          ready.sortBy(p => (p._1, p._2)).foreach { p =>
-            if (n == 0L) { l = p._3; b = 0.0; seas = Seq.fill(4)(0.0); n = 1L }
-            else {
-              val k = (n % 4).toInt
-              val s = seas(k)
-              val l2 = (p._3 - s + l + b) / 2
-              val b2 = (l2 - l + b) / 2
-              seas = seas.updated(k, (p._3 - l2 + s) / 2)
-              l = l2; b = b2; n += 1
-            }
-          }
-          state.update(OrderedHwState(rest, l, b, seas, n))
-          if (rest.nonEmpty) {
-            val wake = rest.map(_._1).min / 1000L + 1L
-            state.setTimeoutTimestamp(
-              math.max(wake, state.getCurrentWatermarkMs() + 1L))
-          }
-          if (n > 0)
-            Iterator.single(HwUpdate(uid, n, l, b,
-              seas(0), seas(1), seas(2), seas(3)))
-          else Iterator.empty
-      }
-  }
-
   case class HwState(l: Double, b: Double, seas: Seq[Double], n: Long)
   case class HwUpdate(
       user_id: Long, n_events: Long, level: Double, trend: Double,
       s0: Double, s1: Double, s2: Double, s3: Double)
 
-  /** Per-key additive Holt-Winters state (α = β = γ = ½, period 4 by
-    * event index) — the THREE-variable completion of the fold family
-    * (EWMA q267 → coupled Holt q284 → level+trend+seasonal here), and
-    * the first stream state that carries an ARRAY (the 4-slot seasonal
-    * vector) across batches. The first event seeds (l = x, b = 0,
-    * seas = 0⃗); each subsequent event at 0-based step n applies, with
-    * s = seas(n mod 4):
+  /** One per-key forecast recurrence, written once and run by all three
+    * fold operators (lifetime [[foldPerKey]], watermark-ordered
+    * [[foldPerKeyOrdered]], evicting [[foldPerKeyEvicting]]): the first
+    * value of a key seeds its state, each later value steps it, and
+    * `emit` renders the state as the key's update row. Every operator
+    * applies the same IEEE steps in the same order, so their final
+    * states are bit-equal to each other and to the batch folds.
+    */
+  private case class Recurrence[S, O](
+      seed: Double => S, step: (S, Double) => S, emit: (Long, S) => O) {
+    def next(st: Option[S], x: Double): Option[S] = Some(st.fold(seed(x))(step(_, x)))
+  }
+
+  /** EWMA (α = ½): the first event seeds e = x, each later one
+    * e' = e/2 + x/2 — q143's batch fold step for step.
+    */
+  private val Ewma = Recurrence[EwmaState, EwmaUpdate](
+    x => EwmaState(x, 1L),
+    (st, x) => EwmaState(st.ewma / 2 + x / 2, st.n + 1),
+    (uid, st) => EwmaUpdate(uid, st.n, st.ewma))
+
+  /** Holt linear trend (α = β = ½), q251's coupled fold: the first event
+    * seeds (l = x, b = 0), each later one l' = (x + l + b)/2,
+    * b' = (l' − l + b)/2. The one-step forecast is l + b.
+    */
+  private val Holt = Recurrence[HoltState, HoltUpdate](
+    x => HoltState(x, 0.0, 1L),
+    (st, x) => {
+      val l2 = (x + st.l + st.b) / 2
+      HoltState(l2, (l2 - st.l + st.b) / 2, st.n + 1)
+    },
+    (uid, st) => HoltUpdate(uid, st.n, st.l, st.b))
+
+  /** Additive Holt-Winters (α = β = γ = ½, period 4 by event index): the
+    * first event seeds (l = x, b = 0, seas = 0⃗); each later event at
+    * 0-based step n applies, with s = seas(n mod 4),
     *   l' = (x − s + l + b) / 2
     *   b' = (l' − l + b) / 2
     *   seas(n mod 4) ← (x − l' + s) / 2
-    * — every step a single IEEE division of a left-to-right sum, the
-    * exact sequence the batch `aggregate` fold and the DuckDB
-    * recursive-CTE oracle replay, so the final state bit-equals the
-    * batch answer for in-order delivery (driver-gated, q304 vs q303's
-    * oracle). State per key is O(period); index-based seasons keep the
-    * recurrence free of calendar parsing — a calendar period is the
-    * same fold keyed by a time slot. Lifetime state;
-    * [[holtWintersPerKeyEvicting]] is the retention-bounded form.
+    * — every step one IEEE division of a left-to-right sum, the exact
+    * sequence q303's batch fold and its recursive-CTE oracle replay. The
+    * slot is the folded count, never the arrival order.
     */
-  def holtWintersPerKey(events: Dataset[ValEvent]): Dataset[HwUpdate] = {
+  private val HoltWinters = Recurrence[HwState, HwUpdate](
+    x => HwState(x, 0.0, Seq.fill(4)(0.0), 1L),
+    (st, x) => {
+      val k = (st.n % 4).toInt
+      val s = st.seas(k)
+      val l2 = (x - s + st.l + st.b) / 2
+      val b2 = (l2 - st.l + st.b) / 2
+      st.copy(l = l2, b = b2, seas = st.seas.updated(k, (x - l2 + s) / 2), n = st.n + 1)
+    },
+    (uid, st) => HwUpdate(uid, st.n, st.l, st.b,
+      st.seas(0), st.seas(1), st.seas(2), st.seas(3)))
+
+  /** A key's batch rows in (ts, event_id) order, the order every fold
+    * declares and the batch oracles sort by.
+    */
+  private def inOrder(batch: Iterator[ValEvent]): Seq[ValEvent] =
+    batch.toSeq.sortBy(e => (epochMicros(e.ts), e.event_id))
+
+  /** A recurrence as LIFETIME per-key streaming state
+    * (mapGroupsWithState, `NoTimeout`): each micro-batch's events fold
+    * in (ts, event_id) order on top of the carried state, so for
+    * in-order delivery the final state bit-equals the batch fold over
+    * the full history. The per-batch sort is bounded by one key's batch
+    * arrivals. State is O(1) per key but never evicted; on ingest whose
+    * key universe grows without bound use [[foldPerKeyEvicting]].
+    */
+  private def foldPerKey[S: Encoder, O: Encoder](
+      events: Dataset[ValEvent], r: Recurrence[S, O]): Dataset[O] = {
     import events.sparkSession.implicits._
     events
       .groupByKey(_.user_id)
-      .mapGroupsWithState[HwState, HwUpdate](GroupStateTimeout.NoTimeout()) {
-        (uid: Long, batch: Iterator[ValEvent], state: GroupState[HwState]) =>
-          val sorted = batch.toSeq.sortBy(e => (epochMicros(e.ts), e.event_id))
-          var st = state.getOption.getOrElse(HwState(0.0, 0.0, Seq.fill(4)(0.0), 0L))
-          sorted.foreach { e =>
-            st =
-              if (st.n == 0L) HwState(e.value, 0.0, Seq.fill(4)(0.0), 1L)
-              else {
-                val k = (st.n % 4).toInt
-                val s = st.seas(k)
-                val l2 = (e.value - s + st.l + st.b) / 2
-                val b2 = (l2 - st.l + st.b) / 2
-                st.copy(l = l2, b = b2,
-                  seas = st.seas.updated(k, (e.value - l2 + s) / 2),
-                  n = st.n + 1)
-              }
-          }
+      .mapGroupsWithState[S, O](GroupStateTimeout.NoTimeout()) {
+        (uid: Long, batch: Iterator[ValEvent], state: GroupState[S]) =>
+          val st = inOrder(batch).foldLeft(state.getOption)((s, e) => r.next(s, e.value)).get
           state.update(st)
-          HwUpdate(uid, st.n, st.l, st.b,
-            st.seas(0), st.seas(1), st.seas(2), st.seas(3))
+          r.emit(uid, st)
       }
   }
 
-  /** Shared RETENTION-evicting wrapper for the in-order per-key folds —
-    * the q342-closure pattern applied to the forecast family's last
-    * `NoTimeout` holdouts: same in-batch (ts, event_id) sort and the
-    * IDENTICAL IEEE fold steps as the unbounded form (passed in as
-    * seed/step, so parity within a retention window is bit-exact by
-    * construction), plus the [[nearDupOnIngest]] eviction machinery —
-    * watermark delay = the retention, an event-time timeout at the
-    * MAX event time the key has EVER seen (carried in state so an
+  /** A recurrence under OUT-OF-ORDER delivery: arrivals buffer per key
+    * as (micros, event_id, value) pending state; once the event-time
+    * watermark passes an event, no older event can still arrive (the
+    * watermark guarantee), so everything strictly below the watermark
+    * folds in exact (ts, event_id) order onto the carried state — the
+    * final state equals the batch fold over the in-order history for
+    * ANY delivery whose disorder stays within `delay`. Pending state is
+    * bounded by the arrival disorder × rate (watermark-evicted); an
+    * event arriving LATER than the watermark would fold at arrival (the
+    * standard allowed-lateness trade — the driver gates keep disorder
+    * inside the delay, so none occurs there). Keys with pending data
+    * register an event-time timeout at their oldest unfolded
+    * micro-second, so the tail folds when the watermark passes it even
+    * if the key never receives another event. A key emits once it has
+    * folded at least one event.
+    */
+  private def foldPerKeyOrdered[S, O](
+      events: Dataset[ValEvent], delay: String, r: Recurrence[S, O])(
+      implicit stEnc: Encoder[(List[(Long, Long, Double)], Option[S])],
+      outEnc: Encoder[O]): Dataset[O] = {
+    import events.sparkSession.implicits._
+    events
+      .withWatermark("ts", delay)
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[(List[(Long, Long, Double)], Option[S]), O](
+        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
+        (uid: Long, batch: Iterator[ValEvent],
+         state: GroupState[(List[(Long, Long, Double)], Option[S])]) =>
+          val (pending0, st0) = state.getOption.getOrElse((Nil, None))
+          val pending = pending0 ++
+            batch.map(e => (epochMicros(e.ts), e.event_id, e.value))
+          val wmUs = state.getCurrentWatermarkMs() * 1000L
+          // strictly-below: an event AT the watermark could still have
+          // same-timestamp peers arriving; it folds next round
+          val (ready, rest) = pending.partition(_._1 < wmUs)
+          val st = ready.sortBy(p => (p._1, p._2)).foldLeft(st0)((s, p) => r.next(s, p._3))
+          state.update((rest, st))
+          if (rest.nonEmpty) {
+            val wake = rest.map(_._1).min / 1000L + 1L
+            state.setTimeoutTimestamp(
+              math.max(wake, state.getCurrentWatermarkMs() + 1L))
+          }
+          st.iterator.map(r.emit(uid, _))
+      }
+  }
+
+  /** Per-key EWMA as lifetime streaming state ([[foldPerKey]]):
+    * driver-gated in order (q267) and across a restart (q285).
+    */
+  def ewmaPerKey(events: Dataset[ValEvent]): Dataset[EwmaUpdate] = {
+    import events.sparkSession.implicits._
+    foldPerKey(events, Ewma)
+  }
+
+  /** [[ewmaPerKey]] under out-of-order delivery within `delay`
+    * ([[foldPerKeyOrdered]]): driver-gated by q293 and, with a restart,
+    * q299.
+    */
+  def ewmaPerKeyOrdered(
+      events: Dataset[ValEvent], delay: String): Dataset[EwmaUpdate] = {
+    import events.sparkSession.implicits._
+    foldPerKeyOrdered(events, delay, Ewma)
+  }
+
+  /** Per-key Holt (level, trend) as lifetime streaming state
+    * ([[foldPerKey]]): the continuously maintained one-step forecast
+    * l + b is the state a live anomaly gate reads without recomputing
+    * the series. Driver-gated by q284 and q286.
+    */
+  def holtPerKey(events: Dataset[ValEvent]): Dataset[HoltUpdate] = {
+    import events.sparkSession.implicits._
+    foldPerKey(events, Holt)
+  }
+
+  /** [[holtPerKey]] under out-of-order delivery within `delay`
+    * ([[foldPerKeyOrdered]]): driver-gated by q294.
+    */
+  def holtPerKeyOrdered(
+      events: Dataset[ValEvent], delay: String): Dataset[HoltUpdate] = {
+    import events.sparkSession.implicits._
+    foldPerKeyOrdered(events, delay, Holt)
+  }
+
+  /** Per-key Holt-Winters as lifetime streaming state ([[foldPerKey]]),
+    * the first stream state to carry an ARRAY (the 4-slot seasonal
+    * vector) across batches. State per key is O(period); index-based
+    * seasons keep the recurrence free of calendar parsing. Driver-gated
+    * by q304 and q307.
+    */
+  def holtWintersPerKey(events: Dataset[ValEvent]): Dataset[HwUpdate] = {
+    import events.sparkSession.implicits._
+    foldPerKey(events, HoltWinters)
+  }
+
+  /** [[holtWintersPerKey]] under out-of-order delivery within `delay`
+    * ([[foldPerKeyOrdered]]): the slot index is the FOLDED count, so
+    * disorder inside the delay cannot rotate the seasonal assignment.
+    * Driver-gated by q308 and, with a restart, q309.
+    */
+  def holtWintersPerKeyOrdered(
+      events: Dataset[ValEvent], delay: String): Dataset[HwUpdate] = {
+    import events.sparkSession.implicits._
+    foldPerKeyOrdered(events, delay, HoltWinters)
+  }
+
+  /** A recurrence with a RETENTION knob — the q342-closure pattern
+    * applied to the forecast family: the same in-batch (ts, event_id)
+    * order and the same recurrence as [[foldPerKey]] (bit-equal within
+    * a retention window), plus the [[nearDupOnIngest]] eviction
+    * machinery — watermark delay = the retention, an event-time timeout
+    * at the MAX event time the key has EVER seen (carried in state so an
     * in-watermark straggler cannot pull an already-set timeout
     * backward) + `retentionMs`, and `state.remove()` when it fires. A
     * key quiet past the retention loses its fold state and its next
-    * event SEEDS FRESH — the forecaster forgets sources that went
-    * silent, and on unbounded ingest the live state is proportional to
-    * the retention window's active keys, never the key universe's
-    * lifetime. Emits one update per key per batch with data; timeouts
-    * emit nothing (an evicted forecast has no reader).
+    * event SEEDS FRESH (Holt-Winters' seasonal array with it) — the
+    * forecaster forgets sources that went silent, and on unbounded
+    * ingest the live state is proportional to the retention window's
+    * active keys, never the key universe's lifetime. Emits one update
+    * per key per batch with data; timeouts emit nothing (an evicted
+    * forecast has no reader).
     *
     * Eviction is enforced in TWO places: the event-time timer above
     * (reclaims state for keys that never speak again) AND an in-band
@@ -984,10 +903,8 @@ object StreamingOps {
     * sessionize upstream rather than rely on delivery batching.
     */
   private def foldPerKeyEvicting[S, O](
-      events: Dataset[ValEvent], retentionMs: Long,
-      seed: ValEvent => S, step: (S, ValEvent) => S, emit: (Long, S) => O)(
-      implicit stEnc: org.apache.spark.sql.Encoder[(S, Long)],
-      outEnc: org.apache.spark.sql.Encoder[O]): Dataset[O] = {
+      events: Dataset[ValEvent], retentionMs: Long, r: Recurrence[S, O])(
+      implicit stEnc: Encoder[(S, Long)], outEnc: Encoder[O]): Dataset[O] = {
     import events.sparkSession.implicits._
     events
       .withWatermark("ts", s"$retentionMs milliseconds")
@@ -999,7 +916,7 @@ object StreamingOps {
             state.remove()
             Iterator.empty
           } else {
-            val sorted = batch.toSeq.sortBy(e => (epochMicros(e.ts), e.event_id))
+            val sorted = inOrder(batch)
             val firstUs = epochMicros(sorted.head.ts)
             // In-band eviction at the TRIGGER boundary: the carried
             // fold is stale if the key's last-seen event time plus the
@@ -1008,79 +925,51 @@ object StreamingOps {
             // inside one batch: the operator's eviction granularity is
             // the trigger (matching the timer it complements), so a
             // batch folds its events in event-time order as one unit —
-            // see the class doc's granularity contract.
+            // see the granularity contract above.
             val st0 = state.getOption
               .filter { case (_, lastUs) =>
                 lastUs + retentionMs * 1000L >= firstUs
               }
-            var st = st0.map(_._1)
-            sorted.foreach { e =>
-              st = Some(st.fold(seed(e))(s => step(s, e)))
-            }
+            val st = sorted.foldLeft(st0.map(_._1))((s, e) => r.next(s, e.value)).get
             val lastUs = math.max(
               st0.map(_._2).getOrElse(Long.MinValue),
               sorted.iterator.map(e => epochMicros(e.ts)).max)
-            state.update((st.get, lastUs))
+            state.update((st, lastUs))
             state.setTimeoutTimestamp(math.max(
               (lastUs + 999L) / 1000L + retentionMs,
               state.getCurrentWatermarkMs() + 1L))
-            Iterator.single(emit(uid, st.get))
+            Iterator.single(r.emit(uid, st))
           }
       }
   }
 
-  /** [[ewmaPerKey]] with the retention knob: identical IEEE fold
-    * (bit-equal within a retention window), state EVICTED once the key
-    * is quiet past `retentionMs` of event time — see
-    * [[foldPerKeyEvicting]]. Driver-gated (q353: per-(user, slice)
-    * batch-fold oracle across eviction-spanning gaps); the eviction
-    * micro twin + unbounded control live in Round13Spec.
+  /** [[ewmaPerKey]] with the retention knob ([[foldPerKeyEvicting]]).
+    * Driver-gated (q353: per-(user, slice) batch-fold oracle across
+    * eviction-spanning gaps; q355 across restarts); the eviction micro
+    * twin + unbounded control live in Round13Spec.
     */
   def ewmaPerKeyEvicting(
       events: Dataset[ValEvent], retentionMs: Long): Dataset[EwmaUpdate] = {
     import events.sparkSession.implicits._
-    foldPerKeyEvicting[EwmaState, EwmaUpdate](events, retentionMs,
-      e => EwmaState(e.value, 1L),
-      (st, e) => EwmaState(st.ewma / 2 + e.value / 2, st.n + 1),
-      (uid, st) => EwmaUpdate(uid, st.n, st.ewma))
+    foldPerKeyEvicting(events, retentionMs, Ewma)
   }
 
-  /** [[holtPerKey]] with the retention knob — the coupled (level,
-    * trend) fold under [[foldPerKeyEvicting]]'s eviction machinery.
+  /** [[holtPerKey]] with the retention knob ([[foldPerKeyEvicting]]):
+    * driver-gated by q359.
     */
   def holtPerKeyEvicting(
       events: Dataset[ValEvent], retentionMs: Long): Dataset[HoltUpdate] = {
     import events.sparkSession.implicits._
-    foldPerKeyEvicting[HoltState, HoltUpdate](events, retentionMs,
-      e => HoltState(e.value, 0.0, 1L),
-      (st, e) => {
-        val l2 = (e.value + st.l + st.b) / 2
-        HoltState(l2, (l2 - st.l + st.b) / 2, st.n + 1)
-      },
-      (uid, st) => HoltUpdate(uid, st.n, st.l, st.b))
+    foldPerKeyEvicting(events, retentionMs, Holt)
   }
 
-  /** [[holtWintersPerKey]] with the retention knob — the three-variable
-    * seasonal fold under [[foldPerKeyEvicting]]'s eviction machinery
-    * (the seasonal array re-seeds to 0⃗ with the rest of the state:
-    * a source silent past retention restarts its seasonal profile).
+  /** [[holtWintersPerKey]] with the retention knob
+    * ([[foldPerKeyEvicting]]): driver-gated by q361.
     */
   def holtWintersPerKeyEvicting(
       events: Dataset[ValEvent], retentionMs: Long): Dataset[HwUpdate] = {
     import events.sparkSession.implicits._
-    foldPerKeyEvicting[HwState, HwUpdate](events, retentionMs,
-      e => HwState(e.value, 0.0, Seq.fill(4)(0.0), 1L),
-      (st, e) => {
-        val k = (st.n % 4).toInt
-        val s = st.seas(k)
-        val l2 = (e.value - s + st.l + st.b) / 2
-        val b2 = (l2 - st.l + st.b) / 2
-        st.copy(l = l2, b = b2,
-          seas = st.seas.updated(k, (e.value - l2 + s) / 2),
-          n = st.n + 1)
-      },
-      (uid, st) => HwUpdate(uid, st.n, st.l, st.b,
-        st.seas(0), st.seas(1), st.seas(2), st.seas(3)))
+    foldPerKeyEvicting(events, retentionMs, HoltWinters)
   }
 
   case class TypedEvent(user_id: Long, ts: Timestamp, event_id: Long, event_type: String)
@@ -1170,7 +1059,7 @@ object StreamingOps {
         uid: Long, rows: Iterator[ValEvent],
         timerValues: org.apache.spark.sql.streaming.TimerValues)
         : Iterator[RecentUpdate] = {
-      val sorted = rows.toSeq.sortBy(e => (epochMicros(e.ts), e.event_id))
+      val sorted = inOrder(rows)
       val cur = (items.get().toList ++ sorted.map(_.event_id)).takeRight(keep)
       val n = (if (nSeen.exists()) nSeen.get() else 0L) + sorted.size
       items.put(cur.toArray)
